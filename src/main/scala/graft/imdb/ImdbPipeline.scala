@@ -4,6 +4,7 @@ import graft.expr.GraftFunctions
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end IMDB classifier pipeline (SURVEY.md §3.1 stages 1-5),
   * mirroring the reference's runner.py arg surface in [[Config]] and
@@ -65,13 +66,14 @@ object ImdbPipeline {
   private[imdb] def imputationMeans(trainPre: DataFrame): Map[String, Double] =
     Cleaning.columnMeans(trainPre, Seq("runtimeMinutes", "numVotes"))
 
-  /** Stage 3 for one set: metadata merge + genre enrichment + decade +
+  /** Stage 3 for one set: metadata merge (over the run's prebuilt
+    * top-writer/top-director tables) + genre enrichment + decade +
     * extra-data columns (classifier_pipeline.py:320-410). */
-  private def engineer(spark: SparkSession, df: DataFrame, writing: DataFrame,
-                       directing: DataFrame, cache: DataFrame, cfg: Config,
+  private def engineer(spark: SparkSession, df: DataFrame, topW: DataFrame,
+                       topD: DataFrame, cache: DataFrame, cfg: Config,
                        extra: Option[DataFrame],
                        extraMeans: Map[String, Double]): (DataFrame, DataFrame) = {
-    val merged = Metadata.mergeMetadata(df, writing, directing)
+    val merged = Metadata.joinTop(df, topW, topD)
     val (genres, fresh) =
       Enrichment.enrich(spark, merged, cache, cfg.predictor, cfg.batchSize)
     val withGenre = merged
@@ -96,7 +98,16 @@ object ImdbPipeline {
   }
 
   /** Full run: load -> preprocess -> engineer -> train -> predict ->
-    * sinks. Returns the prediction DataFrame (tconst, prediction). */
+    * sinks. Returns the prediction DataFrame (tconst, prediction).
+    *
+    * The fits, the forest's passes and both sets' merges re-read the
+    * same intermediates, so these are built once: the
+    * top-writer/top-director tables and the engineered train and test
+    * frames are persisted, and all of them are released in the
+    * `finally` below, on success and on failure. The returned frame is
+    * lazy, so each action a caller runs on it recomputes the test side.
+    * Enrichment's `fresh` predictions stay persisted: the returned
+    * frame depends on them, and dropping them would re-call the LLM. */
   def run(spark: SparkSession, cfg: Config,
           onStage: (String, Double) => Unit = (_, _) => (),
           tap: (String, DataFrame) => Unit = (_, _) => ()): DataFrame = {
@@ -104,9 +115,12 @@ object ImdbPipeline {
     // Stage marks land on the pipeline's NATURAL action boundaries
     // (fits and sinks) — no extra count()s are injected, so the
     // measured run is the production run. Lazy evaluation means each
-    // mark carries everything since the previous action (e.g.
+    // mark carries everything since the previous action:
     // "fit_indexers" pays the whole train-side load+preprocess+
-    // engineer chain); ImdbScaleBench documents this attribution.
+    // engineer chain, materialized once into the persisted engineered
+    // frame; "fit_scaler" and "train_rf" read that cache;
+    // "predict_write" pays the test side. ImdbScaleBench documents
+    // this attribution.
     var lastMark = System.nanoTime()
     def mark(stage: String): Unit = {
       val now = System.nanoTime()
@@ -120,10 +134,12 @@ object ImdbPipeline {
     val writing = Readers.loadWriting(spark, cfg.writingJson)
     val directing = Readers.loadDirecting(spark, cfg.directingJson)
     val cache = Readers.loadGenreCache(spark, cfg.cacheCsv)
+    // header-only read: the columns arrive as strings and the used
+    // ones are cast, which gives the same doubles as inferSchema
+    // without its full pre-scan of the table
     val extra = cfg.extraCsv.map { p =>
-      spark.read.option("header", true).option("inferSchema", true).csv(p)
-        .withColumnRenamed("imdb_id", "tconst")
-        .select(col("tconst"), col("budget").cast("double"),
+      spark.read.option("header", true).csv(p)
+        .select(col("imdb_id").as("tconst"), col("budget").cast("double"),
           col("revenue").cast("double"), col("popularity").cast("double"))
     }
 
@@ -139,51 +155,69 @@ object ImdbPipeline {
       Cleaning.nonZeroMeans(e, Seq("popularity", "budget", "revenue")))
       .getOrElse(Map.empty)
 
-    // Stage 3: features (fit-on-train indexers + scaler)
-    val (trainFeat0, freshTrain) =
-      engineer(spark, Cleaning.patchWithMean(trainPre, means),
-        writing, directing, cache, cfg, extra, extraMeans)
-    val (testFeat0, freshTest) =
-      engineer(spark, Cleaning.patchWithMean(testPre, means),
-        writing, directing, cache.union(freshTrain), cfg, extra, extraMeans)
-    // observation hook (no-op by default): ImdbScaleCensus gates the
-    // engineered frames' census against a DuckDB recomputation at xN
-    tap("engineered_train", trainFeat0)
-    tap("engineered_test", testFeat0)
-    val indexers = Features.fitIndexers(trainFeat0)
-    mark("fit_indexers") // pays train-side load+preprocess+engineer
-    val trainIdx = Features.applyIndexers(trainFeat0, indexers)
-      .withColumn("label", col("label").cast("double"))
-    val testIdx = Features.applyIndexers(testFeat0, indexers)
-    val trainAsm = Features.assemble(trainIdx)
-    val scaler = Features.fitScaler(trainAsm)
-    mark("fit_scaler")
-    val trainScaled = Features.scale(trainAsm, scaler, cfg.legacyScaler)
-    val testScaled =
-      Features.scale(Features.assemble(testIdx), scaler, cfg.legacyScaler)
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = {
+      held += df.persist(StorageLevel.MEMORY_AND_DISK)
+      df
+    }
 
-    // Stages 4-5: train, predict, emit (K3 model sink + K1 predictions)
-    val model: PipelineModel = ImdbModel.train(trainScaled, cfg.numTrees)
-    mark("train_rf")
-    cfg.modelDir.foreach(d => model.write.overwrite().save(d)) // K3
-    // M7: top-5 importances, like classifier_model.py:84-93
-    val top5 = ImdbModel.topImportances(model, Features.featureCols)
-      .map { case (n, v) => f"$n=$v%.6f" }.mkString(", ")
-    println(s"[imdb] top-5 feature importances: $top5")
-    val preds = ImdbModel.predict(model, testScaled)
-      .select(col("tconst"), col("prediction"))
-    // K1 (F9: timestamped {set}_{model}_{ts}.txt name unless pinned)
-    val predPath = cfg.resultPath.getOrElse(s"${cfg.resultsDir}/" +
-      predFileName(cfg.setName, cfg.modelName, java.time.LocalDateTime.now()))
-    Writers.savePredictionsTxt(preds, predPath)
-    mark("predict_write") // pays test-side engineer+transform+predict
-    println(s"[imdb] predictions written to $predPath")
-    // K2: persist the updated genre cache (old entries win on dup keys,
-    // data_utils.py:404-413); both fresh sets are persisted DataFrames,
-    // so this re-reads memoized results, not the LLM
-    Writers.saveGenreCache(cache, freshTrain.union(freshTest),
-      cfg.cacheOutDir.getOrElse(s"${cfg.resultsDir}/genre_cache"))
-    mark("cache_write")
-    preds
+    try {
+      // Stage 3: features (fit-on-train indexers + scaler). The top-1
+      // tables feed both sets, so they are held before either
+      // engineered frame is, whose cached plans then read them.
+      val topW = hold(Metadata.topEntityPerMovie(writing, "writer"))
+      val topD = hold(Metadata.topEntityPerMovie(directing, "director"))
+      val (trainEng, freshTrain) =
+        engineer(spark, Cleaning.patchWithMean(trainPre, means),
+          topW, topD, cache, cfg, extra, extraMeans)
+      val trainFeat0 = hold(trainEng)
+      val (testEng, freshTest) =
+        engineer(spark, Cleaning.patchWithMean(testPre, means),
+          topW, topD, cache.union(freshTrain), cfg, extra, extraMeans)
+      val testFeat0 = hold(testEng)
+      // observation hook (no-op by default): ImdbScaleCensus gates the
+      // engineered frames' census against a DuckDB recomputation at xN
+      tap("engineered_train", trainFeat0)
+      tap("engineered_test", testFeat0)
+      val indexers = Features.fitIndexers(trainFeat0)
+      mark("fit_indexers") // materializes the engineered train frame
+      val trainIdx = Features.applyIndexers(trainFeat0, indexers)
+        .withColumn("label", col("label").cast("double"))
+      val testIdx = Features.applyIndexers(testFeat0, indexers)
+      val trainAsm = Features.assemble(trainIdx)
+      val scaler = Features.fitScaler(trainAsm)
+      mark("fit_scaler")
+      val trainScaled = Features.scale(trainAsm, scaler, cfg.legacyScaler)
+      val testScaled =
+        Features.scale(Features.assemble(testIdx), scaler, cfg.legacyScaler)
+
+      // Stages 4-5: train, predict, emit (K3 model sink + K1 predictions)
+      val model: PipelineModel = ImdbModel.train(trainScaled, cfg.numTrees)
+      mark("train_rf")
+      cfg.modelDir.foreach(d => model.write.overwrite().save(d)) // K3
+      // M7: top-5 importances, like classifier_model.py:84-93
+      val top5 = ImdbModel.topImportances(model, Features.featureCols)
+        .map { case (n, v) => f"$n=$v%.6f" }.mkString(", ")
+      println(s"[imdb] top-5 feature importances: $top5")
+      val preds = ImdbModel.predict(model, testScaled)
+        .select(col("tconst"), col("prediction"))
+      // K1 (F9: timestamped {set}_{model}_{ts}.txt name unless pinned)
+      val predPath = cfg.resultPath.getOrElse(s"${cfg.resultsDir}/" +
+        predFileName(cfg.setName, cfg.modelName, java.time.LocalDateTime.now()))
+      Writers.savePredictionsTxt(preds, predPath)
+      mark("predict_write") // pays test-side engineer (held)+transform+predict
+      println(s"[imdb] predictions written to $predPath")
+      // K2: persist the updated genre cache (old entries win on dup keys,
+      // data_utils.py:404-413); both fresh sets are persisted DataFrames,
+      // so this re-reads memoized results, not the LLM
+      Writers.saveGenreCache(cache, freshTrain.union(freshTest),
+        cfg.cacheOutDir.getOrElse(s"${cfg.resultsDir}/genre_cache"))
+      mark("cache_write")
+      preds
+    } finally {
+      // dependents first, so no remaining cached plan is re-planned
+      // around a released one
+      held.reverseIterator.foreach(_.unpersist())
+    }
   }
 }

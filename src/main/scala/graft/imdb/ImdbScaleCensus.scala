@@ -49,51 +49,18 @@ object ImdbScaleCensus {
       resultPath = Some(s"$out/preds.txt"),
       cacheOutDir = Some(s"$out/genre_cache"))
 
-    var trainFeat: Option[DataFrame] = None
+    // the census runs inside the tap, while the run still holds the
+    // engineered train frame persisted; after run returns it is released
+    var trainRows: Seq[(String, Long)] = Nil
     val preds = ImdbPipeline.run(spark, cfg,
       tap = (name, df) =>
-        if (name == "engineered_train")
-          trainFeat = Some(df.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-    val tf = trainFeat.getOrElse(
-      sys.error("tap never delivered the engineered train frame"))
-
-    // one long-format row per metric; every value is an exact count
-    val censusRows: Seq[(String, Long)] = {
-      val overall = tf.agg(
-        count(lit(1)).as("n_train"),
-        sum(when(col("writer") =!= "unknown", 1L).otherwise(0L))
-          .as("writer_hits"),
-        sum(when(col("director") =!= "unknown", 1L).otherwise(0L))
-          .as("director_hits"),
-        sum(when(col("label") === true, 1L).otherwise(0L))
-          .as("n_label_true"),
-        countDistinct(col("writer")).as("card_writer"),
-        countDistinct(col("director")).as("card_director"),
-        countDistinct(col("genre")).as("card_genre"),
-        countDistinct(coalesce(col("decade"), lit("unknown")))
-          .as("card_decade")).head()
-      val base = Seq(
-        "n_train" -> overall.getLong(0),
-        "writer_hits" -> overall.getLong(1),
-        "director_hits" -> overall.getLong(2),
-        "n_label_true" -> overall.getLong(3),
-        "card_writer" -> overall.getLong(4),
-        "card_director" -> overall.getLong(5),
-        "card_genre" -> overall.getLong(6),
-        "card_decade" -> overall.getLong(7))
-      // decade histogram: #decades is bounded (~13 + unknown) so the
-      // collect is bounded by construction
-      val decades = tf
-        .groupBy(coalesce(col("decade"), lit("unknown")).as("d"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => s"decade_${r.getString(0)}" -> r.getLong(1)).toSeq
-      val predStats = preds.agg(count(lit(1)),
-        countDistinct(col("tconst"))).head()
-      base ++ decades ++ Seq(
-        "n_pred" -> predStats.getLong(0),
-        "n_pred_distinct" -> predStats.getLong(1))
-    }
+        if (name == "engineered_train") trainRows = trainCensus(df))
+    if (trainRows.isEmpty)
+      sys.error("tap never delivered the engineered train frame")
+    val predStats = preds.agg(count(lit(1)), countDistinct(col("tconst"))).head()
+    val censusRows = trainRows ++ Seq(
+      "n_pred" -> predStats.getLong(0),
+      "n_pred_distinct" -> predStats.getLong(1))
 
     import spark.implicits._
     censusRows.toDF("metric", "value").coalesce(1)
@@ -102,5 +69,39 @@ object ImdbScaleCensus {
     censusRows.sortBy(_._1).foreach { case (m, v) =>
       System.err.println(f"[imdb-census] $m%-24s $v") }
     spark.stop()
+  }
+
+  /** One long-format row per metric of the engineered train frame;
+    * every value is an exact count. */
+  private def trainCensus(tf: DataFrame): Seq[(String, Long)] = {
+    val overall = tf.agg(
+      count(lit(1)).as("n_train"),
+      sum(when(col("writer") =!= "unknown", 1L).otherwise(0L))
+        .as("writer_hits"),
+      sum(when(col("director") =!= "unknown", 1L).otherwise(0L))
+        .as("director_hits"),
+      sum(when(col("label") === true, 1L).otherwise(0L))
+        .as("n_label_true"),
+      countDistinct(col("writer")).as("card_writer"),
+      countDistinct(col("director")).as("card_director"),
+      countDistinct(col("genre")).as("card_genre"),
+      countDistinct(coalesce(col("decade"), lit("unknown")))
+        .as("card_decade")).head()
+    val base = Seq(
+      "n_train" -> overall.getLong(0),
+      "writer_hits" -> overall.getLong(1),
+      "director_hits" -> overall.getLong(2),
+      "n_label_true" -> overall.getLong(3),
+      "card_writer" -> overall.getLong(4),
+      "card_director" -> overall.getLong(5),
+      "card_genre" -> overall.getLong(6),
+      "card_decade" -> overall.getLong(7))
+    // decade histogram: #decades is bounded (~13 + unknown) so the
+    // collect is bounded by construction
+    val decades = tf
+      .groupBy(coalesce(col("decade"), lit("unknown")).as("d"))
+      .agg(count(lit(1)).as("n")).collect()
+      .map(r => s"decade_${r.getString(0)}" -> r.getLong(1)).toSeq
+    base ++ decades
   }
 }

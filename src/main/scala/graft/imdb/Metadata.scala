@@ -34,9 +34,13 @@ object Metadata {
     * (classifier_pipeline.py:267-271). Metadata sides are
     * dimension-sized -> broadcast. */
   def mergeMetadata(movies: DataFrame, writing: DataFrame,
-                    directing: DataFrame): DataFrame = {
-    val topW = topEntityPerMovie(writing, "writer")
-    val topD = topEntityPerMovie(directing, "director")
+                    directing: DataFrame): DataFrame =
+    joinTop(movies, topEntityPerMovie(writing, "writer"),
+      topEntityPerMovie(directing, "director"))
+
+  /** [[mergeMetadata]] over prebuilt [[topEntityPerMovie]] tables, so a
+    * caller that merges several movie sets builds them once. */
+  def joinTop(movies: DataFrame, topW: DataFrame, topD: DataFrame): DataFrame =
     movies
       .join(broadcast(topW), movies("tconst") === topW("movie"), "left")
       .drop("movie")
@@ -44,5 +48,4 @@ object Metadata {
       .drop("movie")
       .withColumn("writer", coalesce(col("writer"), lit("unknown")))
       .withColumn("director", coalesce(col("director"), lit("unknown")))
-  }
 }

@@ -1,6 +1,7 @@
 package graft.imdb
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, count, lit, when}
 
 /** CLI entry mirroring the reference's runner.py arg surface
   * (runner.py:53-104): positional data dir, test-set name, results dir;
@@ -48,8 +49,10 @@ object RunImdb {
       modelName = "gemma3_4b",
       cacheOutDir = flagVal("--cache-out"))
     val preds = ImdbPipeline.run(spark, cfg)
-    val n = preds.count()
-    val nTrue = preds.filter(org.apache.spark.sql.functions.col("prediction") === 1.0).count()
+    // one action: each one re-runs the test side, which the run released
+    val stats = preds.agg(count(lit(1)), count(when(col("prediction") === 1.0, 1)))
+      .head()
+    val (n, nTrue) = (stats.getLong(0), stats.getLong(1))
     println(s"[imdb] wrote $n predictions ($nTrue True / ${n - nTrue} False)")
     spark.stop()
   }

@@ -9,10 +9,15 @@ import org.apache.spark.sql.SparkSession
   *
   * Stage attribution (ImdbPipeline.run marks its natural action
   * boundaries; nothing extra is forced): `fit_indexers` pays the
-  * train-side load+preprocess+imputation+engineer chain, `fit_scaler`
-  * the assemble+scaler fit, `train_rf` the forest, `predict_write`
-  * the test-side engineer+transform+predict+K1 sink, `cache_write`
-  * the K2 cache union sink.
+  * train-side load+preprocess+imputation+engineer chain, materialized
+  * once into the run's persisted engineered train frame (and the
+  * top-writer/top-director tables), plus the one fused indexer fit;
+  * `fit_scaler` (assemble+scaler fit) and `train_rf` (the forest's
+  * passes) read that cache; `predict_write` pays the test-side
+  * engineer, materialized once into its own persisted frame, plus
+  * transform+predict+K1 sink; `cache_write` the K2 cache union sink.
+  * The run releases its frames before returning, so the `count()`
+  * after it recomputes the test side outside the timed total.
   *
   * Usage: runMain graft.tools.ImdbScaleBench <refImdbDir> <bigDir>
   *          <outJson> [factor-label]

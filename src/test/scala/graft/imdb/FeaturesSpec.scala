@@ -48,13 +48,32 @@ class FeaturesSpec extends SparkSpec {
 
   test("indexers: frequencyDesc order, unseen label -> numLabels (keep)") {
     import spark.implicits._
-    val train = Seq("x", "x", "x", "y", "y", "z")
-      .map(v => (v, v, v, v)).toDF(Features.categoricalCols: _*)
-    val models = Features.fitIndexers(train)
-    val test = Seq("y", "q").map(v => (v, v, v, v))
+    // every column has its own values and its own frequency ties; the
+    // one fused fit must label each column like a single-column fit
+    val train = Seq(
+      ("w2", "d1", "Drama", "1990s"), ("w1", "d2", "Drama", "1990s"),
+      ("w2", "d3", "Comedy", "1980s"), ("w1", "d3", "Comedy", "1980s"),
+      ("w3", "d2", "Action", "1970s"), (null, "d1", "Action", null),
+      ("w1", "d1", "Action", "1990s"))
       .toDF(Features.categoricalCols: _*)
-    val out = Features.applyIndexers(test, models)
-      .select("writer_index").as[Double].collect().toSeq
-    assert(out == Seq(1.0, 3.0)) // y = 2nd most frequent; q unseen -> 3
+    val model = Features.fitIndexers(train)
+    val filled = train.na.fill("unknown", Features.categoricalCols)
+    Features.categoricalCols.zipWithIndex.foreach { case (c, i) =>
+      val single = new org.apache.spark.ml.feature.StringIndexer()
+        .setInputCol(c).setOutputCol("i").fit(filled)
+      assert(model.labelsArray(i).toSeq == single.labelsArray(0).toSeq, c)
+    }
+    // w1 (3) first, then w2 (2), then the 1-count tie alphabetically
+    assert(model.labelsArray(0).toSeq == Seq("w1", "w2", "unknown", "w3"))
+    assert(model.labelsArray(2).toSeq == Seq("Action", "Comedy", "Drama"))
+
+    val test = Seq(("w2", "d1", "Drama", "1990s"), ("wx", "dx", "Horror", "1920s"))
+      .toDF(Features.categoricalCols: _*)
+    val rows = Features.applyIndexers(test, model).collect()
+    assert(rows.head.getAs[Double]("writer_index") == 1.0)
+    Features.categoricalCols.zipWithIndex.foreach { case (c, i) =>
+      assert(rows(1).getAs[Double](s"${c}_index") == model.labelsArray(i).length, c)
+      assert(!rows(1).schema.fieldNames.contains(c), s"$c must be dropped")
+    }
   }
 }
