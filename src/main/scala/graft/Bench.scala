@@ -1,25 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.io.Sessions.tuned(SparkSession.builder())
-      // SPARK_GRAFT_MASTER: run the bench under real multi-JVM
-      // executors (spark-submit --master local-cluster[3,8,8192])
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      // UTC like Verify/SparkSpec: Tables.events' NTZ→TZ normalization
-      // must be the identity on wall-clock values in every harness
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.Top1WindowToMaxBy :+ graft.expr.CollapseAccentFold
+    val spark = graft.io.Sessions.harness()
     // warm up the JVM, codegen, and parquet footers so the first timed
     // query isn't charged ~3s of session startup
     try {

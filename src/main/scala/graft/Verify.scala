@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,42 +9,9 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitioning is a DEPLOYMENT knob sized to the data
-    // tier, not operator semantics: #cpus is right up to ~sf10, but
-    // the sf100 tier's 600M-row distinct needs partitions that fit in
-    // one task's aggregation memory (r12 catch: g_sssp_hops died with
-    // AGGREGATE_OUT_OF_MEMORY at 32 partitions x 600M rows; 256 runs
-    // it). A real cluster sets this to its executor-core count.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // SPARK_GRAFT_MASTER lets the WHOLE gate run under real multi-JVM
-    // executors (spark-submit --master local-cluster[3,8,8192]) — the
-    // only local tier where executor-boundary serialization bugs
-    // (the r3 trainingSummary NotSerializable class) can fire.
-    val spark = graft.io.Sessions.tuned(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark only reads
-      // as long (nanos since epoch); Tables.events converts back.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // State-store backend switch (VERDICT r10 item 4): with
-    // SPARK_GRAFT_STATE_STORE=rocksdb every stream-exec row runs its
-    // StreamExecution on the RocksDB provider (the 100 TB deployment
-    // backend) — the gate's oracle compare then proves the rows are
-    // provider-invariant at tier-sized state. streamSession propagates
-    // this conf into each cloned stream session.
-    if (sys.env.get("SPARK_GRAFT_STATE_STORE").exists(_.equalsIgnoreCase("rocksdb")))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // production-path optimizer rules (w1's window top-1 rewrites to
-    // max_by and must STILL hash-match the DuckDB oracle)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.Top1WindowToMaxBy :+ graft.expr.CollapseAccentFold
+    // production-path optimizer rules included (w1's window top-1
+    // rewrites to max_by and must STILL hash-match the DuckDB oracle)
+    val spark = graft.io.Sessions.harness()
     new java.io.File(outDir).mkdirs()
     // Run query dumps on a small thread pool: Spark's scheduler is
     // thread-safe and most queries leave cores idle between stages, so

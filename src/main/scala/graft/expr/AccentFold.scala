@@ -47,13 +47,14 @@ object AccentFold {
       .replaceAll("[^\\x00-\\x7F]", "")
 }
 
-/** Registration hooks for graft's custom expressions.
+/** Registration hooks for graft's custom expressions, rules and
+  * strategies.
   *
   * Two paths, both idiomatic Spark:
   *  - config: `spark.sql.extensions=graft.expr.GraftExtensions`
-  *    (SparkSessionExtensions.injectFunction), or
-  *  - programmatic: `GraftFunctions.register(spark)` on an existing
-  *    session (what Verify/Bench/tests use).
+  *    (SparkSessionExtensions), or
+  *  - programmatic: `GraftExtensions.install(spark)` on an existing
+  *    session (what `Sessions.harness` does).
   * After either, `accent_fold(col)` resolves in SQL and via
   * `functions.call_function("accent_fold", col)`.
   */
@@ -62,10 +63,29 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     GraftFunctions.descriptors.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => CollapseAccentFold)
     ext.injectOptimizerRule(_ => graft.plans.Top1WindowToMaxBy)
-    // the custom whole-operator piece too: ONE config line delivers
-    // the complete library surface (AsOf.join also self-registers via
-    // experimental.extraStrategies for sessions built without it)
+    // the custom whole-operator pieces too: ONE config line delivers
+    // the complete library surface (AsOf.join and the running-sum ride
+    // also self-register via experimental.extraStrategies for sessions
+    // built without it)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.RunningSumStrategy)
+  }
+}
+
+object GraftExtensions {
+  /** Programmatic twin of the config path, safe to call again on the
+    * same session: adds each rule and strategy at most once, and
+    * re-registers the SQL functions (a replace). The rules go in
+    * `experimental.extraOptimizations`, not `withExtensions`: that is
+    * the batch every harness has planned with, and an extension added
+    * after the shared test JVM's session exists is silently ignored. */
+  def install(spark: SparkSession): Unit = {
+    val x = spark.experimental
+    x.extraOptimizations ++= Seq(graft.plans.Top1WindowToMaxBy,
+      CollapseAccentFold).filterNot(x.extraOptimizations.contains)
+    x.extraStrategies ++= Seq(graft.plans.AsOfJoinStrategy,
+      graft.plans.RunningSumStrategy).filterNot(x.extraStrategies.contains)
+    GraftFunctions.register(spark)
   }
 }
 

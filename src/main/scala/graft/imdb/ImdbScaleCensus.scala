@@ -1,6 +1,6 @@
 package graft.imdb
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Census of the ×N IMDB pipeline's RESULTS (VERDICT r11 item 5):
@@ -29,14 +29,7 @@ object ImdbScaleCensus {
 
   def main(args: Array[String]): Unit = {
     val Array(bigDir, outParquet) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.io.Sessions.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.io.Sessions.harness()
 
     val out = s"/tmp/imdb_census_run_${System.nanoTime()}"
     val cfg = ImdbPipeline.Config(

@@ -1,6 +1,5 @@
 package graft.imdb
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, count, lit, when}
 
 /** CLI entry mirroring the reference's runner.py arg surface
@@ -25,14 +24,7 @@ object RunImdb {
     def flagVal(name: String): Option[String] =
       flags.sliding(2).collectFirst { case Array(`name`, v) => v }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.io.Sessions.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.io.Sessions.harness()
 
     val cfg = ImdbPipeline.Config(
       trainGlob = s"$dataDir/train-*.csv",

@@ -2,9 +2,16 @@ package graft.io
 
 import org.apache.spark.sql.SparkSession
 
-/** Scale-ADAPTIVE partition sizing, applied by every harness session
-  * (r15 optimization round, guide §2.2 "let AQE coalesce" — partition
-  * counts must derive from DATA SIZE, not from the local core count).
+/** How a graft session is configured — the one place that builds one.
+  *
+  * `harness` is the session every main and the shared test session
+  * use; `tuned` is its data-size partitioning default, kept separate
+  * because builders outside this module (the benchmark harness) apply
+  * it to their own sessions.
+  *
+  * Scale-ADAPTIVE partition sizing (r15 optimization round, guide §2.2
+  * "let AQE coalesce" — partition counts must derive from DATA SIZE,
+  * not from the local core count).
   *
   * ONE default changes: `canChangeCachedPlanOutputPartitioning=true`.
   * Its false default disables AQE partition coalescing inside
@@ -32,27 +39,70 @@ import org.apache.spark.sql.SparkSession
   * CPU-heavy object aggregations (collect_set basket build, signature
   * hashing) exactly in the mid-scale band a real cluster also has —
   * the local-only-tuning trap. parallelism-first coalescing stays at
-  * the Spark default; the env knobs below keep both measurable.
+  * the Spark default.
+  *
+  * AQE's runtime SMJ->SHJ rewrite (guide §3.1,
+  * `maxShuffledHashJoinLocalMapThreshold`) also stays at the Spark
+  * default (off). Measured at 64m over the 14 SMJ-carrying rows,
+  * 3-rep minima back-to-back: 23.46 s (off) vs 23.34 s (on), every
+  * per-row delta within ±0.19 s noise — the bench's SMJ sorts ride
+  * KB-sized frames where the sort is already cheap.
   */
 object Sessions {
-  def tuned(b: SparkSession.Builder): SparkSession.Builder = {
-    val pf = sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true")
-    val ccp = sys.env.getOrElse("SPARK_GRAFT_CACHED_COALESCE", "true")
-    // AQE's runtime SMJ->SHJ rewrite (guide §3.1): fires only when
-    // EVERY post-shuffle partition of the build side is under the
-    // threshold — decided from the shuffle's ACTUAL map output sizes,
-    // so at larger tiers big joins simply stop converting (no blanket
-    // preferSortMergeJoin=false, whose per-partition OOM hazard the
-    // guide warns about). MEASURED AND REJECTED as a default (r15):
-    // 64m over the 14 SMJ-carrying rows, 3-rep minima back-to-back —
-    // 23.46 s (off) vs 23.34 s (on), every per-row delta within
-    // ±0.19 s noise. The bench's SMJ sorts ride KB-sized frames where
-    // the sort is already cheap; the knob stays for cluster-tier
-    // measurement. 0 = Spark default (off).
-    val shj = sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0")
-    b.config("spark.sql.adaptive.coalescePartitions.parallelismFirst", pf)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        ccp)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shj)
+  def tuned(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+      sys.env.getOrElse("SPARK_GRAFT_CACHED_COALESCE", "true"))
+
+  /** Cores of the default `local[N]` master: `SPARK_GRAFT_CPUS`, else
+    * every core the JVM sees. */
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** The graft harness session: `tuned`, UTC, nanos-as-long parquet
+    * timestamps, no UI, the graft rules, strategies and SQL functions.
+    *
+    * `master` defaults to `SPARK_GRAFT_MASTER`, which lets a whole run
+    * go under real multi-JVM executors (spark-submit --master
+    * local-cluster[3,8,8192]) — the only local tier where
+    * executor-boundary serialization bugs (the r3 trainingSummary
+    * NotSerializable class) can fire.
+    *
+    * `shufflePartitions` defaults to `SPARK_GRAFT_SHUFFLE`, else the
+    * core count. Shuffle partitioning is a DEPLOYMENT knob sized to
+    * the data tier, not operator semantics: #cpus is right up to
+    * ~sf10, but the sf100 tier's 600M-row distinct needs partitions
+    * that fit in one task's aggregation memory (r12 catch: g_sssp_hops
+    * died with AGGREGATE_OUT_OF_MEMORY at 32 partitions x 600M rows;
+    * 256 runs it). A real cluster sets this to its executor-core count.
+    *
+    * `conf` entries are applied last and win. */
+  def harness(master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
+              shufflePartitions: String = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus),
+              logLevel: String = "WARN",
+              conf: Map[String, String] = Map.empty): SparkSession = {
+    val b = tuned(SparkSession.builder())
+      .master(master)
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      // Tables.events' NTZ→TZ normalization must be the identity on
+      // wall-clock values in every harness
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet carries TIMESTAMP(NANOS), which Spark only reads
+      // as long (nanos since epoch); Tables.events converts back
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    // State-store backend switch (VERDICT r10 item 4): with
+    // SPARK_GRAFT_STATE_STORE=rocksdb every stream-exec row runs its
+    // StreamExecution on the RocksDB provider (the 100 TB deployment
+    // backend) — the gate's oracle compare then proves the rows are
+    // provider-invariant at tier-sized state. streamSession propagates
+    // this conf into each cloned stream session.
+    if (sys.env.get("SPARK_GRAFT_STATE_STORE").exists(_.equalsIgnoreCase("rocksdb")))
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    graft.expr.GraftExtensions.install(spark)
+    spark
   }
 }

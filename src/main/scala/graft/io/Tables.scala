@@ -43,8 +43,8 @@ object Tables {
     * encoding the file carries. The testdata has shipped (at different
     * times) as parquet TIMESTAMP(NANOS) — which Spark reads only as a
     * long of nanos-since-epoch under
-    * spark.sql.legacy.parquet.nanosAsLong=true (set by Verify/Bench/
-    * specs) — and as timestamp[us] with no timezone, which Spark 4
+    * spark.sql.legacy.parquet.nanosAsLong=true (set by Sessions.harness)
+    * — and as timestamp[us] with no timezone, which Spark 4
     * surfaces as TIMESTAMP_NTZ and whose epoch functions
     * (`unix_micros` etc.) then reject at analysis time. Normalizing
     * every encoding HERE, at the one scan choke point, is what keeps

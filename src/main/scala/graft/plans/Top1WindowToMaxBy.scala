@@ -42,7 +42,8 @@ import org.apache.spark.sql.types._
   * exactly like `row_number` does.
   *
   * Registered via GraftExtensions (config path) or
-  * `spark.experimental.extraOptimizations` (Verify/Bench/tests) —
+  * `spark.experimental.extraOptimizations` (`GraftExtensions.install`,
+  * so every harness session) —
   * i.e. it runs in the production oracle path, where w1's
   * window-formulated query is rewritten and still hash-matches
   * DuckDB.

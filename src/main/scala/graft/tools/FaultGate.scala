@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Fault-injection gate (round 14, VERDICT r13 item 1): run gated
   * rows SEQUENTIALLY under a real multi-JVM master while killing one
   * executor JVM mid-query, and record per-row survive/fail. The r13
@@ -78,24 +76,9 @@ object FaultGate {
     val killRepeatMs =
       sys.env.getOrElse("SPARK_GRAFT_KILL_REPEAT_MS", "0").toLong
     val killEnabled = sys.env.getOrElse("SPARK_GRAFT_KILL", "1") != "0"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.io.Sessions.tuned(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR") // executor-loss WARN spam
-    // same provider switch as Verify: the stream fault legs must run
-    // the 100 TB state backend
-    if (sys.env.get("SPARK_GRAFT_STATE_STORE").exists(_.equalsIgnoreCase("rocksdb")))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.Top1WindowToMaxBy :+ graft.expr.CollapseAccentFold
+    // ERROR: executor-loss WARN spam. The harness's state-store switch
+    // lets the stream fault legs run the 100 TB state backend.
+    val spark = graft.io.Sessions.harness(logLevel = "ERROR")
     new java.io.File(outDir).mkdirs()
     println(s"[fault-gate] master=${spark.sparkContext.master} " +
       s"kill=${if (killEnabled) s"+${killDelayMs}ms" else "off"} " +

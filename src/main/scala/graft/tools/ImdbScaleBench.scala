@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.imdb.ImdbPipeline
-import org.apache.spark.sql.SparkSession
 
 /** Stage-budget measurement of the §2 IMDB pipeline at fixture size
   * and at an ImdbScaleUp corpus (VERDICT r10 item 5). Emits ONE JSON
@@ -27,14 +26,7 @@ object ImdbScaleBench {
   def main(args: Array[String]): Unit = {
     val Array(refDir, bigDir, outJson) = args.take(3)
     val label = if (args.length > 3) args(3) else "x100"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.io.Sessions.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.io.Sessions.harness()
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 
     // X1-X3 ban, proven at scale rather than by construction: sum the

@@ -39,21 +39,10 @@ object ScaleGrowth {
     val refDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outJson = if (args.length > 1) args(1) else "/tmp/graft_scale_growth.json"
     val repeats = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // SPARK_GRAFT_MASTER: the FwdProbe pattern — lets the decade run
-    // under real multi-JVM executors (local-cluster) for the r12
-    // shuffle-wall sharding measurement
-    val spark = graft.io.Sessions.tuned(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.Top1WindowToMaxBy :+ graft.expr.CollapseAccentFold
+    // SPARK_GRAFT_MASTER lets the decade run under real multi-JVM
+    // executors (local-cluster) for the r12 shuffle-wall sharding
+    // measurement
+    val spark = graft.io.Sessions.harness()
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 
     // Headroom-only mode: 4th arg = CSV of query names. Times each

@@ -42,15 +42,7 @@ object SliceCorpus {
     val Array(inDir, outDir, modS) = args.take(3)
     val mod = modS.toInt
     require(mod >= 2, s"mod must be >= 2, got $mod")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.io.Sessions.harness()
     write(spark, inDir, outDir, mod)
     spark.stop()
   }

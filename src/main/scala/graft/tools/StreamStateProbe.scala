@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Gate observability tool (round 13, VERDICT r12 item 3): run the six
   * real-StreamExecution rows at a tier and print each query's
   * PER-BATCH state-operator progression (batchId, operator,
@@ -23,19 +21,7 @@ object StreamStateProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val rows = if (args.length > 1) args(1).split(",").toSeq else StreamRows
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.io.Sessions.tuned(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.get("SPARK_GRAFT_STATE_STORE").exists(_.equalsIgnoreCase("rocksdb")))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val spark = graft.io.Sessions.harness()
     rows.foreach { name =>
       val t0 = System.nanoTime()
       val n = graft.SparkEntry.queries(name)(spark, sfDir).count()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Phase attribution for the sub-second bench tail (VERDICT r14 item
   * 3, guide §1.1): for each named query, split the wall time Bench
   * would charge into
@@ -25,19 +23,7 @@ object TailProbe {
     val sfDir = args(0)
     val qs = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.io.Sessions.tuned(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.Top1WindowToMaxBy :+ graft.expr.CollapseAccentFold
+    val spark = graft.io.Sessions.harness()
     // warmup like Bench
     try {
       spark.range(1000000).selectExpr("sum(id)").collect()

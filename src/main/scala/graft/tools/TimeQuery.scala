@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Single-query timing harness: run one named query N times against a
   * scale dir and print per-run seconds. Dev tool for the perf
@@ -16,18 +15,7 @@ object TimeQuery {
     val sfDir = args(0)
     val name = args(1)
     val repeats = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.io.Sessions.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.Top1WindowToMaxBy :+ graft.expr.CollapseAccentFold
+    val spark = graft.io.Sessions.harness()
     // session warmup as in Bench
     spark.range(1000000).selectExpr("sum(id)").collect()
     (1 to repeats).foreach { i =>

@@ -7,9 +7,7 @@ class OptimizerRuleSpec extends SparkSpec {
 
   test("CollapseAccentFold rewrites accent_fold(accent_fold(x)) -> accent_fold(x)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ CollapseAccentFold
+    GraftExtensions.install(spark)
     // parquet-backed input: a local Seq would be constant-folded into a
     // LocalRelation before the rule could be observed
     val df = graft.io.Tables(spark, sf("sf0.001"), "documents")

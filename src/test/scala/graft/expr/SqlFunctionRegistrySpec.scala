@@ -82,6 +82,8 @@ class SqlFunctionRegistrySpec extends SparkSpec {
     assert(rules.contains(graft.plans.Top1WindowToMaxBy), s"rules: $rules")
     assert(strategies.contains(graft.plans.AsOfJoinStrategy),
       s"strategies: $strategies")
+    assert(strategies.contains(graft.plans.RunningSumStrategy),
+      s"strategies: $strategies")
     val expected = GraftFunctions.descriptors.map(_._1.funcName).toSet
     assert(expected.subsetOf(fns), s"missing functions: ${expected -- fns}")
   }
