@@ -145,12 +145,18 @@ object SimilarityPack extends QueryPack {
           (dotCols("va", "vb") / (col("nna") * col("nnb"))).as("sim"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       graft.scale.CacheRegistry.track(cand, sims)
-      var sel = cand.groupBy(col("qid"))
+      val seed = cand.groupBy(col("qid"))
         .agg(max_by(struct(col("nid"), (lit(0.7) * col("rel")).as("score")),
           struct(col("rel"), -col("nid"))).as("p"))
         .select(col("qid"), col("p.nid").as("nid"), lit(1).as("ord"),
           col("p.score").as("score"))
-      for (r <- 2 to 5) {
+      // sel feeds BOTH next-round inputs (anti-join + sim probe), so
+      // an unbroken lineage doubles per round — 16 copies of the
+      // round-1 subtree by round 5. Iterate's eager per-round cut
+      // truncates it: each round's selected set (<= 50 rows) is
+      // materialized once and the plan stays linear in rounds
+      val sel = graft.scale.Iterate.fixed(seed, 4) { (sel, i) =>
+        val r = i + 1 // the seed is pick 1
         val pick = cand
           .join(sel.select(col("qid"), col("nid")), Seq("qid", "nid"),
             "left_anti")
@@ -168,22 +174,8 @@ object SimilarityPack extends QueryPack {
             struct(col("score"), -col("nid"))).as("p"))
           .select(col("qid"), col("p.nid").as("nid"), lit(r).as("ord"),
             col("p.score").as("score"))
-        // sel feeds BOTH next-round inputs (anti-join + sim probe), so
-        // an unbroken lineage doubles per round — 16 copies of the
-        // round-1 subtree by round 5. The eager localCheckpoint
-        // truncates it: each round's selected set (<= 50 rows) is
-        // materialized once and the plan stays linear in rounds; the
-        // prior round's blocks die as soon as the new one is live
-        // (Checkpoints.free — the round-7 leak fix)
-        val prev = sel
-        sel = graft.scale.Checkpoints.cut(sel.unionByName(pick))
-        graft.scale.Checkpoints.free(prev)
+        sel.unionByName(pick)
       }
-      // the FINAL round's checkpoint blocks outlive the action —
-      // deposit with the harness ledger (Checkpoints.free semantics:
-      // Dataset.unpersist cannot reach LogicalRDD blocks) so Bench/
-      // Verify release them instead of leaking ~50 rows per execution
-      graft.scale.CacheRegistry.trackCheckpointed(sel)
       sel.select(col("qid"), col("ord"), col("nid"),
           round(col("score"), 4).as("score"))
         .orderBy(col("qid"), col("ord"))

@@ -39,9 +39,8 @@ import org.apache.spark.storage.StorageLevel
   * [[PageRank]]: the oracle must replay the exact rounds, and the
   * caller picks a budget ≥ the diameter of interest; nodes beyond it
   * report unreached. Lineage grows linearly in rounds (each dist is
-  * the union of the previous dist and one join) — pass
-  * `checkpointInterval` for large budgets, same trade documented on
-  * PageRank.
+  * the union of the previous dist and one join) — fine for the small
+  * fixed budgets every caller uses.
   */
 object Bfs {
 
@@ -60,9 +59,8 @@ object Bfs {
     *         source, dist in [0, iters]
     */
   def hops(edges: DataFrame, source: DataFrame, iters: Int,
-           src: String = "src", dst: String = "dst",
-           checkpointInterval: Int = 0): DataFrame =
-    hopsTracked(edges, source, iters, src, dst, checkpointInterval)._1
+           src: String = "src", dst: String = "dst"): DataFrame =
+    hopsTracked(edges, source, iters, src, dst)._1
 
   /** As `hops`, plus the persisted-intermediate handles (caller
     * releases after its action — the [[PageRank.runTracked]]
@@ -73,7 +71,6 @@ object Bfs {
     *                 lifetime is then the caller's contract. */
   def hopsTracked(edges: DataFrame, source: DataFrame, iters: Int,
                   src: String = "src", dst: String = "dst",
-                  checkpointInterval: Int = 0,
                   pinnedE: Option[DataFrame] = None)
       : (DataFrame, PageRank.CacheHandles) = {
     val persisted = Seq.newBuilder[DataFrame]
@@ -90,7 +87,6 @@ object Bfs {
     var frontier = pin(source.select(col("node").cast("long").as("node"))
       .withColumn("dist", lit(0)))
     var dist = frontier
-    var prevCkpt: DataFrame = null
     for (i <- 1 to iters) {
       val candidates = frontier
         .join(e, frontier("node") === e("src"))
@@ -102,17 +98,7 @@ object Bfs {
         .filter(col("dist") === i))
       dist = dist.unionByName(fresh)
       frontier = fresh
-      if (checkpointInterval > 0 && i % checkpointInterval == 0 && i < iters) {
-        dist = Checkpoints.cut(dist)
-        // the PRIOR interval's checkpoint blocks are dead now that a
-        // newer one is materialized (Checkpoints scaladoc)
-        if (prevCkpt != null) Checkpoints.free(prevCkpt)
-        prevCkpt = dist
-      }
     }
-    // the last interval's checkpoint underpins the returned plan —
-    // it rides the handles (Checkpoints.free semantics)
-    (dist, new PageRank.CacheHandles(persisted.result(),
-      ckpts = Option(prevCkpt).toSeq))
+    (dist, new PageRank.CacheHandles(persisted.result()))
   }
 }

@@ -32,10 +32,10 @@ import org.apache.spark.storage.StorageLevel
   * Scale mechanics:
   *  - state per round is one (node, label) row per vertex — 16 bytes;
   *    the edge list is persisted once and re-joined each round;
-  *  - `localCheckpoint` truncates the lineage each round (an iterative
-  *    plan otherwise grows by one join+agg per round and re-executes
-  *    from the scan); on a real cluster with executor loss, use
-  *    `checkpoint` against a reliable store instead;
+  *  - [[Iterate]] cuts the lineage each round (an iterative plan
+  *    otherwise grows by one join+agg per round and re-executes from
+  *    the scan); reliable mode ([[Checkpoints.reliableMode]]) makes
+  *    the cut survive executor loss;
   *  - convergence is detected by the sum of labels: labels only ever
   *    decrease, so the sum is strictly monotone until fixpoint — one
   *    cheap driver-side scalar per round, no expensive set compare.
@@ -51,23 +51,12 @@ object ConnectedComponents {
   def run(edges: DataFrame, src: String = "src", dst: String = "dst",
           maxIter: Int = 50): DataFrame = {
     val sym = symmetrized(edges, src, dst)
-    val (labels, converged, rounds) = minLabelLoop(sym, maxIter)
+    // a diameter > maxIter graph exits with PARTIAL labels (discovered
+    // round 7: a 64-chain under the default cap) — min-label callers
+    // own graphs with known-small diameters; anything else should be
+    // on runAdaptive/runStars
+    val labels = minLabelLoop(sym, maxIter, warnAtCap = true)
     sym.unpersist()
-    lastRounds.set(rounds)
-    lastConverged.set(converged)
-    // the FINAL label frame is a checkpoint leaf whose blocks outlive
-    // the caller's action — deposit with the harness ledger
-    // (Dataset.unpersist cannot reach LogicalRDD blocks; un-tracked,
-    // every CC call site leaked one node-sized frame per run)
-    CacheRegistry.trackCheckpointed(labels)
-    if (!converged)
-      // a diameter > maxIter graph exits the loop with PARTIAL labels
-      // (discovered round 7: a 64-chain under the default cap) —
-      // min-label callers own graphs with known-small diameters;
-      // anything else should be on runAdaptive/runStars
-      System.err.println(s"[cc] WARNING: min-label hit the $maxIter-round" +
-        " cap without converging — labels are PARTIAL; use runAdaptive" +
-        " or runStars for high-diameter graphs")
     labels
   }
 
@@ -81,39 +70,35 @@ object ConnectedComponents {
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** The min-label propagation loop over a pre-symmetrized edge list:
-    * up to `maxRounds` rounds, returning (labels, converged, rounds).
+  /** The min-label propagation loop over a pre-symmetrized edge list,
+    * up to `maxRounds` rounds ([[Iterate]] records rounds/converged).
     * Seeded with min(node, min neighbor) — same one-shuffle cost as a
     * plain distinct-node init, but already one propagation step ahead
-    * (saves a full join+agg round on shallow dup-cluster graphs).
-    * The convergence checksum rides each round's ONE action as an
-    * observe() metric — the eager localCheckpoint fires the
-    * observation listener, so no separate per-round checksum job. */
-  private def minLabelLoop(sym: DataFrame,
-                           maxRounds: Int): (DataFrame, Boolean, Int) = {
-    val (labels0, sum0) = checkpointWithSum(
-      sym.groupBy(col("src"))
-        .agg(min(col("dst")).as("mn"))
-        .select(col("src").as("node"),
-          least(col("src"), col("mn")).as("component")))
-    var labels = labels0
-    var prevSum = sum0
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxRounds) {
+    * (saves a full join+agg round on shallow dup-cluster graphs). */
+  private def minLabelLoop(sym: DataFrame, maxRounds: Int,
+                           warnAtCap: Boolean): DataFrame = {
+    val seed = sym.groupBy(col("src"))
+      .agg(min(col("dst")).as("mn"))
+      .select(col("src").as("node"),
+        least(col("src"), col("mn")).as("component"))
+    // Monotone-label checksum: labels only decrease, so the sum is
+    // strictly monotone until fixpoint — one scalar, no set compare.
+    // Summed in DECIMAL(38,0): node ids may be raw 64-bit hashes
+    // (xxhash64 content keys, uniform over the full long range), where
+    // an int64 sum overflows after a handful of rows — ANSI mode would
+    // throw every round, non-ANSI would wrap and void the strict-
+    // monotonicity the equality test relies on. Decimal keeps the sum
+    // EXACT to 1e38 (~1e19 full-range ids), preserving the
+    // zero-collision convergence check at any id scale.
+    val probe = Seq(sum(col("component").cast("decimal(38,0)")).as("cs"))
+    Iterate.untilStable("cc min-label", seed, maxRounds, probe,
+        warnAtCap = warnAtCap) { (labels, _) =>
       val prop = sym.join(labels, sym("src") === labels("node"))
         .select(sym("dst").as("node"), col("component"))
-      val (next, s) = checkpointWithSum(
-        labels.unionByName(prop)
-          .groupBy(col("node"))
-          .agg(min(col("component")).as("component")))
-      Checkpoints.free(labels) // round N-1's blocks die once N is live
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels = next
-      iter += 1
+      labels.unionByName(prop)
+        .groupBy(col("node"))
+        .agg(min(col("component")).as("component"))
     }
-    (labels, converged, iter)
   }
 
   /** ADAPTIVE mode — the production default shape: probe with cheap
@@ -140,12 +125,11 @@ object ConnectedComponents {
                   dst: String = "dst", probeRounds: Int = 8,
                   maxIter: Int = 50): DataFrame = {
     val sym = symmetrized(edges, src, dst)
-    val (labels, converged, probeUsed) = minLabelLoop(sym, probeRounds)
-    CacheRegistry.trackCheckpointed(labels) // final-frame ledger (see run)
-    if (converged) {
+    // the probe is allowed to run out: no cap warning for it
+    val labels = minLabelLoop(sym, probeRounds, warnAtCap = false)
+    val probe = Iterate.last.get()
+    if (probe.converged) {
       sym.unpersist()
-      lastRounds.set(probeUsed)
-      lastConverged.set(true)
       labels
     } else {
       // label-contracted edge list: (label(u), label(v)) per edge,
@@ -164,7 +148,9 @@ object ConnectedComponents {
       // full-edge contraction joins to recompute sym from the raw scan
       val roots = runStars(contracted, maxIter = maxIter)
       sym.unpersist()
-      lastRounds.set(probeUsed + lastRounds.get().intValue())
+      // the star phase's record, with the probe rounds added
+      val stars = Iterate.last.get()
+      Iterate.last.set(stars.copy(rounds = probe.rounds + stars.rounds))
       labels
         .join(roots.select(col("node").as("component"),
           col("component").as("root")), Seq("component"), "left")
@@ -204,17 +190,39 @@ object ConnectedComponents {
     // sym) a second time at action time
     val nodes = Checkpoints.cut(e0.select(col("s").as("node"))
       .union(e0.select(col("d").as("node"))).distinct())
+    // the node list outlives the caller's action — ledger it for the
+    // harness drain now, so a failing star round cannot leak it either
+    CacheRegistry.trackCheckpointed(nodes)
     // canonical (hi, lo), hi > lo; self-loops carry no connectivity
-    var e = Checkpoints.cut(e0.filter(col("s") =!= col("d"))
+    val seed = e0.filter(col("s") =!= col("d"))
       .select(greatest(col("s"), col("d")).as("hi"),
         least(col("s"), col("d")).as("lo"))
-      .distinct())
-    var prevSum = Long.MinValue
-    var prevSum2 = Long.MinValue
-    var prevCnt = -1L
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+      .distinct()
+    // Order-insensitive edge-SET checksum (count + TWO independent
+    // per-edge hash sums) — star rounds rewire rather than
+    // monotonically shrink, so fixpoint = identical set two rounds
+    // running, not a monotone scalar stalling.
+    // Collision bound: a false "converged" needs two DIFFERENT edge sets
+    // of equal count whose hash sums collide in BOTH terms. The terms
+    // use different column orders (xxhash64 is order-sensitive) and
+    // different ~2^30 prime moduli, so they are independent ~30-bit
+    // checks: per-round false-fixpoint probability ~2^-60 — across even
+    // a 10^6-round lifetime that is < 10^-12, documented here per
+    // VERDICT r8 item 4 (a single term's ~2^-30 was small but silent).
+    // Per-edge hashes are reduced mod ~2^30 primes BEFORE summing: each
+    // sum stays inside int64 to ~8.6e9 edges (raw xxhash64 sums
+    // overflow under ANSI at two rows).
+    val probe = Seq(count(lit(1)).as("n"),
+      sum(pmod(xxhash64(col("hi"), col("lo")), lit(1073741789L))).as("hs"),
+      sum(pmod(xxhash64(col("lo"), col("hi")), lit(1073741783L))).as("hs2"))
+    // exiting at the cap BEFORE the star fixpoint leaves a non-star
+    // edge set that the final nodes-join below would misread as
+    // depth-1 stars — the labels would be WRONG (direct star-neighbor
+    // minima, not components), hence the cap warning (VERDICT r8
+    // item 1 — the geo_cluster scale path routes here). The seed is
+    // not probed: round 1 can never count as converged.
+    val stars = Iterate.untilStable("cc star contraction", seed, maxIter, probe,
+        probeSeed = false) { (e, _) =>
       // large-star over the symmetrized view: neighbor lists (a, b)
       val sym = e.select(col("hi").as("a"), col("lo").as("b"))
         .union(e.select(col("lo").as("a"), col("hi").as("b")))
@@ -228,106 +236,15 @@ object ConnectedComponents {
       // small-star over canonical edges: every hi's smaller neighbors
       // (all its lo rows) and hi itself link to their min
       val smin = large.groupBy(col("hi")).agg(min(col("lo")).as("m"))
-      val (next, cnt, sm, sm2) = checkpointWithSetSum(
-        large.join(smin, "hi").filter(col("lo") =!= col("m"))
-          .select(col("lo").as("hi"), col("m").as("lo"))
-          .unionByName(smin.select(col("hi"), col("m").as("lo")))
-          .distinct())
-      Checkpoints.free(e) // round N-1's blocks die once N is live
-      converged = cnt == prevCnt && sm == prevSum && sm2 == prevSum2
-      prevCnt = cnt
-      prevSum = sm
-      prevSum2 = sm2
-      e = next
-      iter += 1
+      large.join(smin, "hi").filter(col("lo") =!= col("m"))
+        .select(col("lo").as("hi"), col("m").as("lo"))
+        .unionByName(smin.select(col("hi"), col("m").as("lo")))
+        .distinct()
     }
-    lastRounds.set(iter)
-    lastConverged.set(converged)
-    if (!converged)
-      // exiting at the cap BEFORE the star fixpoint leaves a non-star
-      // edge set that the final nodes-join below would misread as
-      // depth-1 stars — the labels would be silently WRONG (direct
-      // star-neighbor minima, not components). Mirror run()'s partial
-      // signal: warn loudly and expose lastConverged for callers/specs
-      // (VERDICT r8 item 1 — the geo_cluster scale path routes here).
-      System.err.println(s"[cc] WARNING: star contraction hit the $maxIter" +
-        "-round cap without reaching the fixpoint — component labels are" +
-        " PARTIAL/WRONG for high-diameter regions; raise maxIter" +
-        " (check lastConverged)")
-    // node list + final edge set outlive the caller's action — ledger
-    // them for the harness drain (see run)
-    CacheRegistry.trackCheckpointed(nodes, e)
     // at fixpoint every non-root points at its component min; roots
     // and self-loop-only nodes re-enter via the node list
-    nodes.join(e.select(col("hi").as("node"), col("lo").as("cmp")),
+    nodes.join(stars.select(col("hi").as("node"), col("lo").as("cmp")),
         Seq("node"), "left")
       .select(col("node"), coalesce(col("cmp"), col("node")).as("component"))
-  }
-
-  /** Rounds the last run/runStars on THIS thread took to converge —
-    * measurement hook for the scale harness (queries execute their
-    * driver loop on the calling thread). */
-  private[graft] val lastRounds: ThreadLocal[Integer] =
-    ThreadLocal.withInitial(() => Integer.valueOf(0))
-
-  /** Whether the last run/runStars/runAdaptive on THIS thread reached
-    * its fixpoint before the round cap. `false` means the returned
-    * labels are partial (min-label) or wrong in high-diameter regions
-    * (star mode) — callers owning unbounded-diameter graphs must check
-    * this (or watch the stderr warning) rather than trust the frame. */
-  private[graft] val lastConverged: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.TRUE)
-
-  // Monotone-label checksum, collected DURING the checkpoint
-  // materialization (labels only decrease, so the sum is strictly
-  // monotone until fixpoint — one scalar, no set compare, no extra
-  // job). Summed in DECIMAL(38,0): node ids may be raw 64-bit hashes
-  // (xxhash64 content keys, uniform over the full long range), where
-  // an int64 sum overflows after a handful of rows — ANSI mode would
-  // throw every round, non-ANSI would wrap and void the strict-
-  // monotonicity the equality test relies on. Decimal keeps the sum
-  // EXACT to 1e38 (~1e19 full-range ids), preserving the
-  // zero-collision convergence check at any id scale.
-  private var obsId = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def checkpointWithSum(df: DataFrame)
-      : (DataFrame, java.math.BigDecimal) = {
-    val obs = new org.apache.spark.sql.Observation(
-      s"cc_round_${obsId.incrementAndGet()}")
-    val out = Checkpoints.cut(df
-      .observe(obs, sum(col("component").cast("decimal(38,0)")).as("cs"))) // eager: materializes + truncates lineage
-    // an EMPTY label frame (edgeless input) sums to SQL NULL — the
-    // old long version silently unboxed that to 0; make it explicit
-    (out, Option(obs.get("cs").asInstanceOf[java.math.BigDecimal])
-      .getOrElse(java.math.BigDecimal.ZERO))
-  }
-
-  // Order-insensitive edge-SET checksum (count + TWO independent
-  // per-edge hash sums) riding the checkpoint action — star rounds
-  // rewire rather than monotonically shrink, so fixpoint = identical
-  // set two rounds running, not a monotone scalar stalling.
-  // Collision bound: a false "converged" needs two DIFFERENT edge sets
-  // of equal count whose hash sums collide in BOTH terms. The terms
-  // use different column orders (xxhash64 is order-sensitive) and
-  // different ~2^30 prime moduli, so they are independent ~30-bit
-  // checks: per-round false-fixpoint probability ~2^-60 — across even
-  // a 10^6-round lifetime that is < 10^-12, documented here per
-  // VERDICT r8 item 4 (a single term's ~2^-30 was small but silent).
-  private def checkpointWithSetSum(df: DataFrame)
-      : (DataFrame, Long, Long, Long) = {
-    val obs = new org.apache.spark.sql.Observation(
-      s"cc_star_${obsId.incrementAndGet()}")
-    // per-edge hashes reduced mod ~2^30 primes BEFORE summing: each
-    // sum stays inside int64 to ~8.6e9 edges (raw xxhash64 sums
-    // overflow under ANSI at two rows)
-    val out = Checkpoints.cut(df.observe(obs, count(lit(1)).as("n"),
-        sum(pmod(xxhash64(col("hi"), col("lo")), lit(1073741789L))).as("hs"),
-        sum(pmod(xxhash64(col("lo"), col("hi")), lit(1073741783L))).as("hs2")))
-    // an empty edge set (fully contracted round) sums BOTH terms to
-    // SQL NULL — guard each explicitly rather than ride Scala's
-    // silent unboxToLong(null) == 0 quirk
-    def longOr0(v: Any): Long =
-      v match { case null => 0L; case x => x.asInstanceOf[Long] }
-    (out, obs.get("n").asInstanceOf[Long],
-      longOr0(obs.get("hs")), longOr0(obs.get("hs2")))
   }
 }

@@ -18,11 +18,12 @@ import org.apache.spark.sql.functions._
   * BOTH endpoints still clear k (two hash joins against the node-sized
   * degree frame keyed on each endpoint). Rounds = peel depth of the
   * graph (the number of "onion layers" above the core), NOT the node
-  * count — dense co-occurrence graphs peel in ~10 rounds. The edge
-  * frame is `localCheckpoint`ed each round (same lineage-truncation
-  * discipline as [[ConnectedComponents.run]]); the surviving-edge
-  * count rides the checkpoint as an `observe()` metric, so convergence
-  * costs no extra job — edge counts strictly decrease until fixpoint.
+  * count — dense co-occurrence graphs peel in ~10 rounds. The round
+  * loop is [[Iterate]]'s: the edge frame is cut each round and the
+  * surviving-edge count rides the cut as an `observe()` metric, so
+  * convergence costs no extra job — edge counts strictly decrease
+  * until fixpoint. A peel deeper than `maxIter` returns a PARTIAL core
+  * (a superset of the k-core) and prints the cap warning.
   */
 object KCore {
 
@@ -34,32 +35,19 @@ object KCore {
     * @return the surviving edges, same (a, b) canonical form
     */
   def edges(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
-    var e = edges.select(col("a").cast("long").as("a"),
+    val e = edges.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"))
-    var (cur, prevCnt) = checkpointWithCount(e)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+    val probe = Seq(count(lit(1)).as("n"))
+    Iterate.untilStable("kcore", e, maxIter, probe) { (cur, _) =>
       val ok = cur.select(explode(array(col("a"), col("b"))).as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k)
         .select(col("v"))
-      val kept = cur
+      cur
         .join(ok.select(col("v").as("a")), "a", "left_semi")
         .join(ok.select(col("v").as("b")), "b", "left_semi")
         .select(col("a"), col("b"))
-      val (next, cnt) = checkpointWithCount(kept)
-      Checkpoints.free(cur) // round N-1's blocks die once N is live
-      converged = cnt == prevCnt
-      prevCnt = cnt
-      cur = next
-      iter += 1
     }
-    // the FINAL edge frame is a checkpoint leaf that outlives the
-    // caller's action — ledger it for the harness drain
-    // (Dataset.unpersist cannot reach LogicalRDD blocks)
-    CacheRegistry.trackCheckpointed(cur)
-    cur
   }
 
   /** (node, core_deg) for every node of the k-core — degree counted
@@ -68,12 +56,4 @@ object KCore {
     edges(edgeList, k)
       .select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
-
-  private val obsId = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def checkpointWithCount(df: DataFrame): (DataFrame, Long) = {
-    val obs = new org.apache.spark.sql.Observation(
-      s"kcore_round_${obsId.incrementAndGet()}")
-    val out = Checkpoints.cut(df.observe(obs, count(lit(1)).as("n"))) // eager: materializes + truncates lineage
-    (out, obs.get("n").asInstanceOf[Long])
-  }
 }

@@ -43,11 +43,9 @@ import org.apache.spark.storage.StorageLevel
   * stays a shuffled join and the edge partitioning is reused). Warm
   * repeats at sf0.1 run ~30% faster fused than with per-round
   * `localCheckpoint`; cold runs are scheduling-dominated either way
-  * (~12-15 AQE stages for 5 rounds). For large k, pass
-  * `checkpointInterval` — plan depth (and stage-retry recompute span)
-  * grows linearly with k, so truncate every few rounds
-  * (`localCheckpoint` locally; swap for reliable `checkpoint` on a
-  * cluster where executor loss would drop cached lineage).
+  * (~12-15 AQE stages for 5 rounds). Plan depth (and stage-retry
+  * recompute span) grows linearly with k — fine for the small fixed k
+  * every caller uses.
   */
 object PageRank {
 
@@ -58,8 +56,6 @@ object PageRank {
     *              nodes, which this exact-integer formulation does not
     *              redistribute)
     * @param iters fixed number of update rounds
-    * @param checkpointInterval truncate lineage every this many rounds
-    *                           (0 = never; right for small fixed k)
     * @param assumeDistinct skip the defensive edge dedup when the
     *                       caller's construction already guarantees
     *                       distinct (src, dst) pairs — saves one full
@@ -73,11 +69,9 @@ object PageRank {
     */
   def run(edges: DataFrame, iters: Int,
           src: String = "src", dst: String = "dst",
-          checkpointInterval: Int = 0,
           assumeDistinct: Boolean = false,
           symmetric: Boolean = false): DataFrame =
-    runTracked(edges, iters, src, dst, checkpointInterval,
-      assumeDistinct, symmetric)._1
+    runTracked(edges, iters, src, dst, assumeDistinct, symmetric)._1
 
   /** As `run`, but also returns the intermediates left persisted, so a
     * long-lived session can `release()` them once the result has been
@@ -101,7 +95,6 @@ object PageRank {
 
   def runTracked(edges: DataFrame, iters: Int,
                  src: String = "src", dst: String = "dst",
-                 checkpointInterval: Int = 0,
                  assumeDistinct: Boolean = false,
                  symmetric: Boolean = false,
                  broadcastRanks: Boolean = false,
@@ -157,8 +150,7 @@ object PageRank {
         .withColumn("rank", lit(150000L)))
     val hasNoInflow = !symmetric && noInflow.limit(1).count() > 0
     var ranks = nodes.withColumn("rank", lit(1000000L))
-    var prevCkpt: DataFrame = null
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val rsrc = ranks.withColumnRenamed("node", "src")
       val received = eo
         .join(if (broadcastRanks) broadcast(rsrc) else rsrc, "src")
@@ -166,22 +158,11 @@ object PageRank {
         .groupBy(col("node"))
         .agg((lit(150000L) + expr("(850 * sum(c)) div 1000")).as("rank"))
       ranks = if (hasNoInflow) received.unionByName(noInflow) else received
-      if (checkpointInterval > 0 && i % checkpointInterval == 0 && i < iters) {
-        ranks = Checkpoints.cut(ranks) // eager: materializes + truncates
-        // the PRIOR interval's checkpoint blocks are dead now that a
-        // newer one is materialized (Checkpoints scaladoc)
-        if (prevCkpt != null) Checkpoints.free(prevCkpt)
-        prevCkpt = ranks
-      }
     }
     // NOTE: the pinned intermediates stay persisted until the caller's
     // action has run (an unpersist here would evict before the lazy
-    // plan executes) — hence the handles in the return value. The LAST
-    // interval's checkpoint underpins the returned lazy plan, so it
-    // rides the handles too (released via Checkpoints.free — a plain
-    // unpersist cannot reach LogicalRDD blocks).
-    (ranks, new CacheHandles(persisted.result(),
-      ckpts = Option(prevCkpt).toSeq))
+    // plan executes) — hence the handles in the return value.
+    (ranks, new CacheHandles(persisted.result()))
   }
 
   /** PERSONALIZED PageRank: the teleport mass lands only on `seeds`
@@ -247,22 +228,20 @@ object PageRank {
     (ranks, new CacheHandles(persisted.result()))
   }
 
-  /** Persisted-DataFrame handles with one idempotent release switch.
-    * `ckpts` are localCheckpoint'ed frames — their blocks live on the
-    * RDD inside the LogicalRDD leaf, which Dataset.unpersist never
-    * reaches, so they release via Checkpoints.free. */
-  class CacheHandles(dfs: Seq[DataFrame], ckpts: Seq[DataFrame] = Nil) {
-    def release(): Unit = {
-      dfs.foreach(_.unpersist(blocking = false))
-      ckpts.foreach(Checkpoints.free)
-    }
+  /** Persisted-DataFrame handles with one idempotent release switch. */
+  class CacheHandles(dfs: Seq[DataFrame]) {
+    def release(): Unit = dfs.foreach(_.unpersist(blocking = false))
   }
 
-  /** Handles for ONLY checkpoint'ed frames — the loop-FINAL frames
-    * that must outlive the query action and so can only be released by
-    * the harness ledger. */
+  /** Handles for checkpoint'ed frames — the loop-FINAL frames that
+    * must outlive the query action and so can only be released by the
+    * harness ledger. Their blocks live on the RDD inside the
+    * LogicalRDD leaf, which Dataset.unpersist never reaches, so they
+    * release via Checkpoints.free. */
   final class CheckpointHandles(dfs: Seq[DataFrame])
-      extends CacheHandles(Nil, ckpts = dfs)
+      extends CacheHandles(Nil) {
+    override def release(): Unit = dfs.foreach(Checkpoints.free)
+  }
 
   /** Handles for raw persisted RDDs — physical operators
     * (plans/RunningSumExec) persist below the Dataset layer, where

@@ -125,7 +125,7 @@ object ScaleGrowth {
         case _ => ConnectedComponents.run(edges)
       }).count()
       val t = (System.nanoTime() - t0) / 1e9
-      val rounds = ConnectedComponents.lastRounds.get().intValue()
+      val rounds = graft.scale.Iterate.last.get().rounds
       System.err.println(f"[scale] cc_$mode%-10s ${ms(t)}%8s s $rounds rounds ($n nodes)")
       (t, rounds, n)
     }

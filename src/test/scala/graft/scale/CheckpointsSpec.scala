@@ -1,7 +1,11 @@
 package graft.scale
 
+import java.nio.file.{Files, Paths}
+
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** Checkpoints.free must actually remove a localCheckpoint's blocks
   * from the BlockManager (Dataset.unpersist does NOT — the blocks
@@ -61,6 +65,52 @@ class CheckpointsSpec extends SparkSpec {
     // level (it would detach the class from later setLogLevel calls)
     assert(explicitCfg == hadExplicit,
       "free() changed whether the logger has an explicit config")
+  }
+
+  test("a loop whose step fails frees the live round's cut before rethrowing") {
+    var live = -1
+    var pinned = false
+    val err = intercept[IllegalStateException] {
+      Iterate.untilStable("failing", spark.range(100).toDF("id"), 5,
+          Seq(count(lit(1)).as("n"))) { (df, round) =>
+        if (round == 2) {
+          live = df.queryExecution.logical
+            .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+          pinned = persistentRddIds.contains(live)
+          throw new IllegalStateException("step failed")
+        }
+        df.filter(col("id") >= round)
+      }
+    }
+    assert(err.getMessage == "step failed")
+    assert(pinned, s"round 1's cut (rdd $live) was not pinned during round 2")
+    assert(awaitGone(Set(live)), s"round 1's cut (rdd $live) survived the failure")
+  }
+
+  test("source guard: only Iterate frees a round's lineage cut; no checkpoint-interval option") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"missing source root $root")
+    val files = {
+      val w = Files.walk(root)
+      try w.iterator().asScala.toList finally w.close()
+    }.filter(_.toString.endsWith(".scala"))
+    // code only: a comment may name the call
+    val call = """Checkpoints\.free\b""".r
+    def calls(p: java.nio.file.Path): Int =
+      Files.readAllLines(p).asScala.map(_.trim)
+        .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
+        .map(l => call.findAllIn(l.split("//")(0)).size).sum
+    def scale(f: String) = Paths.get("graft", "scale", f)
+    val owners = Seq(scale("Iterate.scala"), scale("Checkpoints.scala"))
+    val offenders = files.filterNot(p => owners.exists(p.endsWith))
+      .map(p => p -> calls(p))
+      // PageRank.scala: the one release of ledgered final frames
+      .filter { case (p, n) => n > (if (p.endsWith(scale("PageRank.scala"))) 1 else 0) }
+    assert(offenders.isEmpty,
+      s"free a round's cut through graft.scale.Iterate, not in: ${offenders.mkString(", ")}")
+    val knob = "checkpoint" + "Interval" // split: src/ names it nowhere
+    val withKnob = files.filter(p => Files.readString(p).contains(knob))
+    assert(withKnob.isEmpty, s"$knob is gone; found in: ${withKnob.mkString(", ")}")
   }
 
   test("a long CC run retains only O(1) checkpointed frames, not O(rounds)") {

@@ -129,13 +129,13 @@ class ConnectedComponentsSpec extends SparkSpec {
       "probe + log-d star rounds on a deep one") {
     // shallow: star/clique — must converge inside the 4-round probe
     ccAdaptive(Seq((2L, 1L), (3L, 1L), (4L, 1L), (3L, 2L)))
-    val shallow = ConnectedComponents.lastRounds.get().intValue()
+    val shallow = Iterate.last.get().rounds
     assert(shallow <= 4, s"shallow graph took $shallow rounds")
     // deep: 128-hop chain — probe (4) + star rounds on the contracted
     // graph, far under the 129-round diameter min-label would pay
     val deep = (1L to 128L).map(i => (i + 1, i))
     val got = ccAdaptive(deep)
-    val rounds = ConnectedComponents.lastRounds.get().intValue()
+    val rounds = Iterate.last.get().rounds
     assert(got == (1L to 129L).map(_ -> 1L).toMap)
     assert(rounds <= 16, s"adaptive took $rounds rounds on a 128-chain")
   }
@@ -152,7 +152,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val capped = ConnectedComponents
       .runStars(chain.toDF("src", "dst"), maxIter = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(!ConnectedComponents.lastConverged.get(),
+    assert(!Iterate.last.get().converged,
       "star loop at a 2-round cap on a 256-chain must flag non-convergence")
     assert(capped != truth,
       "2 star rounds unexpectedly solved a 256-chain — tighten this test")
@@ -160,11 +160,11 @@ class ConnectedComponentsSpec extends SparkSpec {
     ConnectedComponents
       .runAdaptive(chain.toDF("src", "dst"), probeRounds = 2, maxIter = 2)
       .collect()
-    assert(!ConnectedComponents.lastConverged.get(),
+    assert(!Iterate.last.get().converged,
       "runAdaptive must surface its star phase's non-convergence")
     // and a sufficient cap restores both the flag and the answer
     assert(ccStars(chain) == truth)
-    assert(ConnectedComponents.lastConverged.get())
+    assert(Iterate.last.get().converged)
   }
 
   test("runStars converges in O(log d) rounds on a long chain") {
@@ -172,12 +172,12 @@ class ConnectedComponentsSpec extends SparkSpec {
     // capped by maxIter); star contraction must fold it fast
     val edges = (1L to 64L).map(i => (i + 1, i))
     val got = ccStars(edges)
-    val starRounds = ConnectedComponents.lastRounds.get().intValue()
+    val starRounds = Iterate.last.get().rounds
     assert(got == (1L to 65L).map(_ -> 1L).toMap)
     assert(starRounds <= 12,
       s"star contraction took $starRounds rounds on a 64-chain")
     cc(edges)
-    val labelRounds = ConnectedComponents.lastRounds.get().intValue()
+    val labelRounds = Iterate.last.get().rounds
     assert(starRounds < labelRounds,
       s"star ($starRounds) did not beat min-label ($labelRounds) on the chain")
   }

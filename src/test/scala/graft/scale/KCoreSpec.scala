@@ -37,6 +37,25 @@ class KCoreSpec extends SparkSpec {
     assert(KCore.edges(fixture, 4).isEmpty)
   }
 
+  test("a peel deeper than maxIter reports its cap; the default cap reaches the empty core") {
+    import spark.implicits._
+    // path 1-2-...-11: every round peels the two end edges, so the
+    // 2-core is empty after 5 rounds and the 6th sees no change
+    val path = (1L to 10L).map(i => (i, i + 1)).toDF("a", "b")
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val capped =
+      try KCore.edges(path, 2, maxIter = 2).count()
+      finally System.setErr(stderr)
+    assert(capped == 6L)
+    assert(Iterate.last.get() == Iterate.Record(2, converged = false))
+    assert(err.toString.contains("[iterate] WARNING kcore"),
+      s"no cap warning on stderr: $err")
+    assert(KCore.edges(path, 2).isEmpty)
+    assert(Iterate.last.get() == Iterate.Record(6, converged = true))
+  }
+
   test("every core node clears k inside the core (live data)") {
     val e = graft.io.Tables(spark, sf("sf0.001"), "lineitem")
       .groupBy(col("l_orderkey"))

@@ -47,8 +47,7 @@ class ReliableCheckpointSpec extends SparkSpec {
       .filter(col("src") =!= col("dst")).distinct()
     def runAll(): Seq[Seq[org.apache.spark.sql.Row]] = {
       val pr = {
-        val (df, h) = PageRank.runTracked(edges, iters = 3,
-          checkpointInterval = 1)
+        val (df, h) = PageRank.runTracked(edges, iters = 3)
         val rows = df.orderBy(col("node")).collect().toSeq
         h.release(); rows
       }
@@ -57,10 +56,14 @@ class ReliableCheckpointSpec extends SparkSpec {
         val rows = df.orderBy(col("node")).collect().toSeq
         CacheRegistry.drain(); rows
       }
+      val stars = {
+        val df = ConnectedComponents.runStars(edges)
+        val rows = df.orderBy(col("node")).collect().toSeq
+        CacheRegistry.drain(); rows
+      }
       val bfs = {
         val src1 = edges.agg(min(col("src")).as("node"))
-        val (df, h) = Bfs.hopsTracked(edges, src1, iters = 4,
-          checkpointInterval = 1)
+        val (df, h) = Bfs.hopsTracked(edges, src1, iters = 4)
         val rows = df.orderBy(col("node")).collect().toSeq
         h.release(); rows
       }
@@ -71,7 +74,7 @@ class ReliableCheckpointSpec extends SparkSpec {
         val rows = df.orderBy(col("a"), col("b")).collect().toSeq
         CacheRegistry.drain(); rows
       }
-      Seq(pr, cc, bfs, kc)
+      Seq(pr, cc, stars, bfs, kc)
     }
     val base = runAll()
     val rel = withReliable { runAll() }
