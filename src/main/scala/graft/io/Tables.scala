@@ -9,32 +9,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  /** Inferred schema per (session, path) — r15 optimization round
-    * (VERDICT item 3): EVERY `spark.read.parquet(path)` re-runs
-    * driver-side schema inference (a synchronous footer read per
-    * call), and TailProbe measured the bench's DataFrame-construction
-    * phase at 0.06–0.09 s per table reference — a six-table TPC-H row
-    * paid ~0.5 s before planning even started, and across the 220-row
-    * suite the builders spent tens of seconds re-inferring schemas of
-    * the same static files. Passing the memoized schema via
-    * `.schema(...)` skips inference entirely while still returning a
-    * FRESH DataFrame per call (fresh attribute ids — self-joins built
-    * from two Tables() calls keep their distinct lineage, unlike a
-    * memoized-DataFrame design, which would alias them). Keyed by
-    * full path, so distinct sfDirs never mix; entries of stopped
-    * sessions are purged like every other memo. Contract note: a
-    * path whose SCHEMA is rewritten mid-session would read through
-    * the stale memo — the corpus generators version directories
-    * instead of rewriting them in place, so this cannot occur in any
-    * harness; a new session always re-infers. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), org.apache.spark.sql.types.StructType]()
-
+  /** A fresh DataFrame over `<sfDir>/<name>.parquet`, read with the
+    * schema inferred once per (session, sfDir) — the `schema/<name>`
+    * MemoPool entry. r15 optimization round (VERDICT item 3): EVERY
+    * `spark.read.parquet(path)` re-runs driver-side schema inference
+    * (a synchronous footer read per call), and TailProbe measured the
+    * bench's DataFrame-construction phase at 0.06–0.09 s per table
+    * reference — a six-table TPC-H row paid ~0.5 s before planning
+    * even started. Passing the memoized schema via `.schema(...)`
+    * skips inference while still returning a FRESH DataFrame per call
+    * (fresh attribute ids — self-joins built from two Tables() calls
+    * keep their distinct lineage, unlike a memoized-DataFrame design,
+    * which would alias them). Contract note: a path whose SCHEMA is
+    * rewritten mid-session would read through the stale memo — the
+    * corpus generators version directories instead of rewriting them
+    * in place, so this cannot occur in any harness; a new session
+    * always re-infers. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    schemaCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val schema = schemaCache.computeIfAbsent((spark, path),
-      _ => spark.read.parquet(path).schema)
+    val schema = graft.scale.MemoPool.getOrBuild(spark, sfDir, s"schema/$name") {
+      spark.read.parquet(path).schema
+    }(_ => Nil)
     spark.read.schema(schema).parquet(path)
   }
 

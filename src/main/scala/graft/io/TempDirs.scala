@@ -3,14 +3,13 @@ package graft.io
 import java.io.File
 
 /** Temp directories for materialized artifacts (ORC/partitioned/
-  * bucketed copies, the curated corpus), registered for recursive
-  * deletion at JVM exit. The artifact caches memoize per (session,
-  * sfDir) and evict entries when a session stops — but evicting the
-  * map ENTRY never deleted the directory, so long-lived dev machines
-  * accumulated orphaned full-corpus parquet copies in /tmp across
-  * harness runs. Deletion at exit bounds the leak to one JVM's
-  * working set (a crash still orphans; the prefix names make those
-  * greppable).
+  * bucketed copies, the curated corpus, stream staging), registered
+  * for recursive deletion at JVM exit. Their paths are MemoPool
+  * entries, and dropping an entry (session stop, `clear`) never
+  * deletes the directory, so long-lived dev machines accumulated
+  * orphaned full-corpus parquet copies in /tmp across harness runs.
+  * Deletion at exit bounds the leak to one JVM's working set (a crash
+  * still orphans; the prefix names make those greppable).
   */
 object TempDirs {
   private val created =

@@ -255,27 +255,22 @@ object LayoutPack extends QueryPack {
        |FROM h$k)""".stripMargin
   }.mkString(",\n")
 
-  /** One hive-partitioned copy of `events` per (session, sfDir). The
+  /** A hive-partitioned copy of `events` (MemoPool entry). The
     * partition count is #event_types (bounded, low-cardinality — the
     * partitionBy contract; partitioning on a high-cardinality key
     * would be the small-files anti-pattern ly_compaction exists to
     * undo). */
-  private val partCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   private[queries] def partitionedCopyOfEvents(s: SparkSession,
-                                               dir: String): String = {
-    partCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    partCache.computeIfAbsent((s, dir), _ => {
+                                               dir: String): String =
+    graft.scale.MemoPool.getOrBuild(s, dir, "partitionedEvents") {
       val out = graft.io.TempDirs.create("graft_part_events_")
       Tables.events(s, dir).write.mode("overwrite")
         .partitionBy("event_type").parquet(out)
       out
-    })
-  }
+    }(_ => Nil)
 
-  /** One BUCKETED copy of (orders, customer) per (session, sfDir),
-    * both `bucketBy(8, custkey).sortBy(custkey)` — the co-located
+  /** A BUCKETED copy of (orders, customer) (MemoPool entry), both
+    * `bucketBy(8, custkey).sortBy(custkey)` — the co-located
     * join layout the builder brief names for 100 TB fact⨝dim work:
     * rows land in files by hash(key) % 8 at WRITE time, so every
     * join on the key is exchange-free forever after (the shuffle is
@@ -285,14 +280,9 @@ object LayoutPack extends QueryPack {
     * catalog with an explicit temp-dir path (external table — no
     * warehouse writes), names keyed by the sanitized sfDir path so
     * two SFs in one session cannot collide. */
-  private val bucketCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (String, String)]()
-
   private[queries] def bucketedOrdersCustomer(
-      s: SparkSession, dir: String): (String, String) = {
-    bucketCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    bucketCache.computeIfAbsent((s, dir), _ => {
+      s: SparkSession, dir: String): (String, String) =
+    graft.scale.MemoPool.getOrBuild(s, dir, "bucketedOrdersCustomer") {
       // tag = the sanitized PATH, not a hash: two sfDirs in one
       // session get distinct catalog names by construction (a 32-bit
       // hash collision would silently cross-wire their data)
@@ -306,37 +296,45 @@ object LayoutPack extends QueryPack {
       // SAME partitioning function as the bucket spec (Spark's native
       // bucketing reuses HashPartitioning.partitionIdExpression), so
       // each of the 8 writer tasks holds exactly one bucket — the
-      // one-file-per-bucket layout is unchanged (BucketedJoinSpec's
-      // zero-exchange join still pins it) while the sort+encode runs
-      // 8-wide, and the two writes overlap on the scheduler.
+      // one-file-per-bucket layout is unchanged (BucketedJoinSpec
+      // pins 8 files and the zero-exchange join) while the sort+encode
+      // runs 8-wide, and the two writes overlap on the scheduler.
       def writeBucketed(table: String, key: String, name: String): Unit =
         Tables(s, dir, table).repartition(8, col(key))
           .write.mode("overwrite")
           .bucketBy(8, key).sortBy(key)
           .option("path", s"$base/$table").saveAsTable(name)
+      // The customer write runs on a pool thread under the caller's
+      // job description (pool threads carry whatever they inherited,
+      // and the description is what charges the jobs to their payer);
+      // the orders write runs here. Both have finished before the
+      // build returns or rethrows — a failing write never leaves its
+      // sibling running against the same table names.
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(Seq(
-        Future(writeBucketed("orders", "o_custkey", to)),
-        Future(writeBucketed("customer", "c_custkey", tc)))), Duration.Inf)
+      val sc = s.sparkContext
+      val desc = sc.getLocalProperty("spark.job.description")
+      val customer = Future {
+        val inherited = sc.getLocalProperty("spark.job.description")
+        sc.setLocalProperty("spark.job.description", desc)
+        try writeBucketed("customer", "c_custkey", tc)
+        finally sc.setLocalProperty("spark.job.description", inherited)
+      }
+      try writeBucketed("orders", "o_custkey", to)
+      finally Await.ready(customer, Duration.Inf)
+      Await.result(customer, Duration.Zero)
       (to, tc)
-    })
-  }
+    }(_ => Nil)
 
-  /** One ORC copy of `part` per (session, sfDir), reused across
-    * repeated runs in a harness (Bench repeats; TimeQuery loops). */
-  private val orcCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  private[queries] def orcCopyOfPart(s: SparkSession, dir: String): String = {
-    orcCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    orcCache.computeIfAbsent((s, dir), _ => {
+  /** An ORC copy of `part` (MemoPool entry), reused across repeated
+    * runs in a harness (Bench repeats; TimeQuery loops). */
+  private[queries] def orcCopyOfPart(s: SparkSession, dir: String): String =
+    graft.scale.MemoPool.getOrBuild(s, dir, "orcPart") {
       val out = graft.io.TempDirs.create("graft_orc_part_")
       Tables(s, dir, "part").write.mode("overwrite").orc(out)
       out
-    })
-  }
+    }(_ => Nil)
 
   override def oracleSql: Map[String, String] = Map(
     // the unpartitioned original: the partitioned copy must lose

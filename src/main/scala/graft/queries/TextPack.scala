@@ -154,24 +154,18 @@ object TextPack extends QueryPack {
     CurationFunnel(docsRaw, train, qual, clean, unique, kept)
   }
 
-  /** One materialized curated corpus per (session, sfDir): the
-    * funnel's surviving documents written as full-row parquet (the
-    * artifact a trainer would consume), memoized like LayoutPack's
-    * round-trip copies so Bench repeats reuse one write. */
-  private val curatedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  private[queries] def curatedCorpusPath(s: SparkSession, dir: String): String = {
-    curatedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    curatedCache.computeIfAbsent((s, dir), _ => {
+  /** The materialized curated corpus (MemoPool entry): the funnel's
+    * surviving documents written as full-row parquet (the artifact a
+    * trainer would consume), so Bench repeats reuse one write. */
+  private[queries] def curatedCorpusPath(s: SparkSession, dir: String): String =
+    graft.scale.MemoPool.getOrBuild(s, dir, "curatedCorpus") {
       val out = graft.io.TempDirs.create("graft_curated_")
       Tables(s, dir, "documents")
         .join(curationFunnel(s, dir).kept.select(col("doc_id")), "doc_id")
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
         .write.mode("overwrite").parquet(out)
       out
-    })
-  }
+    }(_ => Nil)
 
   /** (doc_id, q_rank) — t_quality's bucket as an integer rank
     * (low=0, medium=1, high=2), the election key for quality-aware

@@ -72,7 +72,7 @@ object Bfs {
   def hopsTracked(edges: DataFrame, source: DataFrame, iters: Int,
                   src: String = "src", dst: String = "dst",
                   pinnedE: Option[DataFrame] = None)
-      : (DataFrame, PageRank.CacheHandles) = {
+      : (DataFrame, CacheRegistry.Handle) = {
     val persisted = Seq.newBuilder[DataFrame]
     def pin(df: DataFrame): DataFrame = {
       persisted += df
@@ -99,6 +99,6 @@ object Bfs {
       dist = dist.unionByName(fresh)
       frontier = fresh
     }
-    (dist, new PageRank.CacheHandles(persisted.result()))
+    (dist, CacheRegistry.handle(persisted.result()))
   }
 }

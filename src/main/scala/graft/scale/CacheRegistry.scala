@@ -1,7 +1,8 @@
 package graft.scale
 
-/** Thread-scoped ledger of persisted intermediates for the fixed
-  * query-harness contract.
+/** The query scope of persisted state: what one query pins and must
+  * release once its action has run. The session scope — state built
+  * once and reused by later queries — is [[MemoPool]].
   *
   * The iterative graph operators pin intermediates and return handles
   * ([[PageRank.runTracked]]) for the caller to release once its action
@@ -25,26 +26,35 @@ package graft.scale
   * marks (plan-only walks like PlanShapeSpec).
   */
 object CacheRegistry {
-  private val local = new ThreadLocal[List[PageRank.CacheHandles]] {
-    override def initialValue(): List[PageRank.CacheHandles] = Nil
+
+  /** Persisted state of one query, with its one release. */
+  final class Handle(free: () => Unit) {
+    def release(): Unit = free()
   }
 
-  /** Record handles for release at the next same-thread [[drain]]. */
-  def track(h: PageRank.CacheHandles): Unit = local.set(h :: local.get())
+  /** A handle that unpersists `dfs`. */
+  def handle(dfs: Seq[org.apache.spark.sql.DataFrame]): Handle =
+    new Handle(() => dfs.foreach(_.unpersist(blocking = false)))
 
-  /** Record bare persisted frames (sugar for a single-frame handle). */
-  def track(dfs: org.apache.spark.sql.DataFrame*): Unit =
-    track(new PageRank.CacheHandles(dfs.toSeq))
+  private val local = ThreadLocal.withInitial[List[Handle]](() => Nil)
 
-  /** Record localCheckpoint'ed frames — released via Checkpoints.free
-    * (Dataset.unpersist cannot reach a LogicalRDD leaf's blocks). */
+  /** Record a handle for release at the next same-thread [[drain]]. */
+  def track(h: Handle): Unit = local.set(h :: local.get())
+
+  /** Record bare persisted frames. */
+  def track(dfs: org.apache.spark.sql.DataFrame*): Unit = track(handle(dfs))
+
+  /** Record localCheckpoint'ed frames — the loop-final frames that
+    * outlive the query action. Their blocks live on the RDD inside
+    * the LogicalRDD leaf, which Dataset.unpersist never reaches, so
+    * they release via Checkpoints.free. */
   def trackCheckpointed(dfs: org.apache.spark.sql.DataFrame*): Unit =
-    track(new PageRank.CheckpointHandles(dfs.toSeq))
+    track(new Handle(() => dfs.foreach(Checkpoints.free)))
 
   /** Record raw persisted RDDs (physical operators persisting below
     * the Dataset layer, e.g. plans/RunningSumExec's sorted child). */
   def trackRdd(rdds: org.apache.spark.rdd.RDD[_]*): Unit =
-    track(new PageRank.RddHandles(rdds.toSeq))
+    track(new Handle(() => rdds.foreach(_.unpersist(blocking = false))))
 
   // ---- execution-scoped RDD release (physical-operator persists) ----
   //

@@ -98,7 +98,8 @@ object PageRank {
                  assumeDistinct: Boolean = false,
                  symmetric: Boolean = false,
                  broadcastRanks: Boolean = false,
-                 pinnedEo: Option[DataFrame] = None): (DataFrame, CacheHandles) = {
+                 pinnedEo: Option[DataFrame] = None)
+      : (DataFrame, CacheRegistry.Handle) = {
     val persisted = Seq.newBuilder[DataFrame]
     def pin(df: DataFrame): DataFrame = {
       persisted += df
@@ -162,7 +163,7 @@ object PageRank {
     // NOTE: the pinned intermediates stay persisted until the caller's
     // action has run (an unpersist here would evict before the lazy
     // plan executes) — hence the handles in the return value.
-    (ranks, new CacheHandles(persisted.result()))
+    (ranks, CacheRegistry.handle(persisted.result()))
   }
 
   /** PERSONALIZED PageRank: the teleport mass lands only on `seeds`
@@ -189,7 +190,7 @@ object PageRank {
                              assumeDistinct: Boolean = false,
                              broadcastRanks: Boolean = false,
                              pinnedEo: Option[DataFrame] = None)
-      : (DataFrame, CacheHandles) = {
+      : (DataFrame, CacheRegistry.Handle) = {
     val persisted = Seq.newBuilder[DataFrame]
     def pin(df: DataFrame): DataFrame = {
       persisted += df
@@ -225,30 +226,6 @@ object PageRank {
         .select(col("node"),
           (coalesce(col("base"), lit(0L)) + col("fl")).as("rank"))
     }
-    (ranks, new CacheHandles(persisted.result()))
-  }
-
-  /** Persisted-DataFrame handles with one idempotent release switch. */
-  class CacheHandles(dfs: Seq[DataFrame]) {
-    def release(): Unit = dfs.foreach(_.unpersist(blocking = false))
-  }
-
-  /** Handles for checkpoint'ed frames — the loop-FINAL frames that
-    * must outlive the query action and so can only be released by the
-    * harness ledger. Their blocks live on the RDD inside the
-    * LogicalRDD leaf, which Dataset.unpersist never reaches, so they
-    * release via Checkpoints.free. */
-  final class CheckpointHandles(dfs: Seq[DataFrame])
-      extends CacheHandles(Nil) {
-    override def release(): Unit = dfs.foreach(Checkpoints.free)
-  }
-
-  /** Handles for raw persisted RDDs — physical operators
-    * (plans/RunningSumExec) persist below the Dataset layer, where
-    * `DataFrame.unpersist` can't reach. */
-  final class RddHandles(rdds: Seq[org.apache.spark.rdd.RDD[_]])
-      extends CacheHandles(Nil) {
-    override def release(): Unit =
-      rdds.foreach(_.unpersist(blocking = false))
+    (ranks, CacheRegistry.handle(persisted.result()))
   }
 }

@@ -55,8 +55,8 @@ object Triangles {
     * memoized (the AnalyticsPack pattern). */
   final case class OrientedGraph(e: DataFrame, deg: DataFrame,
       oriented: DataFrame, adj: DataFrame) {
-    def handles: PageRank.CacheHandles =
-      new PageRank.CacheHandles(Seq(e, oriented, adj))
+    def handles: CacheRegistry.Handle =
+      CacheRegistry.handle(Seq(e, oriented, adj))
   }
 
   /** Build the [[OrientedGraph]] of an undirected graph.
@@ -109,7 +109,7 @@ object Triangles {
     * releases after its action — the [[PageRank.runTracked]]
     * contract). */
   def statsTracked(edges: DataFrame, a: String = "a", b: String = "b")
-      : (DataFrame, PageRank.CacheHandles) = {
+      : (DataFrame, CacheRegistry.Handle) = {
     val g = orient(edges, a, b)
     (statsFromGraph(g), g.handles)
   }

@@ -48,21 +48,16 @@ object StreamExec {
 
   private val SentinelUser = -1L
 
-  /** Memoized (minTs, maxTs) of the events table per (session, sfDir)
-    * — every staged-dir builder AND lateDropViaStream's window bound
-    * need the range; un-memoized each paid its own full-table agg. */
-  private val tsRangeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.sql.Timestamp, java.sql.Timestamp)]()
-
+  /** (minTs, maxTs) of the events table (MemoPool entry) — every
+    * staged-dir builder AND lateDropViaStream's window bound need the
+    * range; un-memoized each paid its own full-table agg. */
   private def tsRange(s: SparkSession, sfDir: String)
-      : (java.sql.Timestamp, java.sql.Timestamp) = {
-    tsRangeCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    tsRangeCache.computeIfAbsent((s, sfDir), _ => {
+      : (java.sql.Timestamp, java.sql.Timestamp) =
+    graft.scale.MemoPool.getOrBuild(s, sfDir, "eventsTsRange") {
       val Row(minTs: java.sql.Timestamp, maxTs: java.sql.Timestamp) =
         Tables.events(s, sfDir).agg(min(col("ts")), max(col("ts"))).head()
       (minTs, maxTs)
-    })
-  }
+    }(_ => Nil)
 
   private def us(t: java.sql.Timestamp): Long =
     t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
@@ -170,13 +165,6 @@ object StreamExec {
         .withColumn("event_id", lit(-k.toLong)), k, name = "s")
   }
 
-  /** Staged stream dirs, memoized per (session, sfDir) — both exec
-    * queries (and repeat runs in one harness) share one staging pass.
-    * Entries of stopped sessions are evicted, same as AnalyticsPack's
-    * coPairsCache. */
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Path]()
-
   /** Number of time-range data slices the staged dir is cut into —
     * i.e. the number of DATA micro-batches each stream-exec row
     * replays. Default 2 (the historical gate shape). The watermark
@@ -205,9 +193,11 @@ object StreamExec {
   private[streaming] def stagedDirForSpec(s: SparkSession, sfDir: String): Path =
     stagedDir(s, sfDir)
 
-  private def stagedDir(s: SparkSession, sfDir: String): Path = {
-    stagedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    stagedCache.computeIfAbsent((s, sfDir), _ => {
+  /** The staged stream dir (MemoPool entry) — every exec query that
+    * reads it (and repeat runs in one harness) shares one staging
+    * pass. */
+  private def stagedDir(s: SparkSession, sfDir: String): Path =
+    graft.scale.MemoPool.getOrBuild(s, sfDir, "streamStaged") {
       val ev = Tables.events(s, sfDir) // normalized TimestampType
       val (minTs, maxTs) = tsRange(s, sfDir)
       val k = streamSlices
@@ -238,8 +228,7 @@ object StreamExec {
       st.sentinel(ev, maxTs, k, 365)
       st.sentinel(ev, maxTs, k + 1, 730)
       st.streamDir
-    })
-  }
+    }(_ => Nil)
 
   /** One-micro-batch-per-file stream over a staged dir, normalized by
     * the same contract as the batch loader (schema from the staged
@@ -326,51 +315,66 @@ object StreamExec {
     ss
   }
 
-  /** stateOperators summary of the most recent StreamExecution this
-    * object drove: (operatorName, numRowsTotal, custom-metric keys)
-    * per stateful operator. Observability hook for the state-store
-    * backend-invariance spec — proves the configured provider really
-    * engaged (rocksdb* metric keys) rather than silently defaulting.
-    * Queries without stateful operators leave an empty list. */
-  val lastStateOps =
-    new java.util.concurrent.atomic.AtomicReference[Seq[(String, Long, Set[String])]](Nil)
+  /** What the last StreamExecution driven on a thread reported. The
+    * exec queries await their stream on the calling thread, so a
+    * harness running rows concurrently (Verify's pool) reads each
+    * row's own record right after the row returns.
+    *
+    * @param stateOps       per stateful operator: (operatorName, max
+    *                       numRowsTotal, custom-metric keys) — the
+    *                       rocksdb* keys prove the configured state
+    *                       store provider really engaged
+    * @param batchProgress  per micro-batch per stateful operator:
+    *                       (batchId, operatorName, numRowsTotal,
+    *                       numRowsUpdated, numRowsRemoved,
+    *                       stateMemoryBytes) — state growth and
+    *                       eviction across batches (the state-scale
+    *                       gates cite it)
+    * @param batchDurations per micro-batch: (batchId, numInputRows,
+    *                       durationMs — addBatch/queryPlanning/
+    *                       walCommit/commitOffsets/getBatch/
+    *                       latestOffset/triggerExecution), where the
+    *                       wall time outside Spark jobs lives
+    * @param lateDrop       (rows dropped by the watermark, batches
+    *                       with input) — proves staged faults were
+    *                       discarded by the operator, not absent
+    * @param restartBatches batches run by the stopped and the resumed
+    *                       leg of [[tumblingViaStreamRestart]];
+    *                       (-1, -1) for every other stream
+    */
+  final case class Record(
+      stateOps: Seq[(String, Long, Set[String])],
+      batchProgress: Seq[(Long, String, Long, Long, Long, Long)],
+      batchDurations: Seq[(Long, Long, Map[String, Long])],
+      lateDrop: (Long, Long),
+      restartBatches: (Long, Long) = (-1L, -1L))
 
-  /** PER-BATCH state progression of the most recent StreamExecution:
-    * (batchId, operatorName, numRowsTotal, numRowsUpdated,
-    * numRowsRemoved, stateMemoryBytes) per stateful operator per
-    * micro-batch — the observability the sf10 state-scale gate records
-    * (r13): state growth across batches, not just the final max.
-    * numRowsRemoved (r14) is the direct eviction evidence the st_join
-    * state-bound gate cites — rows the watermark deleted this batch. */
-  val lastBatchProgress = new java.util.concurrent.atomic.AtomicReference[
-    Seq[(Long, String, Long, Long, Long, Long)]](Nil)
-
-  /** PER-BATCH duration attribution of the most recent StreamExecution:
-    * (batchId, numInputRows, durationMs map — addBatch/queryPlanning/
-    * walCommit/commitOffsets/getBatch/latestOffset/triggerExecution).
-    * Optimization-round measurement hook (guide §1): the wall time of a
-    * stream-exec row that is NOT in Spark jobs lives in these buckets. */
-  val lastBatchDurations = new java.util.concurrent.atomic.AtomicReference[
-    Seq[(Long, Long, Map[String, Long])]](Nil)
+  /** The [[Record]] of the last StreamExecution on THIS thread. */
+  private[graft] val last: ThreadLocal[Record] =
+    ThreadLocal.withInitial(() => Record(Nil, Nil, Nil, (0L, 0L)))
 
   private def awaitAndRecord(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     q.awaitTermination()
     val progress = q.recentProgress.toSeq
-    lastBatchDurations.set(progress.map { p =>
-      (p.batchId, p.numInputRows,
-        p.durationMs.asScala.map { case (k, v) => (k, v.longValue) }.toMap)
-    })
-    lastStateOps.set(progress
-      .flatMap(_.stateOperators.toSeq)
-      .groupBy(_.operatorName)
-      .map { case (op, ps) =>
-        (op, ps.map(_.numRowsTotal).max,
-          ps.flatMap(_.customMetrics.keySet.toArray.map(_.toString)).toSet)
-      }.toSeq)
-    lastBatchProgress.set(progress.flatMap(p =>
-      p.stateOperators.toSeq.map(so =>
-        (p.batchId, so.operatorName, so.numRowsTotal, so.numRowsUpdated,
-          so.numRowsRemoved, so.memoryUsedBytes))))
+    last.set(Record(
+      stateOps = progress
+        .flatMap(_.stateOperators.toSeq)
+        .groupBy(_.operatorName)
+        .map { case (op, ps) =>
+          (op, ps.map(_.numRowsTotal).max,
+            ps.flatMap(_.customMetrics.keySet.toArray.map(_.toString)).toSet)
+        }.toSeq,
+      batchProgress = progress.flatMap(p =>
+        p.stateOperators.toSeq.map(so =>
+          (p.batchId, so.operatorName, so.numRowsTotal, so.numRowsUpdated,
+            so.numRowsRemoved, so.memoryUsedBytes))),
+      batchDurations = progress.map { p =>
+        (p.batchId, p.numInputRows,
+          p.durationMs.asScala.map { case (k, v) => (k, v.longValue) }.toMap)
+      },
+      lateDrop = (
+        progress.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum,
+        progress.count(_.numInputRows > 0).toLong)))
   }
 
   /** Hourly tumbling counts computed BY A STREAM: the unified
@@ -409,13 +413,6 @@ object StreamExec {
     s.createDataFrame(rows.toList.asJava, schema)
       .orderBy(col("window_start"), col("event_type"))
   }
-
-  /** Batches the RESTARTED leg of the last tumblingViaStreamRestart
-    * ran (observability for the restart gate: 0 would mean the stop
-    * landed after everything committed and the leg proved nothing —
-    * guarded by a require inside, recorded here for the gate file). */
-  val lastRestartBatches =
-    new java.util.concurrent.atomic.AtomicReference[(Long, Long)]((-1L, -1L))
 
   /** CHECKPOINT-RESTART twin of tumblingViaStream (VERDICT r13 item
     * 7): the same complete-mode hourly aggregate, but the first
@@ -465,7 +462,7 @@ object StreamExec {
       .start()
     awaitAndRecord(q2)
     val leg2Batches = q2.recentProgress.count(_.batchId >= 0).toLong
-    lastRestartBatches.set((leg1Batches, leg2Batches))
+    last.set(last.get().copy(restartBatches = (leg1Batches, leg2Batches)))
     require(leg2Batches >= 1,
       s"restart leg processed $leg2Batches batches — the stop landed " +
         "after full commit, so the restart equality would be vacuous")
@@ -618,13 +615,9 @@ object StreamExec {
     * waits on the watermark to close), so the stream is fully drained
     * by AvailableNow without a flush. Kept separate from [[stagedDir]]
     * because injecting duplicates there would corrupt the tumbling /
-    * CDC execs' inputs. */
-  private val dedupStagedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Path]()
-
-  private[streaming] def dedupStagedDir(s: SparkSession, sfDir: String): Path = {
-    dedupStagedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    dedupStagedCache.computeIfAbsent((s, sfDir), _ => {
+    * CDC execs' inputs. MemoPool entry. */
+  private[streaming] def dedupStagedDir(s: SparkSession, sfDir: String): Path =
+    graft.scale.MemoPool.getOrBuild(s, sfDir, "dedupStaged") {
       val ev = Tables.events(s, sfDir)
       val (minTs, maxTs) = tsRange(s, sfDir)
       val midUs = (us(minTs) + us(maxTs)) / 2
@@ -648,8 +641,7 @@ object StreamExec {
         ev.select(col("*"),
           explode(filter(memberships, c => c.isNotNull)).as("__slice")), 3)
       st.streamDir
-    })
-  }
+    }(_ => Nil)
 
   /** Exactly-once event delivery computed BY A STREAM: the
     * dropDuplicatesWithinWatermark operator over 3 micro-batches whose
@@ -714,13 +706,9 @@ object StreamExec {
     *    mode emits every real window before AvailableNow terminates.
     * Requires the corpus to span > 6 h so the replay is decisively
     * below batch 2's LAGGED late-filter watermark (= max(b0) − 1 h);
-    * the driver events span weeks. */
-  private val lateStagedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Path]()
-
-  private[streaming] def lateStagedDir(s: SparkSession, sfDir: String): Path = {
-    lateStagedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    lateStagedCache.computeIfAbsent((s, sfDir), _ => {
+    * the driver events span weeks. MemoPool entry. */
+  private[streaming] def lateStagedDir(s: SparkSession, sfDir: String): Path =
+    graft.scale.MemoPool.getOrBuild(s, sfDir, "lateStaged") {
       val ev = Tables.events(s, sfDir)
       val (minTs, maxTs) = tsRange(s, sfDir)
       val midUs = (us(minTs) + us(maxTs)) / 2
@@ -758,8 +746,7 @@ object StreamExec {
       st.sentinel(ev, maxTs, 3, 365)
       st.sentinel(ev, maxTs, 4, 730)
       st.streamDir
-    })
-  }
+    }(_ => Nil)
 
   /** Watermark LATE-DATA semantics computed BY A STREAM: an hourly
     * tumbling aggregate in APPEND mode (1-hour watermark) over the
@@ -772,12 +759,6 @@ object StreamExec {
     * censuses must land exactly on the clean-corpus oracle, count AND
     * id_sum per (window, type). Sentinel windows sit past maxTs and
     * are filtered by the window bound, never by peeking at payload. */
-  /** Watermark-drop telemetry of the LAST lateDropViaStream run:
-    * (rows dropped by the watermark, micro-batches executed). Spec
-    * hook — proves the staged faults were really discarded by the
-    * operator, not absent from the input. */
-  @volatile private[streaming] var lastLateDropMetrics: (Long, Long) = (0L, 0L)
-
   def lateDropViaStream(s: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(s)
     val (_, maxTs) = tsRange(s, sfDir) // memoized — was a redundant full scan
@@ -796,10 +777,6 @@ object StreamExec {
       .trigger(Trigger.AvailableNow())
       .start()
     awaitAndRecord(q)
-    lastLateDropMetrics = (
-      q.recentProgress.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark))
-        .sum,
-      q.recentProgress.count(_.numInputRows > 0).toLong)
     val out = ss.table(qn)
     val rows = out.collect() // bounded: #hours x #event_types
     val schema = out.schema

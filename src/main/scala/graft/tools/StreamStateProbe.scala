@@ -28,25 +28,26 @@ object StreamStateProbe {
       graft.scale.CacheRegistry.drain()
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"== $name: $n rows, $secs%.1f s")
-      graft.streaming.StreamExec.lastBatchProgress.get().foreach {
+      val rec = graft.streaming.StreamExec.last.get()
+      rec.batchProgress.foreach {
         case (batch, op, total, updated, removed, mem) =>
           println(f"   batch=$batch op=$op rowsTotal=$total " +
             f"rowsUpdated=$updated rowsRemoved=$removed stateMemBytes=$mem")
       }
-      graft.streaming.StreamExec.lastBatchDurations.get().foreach {
+      rec.batchDurations.foreach {
         case (batch, inRows, dur) =>
           val keys = Seq("triggerExecution", "addBatch", "queryPlanning",
             "getBatch", "latestOffset", "walCommit", "commitOffsets")
           val shown = keys.flatMap(k => dur.get(k).map(v => s"$k=$v"))
           println(s"   batch=$batch inputRows=$inRows " + shown.mkString(" "))
       }
-      graft.streaming.StreamExec.lastStateOps.get().foreach {
+      rec.stateOps.foreach {
         case (op, _, keys) =>
           val rocks = keys.filter(_.startsWith("rocksdb"))
           println(s"   provider-evidence op=$op rocksdbKeys=${rocks.size}")
       }
       if (name == "st_restart_stream_exec") {
-        val (a, b) = graft.streaming.StreamExec.lastRestartBatches.get()
+        val (a, b) = rec.restartBatches
         println(s"   restart-evidence leg1Batches=$a leg2Batches=$b")
       }
     }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** The ly_bucketed_join gate row proves VALUE fidelity through the
   * bucketed write→read cycle; this spec pins the layout's reason to
   * exist — the join on the bucket key plans with ZERO ShuffleExchange,
@@ -37,6 +39,34 @@ class BucketedJoinSpec extends SparkSpec {
         s"bucketed join planned ${sh.size} ShuffleExchange(s):\n" +
           j.queryExecution.executedPlan)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    // one writer task per bucket: exactly one data file per bucket
+    for (t <- Seq(to, tc)) {
+      val files = spark.table(t).inputFiles
+      assert(files.length == 8, s"$t: ${files.length} data files, want 8")
+    }
+  }
+
+  test("a failing bucketed write rethrows only after its sibling write has finished") {
+    // orders but no customer: the customer write fails at once, the
+    // orders write has a real job to run
+    val dir = java.nio.file.Files.createTempDirectory("graft_bkt_nocust").toString
+    graft.io.Tables(spark, sf("sf0.001"), "orders")
+      .write.parquet(s"$dir/orders.parquet")
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.add(e.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      intercept[Exception](LayoutPack.bucketedOrdersCustomer(spark, dir))
+      val thrownAt = System.currentTimeMillis()
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+        "a bucketed write was still running when the build rethrew")
+      Thread.sleep(2000) // an orphaned write would submit its job by now
+      assert(!starts.iterator().asScala.exists(_ > thrownAt),
+        "a bucketed write started a job after the build rethrew")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("bucketed round-trip preserves orders row-for-row") {

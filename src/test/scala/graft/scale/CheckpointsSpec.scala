@@ -104,8 +104,8 @@ class CheckpointsSpec extends SparkSpec {
     val owners = Seq(scale("Iterate.scala"), scale("Checkpoints.scala"))
     val offenders = files.filterNot(p => owners.exists(p.endsWith))
       .map(p => p -> calls(p))
-      // PageRank.scala: the one release of ledgered final frames
-      .filter { case (p, n) => n > (if (p.endsWith(scale("PageRank.scala"))) 1 else 0) }
+      // CacheRegistry.scala: the one release of ledgered final frames
+      .filter { case (p, n) => n > (if (p.endsWith(scale("CacheRegistry.scala"))) 1 else 0) }
     assert(offenders.isEmpty,
       s"free a round's cut through graft.scale.Iterate, not in: ${offenders.mkString(", ")}")
     val knob = "checkpoint" + "Interval" // split: src/ names it nowhere

@@ -25,13 +25,13 @@ class BackendInvarianceSpec extends SparkSpec {
   test("dedup stream under RocksDB: engaged, same state rows, same result") {
     val dir = sf("sf0.001")
     val default = rows(StreamExec.dedupViaStream(spark, dir))
-    val defaultOps = StreamExec.lastStateOps.get()
+    val defaultOps = StreamExec.last.get().stateOps
     assert(defaultOps.nonEmpty, "dedup stream reported no stateful operators")
 
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.streaming.stateStore.providerClass", Rocks)
     val rocks = rows(StreamExec.dedupViaStream(s2, dir))
-    val rocksOps = StreamExec.lastStateOps.get()
+    val rocksOps = StreamExec.last.get().stateOps
 
     assert(rocksOps.exists(_._3.exists(_.toLowerCase.contains("rocksdb"))),
       s"no rocksdb custom metrics — provider not engaged: $rocksOps")
@@ -52,7 +52,7 @@ class BackendInvarianceSpec extends SparkSpec {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.streaming.stateStore.providerClass", Rocks)
     val rocks = rows(StreamExec.cdcViaStream(s2, dir))
-    assert(StreamExec.lastStateOps.get()
+    assert(StreamExec.last.get().stateOps
         .exists(_._3.exists(_.toLowerCase.contains("rocksdb"))),
       "provider not engaged on the CDC stream")
     assert(rocks == default)

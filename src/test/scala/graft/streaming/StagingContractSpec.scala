@@ -39,7 +39,7 @@ class StagingContractSpec extends SparkSpec {
 
   test("cdcViaStream runs exactly the k data batches (sentinels globbed away)") {
     StreamExec.cdcViaStream(spark, sf("sf0.001")).collect()
-    val batches = StreamExec.lastBatchDurations.get()
+    val batches = StreamExec.last.get().batchDurations
     assert(batches.size == k,
       s"expected $k data micro-batches for the $k-slice staging, " +
         s"got ${batches.size}: $batches")

@@ -24,7 +24,7 @@ class StreamLateDropSpec extends SparkSpec {
 
   test("lateDropViaStream: replays dropped BY the watermark, multi-batch") {
     val out = StreamExec.lateDropViaStream(spark, dir)
-    val (dropped, dataBatches) = StreamExec.lastLateDropMetrics
+    val (dropped, dataBatches) = StreamExec.last.get().lateDrop
     assert(dataBatches >= 4, s"expected >= 4 data micro-batches, got $dataBatches")
     assert(dropped > 0, "watermark dropped nothing — the row gates nothing")
     // and the result is clean: no poisoned id_sum can survive a drop

@@ -1,0 +1,40 @@
+package graft.streaming
+
+import java.util.concurrent.{CountDownLatch, Executors}
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+
+/** Verify runs stream rows concurrently on a pool; each row's
+  * progress record must be its own, not whichever stream finished
+  * last. */
+class StreamRecordSpec extends SparkSpec {
+
+  test("two concurrent stream execs: each thread reads only its own record") {
+    val dir = sf("sf0.001")
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val bothDone = new CountDownLatch(2)
+    // read the record only after BOTH streams have finished, so a
+    // shared record would hold the later one on both threads
+    def run(exec: => DataFrame): Future[StreamExec.Record] = Future {
+      try exec.collect() finally bothDone.countDown()
+      bothDone.await()
+      StreamExec.last.get()
+    }
+    try {
+      val tumbling = run(StreamExec.tumblingViaStream(spark, dir))
+      val dedup = run(StreamExec.dedupViaStream(spark, dir))
+      val (t, d) = (Await.result(tumbling, 10.minutes), Await.result(dedup, 10.minutes))
+      def ops(r: StreamExec.Record) = r.stateOps.map(_._1).toSet
+      assert(ops(d).exists(_.toLowerCase.contains("dedup")),
+        s"dedup thread read another stream's record: ${ops(d)}")
+      assert(ops(t).nonEmpty && !ops(t).exists(_.toLowerCase.contains("dedup")),
+        s"tumbling thread read another stream's record: ${ops(t)}")
+      assert(t.batchDurations.nonEmpty && d.batchDurations.nonEmpty)
+    } finally pool.shutdown()
+  }
+}
