@@ -1,8 +1,11 @@
 package graft
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.io.Knobs.sfDir
     val spark = graft.io.Sessions.harness()
+    // the effective config, read (so every knob parsed) before any
+    // timing: a malformed knob fails here, not after the run
+    val config = graft.io.Knobs.configJson(spark)
     // warm up the JVM, codegen, and parquet footers so the first timed
     // query isn't charged ~3s of session startup
     try {
@@ -57,9 +60,7 @@ object Bench {
       Seq("cpu", "shuffle", "scan").map(k => k -> probeMin(3)(probeWork(k)))
     // Dev-loop filter: SPARK_GRAFT_BENCH_ONLY=q1_agg,g_pagerank times just
     // those queries. Unset (the driver's path) runs the full suite.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
+    val selected = graft.io.Knobs.benchOnly match {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None => SparkEntry.queries
     }
@@ -122,9 +123,8 @@ object Bench {
     val probesEndJson = probesEnd.map { case (k, v) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"failed":${failed.size},"failed_names":$failedJson,"probes":$probesJson,"probes_end":$probesEndJson,"queries":$fullQs,"sf":"$sfDir"}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/tmp/graft_bench_full.json")
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"failed":${failed.size},"failed_names":$failedJson,"probes":$probesJson,"probes_end":$probesEndJson,"queries":$fullQs,"sf":"$sfDir","config":$config}"""
+    val outPath = graft.io.Knobs.benchOut
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (fullLine + "\n").getBytes("UTF-8"))

@@ -12,6 +12,9 @@ object Verify {
     // production-path optimizer rules included (w1's window top-1
     // rewrites to max_by and must STILL hash-match the DuckDB oracle)
     val spark = graft.io.Sessions.harness()
+    // stamped into _errors.json; read first, so a malformed knob fails
+    // before any dump
+    val config = graft.io.Knobs.configJson(spark)
     new java.io.File(outDir).mkdirs()
     // Run query dumps on a small thread pool: Spark's scheduler is
     // thread-safe and most queries leave cores idle between stages, so
@@ -56,18 +59,9 @@ object Verify {
       scala.concurrent.Future.sequence(futures),
       scala.concurrent.duration.Duration.Inf)
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // escaped JSON strings: a tab or CR in the oracle SQL would
+    // otherwise make json.load fail and silently zero the gate
+    import graft.io.Knobs.{quote => q}
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -79,7 +73,7 @@ object Verify {
       .mkString("{\"expected\": " +
         only.map(f => SparkEntry.queries.keySet.count(f.contains))
           .getOrElse(SparkEntry.queries.size) +
-        ", \"errors\": {", ",", "}}")
+        ", \"config\": " + config + ", \"errors\": {", ",", "}}")
     Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
     if (!errors.isEmpty)
       System.err.println(

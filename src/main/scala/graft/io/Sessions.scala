@@ -51,17 +51,13 @@ import org.apache.spark.sql.SparkSession
 object Sessions {
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      sys.env.getOrElse("SPARK_GRAFT_CACHED_COALESCE", "true"))
-
-  /** Cores of the default `local[N]` master: `SPARK_GRAFT_CPUS`, else
-    * every core the JVM sees. */
-  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-    Runtime.getRuntime.availableProcessors.toString)
+      Knobs.cachedCoalesce.toString)
 
   /** The graft harness session: `tuned`, UTC, nanos-as-long parquet
     * timestamps, no UI, the graft rules, strategies and SQL functions.
     *
-    * `master` defaults to `SPARK_GRAFT_MASTER`, which lets a whole run
+    * `master` defaults to `SPARK_GRAFT_MASTER`, else
+    * `local[SPARK_GRAFT_CPUS]` ([[Knobs]]), which lets a whole run
     * go under real multi-JVM executors (spark-submit --master
     * local-cluster[3,8,8192]) — the only local tier where
     * executor-boundary serialization bugs (the r3 trainingSummary
@@ -76,8 +72,8 @@ object Sessions {
     * 256 runs it). A real cluster sets this to its executor-core count.
     *
     * `conf` entries are applied last and win. */
-  def harness(master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
-              shufflePartitions: String = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus),
+  def harness(master: String = Knobs.master,
+              shufflePartitions: String = Knobs.shufflePartitions.toString,
               logLevel: String = "WARN",
               conf: Map[String, String] = Map.empty): SparkSession = {
     val b = tuned(SparkSession.builder())
@@ -99,7 +95,7 @@ object Sessions {
     // backend) — the gate's oracle compare then proves the rows are
     // provider-invariant at tier-sized state. streamSession propagates
     // this conf into each cloned stream session.
-    if (sys.env.get("SPARK_GRAFT_STATE_STORE").exists(_.equalsIgnoreCase("rocksdb")))
+    if (Knobs.rocksDbStateStore)
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     graft.expr.GraftExtensions.install(spark)

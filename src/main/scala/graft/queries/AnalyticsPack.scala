@@ -354,9 +354,9 @@ object AnalyticsPack extends QueryPack {
     // partition — a scale-killer. scale/GlobalRank computes the
     // identical bucket via two-level ranking (approx splitters ->
     // chunk-partitioned row_number + broadcast chunk offsets). The
-    // r12 ride exec was MEASURED here in r13 (GlobalRank.withNtileRide,
-    // SPARK_GRAFT_GLOBAL_RANK=1, oracle-gated) and LOSES at every
-    // tested tier — 98 s vs 36 s at sf10/15M orders — because the
+    // r12 ride exec was MEASURED here in r13 (an oracle-gated ntile
+    // form over the ride, since deleted) and LOSES at every tested
+    // tier — 98 s vs 36 s at sf10/15M orders — because the
     // ride's one advantage is riding the query's OUTPUT sort, and
     // this query's downstream is an aggregation: the ride pays a
     // range sort + row-copied persist + a separate count scan for an
@@ -367,14 +367,8 @@ object AnalyticsPack extends QueryPack {
     "g_histogram_eqdepth" -> ((s, dir) => {
       val src = Tables(s, dir, "orders")
         .select(col("o_totalprice").as("v"), col("o_orderkey"))
-      val bucketed = sys.env.get("SPARK_GRAFT_GLOBAL_RANK") match {
-        case Some("1") => graft.scale.GlobalRank
-          .withNtileRide(s, src, col("v"), col("o_orderkey"), "bucket",
-            n = 10)
-        case _ => graft.scale.GlobalRank
-          .withNtile(src, col("v"), col("o_orderkey"), "bucket", n = 10)
-      }
-      bucketed
+      graft.scale.GlobalRank
+        .withNtile(src, col("v"), col("o_orderkey"), "bucket", n = 10)
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as("n"),
           round(min(col("v")), 2).as("lo"),

@@ -197,35 +197,20 @@ object DedupPack extends QueryPack {
     * stage of the MinHash-LSH path, factored out so the scale-growth
     * harness (tools/ScaleGrowth, ScaleGrowthSpec) counts THE SAME
     * candidate set the production path verifies — the quantity whose
-    * sub-quadratic growth is the whole point of banding. */
-  /** Bucket-width circuit breaker (ADVICE r11 / VERDICT r11 item 6).
+    * sub-quadratic growth is the whole point of banding.
+    *
+    * Bucket-width circuit breaker (ADVICE r11 / VERDICT r11 item 6).
     * Two-level expansion bounds per-ROW memory to O(bucket), but a
     * degenerate corpus (thousands of IDENTICAL signatures — exact
     * copies that a real pipeline removes with d_exact first, as
     * d_pipeline does) still concentrates one bucket's O(B²) pair
     * stream in one task. Rather than silently grind, the plan raises
     * a loud error at the offending bucket: width, band and bucket
-    * hash in the message, cap overridable per deployment. The guard
+    * hash in the message, cap overridable per deployment
+    * (`SPARK_GRAFT_LSH_MAX_BUCKET`, [[graft.io.Knobs]]). The guard
     * is a codegen'd when(): zero cost for every in-bounds bucket. */
-  private[graft] val DefaultMaxBucket = 1024
-
-  private def lshMaxBucket: Int =
-    sys.env.get("SPARK_GRAFT_LSH_MAX_BUCKET") match {
-      case None => DefaultMaxBucket
-      case Some(raw) =>
-        // Validate HERE with the variable named (ADVICE r12): a bare
-        // toInt throws an uncontextualized NumberFormatException from
-        // deep inside query construction, and 0/negative would
-        // silently disable the bucket-width breaker.
-        val parsed = raw.trim.toIntOption
-        require(parsed.exists(_ > 0),
-          s"SPARK_GRAFT_LSH_MAX_BUCKET must be a positive integer, " +
-            s"got '$raw'")
-        parsed.get
-    }
-
   private[graft] def bandedCandidates(s: SparkSession, dir: String): DataFrame =
-    bandedCandidates(s, dir, lshMaxBucket)
+    bandedCandidates(s, dir, graft.io.Knobs.lshMaxBucket)
 
   private[graft] def bandedCandidates(s: SparkSession, dir: String,
                                       maxBucket: Int): DataFrame = {

@@ -291,11 +291,9 @@ object FunctionsPack extends QueryPack {
       // it), so the DEFAULT picks by the scan's size STATISTIC (free,
       // no job): below RideThreshold the direct window wins, above it
       // the ride does — the same data-size-not-core-count rule as the
-      // sf100 shuffle-partition catch. SPARK_GRAFT_RUNNING_SUM forces
-      // a form (0 = direct, 1 = two-level, 2 = ride); ALL THREE pass
-      // the same DuckDB oracle at sf0.001-sf1
-      // (bench/runningsum_gate_r12.txt); SCALE.md "RunningSum act
-      // three" records the full measurement story.
+      // sf100 shuffle-partition catch. Both forms pass the same DuckDB
+      // oracle at sf0.001-sf1 (bench/runningsum_gate_r12.txt); SCALE.md
+      // "RunningSum act three" records the full measurement story.
       def directForm = {
         val running = Window.partitionBy(col("l_returnflag"))
           .orderBy(order: _*)
@@ -312,33 +310,21 @@ object FunctionsPack extends QueryPack {
           col("is_first"), "run_distinct")
           .select(col("l_returnflag"), col("l_orderkey"),
             col("l_linenumber"), col("l_partkey"), col("run_distinct"))
-      val out = sys.env.get("SPARK_GRAFT_RUNNING_SUM") match {
-        case Some("1") =>
-          graft.scale.RunningSum.withRunningSum(flagged,
-            col("l_returnflag"), col("l_orderkey"),
-            Seq(col("l_linenumber"), col("l_partkey")), col("is_first"),
-            "run_distinct")
-            .select(col("l_returnflag"), col("l_orderkey"),
-              col("l_linenumber"), col("l_partkey"), col("run_distinct"))
-        case Some("0") => directForm
-        case Some("2") => rideForm
-        case _ =>
-          // The adaptive pick may only switch between forms whose
-          // NULL semantics agree — direct is SQL window SUM (NULL
-          // until first non-null), ride maps NULL to 0. is_first is
-          // non-nullable by construction (when/otherwise both
-          // literal), so they coincide; CHECK it so a future nullable
-          // value fails loudly at every tier instead of returning
-          // tier-dependent results (the ride API requires the same).
-          require(!flagged.schema("is_first").nullable,
-            "fn_window_distinct adaptive pick needs a non-nullable " +
-              "value column: direct-window and ride-operator NULL " +
-              "semantics differ")
-          val scanBytes = Tables(s, dir, "lineitem")
-            .queryExecution.optimizedPlan.stats.sizeInBytes
-          if (scanBytes < FunctionsPack.RideThreshold) directForm
-          else rideForm
-      }
+      // The adaptive pick may only switch between forms whose NULL
+      // semantics agree — direct is SQL window SUM (NULL until first
+      // non-null), ride maps NULL to 0. is_first is non-nullable by
+      // construction (when/otherwise both literal), so they coincide;
+      // CHECK it so a future nullable value fails loudly at every tier
+      // instead of returning tier-dependent results (the ride API
+      // requires the same).
+      require(!flagged.schema("is_first").nullable,
+        "fn_window_distinct adaptive pick needs a non-nullable " +
+          "value column: direct-window and ride-operator NULL " +
+          "semantics differ")
+      val scanBytes = Tables(s, dir, "lineitem")
+        .queryExecution.optimizedPlan.stats.sizeInBytes
+      val out = if (scanBytes < FunctionsPack.RideThreshold) directForm
+        else rideForm
       out.orderBy(col("l_returnflag"), col("l_orderkey"),
         col("l_linenumber"), col("l_partkey"))
     }),

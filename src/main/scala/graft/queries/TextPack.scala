@@ -715,16 +715,16 @@ object TextPack extends QueryPack {
     // hash agg; the rank runs AFTER the min-frequency filter over the
     // Heaps'-law-sublinear vocabulary, through scale/GlobalRank's
     // two-level scheme — NEVER an unpartitioned window. The output
-    // order here IS the rank order, so the r12 ride exec was MEASURED
-    // as the rank engine in r13 (SPARK_GRAFT_GLOBAL_RANK=1,
-    // oracle-gated): it LOSES (~5 s fixed persist + extra-job cost at
-    // sf1) and keeps losing at every reachable tier, because the
-    // ranked set is the Heaps-SUBLINEAR vocabulary — a few thousand
-    // rows even when the corpus is millions of docs — and the
+    // order here IS the rank order, so the r12 ride exec
+    // (RunningSumRide.withGlobalRankSorted) was MEASURED as the rank
+    // engine in r13 (oracle-gated): it LOSES (~5 s fixed persist +
+    // extra-job cost at sf1) and keeps losing at every reachable tier,
+    // because the ranked set is the Heaps-SUBLINEAR vocabulary — a few
+    // thousand rows even when the corpus is millions of docs — and the
     // corpus-sized token-count agg upstream dominates regardless.
     // The ride becomes right only when the vocabulary itself is
-    // exchange-scale; at that point flip the default (the form switch
-    // and both oracle gates are already in place). SCALE.md r13.
+    // exchange-scale; at that point swap the rank engine (the oracle
+    // gate is in place). SCALE.md r13.
     // Order is (freq DESC, token ASC); the rank is ascending, so the
     // sort key is -freq with the token as the total-order tie-break.
     "t_vocab" -> ((s, dir) => {
@@ -733,13 +733,9 @@ object TextPack extends QueryPack {
         .filter(length(col("token")) > 0)
         .groupBy(col("token")).agg(count(lit(1)).as("freq"))
         .filter(col("freq") >= 5)
-      val ranked = sys.env.get("SPARK_GRAFT_GLOBAL_RANK") match {
-        case Some("1") => graft.plans.RunningSumRide.withGlobalRankSorted(
-          s, counts, Seq(-col("freq"), col("token")), "id")
-        case _ => graft.scale.GlobalRank
-          .withGlobalRank(counts, -col("freq"), col("token"), "id")
-      }
-      ranked.withColumn("id", col("id") - 1)
+      graft.scale.GlobalRank
+        .withGlobalRank(counts, -col("freq"), col("token"), "id")
+        .withColumn("id", col("id") - 1)
         .orderBy(col("id")).limit(100)
     }),
 

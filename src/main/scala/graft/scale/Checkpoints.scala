@@ -45,8 +45,8 @@ object Checkpoints {
     * (default: a TempDirs path, deleted at JVM exit). */
   def reliableMode(s: SparkSession): Boolean =
     s.conf.getOption("spark.graft.checkpoint.reliable")
-      .orElse(sys.env.get("SPARK_GRAFT_RELIABLE_CKPT"))
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
+      .map(graft.io.Knobs.parseBool("spark.graft.checkpoint.reliable", _))
+      .getOrElse(graft.io.Knobs.reliableCkpt)
 
   private val ckptDirLock = new Object
 
@@ -54,7 +54,7 @@ object Checkpoints {
     ckptDirLock.synchronized {
       if (s.sparkContext.getCheckpointDir.isEmpty)
         s.sparkContext.setCheckpointDir(
-          sys.env.getOrElse("SPARK_GRAFT_CKPT_DIR",
+          graft.io.Knobs.ckptDir.getOrElse(
             graft.io.TempDirs.create("graft_reliable_ckpt_")))
     }
 

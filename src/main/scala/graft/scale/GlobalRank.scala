@@ -131,41 +131,4 @@ object GlobalRank {
     ranked(keyed, splitters, "__gr_rank")
       .withColumn(bucketCol, bucketExpr).drop("__gr_rank")
   }
-
-  /** Exact `ntile(n)` through the r12 ride-the-output-sort exec
-    * (plans/RunningSumPlan with an empty partition list) instead of
-    * the two-level scheme (round 13, VERDICT r12 item 7): ONE range
-    * exchange + sort whose parallelism is spark.sql.shuffle.partitions,
-    * where the chunk-window form caps rank parallelism at nChunks (32)
-    * however many cores the cluster has — the difference that matters
-    * at the 150M-row sf100 tier. The exact total row count ntile
-    * arithmetic needs rides along as a broadcast 1-row aggregate
-    * column (no driver literal, no eager job), and the SQL bucket
-    * rule (first N mod n buckets get the extra row) is integer-exact
-    * column arithmetic on (rank, total).
-    */
-  def withNtileRide(spark: org.apache.spark.sql.SparkSession, df: DataFrame,
-                    orderCol: Column, tieBreak: Column,
-                    bucketCol: String, n: Int): DataFrame = {
-    require(n > 0, s"ntile bucket count must be positive, got $n")
-    val ranked = graft.plans.RunningSumRide.withGlobalRankSorted(
-      spark, df, Seq(orderCol, tieBreak), "__gr_rank")
-    val total = df.agg(count(lit(1)).cast("long").as("__gr_n"))
-    // all-integer bucket arithmetic (div = SQL integer division; `/`
-    // on Spark long columns is DOUBLE division — exactness doctrine):
-    // base = N div n, rem = N mod n, head = rows in the base+1 buckets;
-    // base = 0 (fewer rows than buckets) stays in the first branch
-    // (rank <= rem * 1 always holds there), divisor base+1 never 0.
-    val bucketExpr = expr(
-      s"""CASE WHEN (__gr_n div $n) = 0
-         |       OR __gr_rank <= ((__gr_n div $n) + 1) * (__gr_n % $n)
-         |  THEN (__gr_rank - 1) div ((__gr_n div $n) + 1) + 1
-         |  ELSE (__gr_n % $n)
-         |     + (__gr_rank - ((__gr_n div $n) + 1) * (__gr_n % $n) - 1)
-         |       div (__gr_n div $n) + 1
-         |END""".stripMargin)
-    ranked.crossJoin(broadcast(total))
-      .withColumn(bucketCol, bucketExpr)
-      .drop("__gr_rank", "__gr_n")
-  }
 }

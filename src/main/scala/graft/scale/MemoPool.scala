@@ -67,8 +67,7 @@ object MemoPool {
   @volatile private[scale] var capOverrideBytes: Option[Long] = None
 
   private def capBytes: Long = capOverrideBytes.getOrElse(
-    sys.env.get("SPARK_GRAFT_MEMO_CAP_MB").flatMap(_.toLongOption)
-      .getOrElse(4096L) * 1024L * 1024L)
+    graft.io.Knobs.memoCapMb * 1024L * 1024L)
 
   /** Memoize `build` per (session, sfDir, name). `framesOf` lists the
     * persisted frames the value holds — what eviction unpersists and

@@ -176,16 +176,7 @@ object StreamExec {
     * state scales with BATCH GRANULARITY + watermark window, not
     * stream length — the contract a 100 TB deployment relies on, where
     * a micro-batch is seconds of ingest, not half the corpus. */
-  private def streamSlices: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_STREAM_SLICES", "2")
-    val n = try raw.toInt catch {
-      case _: NumberFormatException =>
-        sys.error(s"SPARK_GRAFT_STREAM_SLICES must be an int, got '$raw'")
-    }
-    require(n >= 1 && n <= 4096,
-      s"SPARK_GRAFT_STREAM_SLICES must be in [1, 4096], got $n")
-    n
-  }
+  private def streamSlices: Int = graft.io.Knobs.streamSlices
 
   /** Spec access to the shared staged dir (StagingContractSpec pins
     * the b-vs-s file naming + mtime contract of the r14 one-pass
@@ -273,18 +264,14 @@ object StreamExec {
                   "spark.sql.legacy.parquet.nanosAsLong",
                   "spark.sql.streaming.stateStore.providerClass"))
       s.conf.getOption(k).foreach(ss.conf.set(k, _))
-    // SPARK_GRAFT_STREAM_SHUFFLE (r14): the state-partition count,
-    // env-tunable for measurement; 8 stays the default. Measured over
-    // the 7-row family at sf0.1 (same session, back-to-back):
+    // The state-partition count is the constant 8 (r14). Measured
+    // over the 7-row family at sf0.1 (same session, back-to-back):
     // 8 → 29.7 s, 4 → 29.1 s (noise), 2 → 31.8 s, 16 → 42.1 s,
     // 32 → 67.2 s — per-batch store open/commit scales with the
     // partition count and dominates long before join parallelism
     // pays; a 100 TB deployment sizes this to key cardinality as
     // documented above. OPTIMIZATION_r14.md carries the table.
-    val sp = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    require(sp.toIntOption.exists(_ > 0),
-      s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive int, got '$sp'")
-    ss.conf.set("spark.sql.shuffle.partitions", sp)
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
     // Skip NO-DATA micro-batches (r15, guide §1.2 — fewer batches/
     // commits): the staging design guarantees every gated emission
     // happens in a DATA batch (that is exactly what the two sentinel
@@ -297,9 +284,9 @@ object StreamExec {
     // 0 input rows. Results oracle-gated identical; scale-invariant
     // (one fewer full store-open/commit cycle per stream at any SF).
     // SPARK_GRAFT_STREAM_NODATA=1 restores the Spark default for
-    // measurement, same pattern as the partition knob above.
+    // measurement.
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      (sys.env.getOrElse("SPARK_GRAFT_STREAM_NODATA", "0") == "1").toString)
+      graft.io.Knobs.streamNoData.toString)
     // Spark 4.1's checkpoint file-checksum manager writes a sidecar
     // checksum file per checkpoint file — and the local Hadoop
     // ChecksumFileSystem then writes ITS client-side CRC twin for
@@ -311,7 +298,7 @@ object StreamExec {
     // redundant integrity-on-read bookkeeping, not durability.
     // SPARK_GRAFT_CKPT_CHECKSUM=1 restores the Spark default.
     ss.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-      (sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "0") == "1").toString)
+      graft.io.Knobs.ckptChecksum.toString)
     ss
   }
 

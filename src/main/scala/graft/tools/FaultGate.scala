@@ -69,13 +69,10 @@ object FaultGate {
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val killDelayMs =
-      sys.env.getOrElse("SPARK_GRAFT_KILL_DELAY_MS", "4000").toLong
-    val killCount =
-      sys.env.getOrElse("SPARK_GRAFT_KILL_COUNT", "1").toInt
-    val killRepeatMs =
-      sys.env.getOrElse("SPARK_GRAFT_KILL_REPEAT_MS", "0").toLong
-    val killEnabled = sys.env.getOrElse("SPARK_GRAFT_KILL", "1") != "0"
+    val killDelayMs = graft.io.Knobs.killDelayMs
+    val killCount = graft.io.Knobs.killCount
+    val killRepeatMs = graft.io.Knobs.killRepeatMs
+    val killEnabled = graft.io.Knobs.kill
     // ERROR: executor-loss WARN spam. The harness's state-store switch
     // lets the stream fault legs run the 100 TB state backend.
     val spark = graft.io.Sessions.harness(logLevel = "ERROR")
@@ -141,15 +138,7 @@ object FaultGate {
     }
 
     // oracle_sql.json for selfcheck.py — survivors must also be RIGHT
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import graft.io.Knobs.{quote => q}
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       graft.SparkEntry.oracleSql
         .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))

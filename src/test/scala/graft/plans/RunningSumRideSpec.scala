@@ -102,9 +102,7 @@ class RunningSumRideSpec extends SparkSpec {
   test("the gated default picks the form by scan size, not blindly") {
     // sf0.001 lineitem is far below RideThreshold: the adaptive
     // default must plan the DIRECT window (no RunningSumExec, no ~2 s
-    // fixed overhead — the r12 bench regression this pick fixes);
-    // SPARK_GRAFT_RUNNING_SUM=2 still forces the ride form (gated).
-    assume(sys.env.get("SPARK_GRAFT_RUNNING_SUM").isEmpty)
+    // fixed overhead — the r12 bench regression this pick fixes)
     val out = graft.SparkEntry.queries("fn_window_distinct")(
       spark, sf("sf0.001"))
     val nodes = graft.PlanWalk.collect(out.queryExecution.executedPlan) {

@@ -66,7 +66,7 @@ class LshBucketCapSpec extends SparkSpec {
   }
 
   test("the default cap comes from the environment contract") {
-    // the env knob is read per call; absent, the documented default
-    assert(DedupPack.DefaultMaxBucket == 1024)
+    // absent, the documented default
+    assert(new graft.io.Knobs(Map.empty).lshMaxBucket == 1024)
   }
 }

@@ -17,12 +17,9 @@ class StagingContractSpec extends SparkSpec {
 
   // the staged slice count follows SPARK_GRAFT_STREAM_SLICES (the sf10
   // state-bound gate exports 16) — derive the expectation from the
-  // same env default instead of hardcoding 2, so running sbt test in
-  // a shell with the gate's env exported doesn't fail spuriously
-  // (ADVICE r14)
-  private val k =
-    sys.env.get("SPARK_GRAFT_STREAM_SLICES").flatMap(_.toIntOption)
-      .getOrElse(2)
+  // same knob instead of hardcoding 2, so running sbt test in a shell
+  // with the gate's env exported doesn't fail spuriously (ADVICE r14)
+  private val k = graft.io.Knobs.streamSlices
 
   test("staged dir: k data slices (b*) + 2 sentinels (s*), mtime-ordered") {
     val dir = StreamExec.stagedDirForSpec(spark, sf("sf0.001"))

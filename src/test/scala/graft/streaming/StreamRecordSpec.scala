@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
 
 /** Verify runs stream rows concurrently on a pool; each row's
   * progress record must be its own, not whichever stream finished
-  * last. */
+  * last. The record also shows what a stream's state did. */
 class StreamRecordSpec extends SparkSpec {
 
   test("two concurrent stream execs: each thread reads only its own record") {
@@ -36,5 +36,18 @@ class StreamRecordSpec extends SparkSpec {
         s"tumbling thread read another stream's record: ${ops(t)}")
       assert(t.batchDurations.nonEmpty && d.batchDurations.nonEmpty)
     } finally pool.shutdown()
+  }
+
+  test("stream-stream join: the ts conjuncts still yield a state watermark") {
+    // The pushed-down eid_a < eid_b conjunct makes Spark's
+    // StreamingJoinHelper log "Cannot evaluate expression: event_id"
+    // for that conjunct; the ts range conjuncts must still bound the
+    // join state, so some batch evicts rows.
+    StreamExec.joinViaStream(spark, sf("sf0.001")).collect()
+    val join = StreamExec.last.get().batchProgress
+      .filter(_._2.toLowerCase.contains("join"))
+    assert(join.nonEmpty, "no join operator in the batch progress")
+    assert(join.map(_._5).sum > 0,
+      s"join state never evicted a row (watermark lost): $join")
   }
 }
