@@ -29,8 +29,7 @@ import org.apache.spark.sql.SparkSession
   * | `SPARK_GRAFT_STREAM_NODATA` | false | true restores Spark's no-data micro-batches; skipping them saved st_join 845 ms, st_late_drop 440 ms and st_sessions 324 ms of 0-row batches at sf0.1, oracle-identical |
   * | `SPARK_GRAFT_CKPT_CHECKSUM` | false | true restores Spark 4.1's checkpoint sidecar checksums, which double the file creations per state delta (4 instead of 2) |
   * | `SPARK_GRAFT_SF_DIR` | the sf0.1 test-data tier | `graft.Bench`'s input directory |
-  * | `SPARK_GRAFT_BENCH_ONLY` | every query | `graft.Bench` dev-loop filter, comma-separated query names |
-  * | `SPARK_GRAFT_BENCH_OUT` | `/tmp/graft_bench_full.json` | `graft.Bench`'s full-timings side file |
+  * | `SPARK_GRAFT_BENCH_OUT` | `/tmp/graft_bench_full.json` | `graft.Bench`'s side file: every row's timing and per-rep records |
   * | `SPARK_GRAFT_KILL` | true | false runs the fault gate's no-kill baseline leg |
   * | `SPARK_GRAFT_KILL_DELAY_MS` | 4000 | fault gate: ms after a query starts before the kill |
   * | `SPARK_GRAFT_KILL_COUNT` | 1 | fault gate: executors killed per kill event (2 of 3 at once defeated d_cluster's probabilistic survival) |
@@ -66,8 +65,6 @@ class Knobs(env: Map[String, String]) {
   def ckptChecksum: Boolean = bool("SPARK_GRAFT_CKPT_CHECKSUM").getOrElse(false)
 
   def sfDir: String = str("SPARK_GRAFT_SF_DIR").getOrElse("/root/testdata/sf0.1")
-  def benchOnly: Option[Set[String]] = str("SPARK_GRAFT_BENCH_ONLY")
-    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
   def benchOut: String = str("SPARK_GRAFT_BENCH_OUT").getOrElse("/tmp/graft_bench_full.json")
 
   def kill: Boolean = bool("SPARK_GRAFT_KILL").getOrElse(true)
@@ -92,7 +89,6 @@ class Knobs(env: Map[String, String]) {
     "SPARK_GRAFT_STREAM_NODATA" -> Some(streamNoData.toString),
     "SPARK_GRAFT_CKPT_CHECKSUM" -> Some(ckptChecksum.toString),
     "SPARK_GRAFT_SF_DIR" -> Some(sfDir),
-    "SPARK_GRAFT_BENCH_ONLY" -> benchOnly.map(_.toSeq.sorted.mkString(",")),
     "SPARK_GRAFT_BENCH_OUT" -> Some(benchOut),
     "SPARK_GRAFT_KILL" -> Some(kill.toString),
     "SPARK_GRAFT_KILL_DELAY_MS" -> Some(killDelayMs.toString),
@@ -100,12 +96,14 @@ class Knobs(env: Map[String, String]) {
     "SPARK_GRAFT_KILL_REPEAT_MS" -> Some(killRepeatMs.toString))
 
   /** The effective config as one JSON object: the session's master and
-    * shuffle partitions, then every knob. What Bench's side file and
-    * Verify's `_errors.json` carry as `"config"`. */
+    * shuffle partitions, the source revision, then every knob. What
+    * Bench's side file, Verify's `_errors.json` and ScaleGrowth's line
+    * carry as `"config"`. */
   def configJson(spark: SparkSession): String =
     (Seq("master" -> Some(spark.sparkContext.master),
          "spark.sql.shuffle.partitions" ->
-           Some(spark.conf.get("spark.sql.shuffle.partitions"))) ++ snapshot)
+           Some(spark.conf.get("spark.sql.shuffle.partitions")),
+         "git_sha" -> Some(Knobs.gitSha)) ++ snapshot)
       .map { case (k, v) => s"${Knobs.quote(k)}: ${v.map(Knobs.quote).getOrElse("null")}" }
       .mkString("{", ", ", "}")
 
@@ -134,6 +132,20 @@ class Knobs(env: Map[String, String]) {
 }
 
 object Knobs extends Knobs(sys.env) {
+
+  /** `git rev-parse HEAD` of the working directory, suffixed `-dirty`
+    * when `git status --porcelain` lists anything; `unknown` when git
+    * is missing or the directory is not a checkout. */
+  lazy val gitSha: String = {
+    import scala.sys.process._
+    // `!!` throws on a nonzero exit; stderr is dropped
+    def git(args: String*): Option[String] =
+      scala.util.Try(Process("git" +: args).!!(ProcessLogger(_ => ()))).toOption.map(_.trim)
+    git("rev-parse", "HEAD").filter(_.nonEmpty) match {
+      case Some(sha) => sha + (if (git("status", "--porcelain").exists(_.nonEmpty)) "-dirty" else "")
+      case None => "unknown"
+    }
+  }
 
   /** The boolean rule, shared with session confs that mirror a knob. */
   def parseBool(name: String, raw: String): Boolean = raw.trim.toLowerCase match {

@@ -13,9 +13,9 @@ object Tables {
     * schema inferred once per (session, sfDir) — the `schema/<name>`
     * MemoPool entry. r15 optimization round (VERDICT item 3): EVERY
     * `spark.read.parquet(path)` re-runs driver-side schema inference
-    * (a synchronous footer read per call), and TailProbe measured the
-    * bench's DataFrame-construction phase at 0.06–0.09 s per table
-    * reference — a six-table TPC-H row paid ~0.5 s before planning
+    * (a synchronous footer read per call), and the bench's build phase
+    * (`build_s` in Bench's per-row record) measured 0.06–0.09 s per
+    * table reference — a six-table TPC-H row paid ~0.5 s before planning
     * even started. Passing the memoized schema via `.schema(...)`
     * skips inference while still returning a FRESH DataFrame per call
     * (fresh attribute ids — self-joins built from two Tables() calls

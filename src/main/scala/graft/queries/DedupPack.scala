@@ -120,11 +120,12 @@ object DedupPack extends QueryPack {
     // the block self-join derives BOTH sides from this projection, and
     // un-persisted each side re-computed the signature expression for
     // the whole corpus — for d_simhash that is SimHashSig's 64 bit
-    // votes over every shingle hash, twice (JobProbe measured the
-    // fused join job at 2.66 s; the duplicated signature pass was the
-    // bulk). The frame is narrow ((id, sig, chunk, cv) = 24 bytes ×
-    // 16 rows/doc) and is released by the harness's CacheRegistry
-    // drain after the query's action.
+    // votes over every shingle hash, twice (the fused join job measured
+    // 2.66 s in the per-job split, today Bench's `slowest_jobs` record;
+    // the duplicated signature pass was the bulk). The frame
+    // is narrow ((id, sig, chunk, cv) = 24 bytes × 16 rows/doc) and is
+    // released by the harness's CacheRegistry drain after the query's
+    // action.
     val chunks = sigs.select(col(idCol), col(sigCol), posexplode(expr(
       s"transform(sequence(0, 15), c -> (($sigCol >> (c * 4)) & 15))"))
       .as(Seq("chunk", "cv")))

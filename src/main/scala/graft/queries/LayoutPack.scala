@@ -328,7 +328,7 @@ object LayoutPack extends QueryPack {
     }(_ => Nil)
 
   /** An ORC copy of `part` (MemoPool entry), reused across repeated
-    * runs in a harness (Bench repeats; TimeQuery loops). */
+    * runs in a harness (Bench reps). */
   private[queries] def orcCopyOfPart(s: SparkSession, dir: String): String =
     graft.scale.MemoPool.getOrBuild(s, dir, "orcPart") {
       val out = graft.io.TempDirs.create("graft_orc_part_")

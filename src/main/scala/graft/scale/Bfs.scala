@@ -55,20 +55,15 @@ object Bfs {
     *               frame (not a driver-side scalar) so seed derivation
     *               stays inside the lazy plan
     * @param iters  fixed number of expansion rounds
-    * @return (node, dist) for every node within `iters` hops of the
-    *         source, dist in [0, iters]
-    */
-  def hops(edges: DataFrame, source: DataFrame, iters: Int,
-           src: String = "src", dst: String = "dst"): DataFrame =
-    hopsTracked(edges, source, iters, src, dst)._1
-
-  /** As `hops`, plus the persisted-intermediate handles (caller
-    * releases after its action — the [[PageRank.runTracked]]
-    * contract). */
-  /** @param pinnedE caller-persisted (src: long, dst: long) edge frame
+    * @param pinnedE caller-persisted (src: long, dst: long) edge frame
     *                 shared across queries (r14: the purchase-graph
     *                 family's memo) — skips this call's own edge pin;
-    *                 lifetime is then the caller's contract. */
+    *                 lifetime is then the caller's contract
+    * @return (node, dist) for every node within `iters` hops of the
+    *         source, dist in [0, iters], and the handle of the
+    *         persisted intermediates, which the caller releases after
+    *         its action (the [[PageRank.runTracked]] contract)
+    */
   def hopsTracked(edges: DataFrame, source: DataFrame, iters: Int,
                   src: String = "src", dst: String = "dst",
                   pinnedE: Option[DataFrame] = None)

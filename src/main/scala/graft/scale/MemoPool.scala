@@ -153,7 +153,8 @@ object MemoPool {
         e.frames.foreach(_.unpersist(blocking = false))
     }
 
-  /** Entry names currently pooled for `s` (spec observability). */
+  /** Entry names currently pooled for `s` (specs, and Bench's per-row
+    * `memo_built`). */
   def pooledNames(s: SparkSession): Set[String] =
     built(s).map(_.key._3).toSet
 }

@@ -49,6 +49,20 @@ import org.apache.spark.storage.StorageLevel
   */
 object PageRank {
 
+  /** The edge list with per-src out-degree attached — the frame every
+    * rank round re-joins. Exposed so callers sharing ONE graph across
+    * several rank queries (the purchase-graph family) can build it
+    * once, persist it themselves, and pass it via `pinnedEo` (r14
+    * optimization round); lifetime is then the CALLER's contract. */
+  def edgesWithOutdeg(edges: DataFrame, src: String = "src",
+                      dst: String = "dst",
+                      assumeDistinct: Boolean = false): DataFrame = {
+    val e0 = edges
+      .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
+    val e = if (assumeDistinct) e0 else e0.distinct()
+    e.withColumn("od", count(lit(1)).over(Window.partitionBy(col("src"))))
+  }
+
   /** @param edges directed edge list with integral `src`/`dst` node id
     *              columns (duplicates are collapsed); every node must
     *              have at least one outgoing edge (symmetrize the input
@@ -65,34 +79,16 @@ object PageRank {
     *                  graph) — skips the eager no-inflow probe, which
     *                  is otherwise a full dst-distinct + anti-join job
     *                  run before the rank rounds even start
-    * @return (node, rank) — rank in micro-units; initial rank 1e6
+    * @param broadcastRanks broadcast the node-rank side of each round
+    *                       instead of shuffling it
+    * @param pinnedEo caller-persisted [[edgesWithOutdeg]] frame; skips
+    *                 this call's own edge pin
+    * @return (node, rank) — rank in micro-units; initial rank 1e6 — and
+    *         the handle of the intermediates left persisted, which the
+    *         caller releases once the result has been acted on (a
+    *         long-lived session otherwise accumulates cached partitions
+    *         until LRU pressure clears them)
     */
-  def run(edges: DataFrame, iters: Int,
-          src: String = "src", dst: String = "dst",
-          assumeDistinct: Boolean = false,
-          symmetric: Boolean = false): DataFrame =
-    runTracked(edges, iters, src, dst, assumeDistinct, symmetric)._1
-
-  /** As `run`, but also returns the intermediates left persisted, so a
-    * long-lived session can `release()` them once the result has been
-    * acted on (CALLER CONTRACT, same as Bpe.train's caller-unpersists
-    * note) — repeated fire-and-forget run() calls otherwise accumulate
-    * cached partitions until LRU pressure clears them. Per-query
-    * sessions (Verify/Bench) can keep using `run` and rely on LRU. */
-  /** The edge list with per-src out-degree attached — the frame every
-    * rank round re-joins. Exposed so callers sharing ONE graph across
-    * several rank queries (the purchase-graph family) can build it
-    * once, persist it themselves, and pass it via `pinnedEo` (r14
-    * optimization round); lifetime is then the CALLER's contract. */
-  def edgesWithOutdeg(edges: DataFrame, src: String = "src",
-                      dst: String = "dst",
-                      assumeDistinct: Boolean = false): DataFrame = {
-    val e0 = edges
-      .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
-    val e = if (assumeDistinct) e0 else e0.distinct()
-    e.withColumn("od", count(lit(1)).over(Window.partitionBy(col("src"))))
-  }
-
   def runTracked(edges: DataFrame, iters: Int,
                  src: String = "src", dst: String = "dst",
                  assumeDistinct: Boolean = false,

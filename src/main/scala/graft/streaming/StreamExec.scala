@@ -117,10 +117,11 @@ object StreamExec {
       * per non-empty slice with ONE job + ONE commit, where the
       * per-slice writeSlice loop paid a full single-threaded
       * filter+scan pass and a separate write commit PER slice
-      * (JobProbe measured the staging block at ~2-3 s of the first
-      * stream row's wall). Intra-slice row order may differ from the
-      * sequential-filter order (the dynamic-partition writer sorts by
-      * the partition column); every stream-exec operator is
+      * (the staging block measured ~2-3 s of the first stream row's
+      * wall; Bench's `slowest_jobs` record shows the per-job split).
+      * Intra-slice row order may differ from the sequential-filter
+      * order (the dynamic-partition writer sorts by the partition
+      * column); every stream-exec operator is
       * order-invariant within a batch — aggregates, sorted stateful
       * folds, full-row duplicate re-emissions — so results are
       * unchanged (oracle-gated). A slice id with no rows still gets
@@ -279,7 +280,7 @@ object StreamExec {
     // batches"), so the trailing zero-input batch Spark schedules to
     // finalize the watermark only evicts state the terminating
     // AvailableNow query never reads. Measured per-batch (sf0.1,
-    // local[32], StreamStateProbe): st_join batch2 845 ms,
+    // local[32], StreamExec.last.batchDurations): st_join batch2 845 ms,
     // st_late_drop batch5 440 ms, st_sessions batch4 324 ms — all on
     // 0 input rows. Results oracle-gated identical; scale-invariant
     // (one fewer full store-open/commit cycle per stream at any SF).

@@ -65,54 +65,15 @@ object ImdbScaleBench {
       val total = (System.nanoTime() - t0) / 1e9
       val n = preds.count()
       spark.sharedState.cacheManager.clearCache()
-      // listener events drain asynchronously. waitUntilEmpty is
-      // private[spark] — call it by reflection (this is a dev tool);
-      // if the private API moved, fall back to requiring THREE
-      // consecutive stable 500 ms polls (ADVICE r11: one stable poll
-      // undercounts whenever a bus backlog pause exceeds 500 ms).
-      val drained = try {
-        val busM = spark.sparkContext.getClass
-          .getMethod("listenerBus")
-        val bus = busM.invoke(spark.sparkContext)
-        bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" &&
-            m.getParameterCount == 0)
-          .exists { m => m.invoke(bus); true }
-      } catch { case _: Throwable => false }
-      if (!drained) {
-        var prev = -1L; var stable = 0
-        while (stable < 3) {
-          val cur = resultBytes.get()
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-          Thread.sleep(500)
-        }
-      }
+      // listener events arrive asynchronously: drain the bus before
+      // reading the total
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
       // a bus that DROPS events silently deflates the metric used as
-      // the X1-X3 proof — surface the dropped-event counters loudly
-      try {
-        val busM = spark.sparkContext.getClass.getMethod("listenerBus")
-        val bus = busM.invoke(spark.sparkContext)
-        val mm = bus.getClass.getMethods.find(_.getName == "metrics")
-        mm.foreach { m =>
-          val metrics = m.invoke(bus)
-          val reg = metrics.getClass.getMethods
-            .find(_.getName == "metricRegistry").map(_.invoke(metrics))
-          reg.foreach { r =>
-            val counters = r.asInstanceOf[com.codahale.metrics.MetricRegistry]
-              .getCounters(new com.codahale.metrics.MetricFilter {
-                def matches(n: String, c: com.codahale.metrics.Metric) =
-                  n.contains("numDroppedEvents")
-              })
-            counters.forEach { (n, c) =>
-              if (c.getCount > 0)
-                System.err.println(
-                  s"[imdb-bench] WARNING: listener bus dropped " +
-                    s"${c.getCount} events ($n) — resultBytes is an " +
-                    "UNDERCOUNT this run")
-            }
-          }
-        }
-      } catch { case _: Throwable => () }
+      // the X1-X3 proof — surface the dropped-event count loudly
+      val dropped = org.apache.spark.graft.ListenerDrain.dropped(spark.sparkContext)
+      if (dropped > 0)
+        System.err.println(s"[imdb-bench] WARNING: listener bus dropped " +
+          s"$dropped events — resultBytes is an UNDERCOUNT this run")
       val rb = resultBytes.get()
       System.err.println(s"[imdb-bench] $tag: total ${ms(total)} s, " +
         s"$n preds, driver result bytes $rb, stages " +

@@ -19,20 +19,18 @@ import org.apache.spark.sql.SparkSession
   */
 object ScaleGrowth {
 
-  /** ONE copy of the timing methodology shared by the main harness's
-    * headroom block and the headroom-only mode: cold first run, drain
-    * (released graph/base handles), warm second run, drain. */
-  private def coldWarm(spark: SparkSession, dir: String, name: String)
-      : (Double, Double, Long) = {
-    val t0 = System.nanoTime()
-    val rows = graft.SparkEntry.queries(name)(spark, dir).count()
-    val cold = (System.nanoTime() - t0) / 1e9
-    graft.scale.CacheRegistry.drain()
-    val t1 = System.nanoTime()
-    graft.SparkEntry.queries(name)(spark, dir).count()
-    val warm = (System.nanoTime() - t1) / 1e9
-    graft.scale.CacheRegistry.drain()
-    (cold, warm, rows)
+  /** ONE copy of the timing methodology, shared by the growth tables
+    * and both headroom tiers: `reps` runs through Bench's row runner
+    * (each drains its released graph/base handles); cold = rep 1,
+    * warm = min of the later reps (cold when `reps` = 1). A failed rep
+    * rethrows its failure. */
+  private def coldWarm(spark: SparkSession, dir: String, name: String,
+                       reps: Int = 2): (Double, Double, Long) = {
+    val recs = graft.Bench.row(spark, dir, name, reps, graft.SparkEntry.queries(name))
+    recs.flatMap(_.failure).headOption.foreach(e => throw e)
+    val cold = recs.head.seconds
+    val warm = if (reps == 1) cold else recs.tail.map(_.seconds).min
+    (cold, warm, recs.head.rows)
   }
 
   def main(args: Array[String]): Unit = {
@@ -43,6 +41,9 @@ object ScaleGrowth {
     // executors (local-cluster) for the r12 shuffle-wall sharding
     // measurement
     val spark = graft.io.Sessions.harness()
+    // the effective config stamp Bench and Verify carry, read before
+    // any work so a malformed knob fails first
+    val config = graft.io.Knobs.configJson(spark)
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 
     // Headroom-only mode: 4th arg = CSV of query names. Times each
@@ -57,7 +58,7 @@ object ScaleGrowth {
       val tier = if (args.length > 4) args(4).toInt else 100
       val tabs = if (args.length > 5) args(5).split(',').toSeq else AllTables
       runHeadroomOnly(spark, refDir, outJson, args(3).split(',').toSeq,
-        tier, tabs)
+        tier, tabs, config)
       spark.stop()
       return
     }
@@ -84,17 +85,7 @@ object ScaleGrowth {
     // cost once the bases exist (what a multi-query session pays).
     def timeAll(dir: String): Seq[(String, Double, Double, Long)] =
       queries.map { name =>
-        var cold = 0.0
-        var warm = Double.MaxValue
-        var rows = 0L
-        (1 to repeats).foreach { i =>
-          val t0 = System.nanoTime()
-          rows = graft.SparkEntry.queries(name)(spark, dir).count()
-          val t = (System.nanoTime() - t0) / 1e9
-          if (i == 1) cold = t else warm = math.min(warm, t)
-          graft.scale.CacheRegistry.drain()
-        }
-        if (repeats == 1) warm = cold
+        val (cold, warm, rows) = coldWarm(spark, dir, name, repeats)
         System.err.println(f"[scale] $dir%-24s $name%-18s cold ${ms(cold)}%8s s warm ${ms(warm)}%8s s ($rows rows)")
         (name, cold, warm, rows)
       }
@@ -161,7 +152,7 @@ object ScaleGrowth {
     }.mkString("{", ",", "}")
     val cc = s"""{"minlabel":{"sec":${ms(mlT)},"rounds":$mlR},"stars":{"sec":${ms(stT)},"rounds":$stR},"adaptive":{"sec":${ms(adT)},"rounds":$adR},"nodes":$mlN}"""
     val line =
-      s"""{"metric":"scale_growth","cand_pairs_1x":$c1,"cand_pairs_10x":$c10,"cand_pairs_100x":$c100,"cand_growth":${ms(c10.toDouble / c1)},"geo_cand_1x":$gc1,"geo_true_1x":$gt1,"geo_cand_10x":$gc10,"geo_true_10x":$gt10,"cc_dense_10x":$cc,"queries":$per,"headroom_100x":$per100}"""
+      s"""{"metric":"scale_growth","cand_pairs_1x":$c1,"cand_pairs_10x":$c10,"cand_pairs_100x":$c100,"cand_growth":${ms(c10.toDouble / c1)},"geo_cand_1x":$gc1,"geo_true_1x":$gt1,"geo_cand_10x":$gc10,"geo_true_10x":$gt10,"cc_dense_10x":$cc,"queries":$per,"headroom_100x":$per100,"config":$config}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
       (line + "\n").getBytes("UTF-8"))
     println(line)
@@ -177,7 +168,7 @@ object ScaleGrowth {
     * (the generator is deterministic, so reuse is exact). */
   private def runHeadroomOnly(spark: SparkSession, refDir: String,
       outJson: String, qs: Seq[String], tier: Int,
-      tables: Seq[String]): Unit = {
+      tables: Seq[String], config: String): Unit = {
     def ms(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // regenerate unless EVERY requested table is COMPLETE and CURRENT
@@ -250,7 +241,7 @@ object ScaleGrowth {
           }
       }
     }.mkString("{", ",", "}")
-    val line = s"""{"metric":"headroom_${tier}x_ext","queries":$per}"""
+    val line = s"""{"metric":"headroom_${tier}x_ext","queries":$per,"config":$config}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
       (line + "\n").getBytes("UTF-8"))
     println(line)

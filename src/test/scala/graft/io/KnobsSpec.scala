@@ -26,7 +26,7 @@ class KnobsSpec extends SparkSpec {
     assert(k.cpus == cores && k.master == s"local[$cores]" && k.shufflePartitions == cores)
     assert(k.cachedCoalesce && k.kill)
     assert(!k.rocksDbStateStore && !k.reliableCkpt && !k.streamNoData && !k.ckptChecksum)
-    assert(k.ckptDir.isEmpty && k.benchOnly.isEmpty)
+    assert(k.ckptDir.isEmpty)
     assert(k.memoCapMb == 4096L && k.lshMaxBucket == 1024 && k.streamSlices == 2)
     assert(k.killDelayMs == 4000L && k.killCount == 1 && k.killRepeatMs == 0L)
     // an empty or blank value counts as unset
@@ -102,7 +102,9 @@ class KnobsSpec extends SparkSpec {
     assert(json.get("spark.sql.shuffle.partitions").asText ==
       spark.conf.get("spark.sql.shuffle.partitions"))
     assert(json.get("SPARK_GRAFT_CKPT_DIR").asText == "/tmp/a\"b\tc")
-    assert(json.get("SPARK_GRAFT_BENCH_ONLY").isNull)
+    assert(json.get("SPARK_GRAFT_BENCH_OUT").asText == "/tmp/graft_bench_full.json")
+    assert(json.get("git_sha").asText.matches("unknown|[0-9a-f]{40}(-dirty)?"),
+      json.get("git_sha").asText)
     k.snapshot.keys.foreach(n => assert(json.has(n), n))
   }
 

@@ -308,10 +308,11 @@ class PlanShapeSpec extends SparkSpec {
     val offenders = graft.SparkEntry.queries.keys.toSeq.sorted
       .filterNot(allow)
       .flatMap { name =>
-        windows(graft.SparkEntry.queries(name)(spark, dir)
+        val found = windows(graft.SparkEntry.queries(name)(spark, dir)
             .queryExecution.executedPlan)
           .filter(_.partitionSpec.isEmpty)
-          .map(w => s"$name -> ${w.windowExpression.mkString(", ")}")
+        graft.scale.CacheRegistry.drain()
+        found.map(w => s"$name -> ${w.windowExpression.mkString(", ")}")
       }
     assert(offenders.isEmpty,
       s"unpartitioned WindowExec outside the allowlist:\n${offenders.mkString("\n")}")

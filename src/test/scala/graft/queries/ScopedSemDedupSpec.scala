@@ -18,6 +18,7 @@ class ScopedSemDedupSpec extends SparkSpec {
     val exact = DedupPack.queries("d_semdedup")(spark, dir)
       .select(col("vec_id"), col("rep_id"), col("is_kept"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+    graft.scale.CacheRegistry.drain()
     val scoped = DedupPack.queries("d_semdedup_scoped")(spark, dir)
       .select(col("vec_id"), col("rep_id"), col("is_kept"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
@@ -47,8 +48,9 @@ class ScopedSemDedupSpec extends SparkSpec {
   }
 
   test("scoped census is deterministic across runs") {
-    def run() = DedupPack.queries("d_semdedup_scoped")(spark, dir)
-      .collect().map(_.toString).toSeq
+    def run() =
+      try DedupPack.queries("d_semdedup_scoped")(spark, dir).collect().map(_.toString).toSeq
+      finally graft.scale.CacheRegistry.drain()
     assert(run() == run())
   }
 }

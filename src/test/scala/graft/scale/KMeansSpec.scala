@@ -29,6 +29,7 @@ class KMeansSpec extends SparkSpec {
   test("Lloyd iterations reduce lattice inertia") {
     val (a1, _) = KMeans.lloydQuantized(spark, quantized(0), 4, 1)
     val i1 = inertia(a1)
+    CacheRegistry.drain()
     val (a3, _) = KMeans.lloydQuantized(spark, quantized(0), 4, 3)
     val i3 = inertia(a3)
     CacheRegistry.drain()

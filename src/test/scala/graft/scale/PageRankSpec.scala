@@ -4,12 +4,21 @@ import graft.SparkSpec
 
 class PageRankSpec extends SparkSpec {
 
+  /** Runs k rounds over `edges`, releases the pinned intermediates,
+    * returns node->rank. */
+  private def ranks(edges: org.apache.spark.sql.DataFrame, iters: Int,
+                    symmetric: Boolean = false,
+                    broadcastRanks: Boolean = false): Map[Long, Long] = {
+    val (r, h) = PageRank.runTracked(edges, iters, symmetric = symmetric,
+      broadcastRanks = broadcastRanks)
+    try r.collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
+    finally h.release()
+  }
+
   /** Undirected helper: symmetrizes, runs k rounds, returns node->rank. */
   private def pr(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
     import spark.implicits._
-    val sym = edges ++ edges.map(_.swap)
-    PageRank.run(sym.toDF("src", "dst"), iters)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    ranks((edges ++ edges.map(_.swap)).toDF("src", "dst"), iters)
   }
 
   /** In-memory reference of the exact integer recurrence (directed
@@ -71,10 +80,8 @@ class PageRankSpec extends SparkSpec {
     val base = Seq.fill(40)((rnd.nextInt(15).toLong, rnd.nextInt(15).toLong))
       .filter(e => e._1 != e._2)
     val sym = (base ++ base.map(_.swap)).toDF("src", "dst")
-    val slow = PageRank.run(sym, 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fast = PageRank.run(sym, 4, symmetric = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val slow = ranks(sym, 4)
+    val fast = ranks(sym, 4, symmetric = true)
     assert(fast == slow)
   }
 
@@ -83,8 +90,7 @@ class PageRankSpec extends SparkSpec {
     // 0 -> 1, 1 -> 2, 2 -> 1: node 0 never receives, but must stay in
     // the output at floor rank and keep feeding node 1 every round
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 1L))
-    val got = PageRank.run(edges.toDF("src", "dst"), 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = ranks(edges.toDF("src", "dst"), 5)
     val ref = referenceDirected(edges, 5)
     assert(got == ref, s"directed ranks diverged: $got vs $ref")
     assert(got(0L) == 150000L, "in-degree-0 source must sit at the floor")
@@ -97,12 +103,8 @@ class PageRankSpec extends SparkSpec {
     import spark.implicits._
     val edges = ((1L to 40L).map(i => (i, i % 40 + 1)) ++
       (1L to 40L).map(i => (i % 40 + 1, i))).toDF("src", "dst")
-    val (a, ha) = PageRank.runTracked(edges, 4, symmetric = true)
-    val (b, hb) = PageRank.runTracked(edges, 4, symmetric = true,
-      broadcastRanks = true)
-    assert(a.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
-      b.collect().map(r => (r.getLong(0), r.getLong(1))).toMap)
-    ha.release(); hb.release()
+    assert(ranks(edges, 4, symmetric = true) ==
+      ranks(edges, 4, symmetric = true, broadcastRanks = true))
     // the structural claim: in broadcast mode each extra round adds
     // EXACTLY ONE shuffle exchange (the edge-keyed contribution agg)
     // and nothing else — the rank side rides a broadcast, never a

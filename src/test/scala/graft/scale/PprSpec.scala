@@ -22,11 +22,13 @@ class PprSpec extends SparkSpec {
     // so the personalized recurrence must collapse to the standard one
     import spark.implicits._
     val all = edges.select(col("src").as("node")).distinct()
+    // each run released before the next pins an equal edge frame
     val (pers, h1) = PageRank.runPersonalizedTracked(edges, all, 5)
-    val (unif, h2) = PageRank.runTracked(edges, 5, symmetric = true)
     val a = pers.orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
+    h1.release()
+    val (unif, h2) = PageRank.runTracked(edges, 5, symmetric = true)
     val b = unif.orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
-    h1.release(); h2.release()
+    h2.release()
     assert(a.toSeq === b.toSeq)
   }
 

@@ -11,6 +11,12 @@ flags that band as a wall of fake regressions. The raw ratio is still
 printed alongside. Lines without probes (pre-r14) compare raw, as
 before.
 
+Layer attribution: when BOTH side files carry "rows" (graft.Bench's
+per-rep records), every flagged row also gets its build/plan/exec
+seconds and job count, base -> cand, each the min over reps, and the
+layer whose seconds grew most is named. Raw seconds, not
+host-normalized. Files without "rows" compare as before.
+
 Usage: python3 tools/bench_compare.py <baseline.json> <candidate.json> [threshold=1.5]
 Exit 1 if any shared query regressed by more than `threshold`x
 (host-normalized when probes are present on both sides).
@@ -55,6 +61,26 @@ def drift_check(line, label):
               " numbers are band-contaminated; prefer minima over reruns")
     return bool(drifted)
 
+LAYERS = ("build_s", "plan_s", "exec_s")
+
+def layers(line, name):
+    """Per-layer min over the row's ok reps, or None when the file has
+    no records for it."""
+    recs = [r for r in (line.get("rows") or {}).get(name, []) if r.get("ok")]
+    if not recs:
+        return None
+    return {k: min(r[k] for r in recs) for k in LAYERS + ("jobs",)}
+
+def attribute(base, cand, name):
+    """One line naming what moved in a flagged row, or None."""
+    b, c = layers(base, name), layers(cand, name)
+    if b is None or c is None:
+        return None
+    parts = [f"{k[:-2]} {b[k]:.3f}->{c[k]:.3f} ({c[k] - b[k]:+.3f}s)" for k in LAYERS]
+    parts.append(f"jobs {b['jobs']}->{c['jobs']} ({c['jobs'] - b['jobs']:+d})")
+    grew = max(LAYERS, key=lambda k: c[k] - b[k])
+    return f"    {name}: " + "  ".join(parts) + f"  -> layer: {grew[:-2]}"
+
 def main(base_p, cand_p, threshold=1.5):
     base, cand = load(base_p), load(cand_p)
     bq, cq = base["queries"], cand["queries"]
@@ -82,6 +108,10 @@ def main(base_p, cand_p, threshold=1.5):
         print(f"new query: {k} ({cq[k]:.2f}s)")
     if regressions:
         print(f"\n{len(regressions)} regression(s): {regressions}")
+        lines = [l for l in (attribute(base, cand, k) for k in regressions) if l]
+        if lines:
+            print("layers (min over reps, raw seconds):")
+            print("\n".join(lines))
         return 1
     return 0
 
