@@ -2,11 +2,12 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import scala.jdk.CollectionConverters._
@@ -29,13 +30,16 @@ object Bench {
     * QueryExecution, and `execS` the rest of the action. The Spark
     * counts cover the whole rep (build and action), from one listener
     * reset at rep start and read after the listener bus is drained.
-    * `slowestJobs` holds the 3 slowest jobs as (job id, ms,
-    * `callSite.short`). `memoBuilt` are the MemoPool entries the rep
-    * built. `pooledBytes` and `cachedBytes` are read after the
-    * CacheRegistry drain. `iterate` and the stream fields are the
-    * thread's `Iterate.last` and `StreamExec.last`, reset before the
-    * rep, so a row that runs no loop or stream reports the reset
-    * values. */
+    * `slowestJobs` holds the 3 slowest jobs as (job id, ms, site): a
+    * job of a SQL execution is named after that execution, also when
+    * AQE submitted it from a query-stage thread, as
+    * `sql <id> (<description>): <caller's frame>`; any other job by
+    * its `callSite.short` or final stage.
+    * `memoBuilt` are the MemoPool entries the rep built. `pooledBytes`
+    * and `cachedBytes` are read after the CacheRegistry drain.
+    * `iterate` and the stream fields are the thread's `Iterate.last`
+    * and `StreamExec.last`, reset before the rep, so a row that runs no
+    * loop or stream reports the reset values. */
   final case class Record(
       rep: Int, failure: Option[Throwable], rows: Long, seconds: Double,
       buildS: Double, planS: Double, execS: Double,
@@ -82,6 +86,7 @@ object Bench {
   private final class RowListener(spark: SparkSession)
       extends SparkListener with QueryExecutionListener {
     private val jobStarts = new ConcurrentHashMap[Int, (Long, String)]()
+    private val executions = new ConcurrentHashMap[Long, String]()
     private val jobMs = new ConcurrentHashMap[Int, Long]()
     @volatile var stages = 0
     @volatile var tasks = 0
@@ -91,7 +96,7 @@ object Bench {
     @volatile var planMs = 0L
 
     def reset(): Unit = synchronized {
-      jobStarts.clear(); jobMs.clear()
+      jobStarts.clear(); jobMs.clear(); executions.clear()
       stages = 0; tasks = 0; shuffleRead = 0L; shuffleWrite = 0L; spill = 0L; planMs = 0L
     }
 
@@ -101,10 +106,26 @@ object Bench {
       jobMs.asScala.toSeq.sortBy { case (id, ms) => (-ms, id) }.take(n)
         .map { case (id, ms) => (id, ms, jobStarts.get(id)._2) }
 
+    // the execution's start event precedes its jobs on the bus; its
+    // `details` is the action's call stack, the Spark API frame first
+    // and the caller's frame next
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        val caller = s.details.linesIterator.drop(1).nextOption().getOrElse(s.details)
+        executions.put(s.executionId, s"sql ${s.executionId} (${s.description}): $caller")
+      case _ =>
+    }
+
+    // A job of a SQL execution carries the execution's id in its
+    // properties, including every job AQE submits from its query-stage
+    // threads, whose own call site is a CompletableFuture frame.
     // `callSite.short` is set only where a caller set one (the stream
     // runner); otherwise the job's final stage is named after its call site
     override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val site = Option(e.properties).flatMap(p => Option(p.getProperty("callSite.short")))
+      val props = Option(e.properties)
+      val site = props.flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .flatMap(id => Option(executions.get(id.toLong)))
+        .orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
         .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
       jobStarts.put(e.jobId, (e.time, site.getOrElse("")))
     }

@@ -142,6 +142,7 @@ object GraftFunctions {
   private[graft] val descriptors: Seq[Descriptor] = Seq(
     d("accent_fold", classOf[AccentFold], es => AccentFold(es.head)),
     d("py_title_case", classOf[PyTitleCase], es => PyTitleCase(es.head)),
+    d("initcap_binary", classOf[InitCapBinary], es => InitCapBinary(es.head)),
     d("char_fingerprint", classOf[CharFingerprint],
       es => CharFingerprint(es.head)),
     d("dot_product", classOf[DotProduct], es => DotProduct(es(0), es(1))),

@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * whitespace — the documented delta (SURVEY §7.4 risk 3) is
   * digit/punctuation-adjacent letters: `"2x"` -> Python `"2X"`,
   * initcap `"2x"`. This expression closes that parity gap for
-  * golden-output runs; `Cleaning.normalizeTitle` keeps `initcap` as
-  * the default.
+  * golden-output runs; `Cleaning.normalizeTitle` keeps initcap's
+  * whitespace semantics, through [[InitCapBinary]].
   */
 case class PyTitleCase(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
@@ -58,6 +58,43 @@ object PyTitleCase {
     }
     sb.toString
   }
+}
+
+/** Spark's `initcap` on UTF8_BINARY strings WITHOUT the ICU path:
+  * lowercase, then uppercase each letter at the start of the string or
+  * after a space (`UTF8String.toLowerCase().toTitleCase()`, the body of
+  * `CollationSupport.InitCap.execBinary`). Under the default
+  * `spark.sql.icu.caseMappings.enabled=true`, `initcap` takes the ICU
+  * path instead, whose case-mapping tables initialize lazily on the
+  * first call in the JVM: one task pays ~1.7 s of CPU and every other
+  * concurrent `initcap` task waits on it (measured on a cold 4-core
+  * IMDB pipeline run). On ASCII both paths give the same bytes, and
+  * `Cleaning.normalizeTitle` only feeds this pure ASCII; CleaningSpec
+  * checks the equality under both settings of the conf.
+  */
+case class InitCapBinary(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def prettyName: String = "initcap_binary"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"initcap_binary requires a string argument, got ${child.dataType}")
+
+  override def nullSafeEval(input: Any): Any =
+    input.asInstanceOf[UTF8String].toLowerCase().toTitleCase()
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"$c.toLowerCase().toTitleCase()")
+
+  override protected def withNewChildInternal(newChild: Expression): InitCapBinary =
+    copy(child = newChild)
+}
+
+object InitCapBinary {
+  def apply(c: Column): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      InitCapBinary(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
 }
 
 /** Position-weighted character fingerprint (TextFeatures semantics:

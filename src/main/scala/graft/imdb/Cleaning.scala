@@ -1,5 +1,6 @@
 package graft.imdb
 
+import graft.expr.InitCapBinary
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -12,14 +13,18 @@ object Cleaning {
 
   /** F1-F4 composed: accent fold -> strip non-alphanumerics -> trim +
     * title case -> blank-to-null. Mirrors preprocess_text
-    * (data_utils.py:160-184). `initcap` title-cases at whitespace;
-    * Python's str.title also at digit boundaries — post-strip strings
-    * differ only for digit-adjacent letters, documented in SURVEY §7.4.
+    * (data_utils.py:160-184). The title case is `initcap`'s: it
+    * title-cases after spaces; Python's str.title also at digit
+    * boundaries — post-strip strings differ only for digit-adjacent
+    * letters, documented in SURVEY §7.4. The fold drops non-ASCII and
+    * the strip keeps `[a-zA-Z0-9\s]`, so the title case only ever sees
+    * ASCII, where [[graft.expr.InitCapBinary]] gives `initcap`'s bytes
+    * without its ICU initialization stall.
     * Requires GraftFunctions.register (or GraftExtensions). */
   def normalizeTitle(c: Column): Column = {
     val folded = call_function("accent_fold", c)
     val stripped = regexp_replace(folded, "[^a-zA-Z0-9\\s]", "")
-    val cased = initcap(trim(stripped))
+    val cased = InitCapBinary(trim(stripped))
     when(cased === "" || c.isNull, lit(null)).otherwise(cased)
   }
 

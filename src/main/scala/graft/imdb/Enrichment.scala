@@ -56,13 +56,19 @@ object Enrichment {
 
   /** Cache-first enrichment. Returns (genres, newPredictions):
     * `genres` is cache ∪ new — join it to the movie table on tconst
-    * (J3); `newPredictions` is what K2 appends to the cache file. */
+    * (J3); `newPredictions` is what K2 appends to the cache file, one
+    * row per distinct missing tconst. Only the [[MovieMeta]] columns of
+    * `movies` are read. */
   def enrich(spark: SparkSession, movies: DataFrame, cache: DataFrame,
              predictor: GenrePredictor, batchSize: Int = 20)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
     val needed = movies
       .join(cache, Seq("tconst"), "left_anti") // J6, replaces driver set-diff
+      // one prediction per missing id: a repeated row (or a movie in
+      // both sets of a one-pass run) would otherwise be predicted twice
+      // and reach `fresh` twice
+      .dropDuplicates("tconst")
       .select(col("tconst"),
         col("primaryTitle"), col("originalTitle"),
         col("startYear").cast("int"),

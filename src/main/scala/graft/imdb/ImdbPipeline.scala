@@ -66,16 +66,21 @@ object ImdbPipeline {
   private[imdb] def imputationMeans(trainPre: DataFrame): Map[String, Double] =
     Cleaning.columnMeans(trainPre, Seq("runtimeMinutes", "numVotes"))
 
-  /** Stage 3 for one set: metadata merge (over the run's prebuilt
-    * top-writer/top-director tables) + genre enrichment + decade +
-    * extra-data columns (classifier_pipeline.py:320-410). */
-  private def engineer(spark: SparkSession, df: DataFrame, topW: DataFrame,
-                       topD: DataFrame, cache: DataFrame, cfg: Config,
+  /** Stage 3: metadata merge + genre enrichment + decade + extra-data
+    * columns (classifier_pipeline.py:320-410), over both sets at once.
+    * Enrichment reads only movie columns, so it gets the frame before
+    * the metadata joins and its persisted predictions never re-run
+    * them. */
+  private def engineer(spark: SparkSession, movies: DataFrame,
+                       writing: DataFrame, directing: DataFrame,
+                       cache: DataFrame, cfg: Config,
                        extra: Option[DataFrame],
                        extraMeans: Map[String, Double]): (DataFrame, DataFrame) = {
-    val merged = Metadata.joinTop(df, topW, topD)
     val (genres, fresh) =
-      Enrichment.enrich(spark, merged, cache, cfg.predictor, cfg.batchSize)
+      Enrichment.enrich(spark, movies, cache, cfg.predictor, cfg.batchSize)
+    val merged = Metadata.joinTop(movies,
+      Metadata.topEntityPerMovie(writing, "writer"),
+      Metadata.topEntityPerMovie(directing, "director"))
     val withGenre = merged
       .join(broadcast(genres), Seq("tconst"), "left") // J3
       .withColumn("genre", coalesce(col("genre"), lit("unknown")))
@@ -97,13 +102,23 @@ object ImdbPipeline {
     (Features.withDecade(withExtra).drop("startYear", "endYear"), fresh)
   }
 
+  /** Tags each row of the one engineered frame with its set. */
+  private val SetCol = "_set"
+
+  /** The RF's label: 0.0/1.0 with two-class nominal metadata, so the
+    * classifier reads its class count from the schema instead of
+    * running a `max(label)` job. */
+  private val labelMeta = org.apache.spark.ml.attribute.NominalAttribute.defaultAttr
+    .withName("label").withNumValues(2).toMetadata()
+
   /** Full run: load -> preprocess -> engineer -> train -> predict ->
     * sinks. Returns the prediction DataFrame (tconst, prediction).
     *
-    * The fits, the forest's passes and both sets' merges re-read the
-    * same intermediates, so these are built once: the
-    * top-writer/top-director tables and the engineered train and test
-    * frames are persisted, and all of them are released in the
+    * Train and test are preprocessed and engineered as ONE frame,
+    * tagged by set: train's partitions first, so the train side keeps
+    * the partitions (and so the forest's bagging) of a train-only
+    * frame. That frame is persisted once; the fits, the forest's passes
+    * and the predictions all read it, and it is released in the
     * `finally` below, on success and on failure. The returned frame is
     * lazy, so each action a caller runs on it recomputes the test side.
     * Enrichment's `fresh` predictions stay persisted: the returned
@@ -116,11 +131,11 @@ object ImdbPipeline {
     // (fits and sinks) — no extra count()s are injected, so the
     // measured run is the production run. Lazy evaluation means each
     // mark carries everything since the previous action:
-    // "fit_indexers" pays the whole train-side load+preprocess+
-    // engineer chain, materialized once into the persisted engineered
+    // "fit_indexers" pays the whole load+preprocess+engineer chain of
+    // BOTH sets, materialized once into the persisted engineered
     // frame; "fit_scaler" and "train_rf" read that cache;
-    // "predict_write" pays the test side. ImdbScaleBench documents
-    // this attribution.
+    // "predict_write" only transforms, predicts and writes the test
+    // rows. ImdbScaleBench documents this attribution.
     var lastMark = System.nanoTime()
     def mark(stage: String): Unit = {
       val now = System.nanoTime()
@@ -146,43 +161,30 @@ object ImdbPipeline {
     // Stage 2: preprocess; means once, from TRAIN ONLY and unfiltered
     // (classifier_pipeline.py:189-199 — avg skips nulls; the test set
     // never leaks into imputation)
-    val trainPre = preprocess(train)
-    val testPre = preprocess(test)
-    val means = imputationMeans(trainPre)
+    val means = imputationMeans(preprocess(train))
+    val movies = preprocess(train.withColumn(SetCol, lit(0)).unionByName(
+      test.withColumn("label", lit(null).cast("boolean")).withColumn(SetCol, lit(1))))
     // extra-data means come from the extra table itself, non-zero rows
     // only (classifier_pipeline.py:236-241)
     val extraMeans = extra.map(e =>
       Cleaning.nonZeroMeans(e, Seq("popularity", "budget", "revenue")))
       .getOrElse(Map.empty)
 
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def hold(df: DataFrame): DataFrame = {
-      held += df.persist(StorageLevel.MEMORY_AND_DISK)
-      df
-    }
-
+    val (engineered, fresh) = engineer(spark, Cleaning.patchWithMean(movies, means),
+      writing, directing, cache, cfg, extra, extraMeans)
+    val held = engineered.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // Stage 3: features (fit-on-train indexers + scaler). The top-1
-      // tables feed both sets, so they are held before either
-      // engineered frame is, whose cached plans then read them.
-      val topW = hold(Metadata.topEntityPerMovie(writing, "writer"))
-      val topD = hold(Metadata.topEntityPerMovie(directing, "director"))
-      val (trainEng, freshTrain) =
-        engineer(spark, Cleaning.patchWithMean(trainPre, means),
-          topW, topD, cache, cfg, extra, extraMeans)
-      val trainFeat0 = hold(trainEng)
-      val (testEng, freshTest) =
-        engineer(spark, Cleaning.patchWithMean(testPre, means),
-          topW, topD, cache.union(freshTrain), cfg, extra, extraMeans)
-      val testFeat0 = hold(testEng)
+      // Stage 3: features (fit-on-train indexers + scaler)
+      val trainFeat0 = held.filter(col(SetCol) === 0).drop(SetCol)
+      val testFeat0 = held.filter(col(SetCol) === 1).drop(SetCol, "label")
       // observation hook (no-op by default): ImdbScaleCensus gates the
       // engineered frames' census against a DuckDB recomputation at xN
       tap("engineered_train", trainFeat0)
       tap("engineered_test", testFeat0)
       val indexers = Features.fitIndexers(trainFeat0)
-      mark("fit_indexers") // materializes the engineered train frame
+      mark("fit_indexers") // materializes the engineered frame, both sets
       val trainIdx = Features.applyIndexers(trainFeat0, indexers)
-        .withColumn("label", col("label").cast("double"))
+        .withColumn("label", col("label").cast("double").as("label", labelMeta))
       val testIdx = Features.applyIndexers(testFeat0, indexers)
       val trainAsm = Features.assemble(trainIdx)
       val scaler = Features.fitScaler(trainAsm)
@@ -205,19 +207,15 @@ object ImdbPipeline {
       val predPath = cfg.resultPath.getOrElse(s"${cfg.resultsDir}/" +
         predFileName(cfg.setName, cfg.modelName, java.time.LocalDateTime.now()))
       Writers.savePredictionsTxt(preds, predPath)
-      mark("predict_write") // pays test-side engineer (held)+transform+predict
+      mark("predict_write") // test-side transform + predict + write
       println(s"[imdb] predictions written to $predPath")
       // K2: persist the updated genre cache (old entries win on dup keys,
-      // data_utils.py:404-413); both fresh sets are persisted DataFrames,
-      // so this re-reads memoized results, not the LLM
-      Writers.saveGenreCache(cache, freshTrain.union(freshTest),
+      // data_utils.py:404-413); `fresh` is persisted, so this re-reads
+      // memoized results, not the LLM
+      Writers.saveGenreCache(cache, fresh,
         cfg.cacheOutDir.getOrElse(s"${cfg.resultsDir}/genre_cache"))
       mark("cache_write")
       preds
-    } finally {
-      // dependents first, so no remaining cached plan is re-planned
-      // around a released one
-      held.reverseIterator.foreach(_.unpersist())
-    }
+    } finally held.unpersist()
   }
 }

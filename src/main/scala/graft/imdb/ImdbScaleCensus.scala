@@ -43,7 +43,7 @@ object ImdbScaleCensus {
       cacheOutDir = Some(s"$out/genre_cache"))
 
     // the census runs inside the tap, while the run still holds the
-    // engineered train frame persisted; after run returns it is released
+    // engineered frame persisted; after run returns it is released
     var trainRows: Seq[(String, Long)] = Nil
     val preds = ImdbPipeline.run(spark, cfg,
       tap = (name, df) =>

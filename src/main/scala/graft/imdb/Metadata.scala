@@ -9,21 +9,22 @@ import org.apache.spark.sql.functions._
   */
 object Metadata {
 
-  /** Top-1 entity per movie by global entity frequency: groupBy count,
-    * join counts back (J5 shape kept for parity; a count-window is the
-    * join-free alternative), window top-1 with DETERMINISTIC tie-break
+  /** Top-1 entity per movie by global entity frequency (J5: the
+    * reference's groupBy count joined back, here a count window over
+    * one scan of the pairs), window top-1 with DETERMINISTIC tie-break
     * (count desc, entity asc) — the reference breaks ties arbitrarily
-    * (data_utils.py:327-344, SURVEY W1 quirk).
+    * (data_utils.py:327-344, SURVEY W1 quirk). Pairs with a null entity
+    * are dropped, as the join back on the entity dropped them.
     *
     * Input: (movie, entity) pairs; output: (movie, entity,
     * {entity}_count) one row per movie.
     */
   def topEntityPerMovie(pairs: DataFrame, entityCol: String): DataFrame = {
     val cntName = s"${entityCol}_count"
-    val counts = pairs.groupBy(col(entityCol)).agg(count(lit(1)).as(cntName))
     val w = Window.partitionBy(col("movie"))
       .orderBy(col(cntName).desc, col(entityCol).asc)
-    pairs.join(counts, entityCol)
+    pairs.filter(col(entityCol).isNotNull)
+      .withColumn(cntName, count(lit(1)).over(Window.partitionBy(col(entityCol))))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") === 1)
       .drop("rank")

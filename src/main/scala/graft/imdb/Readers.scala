@@ -42,16 +42,17 @@ object Readers {
   /** S4: directing.json columns-orient restructure, distributed.
     * The reference's Python dict-key intersection (`&` at
     * data_utils.py:91) IS an inner join on the index key — expressed
-    * here as explode(map) x2 + join, no driver JSON parse. */
-  def loadDirecting(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read
+    * here as one explode of the movie map plus a key lookup in the
+    * director map of the same object: an index present in only one
+    * map yields no pair, one scan, no shuffle, no driver JSON parse. */
+  def loadDirecting(spark: SparkSession, path: String): DataFrame =
+    spark.read
       .option("multiLine", true)
       .schema(Schemas.directing)
       .json(path)
-    val movies = raw.select(explode(col("movie")).as(Seq("idx", "movie")))
-    val directors = raw.select(explode(col("director")).as(Seq("idx", "director")))
-    movies.join(directors, "idx").select(col("movie"), col("director"))
-  }
+      .select(explode(col("movie")).as(Seq("idx", "movie")), col("director").as("_d"))
+      .filter(map_contains_key(col("_d"), col("idx")))
+      .select(col("movie"), col("_d").getItem(col("idx")).as("director"))
 
   /** S6: LLM genre cache — just a 2-column table; downstream uses joins
     * instead of the reference's driver dict lookups

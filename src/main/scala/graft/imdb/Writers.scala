@@ -10,14 +10,16 @@ object Writers {
     * ordered by tconst (the leaderboard contract,
     * data_utils.py:420-459). The reference collects to the driver and
     * formats in Python; here the format is a codegen'd projection and
-    * the single file comes from coalesce(1) — swap for a partitioned
-    * write when the output is no longer leaderboard-sized. */
+    * the single file is one partition sorted by tconst (no range
+    * sampling job, which a global `orderBy` runs over the whole input
+    * first) — swap for a partitioned write when the output is no
+    * longer leaderboard-sized. */
   def savePredictionsTxt(preds: DataFrame, path: String): Unit =
     preds
-      .orderBy(col("tconst"))
+      .repartition(1)
+      .sortWithinPartitions(col("tconst"))
       .select(when(col("prediction") === 1.0, "True").otherwise("False")
         .as("value"))
-      .coalesce(1)
       .write.mode("overwrite").text(path)
 
   /** K2: genre-cache CSV — old ∪ new, deduped by tconst with OLD

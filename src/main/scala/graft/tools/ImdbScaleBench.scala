@@ -8,13 +8,12 @@ import graft.imdb.ImdbPipeline
   *
   * Stage attribution (ImdbPipeline.run marks its natural action
   * boundaries; nothing extra is forced): `fit_indexers` pays the
-  * train-side load+preprocess+imputation+engineer chain, materialized
-  * once into the run's persisted engineered train frame (and the
-  * top-writer/top-director tables), plus the one fused indexer fit;
-  * `fit_scaler` (assemble+scaler fit) and `train_rf` (the forest's
-  * passes) read that cache; `predict_write` pays the test-side
-  * engineer, materialized once into its own persisted frame, plus
-  * transform+predict+K1 sink; `cache_write` the K2 cache union sink.
+  * load+preprocess+imputation+engineer chain of both sets, materialized
+  * once into the run's one persisted engineered frame, plus the one
+  * fused indexer fit; `fit_scaler` (assemble+scaler fit) and
+  * `train_rf` (the forest's passes) read that cache; `predict_write`
+  * the test side's transform+predict+K1 sink over the same cache;
+  * `cache_write` the K2 cache union sink.
   * The run releases its frames before returning, so the `count()`
   * after it recomputes the test side outside the timed total.
   *

@@ -49,6 +49,15 @@ class BenchSpec extends SparkSpec {
     assert(rec.stages > 0 && rec.tasks > 0 && rec.slowestJobs.nonEmpty, rec)
   }
 
+  test("slowest jobs are named by their SQL execution, not an AQE thread frame") {
+    val rec = one("q1_agg")
+    assert(rec.slowestJobs.nonEmpty, rec)
+    rec.slowestJobs.foreach { case (_, _, site) =>
+      assert(!site.contains("CompletableFuture"), rec)
+      assert(site.startsWith("sql ") && site.contains("(q1_agg): graft."), rec)
+    }
+  }
+
   test("loop and stream records belong to the row that ran them") {
     val kcore = one("g_kcore")
     assert(kcore.iterate.rounds > 0 && kcore.iterate == scale.Iterate.last.get(), kcore)

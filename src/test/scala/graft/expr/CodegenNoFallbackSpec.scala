@@ -52,6 +52,7 @@ class CodegenNoFallbackSpec extends SparkSpec {
         col("text"),
         call_function("accent_fold", col("text")).as("folded"),
         PyTitleCase(col("text")).as("titled"),
+        InitCapBinary(col("text")).as("initcap"),
         CharFingerprint(col("text")).as("fp"),
         ShingleHashes(col("text"), 3).as("sh"),
         MinHashSig(ShingleHashes(col("text"), 3), 64, 20260812L).as("mh"),
@@ -76,6 +77,8 @@ class CodegenNoFallbackSpec extends SparkSpec {
         val text = r.getAs[String]("text")
         assert(r.getAs[String]("folded") == AccentFold.fold(text))
         assert(r.getAs[String]("titled") == PyTitleCase.title(text))
+        assert(r.getAs[String]("initcap") ==
+          org.apache.spark.unsafe.types.UTF8String.fromString(text).toLowerCase.toTitleCase.toString)
         assert(r.getAs[Long]("fp") == CharFingerprint.fingerprint(text))
         assert(r.getAs[scala.collection.Seq[Long]]("sh").nonEmpty)
         assert(r.getAs[scala.collection.Seq[Long]]("mh").length == 64)

@@ -17,6 +17,50 @@ class CleaningSpec extends SparkSpec {
     assert(out.toSeq == Seq(Some("Destiny"), Some("Der Mude  Tod"), None, None))
   }
 
+  test("property: normalizeTitle == the initcap chain, with ICU case mappings on and off") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    // what a title can hold: ASCII letters and digits, runs of spaces,
+    // tabs and newlines, punctuation, accented Latin, combining marks,
+    // ligatures and fullwidth forms (NFKD folds them to ASCII), Greek,
+    // Cyrillic and CJK (dropped by the fold), and the Turkish dotted I
+    val pools: Seq[IndexedSeq[String]] = Seq(
+      ('a' to 'z') ++ ('A' to 'Z'), ('0' to '9'), Seq(' ', ' ', '\t', '\n'),
+      "!?.,'-:&()".toSeq, "éÉüÜçÇñÑøÆåß".toSeq, Seq('\u0301', '\u0308', '\u0327'),
+      Seq('\ufb01', '\uff21', '\uff41', '\u0130', '\u0131'),
+      "αΩжЖ".toSeq, ('\u4e00' to '\u4e40')).map(_.map(_.toString).toIndexedSeq)
+    val rnd = new scala.util.Random(20261019L)
+    val titles: Seq[Option[String]] = (1 to 3000).map { i =>
+      if (i % 97 == 0) None
+      else Some((0 until rnd.nextInt(24)).map { _ =>
+        val pool = pools(rnd.nextInt(pools.size))
+        pool(rnd.nextInt(pool.size))
+      }.mkString)
+    }
+    def initcapChain(c: org.apache.spark.sql.Column) = {
+      val cased = initcap(trim(regexp_replace(call_function("accent_fold", c),
+        "[^a-zA-Z0-9\\s]", "")))
+      when(cased === "" || c.isNull, lit(null)).otherwise(cased)
+    }
+    val key = "spark.sql.icu.caseMappings.enabled"
+    val before = spark.conf.getOption(key)
+    try Seq("true", "false").foreach { icu =>
+      spark.conf.set(key, icu)
+      // a local relation is evaluated by the optimizer (interpreted);
+      // an RDD scan runs the generated code
+      Seq(titles.toDF("t"), spark.sparkContext.parallelize(titles, 4).toDF("t"))
+        .foreach { df =>
+          val bad = df.select($"t", Cleaning.normalizeTitle($"t").as("n"),
+              initcapChain($"t").as("ic"))
+            .filter(not($"n" <=> $"ic")).collect()
+          assert(bad.isEmpty, s"$key=$icu: ${bad.take(5).mkString("; ")}")
+        }
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("repairYears truth table (classifier_pipeline.py:198-204)") {
     import spark.implicits._
     val df = Seq(

@@ -37,6 +37,17 @@ class EnrichmentSpec extends SparkSpec {
     assert(genres.count() == 3)
   }
 
+  test("a repeated missing id is predicted once and reaches fresh once") {
+    import spark.implicits._
+    CountingPredictor.calls.set(0)
+    val cache = Seq(("tt1", "Drama")).toDF("tconst", "genre")
+    val (genres, fresh) = Enrichment.enrich(spark,
+      movies("tt1", "tt2", "tt2", "tt3", "tt2", "tt3", "tt1"), cache, new CountingPredictor)
+    assert(fresh.select("tconst").as[String].collect().sorted.toSeq == Seq("tt2", "tt3"))
+    assert(CountingPredictor.calls.get == 2)
+    assert(genres.count() == 3)
+  }
+
   test("stub predictor is deterministic and whitelist-valid") {
     val metas = (1 to 50).map(i => Enrichment.MovieMeta(
       s"tt$i", None, None, None, None, None))
@@ -57,4 +68,17 @@ class EnrichmentSpec extends SparkSpec {
     val (_, fresh) = Enrichment.enrich(spark, movies("tt9"), cache, JunkPredictor)
     assert(fresh.select("genre").as[String].collect().toSeq == Seq("unknown"))
   }
+}
+
+/** The stub, counting each movie it predicts. Tasks run in this JVM
+  * (local master), so the count is one shared counter. */
+class CountingPredictor extends Enrichment.GenrePredictor {
+  override def predictBatch(b: Seq[Enrichment.MovieMeta]): Seq[(String, String)] = {
+    CountingPredictor.calls.addAndGet(b.size)
+    Enrichment.StubPredictor.predictBatch(b)
+  }
+}
+
+object CountingPredictor {
+  val calls = new AtomicInteger()
 }

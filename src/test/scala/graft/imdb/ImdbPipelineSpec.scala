@@ -18,9 +18,16 @@ class ImdbPipelineSpec extends SparkSpec {
   private val dir = "/root/reference/imdb"
   private def fixturesPresent = new java.io.File(s"$dir/train-1.csv").exists()
 
-  private def cached(df: DataFrame): Boolean = df match {
+  /** Whether `df`, planned now, reads a persisted frame that holds
+    * all of its columns (the engineered frame, not merely the
+    * enrichment's persisted predictions deep inside its plan). */
+  private def readsHeld(df: DataFrame): Boolean = df.select("*") match {
     case ds: org.apache.spark.sql.classic.Dataset[_] =>
-      ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds).isDefined
+      ds.queryExecution.withCachedData.find {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+          df.columns.toSet.subsetOf(r.output.map(_.name).toSet)
+        case _ => false
+      }.isDefined
     case other => fail(s"not a classic Dataset: ${other.getClass}")
   }
 
@@ -82,19 +89,25 @@ class ImdbPipelineSpec extends SparkSpec {
       resultPath = Some(s"$d/out/preds"),
       cacheOutDir = Some(s"$d/out/genre_cache"))
     val tapped = ArrayBuffer.empty[(String, DataFrame)]
+    // both sets are engineered as one persisted frame: each tap reads it
     val preds = ImdbPipeline.run(spark, cfg, tap = (name, df) => {
-      assert(cached(df), s"$name is not persisted while the run holds it")
+      assert(readsHeld(df), s"$name does not read a persisted frame while the run holds it")
       tapped += name -> df
     })
     assert(tapped.map(_._1) == Seq("engineered_train", "engineered_test"))
+    val Seq(trainTap, testTap) = tapped.map(_._2).toSeq
+    assert(trainTap.columns.contains("label") && !testTap.columns.contains("label"))
     tapped.foreach { case (name, df) =>
-      assert(!cached(df), s"$name is still cached after the run returned") }
+      assert(!readsHeld(df), s"$name still reads a persisted frame after the run returned") }
 
-    // K1: one True/False line per test row, in tconst order
+    // K1: one True/False line per test row, in tconst order, pinned:
+    // engineering both sets in one tagged pass must give the bytes of
+    // engineering each set on its own
     val part = new java.io.File(s"$d/out/preds").listFiles()
       .filter(_.getName.startsWith("part-")).head
     val lines = scala.io.Source.fromFile(part).getLines().toSeq
-    assert(lines.length == 12)
+    assert(lines == Seq("False", "False", "False", "False", "False", "True",
+      "False", "False", "False", "False", "False", "False"))
     val sortedPreds = preds.orderBy("tconst")
       .select(when(col("prediction") === 1.0, "True").otherwise("False"))
       .collect().map(_.getString(0)).toSeq
@@ -115,8 +128,8 @@ class ImdbPipelineSpec extends SparkSpec {
         tap = (_, df) => failedTaps += df)
     }
     assert(failedTaps.size == 2)
-    assert(failedTaps.forall(df => !cached(df)),
-      "a failed run left its engineered frames cached")
+    assert(failedTaps.forall(df => !readsHeld(df)),
+      "a failed run left its engineered frame cached")
   }
 
   test("full pipeline: validation predictions match the K1 contract") {

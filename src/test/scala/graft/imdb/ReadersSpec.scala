@@ -42,6 +42,21 @@ class ReadersSpec extends SparkSpec {
     assert(d.filter(col("movie").startsWith("tt")).count() == 11162)
   }
 
+  test("S4: directing.json keeps the inner join on the index key (inline fixture)") {
+    val f = java.nio.file.Files.createTempFile("graft_directing", ".json")
+    // pretty-printed columns-orient object: index 1 only in the movie
+    // map, index 3 only in the director map, index 4 with a null director
+    java.nio.file.Files.write(f, Seq(
+      "{",
+      """  "movie": {"0": "tt1", "1": "tt2", "2": "tt3", "4": "tt5"},""",
+      """  "director": {"0": "nm1", "2": "nm3", "3": "nm4", "4": null}""",
+      "}").mkString("\n").getBytes("UTF-8"))
+    val d = Readers.loadDirecting(spark, f.toString)
+    assert(d.columns.toSeq == Seq("movie", "director"))
+    val pairs = d.collect().map(r => (r.getString(0), Option(r.getString(1)))).sortBy(_._1).toSeq
+    assert(pairs == Seq(("tt1", Some("nm1")), ("tt3", Some("nm3")), ("tt5", None)))
+  }
+
   test("property: single-glob scan == union of per-file scans (SURVEY U1/X2)") {
     assume(fixturesPresent)
     val glob = Readers.loadTrain(spark, s"$dir/train-*.csv")
