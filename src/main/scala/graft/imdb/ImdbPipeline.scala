@@ -135,7 +135,7 @@ object ImdbPipeline {
     // BOTH sets, materialized once into the persisted engineered
     // frame; "fit_scaler" and "train_rf" read that cache;
     // "predict_write" only transforms, predicts and writes the test
-    // rows. ImdbScaleBench documents this attribution.
+    // rows. perfbench's `imdb.stage.*` metrics report these marks.
     var lastMark = System.nanoTime()
     def mark(stage: String): Unit = {
       val now = System.nanoTime()
@@ -177,8 +177,8 @@ object ImdbPipeline {
       // Stage 3: features (fit-on-train indexers + scaler)
       val trainFeat0 = held.filter(col(SetCol) === 0).drop(SetCol)
       val testFeat0 = held.filter(col(SetCol) === 1).drop(SetCol, "label")
-      // observation hook (no-op by default): ImdbScaleCensus gates the
-      // engineered frames' census against a DuckDB recomputation at xN
+      // observation hook (no-op by default): ImdbPipelineSpec checks
+      // the engineered frames' census against the fixture's rules
       tap("engineered_train", trainFeat0)
       tap("engineered_test", testFeat0)
       val indexers = Features.fitIndexers(trainFeat0)

@@ -61,9 +61,9 @@ object Readers {
     // globStatus, not exists: exists() is literal, so a GLOB cache
     // path ("{train,validation}_cache-csv", "cache-*.csv") used to
     // return FALSE and silently hand back an EMPTY cache — every
-    // movie then went to the LLM at full cost with no error (caught
-    // by the r12 ImdbScaleCensus gate: the stub's genres displaced
-    // the cached ones). globStatus handles literal paths too.
+    // movie then went to the LLM at full cost with no error (the
+    // stub's genres displaced the cached ones; ReadersSpec pins the
+    // glob case). globStatus handles literal paths too.
     val exists = try {
       val p = new org.apache.hadoop.fs.Path(path)
       val matches = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,5 +1,6 @@
 package graft.imdb
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, when}
 
 /** CLI entry mirroring the reference's runner.py arg surface
@@ -11,41 +12,73 @@ import org.apache.spark.sql.functions.{col, count, lit, when}
   * Usage:
   *   runMain graft.imdb.RunImdb <imdbDir> <set: validation|test> <resultsDir>
   *     [--num-trees N] [--legacy-scaler] [--extra-csv PATH] [--model-dir PATH]
+  *     [--cache-out PATH]
+  *
+  * An unknown flag, a flag missing its value, a non-positive or
+  * non-integer tree count and an unknown set name all fail with
+  * [[Usage]] before any Spark work.
   */
 object RunImdb {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: RunImdb <imdbDir> <validation|test> <resultsDir> " +
-        "[--num-trees N] [--legacy-scaler] [--extra-csv PATH]")
+
+  val Usage: String = "usage: RunImdb <imdbDir> <validation|test> <resultsDir> " +
+    "[--num-trees N] [--legacy-scaler] [--extra-csv PATH] [--model-dir PATH] " +
+    "[--cache-out PATH]"
+
+  private def usage(problem: String): Nothing =
+    throw new IllegalArgumentException(s"$problem\n$Usage")
+
+  /** The pipeline config the arguments describe. */
+  private def config(args: Array[String]): ImdbPipeline.Config = {
+    if (args.length < 3 || args.take(3).exists(_.startsWith("--")))
+      usage(s"expected three positional arguments first, got: ${args.mkString(" ")}")
     val Array(dataDir, setName, resultsDir) = args.take(3)
-    require(Set("validation", "test").contains(setName),
-      s"unknown set '$setName' (expected validation|test)")
-    val flags = args.drop(3)
-    def flagVal(name: String): Option[String] =
-      flags.sliding(2).collectFirst { case Array(`name`, v) => v }
+    if (!Set("validation", "test").contains(setName))
+      usage(s"unknown set '$setName' (expected validation|test)")
 
-    val spark = graft.io.Sessions.harness()
+    val valued = Set("--num-trees", "--extra-csv", "--model-dir", "--cache-out")
+    @annotation.tailrec
+    def parse(rest: List[String], acc: Map[String, String]): Map[String, String] =
+      rest match {
+        case Nil => acc
+        case "--legacy-scaler" :: tail => parse(tail, acc + ("--legacy-scaler" -> ""))
+        case f :: v :: tail if valued(f) && !v.startsWith("--") => parse(tail, acc + (f -> v))
+        case f :: _ if valued(f) => usage(s"$f needs a value")
+        case f :: _ => usage(s"unknown argument '$f'")
+      }
+    val flags = parse(args.drop(3).toList, Map.empty)
+    val numTrees = flags.get("--num-trees").map(v => v.toIntOption.filter(_ > 0)
+      .getOrElse(usage(s"--num-trees must be a positive integer, got '$v'")))
 
-    val cfg = ImdbPipeline.Config(
+    ImdbPipeline.Config(
       trainGlob = s"$dataDir/train-*.csv",
       testCsv = s"$dataDir/${setName}_hidden.csv",
       writingJson = s"$dataDir/writing.json",
       directingJson = s"$dataDir/directing.json",
       cacheCsv = s"$dataDir/${setName}_gemma3_4b_cache.csv",
       resultsDir = resultsDir,
-      extraCsv = flagVal("--extra-csv"),
-      modelDir = flagVal("--model-dir"),
-      numTrees = flagVal("--num-trees").map(_.toInt).getOrElse(300),
+      extraCsv = flags.get("--extra-csv"),
+      modelDir = flags.get("--model-dir"),
+      numTrees = numTrees.getOrElse(300),
       legacyScaler = flags.contains("--legacy-scaler"),
       setName = setName,
       modelName = "gemma3_4b",
-      cacheOutDir = flagVal("--cache-out"))
-    val preds = ImdbPipeline.run(spark, cfg)
+      cacheOutDir = flags.get("--cache-out"))
+  }
+
+  /** Parses `args`, runs the pipeline on `spark` and returns its
+    * predictions (tconst, prediction); leaves the session running. */
+  def run(spark: SparkSession, args: Array[String]): DataFrame = {
+    val preds = ImdbPipeline.run(spark, config(args))
     // one action: each one re-runs the test side, which the run released
     val stats = preds.agg(count(lit(1)), count(when(col("prediction") === 1.0, 1)))
       .head()
     val (n, nTrue) = (stats.getLong(0), stats.getLong(1))
     println(s"[imdb] wrote $n predictions ($nTrue True / ${n - nTrue} False)")
-    spark.stop()
+    preds
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = graft.io.Sessions.harness()
+    try run(spark, args) finally spark.stop()
   }
 }

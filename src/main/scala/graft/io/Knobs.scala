@@ -17,11 +17,11 @@ import org.apache.spark.sql.SparkSession
   * | knob | default | why it exists (measurement or gate) |
   * |---|---|---|
   * | `SPARK_GRAFT_CPUS` | every core the JVM sees | cores of the default `local[N]` master |
-  * | `SPARK_GRAFT_MASTER` | `local[CPUS]` | whole runs under real executor JVMs (`local-cluster[3,8,8192]`), the only local tier where executor-boundary serialization bugs fire; the fault gate runs there (bench/fault_gate_r14.txt) |
+  * | `SPARK_GRAFT_MASTER` | `local[CPUS]` | whole runs under real executor JVMs (`local-cluster[3,8,8192]`), the only local tier where executor-boundary serialization bugs fire; a past executor-kill measurement ran there (bench/fault_gate_r14.txt) |
   * | `SPARK_GRAFT_SHUFFLE` | `CPUS` | shuffle partitions sized to the data tier: g_sssp_hops hit AGGREGATE_OUT_OF_MEMORY at 32 partitions on sf100's 600M rows, 256 runs it |
   * | `SPARK_GRAFT_CACHED_COALESCE` | true | `canChangeCachedPlanOutputPartitioning`; 60.5 → 51.6 s at sf0.1, 161.0 → 153.2 s at sf1 (table in [[Sessions]]); false restores Spark's default |
   * | `SPARK_GRAFT_STATE_STORE` | `hdfs` | `rocksdb` runs every stream-exec row on the RocksDB provider, the large-state backend; the oracle gate at sf1 and sf10 shows results are provider-invariant (bench/sf10_stream_gate_r13.txt) |
-  * | `SPARK_GRAFT_RELIABLE_CKPT` | false | iterative lineage cuts write reliable checkpoints that survive executor loss; the fault gate's reliable leg (bench/fault_gate_r14.txt); the session conf `spark.graft.checkpoint.reliable` wins over it |
+  * | `SPARK_GRAFT_RELIABLE_CKPT` | false | iterative lineage cuts write reliable checkpoints that survive executor loss, as a past executor-kill measurement showed (bench/fault_gate_r14.txt); the session conf `spark.graft.checkpoint.reliable` wins over it |
   * | `SPARK_GRAFT_CKPT_DIR` | a temp dir deleted at JVM exit | where reliable checkpoints go (a shared path, HDFS or S3 on a cluster) |
   * | `SPARK_GRAFT_MEMO_CAP_MB` | 4096 | byte cap of the session memo's LRU eviction (scale/MemoPool; MemoPoolSpec tests eviction) |
   * | `SPARK_GRAFT_LSH_MAX_BUCKET` | 1024 | LSH bucket-width circuit breaker: a degenerate corpus fails loudly instead of grinding one O(B²) task (LshBucketCapSpec) |
@@ -30,10 +30,6 @@ import org.apache.spark.sql.SparkSession
   * | `SPARK_GRAFT_CKPT_CHECKSUM` | false | true restores Spark 4.1's checkpoint sidecar checksums, which double the file creations per state delta (4 instead of 2) |
   * | `SPARK_GRAFT_SF_DIR` | the sf0.1 test-data tier | `graft.Bench`'s input directory |
   * | `SPARK_GRAFT_BENCH_OUT` | `/tmp/graft_bench_full.json` | `graft.Bench`'s side file: every row's timing and per-rep records |
-  * | `SPARK_GRAFT_KILL` | true | false runs the fault gate's no-kill baseline leg |
-  * | `SPARK_GRAFT_KILL_DELAY_MS` | 4000 | fault gate: ms after a query starts before the kill |
-  * | `SPARK_GRAFT_KILL_COUNT` | 1 | fault gate: executors killed per kill event (2 of 3 at once defeated d_cluster's probabilistic survival) |
-  * | `SPARK_GRAFT_KILL_REPEAT_MS` | 0 (one kill) | fault gate: repeat the kill while the query runs, the rolling-preemption shape |
   *
   * No knob forces an operator form: where two forms exist the code
   * picks from an input statistic (fn_window_distinct's scan size) or
@@ -67,11 +63,6 @@ class Knobs(env: Map[String, String]) {
   def sfDir: String = str("SPARK_GRAFT_SF_DIR").getOrElse("/root/testdata/sf0.1")
   def benchOut: String = str("SPARK_GRAFT_BENCH_OUT").getOrElse("/tmp/graft_bench_full.json")
 
-  def kill: Boolean = bool("SPARK_GRAFT_KILL").getOrElse(true)
-  def killDelayMs: Long = long("SPARK_GRAFT_KILL_DELAY_MS", 0, Long.MaxValue).getOrElse(4000L)
-  def killCount: Int = int("SPARK_GRAFT_KILL_COUNT", 1, Int.MaxValue).getOrElse(1)
-  def killRepeatMs: Long = long("SPARK_GRAFT_KILL_REPEAT_MS", 0, Long.MaxValue).getOrElse(0L)
-
   /** Every knob's effective value (defaults filled in; an unset knob
     * with no value of its own is None), by name. Reads, so parses,
     * every knob: a malformed one fails here. */
@@ -89,16 +80,12 @@ class Knobs(env: Map[String, String]) {
     "SPARK_GRAFT_STREAM_NODATA" -> Some(streamNoData.toString),
     "SPARK_GRAFT_CKPT_CHECKSUM" -> Some(ckptChecksum.toString),
     "SPARK_GRAFT_SF_DIR" -> Some(sfDir),
-    "SPARK_GRAFT_BENCH_OUT" -> Some(benchOut),
-    "SPARK_GRAFT_KILL" -> Some(kill.toString),
-    "SPARK_GRAFT_KILL_DELAY_MS" -> Some(killDelayMs.toString),
-    "SPARK_GRAFT_KILL_COUNT" -> Some(killCount.toString),
-    "SPARK_GRAFT_KILL_REPEAT_MS" -> Some(killRepeatMs.toString))
+    "SPARK_GRAFT_BENCH_OUT" -> Some(benchOut))
 
   /** The effective config as one JSON object: the session's master and
     * shuffle partitions, the source revision, then every knob. What
-    * Bench's side file, Verify's `_errors.json` and ScaleGrowth's line
-    * carry as `"config"`. */
+    * Bench's side file and Verify's `_errors.json` carry as
+    * `"config"`. */
   def configJson(spark: SparkSession): String =
     (Seq("master" -> Some(spark.sparkContext.master),
          "spark.sql.shuffle.partitions" ->

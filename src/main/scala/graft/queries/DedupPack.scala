@@ -196,7 +196,7 @@ object DedupPack extends QueryPack {
 
   /** Distinct banded candidate pairs (ida < idb) — the pre-verify
     * stage of the MinHash-LSH path, factored out so the scale-growth
-    * harness (tools/ScaleGrowth, ScaleGrowthSpec) counts THE SAME
+    * test (ScaleGrowthSpec) counts THE SAME
     * candidate set the production path verifies — the quantity whose
     * sub-quadratic growth is the whole point of banding.
     *
@@ -770,16 +770,15 @@ object DedupPack extends QueryPack {
     * rows and the dedup semantics silently corrupt — the round-7
     * 100x corpus (500k docs / 200k embeddings) overflowed the
     * original 100,000 offset exactly this way (caught in review; the
-    * tainted measurements were re-run). SyntheticCorpus.writeCorpus
-    * enforces the bound at generation time; d_semdedup_scoped
-    * re-checks it per run. 10M covers any single-box corpus; on a
+    * tainted measurements were re-run). tools/ScaleUp enforces the
+    * bound where it mints ids; d_semdedup_scoped re-checks it per run. 10M covers any single-box corpus; on a
     * real cluster this becomes a per-dataset config. */
   private[graft] val PlantedOffset = 10000000L
 
   /** The planted-vector corpus CTE shared by the two d_semdedup
     * oracles — ONE copy of the twin-derivation text (the oracle twin
     * of the plantedVecs base), so the exact and scoped gates cannot
-    * silently drift apart (the GeoPack candidateStats lesson). */
+    * silently drift apart (the lesson of GeoPack's one grid join). */
   private val plantedVecsCte =
     s"""all_v AS MATERIALIZED (
       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings

@@ -95,26 +95,12 @@ object GeoPack extends QueryPack {
     joinedWithD2(s, dir).filter(col("d2") <= R * R)
 
   /** geo_cluster's R-connectivity edge set (customer self-join at
-    * Rc = 400, each undirected pair exactly once via aid < bid) —
-    * shared with the scale harness's CC-mode comparison
-    * (tools/ScaleGrowth), so the measured graph IS the gated graph. */
+    * Rc = 400, each undirected pair exactly once via aid < bid). */
   private[graft] def clusterEdges(s: SparkSession, dir: String): DataFrame = {
     val pts = customers(s, dir)
     gridJoined(pts, pts.select(col("aid").as("bid"), col("x"), col("y")), Rc)
       .filter(col("aid") < col("bid") && col("d2") <= Rc * Rc)
       .select(col("aid").as("src"), col("bid").as("dst"))
-  }
-
-  /** (9-cell candidate pairs BEFORE the exact filter, true pairs) —
-    * the growth-harness hook (tools/ScaleGrowth): a grid join is
-    * OUTPUT-SENSITIVE, so with 10x density on a fixed grid both
-    * counts grow ~100x and the measurable claim is their RATIO
-    * staying bounded (the probe examines a constant multiple of what
-    * it emits — never the n*m cross product). */
-  private[graft] def candidateStats(s: SparkSession, dir: String): (Long, Long) = {
-    val row = joinedWithD2(s, dir).agg(count(lit(1)),
-      count(when(col("d2") <= R * R, 1))).head()
-    (row.getLong(0), row.getLong(1))
   }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

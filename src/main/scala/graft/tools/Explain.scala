@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.SparkEntry
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-audit tool: `explain("formatted")` for the named queries (or
@@ -24,6 +25,13 @@ import org.apache.spark.sql.execution.FormattedMode
   */
 object Explain {
   def main(args: Array[String]): Unit = {
+    val spark = graft.io.Sessions.harness()
+    try run(spark, args) finally spark.stop()
+  }
+
+  /** Explains the queries `args` name on `spark`; an unknown or failing
+    * name is reported on stderr. Leaves the session running. */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val (out, rest) = args.drop(1) match {
       case Array("--out", dir, suffix, names @ _*) => (Some((dir, suffix)), names)
@@ -31,10 +39,9 @@ object Explain {
     }
     val names = if (rest.nonEmpty) rest else SparkEntry.queries.keys.toSeq.sorted
     out.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
-    val spark = graft.io.Sessions.harness()
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[explain] unknown query: $name")
+        case None => Console.err.println(s"[explain] unknown query: $name")
         case Some(fn) =>
           try {
             val plan = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
@@ -46,10 +53,9 @@ object Explain {
             }
           } catch {
             case e: Throwable =>
-              System.err.println(s"[explain] $name FAILED: ${e.getMessage}")
+              Console.err.println(s"[explain] $name FAILED: ${e.getMessage}")
           } finally graft.scale.CacheRegistry.drain()
       }
     }
-    spark.stop()
   }
 }

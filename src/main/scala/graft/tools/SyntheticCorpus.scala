@@ -3,59 +3,26 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic synthetic corpus generator matching the driver
-  * testdata's shape (TESTDATA.md tables), for the scale-growth
-  * harness (ScaleGrowth main, ScaleGrowthSpec): measuring how the
-  * dedup/ANN/graph operators grow from 1x to 10x requires a 10x
-  * corpus the driver does not ship.
+/** Deterministic synthetic documents matching the shape of the sf
+  * test data (TESTDATA.md), for ScaleGrowthSpec: measuring how the
+  * MinHash banding grows from 1k to 4k docs needs corpora the sf tiers
+  * do not ship.
   *
   * Shape matched to /root/testdata/sf0.1 (measured, not assumed):
-  *  - documents: word-salad text over the fixture's own ~31-word
-  *    vocabulary (read from a reference dir), 10-100 words uniform
-  *    (observed min/max/avg 10/100/54), source = src0..src19, lang
-  *    weighted like the fixture (en heaviest), and ~5% of docs are
-  *    PLANTED near-dups of a base doc with ~2% word substitution —
-  *    3-shingle Jaccard vs base ~0.9, comfortably over the packs'
-  *    0.8 threshold, with some substitution-free copies landing as
-  *    exact dups (the fixture has those too);
-  *  - embeddings: 64-dim standard-gaussian float vectors (the pack
-  *    comments document the fixture as uniform gaussian — LSH's
-  *    worst case), label uniform 0..9;
-  *  - orders/lineitem: the co-purchase graph shape — basket sizes
-  *    1..7 uniform (TPC-H-ish avg 4), part/supplier/customer keys
-  *    uniform over universes that scale WITH the corpus (TPC-H
-  *    scaling: at 10x rows there are 10x parts), which is what keeps
-  *    the co-occurrence graph's density constant instead of
-  *    quadratically densifying.
+  * word-salad text over the fixture's own ~31-word vocabulary (read
+  * from a reference dir), 10-100 words uniform (observed min/max/avg
+  * 10/100/54), source = src0..src19, lang weighted like the fixture
+  * (en heaviest), and ~5% of docs are PLANTED near-dups of a base doc
+  * with ~2% word substitution — 3-shingle Jaccard vs base ~0.9,
+  * comfortably over the packs' 0.8 threshold, with some
+  * substitution-free copies landing as exact dups (the fixture has
+  * those too).
   *
   * All randomness is xxhash64(id, tag, seed)-derived: distributed,
   * partition-count-independent, reproducible — no RNG state, no
   * driver loops. Generation is a pure map over spark.range.
   */
 object SyntheticCorpus {
-
-  /** Bumped whenever generated CONTENT changes for the same seed —
-    * the corpus-reuse gate (ScaleGrowth.tableCurrent) compares this
-    * against the `_GRAFT_GEN_VERSION` marker writeCorpus drops, so a
-    * generator change can never be measured against a stale on-disk
-    * corpus (r9 review finding: the vocab widening changed documents
-    * content with no schema change, invisible to the _SUCCESS+schema
-    * probe). The marker is PER TABLE (inside each <table>.parquet
-    * dir, written right after that table's commit): a directory-wide
-    * marker re-opened the hole for SUBSET regeneration — regenerating
-    * only `documents` into a dir whose other tables were cut under an
-    * older version would have stamped the whole dir current (ADVICE
-    * r9). v2 = the ×64 vocabulary widening. */
-  val GenVersion = 2
-
-  /** Drop the content-version marker inside a just-written table dir.
-    * Spark's overwrite replaced the directory, so the marker can only
-    * be present if THIS table completed under THIS generator version. */
-  private def stampTable(outDir: String, table: String): Unit =
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, s"$table.parquet",
-        "_GRAFT_GEN_VERSION"),
-      GenVersion.toString.getBytes("UTF-8"))
 
   private def u(tag: Int, seed: Long, cols: org.apache.spark.sql.Column*) =
     pmod(xxhash64((cols :+ lit(tag) :+ lit(seed)): _*), lit(1000000L))
@@ -137,104 +104,5 @@ object SyntheticCorpus {
         array_join(col("words"), " ").as("text"),
         col("lang"), col("source"))
       .withColumn("n_chars", length(col("text")))
-  }
-
-  /** n 64-dim gaussian embeddings (Box-Muller over two hash uniforms
-    * per dimension), label uniform 0..9. */
-  def embeddings(s: SparkSession, n: Long, seed: Long): DataFrame =
-    s.range(n).select(
-      col("id").as("vec_id"),
-      expr(s"""transform(sequence(0, 63), d -> cast(
-        |  sqrt(-2.0 * ln((pmod(xxhash64(id, d, $seed), 1000000) + 0.5) / 1000000.0)) *
-        |  cos(6.283185307179586 *
-        |      (pmod(xxhash64(id, d, ${seed + 1}), 1000000) + 0.5) / 1000000.0)
-        |  as float))""".stripMargin).as("embedding"),
-      pmod(xxhash64(col("id"), lit(9), lit(seed)), lit(10)).cast("int")
-        .as("label"))
-
-  /** orders + lineitem for the co-purchase graph: nOrders orders over
-    * scaled key universes; basket size 1..7. Only the columns the
-    * graph/market-basket queries read. */
-  def ordersAndLineitem(s: SparkSession, nOrders: Long, nParts: Long,
-                        nSupp: Long, nCust: Long, seed: Long):
-      (DataFrame, DataFrame) = {
-    val orders = s.range(nOrders).select(
-      col("id").as("o_orderkey"),
-      pmod(xxhash64(col("id"), lit(10), lit(seed)), lit(nCust)).as("o_custkey"),
-      // ly_bucketed_join's aggregate input; column-pruned away by
-      // every other measured query, so adding it costs nothing there
-      (pmod(xxhash64(col("id"), lit(12), lit(seed)), lit(100000L))
-        .cast("double") / 100.0 + 1000.0).as("o_totalprice"))
-    val lineitem = s.range(nOrders).select(
-      col("id").as("l_orderkey"),
-      explode(expr(s"sequence(1, 1 + pmod(xxhash64(id, 11, $seed), 7))"))
-        .as("pos"))
-      .select(col("l_orderkey"),
-        pmod(xxhash64(col("l_orderkey"), col("pos"), lit(seed + 1)), lit(nParts))
-          .as("l_partkey"),
-        pmod(xxhash64(col("l_orderkey"), col("pos"), lit(seed + 2)), lit(nSupp))
-          .as("l_suppkey"))
-    (orders, lineitem)
-  }
-
-  /** Write a full corpus dir at `scale` x the sf0.1 shapes
-    * (docs 5k, embeddings 2k, orders 150k, parts 20k, suppliers 1k,
-    * customers 15k at scale=1). */
-  def writeCorpus(s: SparkSession, refDir: String, outDir: String,
-                  scale: Int, seed: Long = 20260814L,
-                  tables: Seq[String] = Seq("documents", "embeddings",
-                    "orders", "lineitem", "customer", "supplier")): Unit = {
-    def want(t: String) = tables.contains(t)
-    // the planted-twin ops derive ids as id + PlantedOffset — a corpus
-    // whose real ids reach the offset silently corrupts their
-    // semantics (the round-7 100x overflow of the original 100k
-    // offset), so enforce the bound where the ids are minted
-    require(5000L * scale < graft.queries.DedupPack.PlantedOffset &&
-        2000L * scale < graft.queries.DedupPack.PlantedOffset,
-      s"corpus scale $scale mints ids past PlantedOffset " +
-        s"(${graft.queries.DedupPack.PlantedOffset}) — raise the offset first")
-    if (want("documents")) {
-      documents(s, refDir, 5000L * scale, seed)
-        .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-      stampTable(outDir, "documents")
-    }
-    if (want("embeddings")) {
-      embeddings(s, 2000L * scale, seed + 100)
-        .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-      stampTable(outDir, "embeddings")
-    }
-    if (want("orders") || want("lineitem")) {
-      val (o, l) = ordersAndLineitem(s, 150000L * scale, 20000L * scale,
-        1000L * scale, 15000L * scale, seed + 200)
-      if (want("orders")) {
-        o.write.mode("overwrite").parquet(s"$outDir/orders.parquet")
-        stampTable(outDir, "orders")
-      }
-      if (want("lineitem")) {
-        l.write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
-        stampTable(outDir, "lineitem")
-      }
-    }
-    // key-only dimension tables: the geo family derives its point
-    // scatter purely from the keys, so these suffice for its growth
-    // measurement (10x keys = 10x point density on the fixed grid)
-    val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD",
-      "MACHINERY")
-    if (want("customer")) {
-      s.range(1, 15000L * scale + 1)
-        .select(col("id").as("c_custkey"),
-          // ly_bucketed_join's group key (5 segments, hash-uniform)
-          element_at(array(segs.map(lit): _*),
-            (pmod(xxhash64(col("id"), lit(seed + 300)), lit(5)) + 1)
-              .cast("int")).as("c_mktsegment"))
-        .write.mode("overwrite").parquet(s"$outDir/customer.parquet")
-      stampTable(outDir, "customer")
-    }
-    if (want("supplier")) {
-      s.range(1, 1000L * scale + 1)
-        .select(col("id").as("s_suppkey"))
-        .write.mode("overwrite").parquet(s"$outDir/supplier.parquet")
-      stampTable(outDir, "supplier")
-    }
   }
 }

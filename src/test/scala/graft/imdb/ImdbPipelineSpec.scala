@@ -1,18 +1,17 @@
 package graft.imdb
 
 import graft.SparkSpec
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
-/** End-to-end tests (SURVEY.md §5). The first runs on every host, on a
-  * tiny IMDB-shaped fixture written inline: the sink contracts and the
-  * lifetime of the frames the run persists. The other two run the full
-  * pipeline on the reference's committed fixtures with the committed
-  * LLM cache (zero predictor calls) — the output contract and the
-  * reference's own accuracy bar on its own evaluation recipe — and are
-  * skipped where those fixtures are absent. */
+/** End-to-end tests (SURVEY.md §5). The first runs on every host, on
+  * the in-repo [[ImdbFixture]]: the sink contracts, the engineered
+  * frame's census and the lifetime of the frames the run persists
+  * (RunImdbSpec runs the same fixture through the CLI). The second
+  * holds the reference's own accuracy bar on its own evaluation recipe
+  * and committed data, and is skipped where that data is absent. */
 class ImdbPipelineSpec extends SparkSpec {
 
   private val dir = "/root/reference/imdb"
@@ -31,58 +30,14 @@ class ImdbPipelineSpec extends SparkSpec {
     case other => fail(s"not a classic Dataset: ${other.getClass}")
   }
 
-  /** FIXTURES.md A1-A6 in miniature: comma-led header, `\N` sentinels,
-    * empty numVotes cells, accented and empty titles, two train files
-    * behind one glob, a top-level-array writing.json, a columns-orient
-    * directing.json, a genre cache over half the train ids and a TMDB
-    * extra table with duplicate ids and zero/empty cells. */
-  private def tinyFixture(): Path = {
-    val d = Files.createTempDirectory("graft_imdb_tiny")
-    def write(name: String, lines: Seq[String]): Unit =
-      Files.write(d.resolve(name), lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    def id(i: Int) = f"tt$i%07d"
-    def movie(i: Int): String = {
-      val title = if (i % 7 == 0) s"Amélie à Paris $i" else s"Movie $i"
-      val original = if (i % 5 == 0) "" else title
-      val year = if (i % 11 == 0) "\\N" else (1950 + i % 60).toString
-      val runtime = if (i % 6 == 0) "\\N" else (80 + i % 50).toString
-      val votes = if (i % 9 == 0) "" else s"${(i * 37) % 2000}.0"
-      s"$i,${id(i)},$title,$original,$year,\\N,$runtime,$votes"
-    }
-    val header = ",tconst,primaryTitle,originalTitle,startYear,endYear," +
-      "runtimeMinutes,numVotes"
-    def trainRows(ids: Range) =
-      (header + ",label") +: ids.map(i => movie(i) + (if (i % 3 == 0) ",True" else ",False"))
-    write("train-1.csv", trainRows(1 to 24))
-    write("train-2.csv", trainRows(25 to 48))
-    write("test.csv", header +: (49 to 60).map(movie))
-    write("writing.json", Seq((1 to 60).flatMap { i =>
-      Seq(s"""{"movie":"${id(i)}","writer":"nm${i % 6}"}""") ++
-        (if (i % 2 == 0) Seq(s"""{"movie":"${id(i)}","writer":"nm${i % 4}"}""") else Nil)
-    }.mkString("[", ",", "]")))
-    val directed = (1 to 60).filter(_ % 10 != 0)
-    def orient(f: Int => String) =
-      directed.zipWithIndex.map { case (i, k) => s""""$k":"${f(i)}"""" }.mkString("{", ",", "}")
-    write("directing.json", Seq(
-      s"""{"movie":${orient(id)},"director":${orient(i => s"nm${100 + i % 3}")}}"""))
-    write("genre_cache.csv", "tconst,genre" +:
-      (2 to 48 by 2).map(i => s"${id(i)},${if (i % 4 == 0) "Drama" else "unknown"}"))
-    write("tmdb_extra.csv", "id,imdb_id,title,budget,revenue,popularity" +:
-      ((1 to 60 by 2) ++ Seq(3, 9)).zipWithIndex.map { case (i, k) =>
-        val money = if (i % 5 == 0) "0" else if (i % 7 == 0) "" else s"${i * 1000}"
-        s"$k,${id(i)},Movie $i,$money,${i * 2500},${i % 4}.5"
-      })
-    d
-  }
-
   test("tiny fixture: K1/K2 contracts, persisted frames released on success and failure") {
-    val d = tinyFixture()
+    val d = ImdbFixture.write()
     val cfg = ImdbPipeline.Config(
       trainGlob = s"$d/train-*.csv",
-      testCsv = s"$d/test.csv",
+      testCsv = s"$d/validation_hidden.csv",
       writingJson = s"$d/writing.json",
       directingJson = s"$d/directing.json",
-      cacheCsv = s"$d/genre_cache.csv",
+      cacheCsv = s"$d/train_gemma3_4b_cache.csv",
       resultsDir = s"$d/out",
       extraCsv = Some(s"$d/tmdb_extra.csv"),
       numTrees = 2,
@@ -99,6 +54,20 @@ class ImdbPipelineSpec extends SparkSpec {
     assert(trainTap.columns.contains("label") && !testTap.columns.contains("label"))
     tapped.foreach { case (name, df) =>
       assert(!readsHeld(df), s"$name still reads a persisted frame after the run returned") }
+
+    // the engineered train frame's integer census, from the fixture's rules
+    import ImdbFixture._
+    val census = trainTap.agg(
+      count(lit(1)),
+      count(when(col("writer") =!= "unknown", 1)),
+      count(when(col("director") =!= "unknown", 1)),
+      count(when(col("label") === true, 1))).head()
+    assert((0 to 3).map(census.getLong) == Seq(trainIds.size, trainIds.count(writers(_).nonEmpty),
+      trainIds.count(directed), trainIds.count(label)).map(_.toLong))
+    val decades = trainTap.groupBy(coalesce(col("decade"), lit("unknown"))).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(decades == trainIds.groupBy(i => startYear(i).fold("unknown")(y => s"${y / 10 * 10}s"))
+      .map { case (k, v) => k -> v.size.toLong })
 
     // K1: one True/False line per test row, in tconst order, pinned:
     // engineering both sets in one tagged pass must give the bytes of
@@ -130,49 +99,6 @@ class ImdbPipelineSpec extends SparkSpec {
     assert(failedTaps.size == 2)
     assert(failedTaps.forall(df => !readsHeld(df)),
       "a failed run left its engineered frame cached")
-  }
-
-  test("full pipeline: validation predictions match the K1 contract") {
-    assume(fixturesPresent)
-    val out = java.nio.file.Files.createTempDirectory("graft_imdb").toString
-    val cfg = ImdbPipeline.Config(
-      trainGlob = s"$dir/train-*.csv",
-      testCsv = s"$dir/validation_hidden.csv",
-      writingJson = s"$dir/writing.json",
-      directingJson = s"$dir/directing.json",
-      cacheCsv = s"$dir/validation_gemma3_4b_cache.csv",
-      resultsDir = out,
-      numTrees = 60) // smaller forest: contract test, not accuracy test
-    val preds = ImdbPipeline.run(spark, cfg)
-    assert(preds.count() == 955)
-
-    // K1 contract: one True/False per line, ordered by tconst; F9: the
-    // default path is the timestamped {set}_{model}_{ts}.txt name
-    val resultDirs = new java.io.File(out).listFiles()
-      .filter(_.getName.matches("validation_stub_\\d{8}_\\d{6}\\.txt"))
-    assert(resultDirs.length == 1, s"expected one timestamped result dir in $out")
-    val txt = resultDirs.head.listFiles()
-      .filter(_.getName.endsWith(".txt")).head
-    val lines = scala.io.Source.fromFile(txt).getLines().toSeq
-    assert(lines.length == 955)
-    assert(lines.forall(l => l == "True" || l == "False"))
-
-    // order contract: line i corresponds to sorted tconst i
-    val sortedPreds = preds.orderBy("tconst")
-      .select(when(col("prediction") === 1.0, "True").otherwise("False"))
-      .collect().map(_.getString(0)).toSeq
-    assert(lines == sortedPreds)
-
-    // K2 contract: the run wrote an updated genre cache that GREW —
-    // train-set ids are absent from the committed validation cache, so
-    // the stub predictor's fresh rows must land in it
-    val oldCacheSize = Readers.loadGenreCache(spark,
-      s"$dir/validation_gemma3_4b_cache.csv").count()
-    val newCache = Readers.loadGenreCache(spark, s"$out/genre_cache")
-    assert(newCache.count() > oldCacheSize,
-      "updated cache must contain the fresh stub predictions")
-    assert(newCache.select("tconst").distinct().count() == newCache.count(),
-      "cache must stay unique per tconst")
   }
 
   test("accuracy >= 0.75 on the reference's own 80/20 recipe") {

@@ -24,11 +24,10 @@ class KnobsSpec extends SparkSpec {
     val k = knobs()
     val cores = Runtime.getRuntime.availableProcessors
     assert(k.cpus == cores && k.master == s"local[$cores]" && k.shufflePartitions == cores)
-    assert(k.cachedCoalesce && k.kill)
+    assert(k.cachedCoalesce)
     assert(!k.rocksDbStateStore && !k.reliableCkpt && !k.streamNoData && !k.ckptChecksum)
     assert(k.ckptDir.isEmpty)
     assert(k.memoCapMb == 4096L && k.lshMaxBucket == 1024 && k.streamSlices == 2)
-    assert(k.killDelayMs == 4000L && k.killCount == 1 && k.killRepeatMs == 0L)
     // an empty or blank value counts as unset
     assert(knobs("SPARK_GRAFT_STREAM_SLICES" -> " ").streamSlices == 2)
   }
@@ -49,10 +48,10 @@ class KnobsSpec extends SparkSpec {
     }
     for (v <- Seq("0", "false", "False")) {
       assert(!knobs("SPARK_GRAFT_CACHED_COALESCE" -> v).cachedCoalesce, v)
-      assert(!knobs("SPARK_GRAFT_KILL" -> v).kill, v)
+      assert(!knobs("SPARK_GRAFT_STREAM_NODATA" -> v).streamNoData, v)
     }
     rejects("SPARK_GRAFT_STREAM_NODATA", "yes")(_.streamNoData)
-    rejects("SPARK_GRAFT_KILL", "2")(_.kill)
+    rejects("SPARK_GRAFT_STREAM_NODATA", "2")(_.streamNoData)
     val e = intercept[IllegalArgumentException](
       Knobs.parseBool("spark.graft.checkpoint.reliable", "on"))
     assert(e.getMessage.contains("spark.graft.checkpoint.reliable"))
@@ -71,11 +70,12 @@ class KnobsSpec extends SparkSpec {
     rejects("SPARK_GRAFT_STREAM_SLICES", "two")(_.streamSlices)
     rejects("SPARK_GRAFT_LSH_MAX_BUCKET", "-1")(_.lshMaxBucket)
     rejects("SPARK_GRAFT_CPUS", "8.0")(_.cpus)
-    rejects("SPARK_GRAFT_KILL_DELAY_MS", "-5")(_.killDelayMs)
+    rejects("SPARK_GRAFT_MEMO_CAP_MB", "-5")(_.memoCapMb)
+    rejects("SPARK_GRAFT_MEMO_CAP_MB", (Long.MaxValue / (1024 * 1024) + 1).toString)(_.memoCapMb)
     val k = knobs("SPARK_GRAFT_CPUS" -> "3", "SPARK_GRAFT_STREAM_SLICES" -> "16")
     assert(k.master == "local[3]" && k.shufflePartitions == 3 && k.streamSlices == 16)
     // the snapshot reads every knob, so one malformed knob fails it
-    rejects("SPARK_GRAFT_KILL_COUNT", "x")(_.snapshot)
+    rejects("SPARK_GRAFT_STREAM_SLICES", "x")(_.snapshot)
   }
 
   test("snapshot names every knob that has an accessor") {

@@ -46,4 +46,30 @@ class SessionsSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"build sessions through graft.io.Sessions.harness, not in: ${offenders.mkString(", ")}")
   }
+
+  test("source guard: every entry point is one a spec, perfbench or selfcheck runs") {
+    // a new main or tools script needs a tier-1 spec (or perfbench or
+    // selfcheck.py) that runs it, and a line here
+    val files = {
+      val w = Files.walk(Paths.get("src/main/scala"))
+      try w.iterator().asScala.toList finally w.close()
+    }.filter(_.toString.endsWith(".scala"))
+    val mains = files.flatMap { p =>
+      val src = Files.readString(p)
+      val pkg = "(?m)^package ([\\w.]+)".r.findFirstMatchIn(src).map(_.group(1))
+      "def main\\(".r.findAllMatchIn(src).map { m =>
+        val obj = "object (\\w+)".r.findAllMatchIn(src.take(m.start)).toSeq.last.group(1)
+        (pkg.toSeq :+ obj).mkString(".")
+      }
+    }.toSet
+    assert(mains == Set("graft.Bench", "graft.Verify", "graft.imdb.RunImdb",
+      "graft.tools.Explain", "graft.tools.ScaleUp"), mains)
+    val scripts = {
+      val l = Files.list(Paths.get("tools"))
+      try l.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".py")).toSet
+      finally l.close()
+    }
+    assert(scripts == Set("selfcheck.py", "bench_compare.py"), scripts)
+    assert(Knobs.snapshot.size == 14, Knobs.snapshot.keys)
+  }
 }
