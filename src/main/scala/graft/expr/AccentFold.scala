@@ -74,8 +74,8 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
 
 object GraftExtensions {
   /** Programmatic twin of the config path, safe to call again on the
-    * same session: adds each rule and strategy at most once, and
-    * re-registers the SQL functions (a replace). The rules go in
+    * same session: adds each rule, strategy and SQL function at most
+    * once. The rules go in
     * `experimental.extraOptimizations`, not `withExtensions`: that is
     * the batch every harness has planned with, and an extension added
     * after the shared test JVM's session exists is silently ignored. */
@@ -158,9 +158,14 @@ object GraftFunctions {
 
   private[graft] val accentFoldDescriptor: Descriptor = descriptors.head
 
-  def register(spark: SparkSession): Unit =
-    descriptors.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(id.funcName, builder, "built-in")
-    }
+  /** Registers each function the session does not already have, so
+    * a second call on the same session is a no-op (no "replaced a
+    * previously registered function" warning per call). */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    descriptors.filterNot { case (id, _, _) => registry.functionExists(id) }
+      .foreach { case (id, _, builder) =>
+        registry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
+      }
+  }
 }

@@ -97,10 +97,11 @@ object InitCapBinary {
       InitCapBinary(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
 }
 
-/** Position-weighted character fingerprint (TextFeatures semantics:
-  * sum(codepoint(c_i) * i) mod 1e9+7, 1-based) as a codegen'd tight
+/** Position-weighted character fingerprint,
+  * sum(codepoint(c_i) * i) mod 1e9+7, 1-based, as a codegen'd tight
   * loop — replaces the interpreted aggregate-over-sequence HOF while
-  * producing identical values (the DuckDB oracle is unchanged). */
+  * producing identical values (the DuckDB oracle is unchanged; the
+  * HOF stays test-side as TextExprSpec's reference). */
 case class CharFingerprint(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "char_fingerprint"

@@ -2,11 +2,10 @@ package graft.imdb
 
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
-import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.sql.DataFrame
 
-/** M5-M7 + M9 (SURVEY.md §2.10): RandomForest train / predict /
-  * importances / evaluation, hyperparameters pinned to the reference
+/** M5-M7 (SURVEY.md §2.10): RandomForest train / predict /
+  * importances, hyperparameters pinned to the reference
   * (classifier_model.py:49-61).
   */
 object ImdbModel {
@@ -58,17 +57,5 @@ object ImdbModel {
                      k: Int = 5): Seq[(String, Double)] = {
     val rf = model.stages.last.asInstanceOf[RandomForestClassificationModel]
     names.zip(rf.featureImportances.toArray).sortBy(-_._2).take(k)
-  }
-
-  /** M9: the reference's only self-evaluation recipe —
-    * randomSplit(0.8/0.2, seed 42) + accuracy
-    * (eda/process_data.ipynb cell 1). */
-  def evaluateAccuracy(featurized: DataFrame, numTrees: Int = 100): Double = {
-    val Array(tr, te) = featurized.randomSplit(Array(0.8, 0.2), 42)
-    val model = train(tr, numTrees)
-    new MulticlassClassificationEvaluator()
-      .setLabelCol("label").setPredictionCol("prediction")
-      .setMetricName("accuracy")
-      .evaluate(predict(model, te))
   }
 }

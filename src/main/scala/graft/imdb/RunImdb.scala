@@ -1,7 +1,6 @@
 package graft.imdb
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, when}
 
 /** CLI entry mirroring the reference's runner.py arg surface
   * (runner.py:53-104): positional data dir, test-set name, results dir;
@@ -66,16 +65,10 @@ object RunImdb {
   }
 
   /** Parses `args`, runs the pipeline on `spark` and returns its
-    * predictions (tconst, prediction); leaves the session running. */
-  def run(spark: SparkSession, args: Array[String]): DataFrame = {
-    val preds = ImdbPipeline.run(spark, config(args))
-    // one action: each one re-runs the test side, which the run released
-    val stats = preds.agg(count(lit(1)), count(when(col("prediction") === 1.0, 1)))
-      .head()
-    val (n, nTrue) = (stats.getLong(0), stats.getLong(1))
-    println(s"[imdb] wrote $n predictions ($nTrue True / ${n - nTrue} False)")
-    preds
-  }
+    * predictions (tconst, prediction); leaves the session running.
+    * Runs no action of its own: the last Spark job is the K2 write. */
+  def run(spark: SparkSession, args: Array[String]): DataFrame =
+    ImdbPipeline.run(spark, config(args))
 
   def main(args: Array[String]): Unit = {
     val spark = graft.io.Sessions.harness()

@@ -3,7 +3,6 @@ package graft.queries
 import graft.QueryPack
 import graft.io.Tables
 import graft.scale.ConnectedComponents
-import graft.text.TextFeatures._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,11 +34,6 @@ import org.apache.spark.sql.functions._
   *    baseline — the ANN path is SimilarityPack's LSH variant.
   */
 object DedupPack extends QueryPack {
-
-  /** doc_id -> distinct word-3-gram shingle array. */
-  private def shingleSets(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents")
-      .select(col("doc_id"), shingles(col("text"), 3).as("sh"))
 
   /** doc_id -> (sorted distinct shingle-hash array, its size), via the
     * codegen'd ShingleHashes expression: one byte-walk over the text,
@@ -434,9 +428,9 @@ object DedupPack extends QueryPack {
       // deficit (44/64 where ~63/64 expected for a J=0.98 pair) and a
       // missed true pair at sf0.1. Signature is a NARROW projection
       // over the per-doc hash array (MinHashSig expression) — no
-      // groupBy shuffle; the equivalent map-side-combinable UDAF
-      // (Sketches.MinHashAgg) remains for exploded-row inputs and is
-      // parity-tested. Band hash = polynomial combine of 4 minima.
+      // groupBy shuffle; SketchExprSpec checks it against a test-side
+      // UDAF reference over exploded rows (graft.scale.Sketches).
+      // Band hash = polynomial combine of 4 minima.
       minhashVerifiedPairs(s, dir)
     }),
 
@@ -547,12 +541,11 @@ object DedupPack extends QueryPack {
     // Blocking on 16 x 4-bit chunks (pigeonhole-exact for Hamming
     // <= 15; J~0.8 pairs land around Hamming 5-12), then a cheap exact
     // Hamming pre-filter on the 8-byte signatures, then exact Jaccard
-    // verification. The 64 bit-sums are computed as ONE aggregation
-    // over the shingle rows (64 agg columns), not a 64x row explosion.
+    // verification.
     "d_simhash" -> ((s, dir) => {
-      // 64 bit votes via ONE typed UDAF (Sketches.SimHashAgg): a
-      // primitive-loop update instead of 64 sum(CASE) agg expressions.
-      // signature as a NARROW projection (SimHashSig) — see minhash
+      // the 64 bit votes as a NARROW projection over the per-doc hash
+      // array (SimHashSig), no aggregation; SketchExprSpec checks it
+      // against a test-side UDAF reference (graft.scale.Sketches)
       val sigs = hashArrays(s, dir)
         .withColumn("sim", graft.expr.SimHashSig(col("hs")))
       // 4-bit buckets are deliberately loose (recall guarantee), so the

@@ -139,7 +139,6 @@ object TextPack extends QueryPack {
   }
 
   private def curationFunnel(s: SparkSession, dir: String): CurationFunnel = {
-    import org.apache.spark.sql.expressions.Window
     val docsRaw = Tables(s, dir, "documents")
     val isEval = col("doc_id") % 10 === 0
     val train = docsRaw.filter(!isEval)
@@ -261,9 +260,8 @@ object TextPack extends QueryPack {
     }),
 
     // Exact TF-IDF, top-3 terms per document — the oracle-checked
-    // relational twin of the MLlib HashingTF+IDF pipeline
-    // (graft.text.TfIdf), the same pattern as m1_freq_index for
-    // StringIndexer. Shape: explode -> two hash aggs (term freq per
+    // relational form of MLlib's HashingTF+IDF featurization, without
+    // the hashing. Shape: explode -> two hash aggs (term freq per
     // doc, doc freq per term) -> broadcast the term-level df (vocab-
     // sized, small by Heaps' law) back onto the doc-term rows -> per-
     // doc top-k window. Ranking uses the ROUNDED score so both

@@ -62,19 +62,6 @@ object EventStreams {
     stream.withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark(Seq("event_id"))
 
-  /** Streaming CONTENT dedup — d_exact's streaming twin: documents
-    * arriving on a stream are deduplicated by a 64-bit content hash
-    * inside the watermark horizon. The dedup state holds one 8-byte
-    * hash per distinct document seen within the horizon — never the
-    * text — the same narrow-key discipline as the batch operator; the
-    * horizon is the ingest-dedup contract (cross-horizon dups belong
-    * to the periodic batch pass). */
-  def dedupedByContent(stream: DataFrame): DataFrame =
-    stream
-      .withColumn("content_hash", xxhash64(col("text")))
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark(Seq("content_hash"))
-
   /** Open a file-based stream over the driver-generated events parquet.
     * Single-file fixture is fine: the file source treats the directory
     * listing as the stream. Normalizes the TIMESTAMP(NANOS) column the
@@ -94,12 +81,6 @@ object EventStreams {
         .option("pathGlobFilter", "events.parquet")
         .parquet(sfDir))
   }
-
-  /** Stream-static enrichment: join the event stream against a
-    * broadcast dimension table — no streaming state at all (the static
-    * side is re-broadcast per micro-batch). */
-  def enrichedEvents(stream: DataFrame, dim: DataFrame): DataFrame =
-    stream.join(broadcast(dim), Seq("user_id"), "left")
 
   /** Stream-stream self-join: pairs of events from the same user
     * within 10 minutes (l before r). Both sides carry watermarks and

@@ -535,7 +535,7 @@ object StreamExec {
         // with overlapping spreads — at this SF the store-merge write
         // dominates, so the win is small; kept for the ≤1-pass-per-
         // batch contract, whose multiplier is batch-sized at scale.
-        val upd = ds.toDF.withColumn("__bucket", bucketOf)
+        val upd = ds.toDF().withColumn("__bucket", bucketOf)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
         val touched = upd.select("__bucket").distinct()
@@ -832,13 +832,13 @@ object StreamExec {
     val stream = stagedStream(ss, stagedDir(s, sfDir))
     val sessions = EventStreams.closedUserSessions(s, stream)
     val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val schema = sessions.toDF.schema
+    val schema = sessions.toDF().schema
     val q = sessions.writeStream
       .outputMode("append")
       .option("checkpointLocation", ckpt())
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (ds: org.apache.spark.sql.Dataset[EventStreams.ClosedSession], _: Long) =>
-        val rows = ds.toDF.collect() // bounded: closed sessions this batch
+        val rows = ds.toDF().collect() // bounded: closed sessions this batch
         buf.synchronized { buf ++= rows }
         ()
       }

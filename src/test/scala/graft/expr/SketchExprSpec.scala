@@ -7,13 +7,13 @@ import org.apache.spark.sql.functions._
 class SketchExprSpec extends SparkSpec {
 
   test("ShingleHashes == xxhash64 of composed shingle strings (bit parity)") {
-    import graft.text.TextFeatures
+    import graft.text.TextFeaturesRef
     val docs = Tables(spark, sf("sf0.001"), "documents")
     val viaExpr = docs.select(col("doc_id"),
       ShingleHashes(col("text"), 3).as("hs"))
     val viaHof = docs
       .select(col("doc_id"),
-        explode(TextFeatures.shingles(col("text"), 3)).as("s"))
+        explode(TextFeaturesRef.shingles(col("text"), 3)).as("s"))
       .select(col("doc_id"), xxhash64(col("s")).as("h"))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("h"))).as("hs"))

@@ -87,4 +87,18 @@ class SqlFunctionRegistrySpec extends SparkSpec {
     val expected = GraftFunctions.descriptors.map(_._1.funcName).toSet
     assert(expected.subsetOf(fns), s"missing functions: ${expected -- fns}")
   }
+
+  test("a second register keeps every function's first registration") {
+    // a replace would log "replaced a previously registered function"
+    // on every call; ImdbPipeline.run and the specs call it repeatedly
+    val registry = spark.sessionState.functionRegistry
+    def infos = GraftFunctions.descriptors.map { case (id, _, _) =>
+      id.funcName -> registry.lookupFunction(id).getOrElse(fail(s"${id.funcName} not registered"))
+    }
+    GraftFunctions.register(spark)
+    val first = infos
+    GraftFunctions.register(spark)
+    val replaced = first.zip(infos).collect { case ((n, a), (_, b)) if !(a eq b) => n }
+    assert(replaced.isEmpty, s"a second register replaced: ${replaced.mkString(", ")}")
+  }
 }

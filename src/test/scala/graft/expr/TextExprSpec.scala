@@ -2,7 +2,7 @@ package graft.expr
 
 import graft.SparkSpec
 import graft.io.Tables
-import graft.text.TextFeatures
+import graft.text.TextFeaturesRef
 import org.apache.spark.sql.functions._
 
 class TextExprSpec extends SparkSpec {
@@ -27,7 +27,7 @@ class TextExprSpec extends SparkSpec {
     val docs = Tables(spark, sf("sf0.001"), "documents")
     val both = docs.select(
       CharFingerprint(col("text")).as("a"),
-      TextFeatures.charFingerprint("text").as("b"))
+      TextFeaturesRef.charFingerprint("text").as("b"))
       .collect()
     assert(both.nonEmpty)
     both.foreach(r => assert(r.getLong(0) == r.getLong(1)))

@@ -2,7 +2,6 @@ package graft.imdb
 
 import graft.SparkSpec
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.functions._
 
 class FeaturesSpec extends SparkSpec {
 

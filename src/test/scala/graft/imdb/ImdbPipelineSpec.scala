@@ -30,6 +30,18 @@ class ImdbPipelineSpec extends SparkSpec {
     case other => fail(s"not a classic Dataset: ${other.getClass}")
   }
 
+  /** M9: the reference's only self-evaluation recipe —
+    * randomSplit(0.8/0.2, seed 42) + accuracy
+    * (eda/process_data.ipynb cell 1). */
+  private def evaluateAccuracy(featurized: DataFrame, numTrees: Int): Double = {
+    val Array(tr, te) = featurized.randomSplit(Array(0.8, 0.2), 42)
+    val model = ImdbModel.train(tr, numTrees)
+    new org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator()
+      .setLabelCol("label").setPredictionCol("prediction")
+      .setMetricName("accuracy")
+      .evaluate(ImdbModel.predict(model, te))
+  }
+
   test("tiny fixture: K1/K2 contracts, persisted frames released on success and failure") {
     val d = ImdbFixture.write()
     val cfg = ImdbPipeline.Config(
@@ -128,7 +140,7 @@ class ImdbPipelineSpec extends SparkSpec {
       .withColumn("label", col("label").cast("double"))
     val asm = Features.assemble(idx)
     val scaled = Features.scale(asm, Features.fitScaler(asm))
-    val acc = ImdbModel.evaluateAccuracy(scaled, numTrees = 100)
+    val acc = evaluateAccuracy(scaled, numTrees = 100)
     info(f"accuracy = $acc%.4f")
     assert(acc >= 0.75, f"accuracy $acc%.4f below the reference's 0.75 bar")
   }

@@ -3,13 +3,17 @@ package graft.imdb
 import java.nio.file.Files
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** The CLI (the reference's runner.py) end to end on [[ImdbFixture]]:
   * the K1 file name and order contract, the K2 cache at `--cache-out`,
-  * and argument errors that fail with the usage line before any Spark
-  * job. */
+  * no Spark job after the K2 write, and argument errors that fail with
+  * the usage line before any Spark job. */
 class RunImdbSpec extends SparkSpec {
 
   private lazy val dir = ImdbFixture.write().toString
@@ -17,8 +21,34 @@ class RunImdbSpec extends SparkSpec {
   test("fixture run: K1 named and ordered by the contract, K2 grown at --cache-out") {
     val out = Files.createTempDirectory("graft_runimdb").toString
     val cacheOut = s"$out/cache_out"
-    val preds = RunImdb.run(spark,
+    // the call stack of each job's SQL execution, in job-start order
+    // ("" for a job outside any SQL execution, like the forest's)
+    val sc = spark.sparkContext
+    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val jobSites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val recorder = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => executions.put(x.executionId, x.details)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobSites.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(id => Option(executions.get(id.toLong))).getOrElse(""))
+    }
+    org.apache.spark.graft.ListenerDrain(sc)
+    sc.addSparkListener(recorder)
+    val preds = try RunImdb.run(spark,
       Array(dir, "validation", out, "--num-trees", "2", "--cache-out", cacheOut))
+    finally {
+      org.apache.spark.graft.ListenerDrain(sc)
+      sc.removeSparkListener(recorder)
+    }
+    val sites = jobSites.asScala.toSeq
+    val k2 = sites.indexWhere(_.contains("Writers$.saveGenreCache"))
+    assert(k2 >= 0, s"no job of the K2 cache write among ${sites.size} jobs")
+    val after = sites.drop(k2).filterNot(_.contains("Writers$.saveGenreCache"))
+    assert(after.size == 0, s"${after.size} Spark jobs started after the K2 cache write")
     assert(preds.count() == ImdbFixture.validationIds.size)
 
     // K1 contract: one True/False per line, ordered by tconst; F9: the

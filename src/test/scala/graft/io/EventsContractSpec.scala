@@ -2,7 +2,7 @@ package graft.io
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** Schema contract on the testdata boundary: whatever physical
   * encoding `events.parquet` ships with, `Tables.events` must deliver

@@ -13,6 +13,14 @@ import scala.jdk.CollectionConverters._
   * suite plans and runs under. */
 class SessionsSpec extends SparkSpec {
 
+  private def scalaFiles(root: String): List[java.nio.file.Path] = {
+    val w = Files.walk(Paths.get(root))
+    try w.iterator().asScala.toList finally w.close()
+  }.filter(_.toString.endsWith(".scala"))
+
+  private val mainObjects = Set("graft.Bench", "graft.Verify", "graft.imdb.RunImdb",
+    "graft.tools.Explain", "graft.tools.ScaleUp")
+
   test("harness session: UTC, nanosAsLong, graft rules once, both strategies, SQL functions") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
@@ -35,12 +43,7 @@ class SessionsSpec extends SparkSpec {
 
   test("source guard: only io/Sessions.scala builds a SparkSession") {
     val call = "SparkSession" + ".builder"
-    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
-    roots.foreach(r => assert(Files.isDirectory(r), s"missing source root $r"))
-    val offenders = roots.flatMap { r =>
-      val files = Files.walk(r)
-      try files.iterator().asScala.toList finally files.close()
-    }.filter(_.toString.endsWith(".scala"))
+    val offenders = Seq("src/main/scala", "src/test/scala").flatMap(scalaFiles)
       .filterNot(_.endsWith(Paths.get("graft", "io", "Sessions.scala")))
       .filter(p => Files.readString(p).contains(call))
     assert(offenders.isEmpty,
@@ -52,11 +55,7 @@ class SessionsSpec extends SparkSpec {
     // selfcheck.py) that runs it, and a line here; bench_compare.py is
     // run by none of them and is kept as the by-hand reader of Bench's
     // side files
-    val files = {
-      val w = Files.walk(Paths.get("src/main/scala"))
-      try w.iterator().asScala.toList finally w.close()
-    }.filter(_.toString.endsWith(".scala"))
-    val mains = files.flatMap { p =>
+    val mains = scalaFiles("src/main/scala").flatMap { p =>
       val src = Files.readString(p)
       val pkg = "(?m)^package ([\\w.]+)".r.findFirstMatchIn(src).map(_.group(1))
       "def main\\(".r.findAllMatchIn(src).map { m =>
@@ -64,8 +63,7 @@ class SessionsSpec extends SparkSpec {
         (pkg.toSeq :+ obj).mkString(".")
       }
     }.toSet
-    assert(mains == Set("graft.Bench", "graft.Verify", "graft.imdb.RunImdb",
-      "graft.tools.Explain", "graft.tools.ScaleUp"), mains)
+    assert(mains == mainObjects, mains)
     val scripts = {
       val l = Files.list(Paths.get("tools"))
       try l.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".py")).toSet
@@ -73,5 +71,29 @@ class SessionsSpec extends SparkSpec {
     }
     assert(scripts == Set("selfcheck.py", "bench_compare.py"), scripts)
     assert(Knobs.snapshot.size == 14, Knobs.snapshot.keys)
+  }
+
+  test("source guard: every top-level src/main type is named outside its declaration") {
+    // a top-level object, class or trait that no code line of src/main
+    // or perfbench/src names is reached by no main, query row, pipeline
+    // step or perfbench: delete it, or move it to src/test if a spec
+    // needs it (the -Wunused lint keeps private dead code out)
+    val exempt = mainObjects.map(_.split('.').last) +
+      "OllamaPredictor" // unwired; ROADMAP item 5 decides: wire it into RunImdb or delete it
+    val decl = ("^(?:(?:final|sealed|abstract|case|implicit|private(?:\\[\\w+\\])?)\\s+)*" +
+      "(?:object|class|trait)\\s+(\\w+)").r
+    def isComment(l: String) = Seq("//", "/*", "*").exists(l.trim.startsWith)
+    val mainFiles = scalaFiles("src/main/scala")
+    val code = (mainFiles ++ scalaFiles("perfbench/src")).flatMap(p =>
+      Files.readAllLines(p).asScala.filterNot(isComment).map(_.replaceAll("\\s//.*", "")))
+    val declared = mainFiles.flatMap(p =>
+      Files.readAllLines(p).asScala.flatMap(decl.findPrefixMatchOf(_)).map(_.group(1))).toSet
+    assert(declared.size > 50, declared)
+    val unreached = (declared -- exempt).filterNot { name =>
+      val word = s"\\b$name\\b".r
+      code.exists(l => word.findFirstIn(l).isDefined && decl.findPrefixMatchOf(l)
+        .forall(_.group(1) != name))
+    }
+    assert(unreached.isEmpty, s"named by no code line outside its declaration: ${unreached.toSeq.sorted}")
   }
 }

@@ -2,7 +2,6 @@ package graft.multimodal
 
 import graft.SparkSpec
 import graft.io.Tables
-import org.apache.spark.sql.functions._
 
 /** Pins the REAL `javax.imageio` JPEG path (round 11):
   * the exactness premise (block-constant gray at q=1.0 round-trips

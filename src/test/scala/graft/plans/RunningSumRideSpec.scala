@@ -188,10 +188,10 @@ class RunningSumRideSpec extends SparkSpec {
       Seq($"p"), Seq($"k"), $"x", "rs")
     assert(out.count() == 3000) // Dataset action => SQL execution scope
     val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    var leftover = spark.sparkContext.getPersistentRDDs.keySet -- before
+    var leftover = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
     while (leftover.nonEmpty && System.nanoTime() < deadline) {
       Thread.sleep(100)
-      leftover = spark.sparkContext.getPersistentRDDs.keySet -- before
+      leftover = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
     }
     assert(leftover.isEmpty,
       s"persisted child RDD(s) $leftover survived 15 s past the " +

@@ -61,7 +61,7 @@ class BucketedJoinSpec extends SparkSpec {
     try {
       intercept[Exception](LayoutPack.bucketedOrdersCustomer(spark, dir))
       val thrownAt = System.currentTimeMillis()
-      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
         "a bucketed write was still running when the build rethrew")
       Thread.sleep(2000) // an orphaned write would submit its job by now
       assert(!starts.iterator().asScala.exists(_ > thrownAt),

@@ -89,7 +89,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("nibble blocking is pigeonhole-exact to the Hamming bound") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     // random 64-bit sigs + planted close pairs (Hamming 1..15): the
     // block join must return EXACTLY the pairs within the bound
@@ -114,7 +113,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("d_semdedup merges every planted twin, keeps everything else") {
-    import org.apache.spark.sql.functions._
     val out = SparkEntry.queries("d_semdedup")(spark, sf("sf0.001"))
     val rows = out.collect()
     val n = graft.io.Tables(spark, sf("sf0.001"), "embeddings").count()

@@ -82,7 +82,7 @@ class ExactSumSpec extends SparkSpec {
         "double order-sensitivity is no longer exercised")
     val sums = (1 to 4).map { n =>
       vals.toDF("v").repartition(n)
-        .agg(sum($"v".cast("decimal(30,2)")).cast("double")).head.getDouble(0)
+        .agg(sum($"v".cast("decimal(30,2)")).cast("double")).head().getDouble(0)
     }
     assert(sums.distinct.size == 1,
       s"decimal sum varied with partitioning: $sums")

@@ -1,8 +1,6 @@
 package graft.queries
 
 import graft.SparkSpec
-import org.apache.spark.SparkException
-import org.apache.spark.sql.functions._
 
 /** Pins the LSH bucket-width circuit breaker (VERDICT r11 item 6):
   * a degenerate corpus — one clique of IDENTICAL texts, so every band

@@ -20,7 +20,6 @@ class PprSpec extends SparkSpec {
   test("seeding every node reproduces uniform PageRank exactly") {
     // base = 150000·|V| div |V| = 150000 — the uniform teleport term,
     // so the personalized recurrence must collapse to the standard one
-    import spark.implicits._
     val all = edges.select(col("src").as("node")).distinct()
     // each run released before the next pins an equal edge frame
     val (pers, h1) = PageRank.runPersonalizedTracked(edges, all, 5)

@@ -23,7 +23,6 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("salted join handles a single heavy-hitter key correctly") {
-    import spark.implicits._
     // 10,000 rows of one hot key + a tail; dim has one row per key
     val fact = spark.range(10000).select(lit(1L).as("k"), col("id").as("payload"))
       .union(spark.range(50).select((col("id") + 2).as("k"), col("id").as("payload")))

@@ -5,7 +5,9 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Sketch aggregators for near-dup detection, as typed Aggregators
-  * (usable via `functions.udaf` in untyped groupBy).
+  * (usable via `functions.udaf` in untyped groupBy). Test-side parity
+  * references: SketchExprSpec checks the `MinHashSig` and `SimHashSig`
+  * expressions the dedup queries use against these UDAFs.
   *
   * Why not N separate agg expressions: a 64-permutation MinHash as 64
   * `min(pmod(...))` columns evaluates 64 Catalyst expression trees per

@@ -176,24 +176,6 @@ class StreamingSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L)), s"unexpected pairs: $pairs")
   }
 
-  test("stream-static join enriches events from a broadcast dimension") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((7L, "gold"), (9L, "silver")).toDF("user_id", "tier")
-    val input = MemoryStream[(Long, Long)]
-    val events = input.toDF().toDF("event_id", "user_id")
-    val q = EventStreams.enrichedEvents(events, dim)
-      .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
-    try {
-      input.addData((1L, 7L), (2L, 9L), (3L, 11L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.table("enriched").select("event_id", "tier")
-      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    assert(out == Map(1L -> Some("gold"), 2L -> Some("silver"), 3L -> None))
-  }
-
   test("watermark drops late rows from an append-mode windowed agg") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -252,27 +234,6 @@ class StreamingSpec extends SparkSpec {
     assert(out.contains((7L, ts(0, 0), 2L)), s"intra-batch close missing: $out")
     assert(out.contains((7L, ts(2, 0), 1L)), s"timeout close missing: $out")
     assert(out.contains((9L, ts(0, 5), 1L)), s"single-event session missing: $out")
-  }
-
-  test("streaming content dedup suppresses same-text docs across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val stream = input.toDF().toDF("doc_id", "ts", "text")
-    val q = EventStreams.dedupedByContent(stream)
-      .writeStream.format("memory").queryName("content_dedup")
-      .outputMode("append").start()
-    try {
-      input.addData((1L, t0, "alpha beta"), (2L, t0, "alpha beta"), // dup in batch
-        (3L, t0, "gamma"))
-      q.processAllAvailable()
-      input.addData((4L, t0, "gamma"), (5L, t0, "delta")) // dup across batches
-      q.processAllAvailable()
-    } finally q.stop()
-    val kept = spark.table("content_dedup").select("doc_id")
-      .as[Long].collect().sorted.toSeq
-    assert(kept == Seq(1L, 3L, 5L), s"content dedup kept: $kept")
   }
 
   test("foreachBatch: batchId-keyed writes make the sink replay-idempotent") {
