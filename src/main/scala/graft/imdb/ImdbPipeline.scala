@@ -121,8 +121,11 @@ object ImdbPipeline {
     * and the predictions all read it, and it is released in the
     * `finally` below, on success and on failure. The returned frame is
     * lazy, so each action a caller runs on it recomputes the test side.
-    * Enrichment's `fresh` predictions stay persisted: the returned
-    * frame depends on them, and dropping them would re-call the LLM. */
+    * Enrichment's `fresh` predictions stay persisted past the return,
+    * because the returned frame depends on them and dropping them
+    * would re-call the LLM; they are deposited in
+    * [[graft.scale.CacheRegistry]], so the caller's `drain()` after
+    * its last action on the returned frame releases them. */
   def run(spark: SparkSession, cfg: Config,
           onStage: (String, Double) => Unit = (_, _) => (),
           tap: (String, DataFrame) => Unit = (_, _) => ()): DataFrame = {
@@ -172,6 +175,7 @@ object ImdbPipeline {
 
     val (engineered, fresh) = engineer(spark, Cleaning.patchWithMean(movies, means),
       writing, directing, cache, cfg, extra, extraMeans)
+    graft.scale.CacheRegistry.track(fresh)
     val held = engineered.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // Stage 3: features (fit-on-train indexers + scaler)

@@ -14,25 +14,39 @@ import org.apache.spark.sql.functions._
   */
 object Readers {
 
-  /** S1: CSV scan with explicit schema and `\N` null sentinel handled
-    * by the reader (replaces the per-column `when` rewrite at
-    * data_utils.py:239). */
-  def loadCsv(spark: SparkSession, path: String,
-              schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read
-      .option("header", true)
-      .option("nullValue", "\\N")
-      .schema(schema)
-      .csv(path)
+  /** S1: CSV scan of every file `path` matches, with explicit schema
+    * and the `\N` null sentinel handled by the reader (replaces the
+    * per-column `when` rewrite at data_utils.py:239); None when nothing
+    * matches. Hadoop's `globStatus` expands the path (a literal one
+    * too), so Spark never probes a glob as a streaming-sink metadata
+    * directory, which logs a `FileNotFoundException` warning per read. */
+  private def loadCsv(spark: SparkSession, path: String,
+                      schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    Option(p.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(p))
+      .filter(_.nonEmpty).map(files => spark.read
+        .option("header", true)
+        .option("nullValue", "\\N")
+        .schema(schema)
+        .csv(files.map(_.getPath.toString).toSeq: _*))
+  }
 
-  /** S2: multi-file train scan — Spark globs `train-*.csv` natively;
+  /** A train or hidden-set scan, the index column renamed `_c0`; a
+    * path that matches nothing fails. */
+  private def loadMovies(spark: SparkSession, path: String,
+                         schema: org.apache.spark.sql.types.StructType): DataFrame =
+    loadCsv(spark, path, schema)
+      .getOrElse(throw new java.io.FileNotFoundException(s"no file matches $path"))
+      .withColumnRenamed(Schemas.IndexHeader, "_c0")
+
+  /** S2: multi-file train scan — `train-*.csv` expands to its files;
     * positional union semantics are what a multi-path scan does.
     * One job, no per-file driver loop. */
   def loadTrain(spark: SparkSession, globPath: String): DataFrame =
-    loadCsv(spark, globPath, Schemas.train)
+    loadMovies(spark, globPath, Schemas.train)
 
   def loadTest(spark: SparkSession, path: String): DataFrame =
-    loadCsv(spark, path, Schemas.test)
+    loadMovies(spark, path, Schemas.test)
 
   /** S3: writing.json — a one-line top-level JSON array parses to one
     * row per element (data_utils.py:48-64). */
@@ -58,20 +72,10 @@ object Readers {
     * instead of the reference's driver dict lookups
     * (data_utils.py:378-389). Missing cache file -> empty frame. */
   def loadGenreCache(spark: SparkSession, path: String): DataFrame = {
-    // globStatus, not exists: exists() is literal, so a GLOB cache
-    // path ("{train,validation}_cache-csv", "cache-*.csv") used to
-    // return FALSE and silently hand back an EMPTY cache — every
-    // movie then went to the LLM at full cost with no error (the
-    // stub's genres displaced the cached ones; ReadersSpec pins the
-    // glob case). globStatus handles literal paths too.
-    val exists = try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val matches = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .globStatus(p)
-      matches != null && matches.nonEmpty
-    } catch { case _: Exception => false }
-    if (exists) loadCsv(spark, path, Schemas.genreCache)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.genreCache)
+    // a glob ("{train,validation}_cache-csv", "cache-*.csv") loads all
+    // its matches, never an empty cache that would send every movie to
+    // the LLM at full cost (ReadersSpec pins the glob case)
+    loadCsv(spark, path, Schemas.genreCache).getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.genreCache))
   }
 }

@@ -10,11 +10,16 @@ import org.apache.spark.sql.types._
   */
 object Schemas {
 
+  /** The index column's name as Spark's CSV header check reads the
+    * empty header cell (`nullValue` applies to headers too); [[Readers]]
+    * renames it `_c0` after the scan. */
+  val IndexHeader = "\\N"
+
   /** train-*.csv: leading unnamed pandas index column, IMDB `\N`
     * sentinels in endYear/runtimeMinutes, boolean label
     * (data_utils.py:122-157, imdb/train-1.csv:1). */
   val train: StructType = StructType(Seq(
-    StructField("_c0", IntegerType),
+    StructField(IndexHeader, IntegerType),
     StructField("tconst", StringType),
     StructField("primaryTitle", StringType),
     StructField("originalTitle", StringType),

@@ -201,14 +201,11 @@ object DedupPack extends QueryPack {
     * d_pipeline does) still concentrates one bucket's O(B²) pair
     * stream in one task. Rather than silently grind, the plan raises
     * a loud error at the offending bucket: width, band and bucket
-    * hash in the message, cap overridable per deployment
-    * (`SPARK_GRAFT_LSH_MAX_BUCKET`, [[graft.io.Knobs]]). The guard
-    * is a codegen'd when(): zero cost for every in-bounds bucket. */
-  private[graft] def bandedCandidates(s: SparkSession, dir: String): DataFrame =
-    bandedCandidates(s, dir, graft.io.Knobs.lshMaxBucket)
-
+    * hash in the message, cap `maxBucket` (LshBucketCapSpec passes a
+    * small one). The guard is a codegen'd when(): zero cost for every
+    * in-bounds bucket. */
   private[graft] def bandedCandidates(s: SparkSession, dir: String,
-                                      maxBucket: Int): DataFrame = {
+                                      maxBucket: Int = 1024): DataFrame = {
     // FUSED signature (VERDICT r10 item 3): candidates need only the
     // 64-long signature, so it is computed straight from text in one
     // byte-walk (MinHashTextSig) — the corpus-sized shingle-hash
@@ -244,8 +241,7 @@ object DedupPack extends QueryPack {
       .withColumn("members",
         when(size(col("members")) > lit(maxBucket),
           raise_error(concat(
-            lit(s"LSH bucket width exceeds cap $maxBucket " +
-              "(SPARK_GRAFT_LSH_MAX_BUCKET): width="),
+            lit(s"LSH bucket width exceeds cap $maxBucket: width="),
             size(col("members")).cast("string"),
             lit(" band="), col("band").cast("string"),
             lit(" bh="), col("bh").cast("string"),

@@ -39,23 +39,21 @@ object Checkpoints {
     * Off by default: local blocks are cheaper and every gate tier
     * below the fault gate doesn't kill executors.
     *
-    * Enable with spark conf `spark.graft.checkpoint.reliable=true`
-    * (per-session) or env `SPARK_GRAFT_RELIABLE_CKPT=1` (harness).
-    * `SPARK_GRAFT_CKPT_DIR` overrides the checkpoint-file location
-    * (default: a TempDirs path, deleted at JVM exit). */
+    * Enable with the session conf `spark.graft.checkpoint.reliable=true`
+    * (`spark.conf.set`, or `-Dspark.graft.checkpoint.reliable=true` /
+    * `--conf` for a whole run). Spark's `spark.checkpoint.dir` sets the
+    * checkpoint-file location (default: a TempDirs path, deleted at
+    * JVM exit). */
   def reliableMode(s: SparkSession): Boolean =
     s.conf.getOption("spark.graft.checkpoint.reliable")
-      .map(graft.io.Knobs.parseBool("spark.graft.checkpoint.reliable", _))
-      .getOrElse(graft.io.Knobs.reliableCkpt)
+      .exists(graft.io.Knobs.parseBool("spark.graft.checkpoint.reliable", _))
 
   private val ckptDirLock = new Object
 
   private def ensureCheckpointDir(s: SparkSession): Unit =
     ckptDirLock.synchronized {
       if (s.sparkContext.getCheckpointDir.isEmpty)
-        s.sparkContext.setCheckpointDir(
-          graft.io.Knobs.ckptDir.getOrElse(
-            graft.io.TempDirs.create("graft_reliable_ckpt_")))
+        s.sparkContext.setCheckpointDir(graft.io.TempDirs.create("graft_reliable_ckpt_"))
     }
 
   /** THE lineage cut every iterative operator routes through: eager

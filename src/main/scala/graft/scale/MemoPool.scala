@@ -25,9 +25,8 @@ import scala.jdk.CollectionConverters._
   * (exact cached sizes via the CacheManager accumulator — optimizer
   * estimates never decide an eviction), and the least-recently-used
   * entries are unpersisted until the pool fits the cap. An evicted
-  * entry rebuilds on next use. Cap: `SPARK_GRAFT_MEMO_CAP_MB`, default
-  * 4096 MB — far above the whole pool at the bench SFs (sub-100 MB at
-  * sf0.1); a deployment sizes it to executor storage memory.
+  * entry rebuilds on next use. Cap: [[CapMb]], 4096 MB — far above the
+  * whole pool at the bench SFs (sub-100 MB at sf0.1).
   *
   * Instrumentation: every build logs `[memo] built <name> ... payer=`
   * with the build wall-ms and the job description of the query that
@@ -62,12 +61,14 @@ object MemoPool {
     new java.util.concurrent.ConcurrentHashMap[Key, Entry]()
   private val clock = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Test seam: env vars can't be set from a spec, and the eviction
-    * path must be TESTED, not just shipped (MemoPoolSpec). */
+  /** The pool's byte cap, in MB. */
+  private val CapMb = 4096L
+
+  /** Test seam: the eviction path must be TESTED, not just shipped
+    * (MemoPoolSpec), on frames far below the real cap. */
   @volatile private[scale] var capOverrideBytes: Option[Long] = None
 
-  private def capBytes: Long = capOverrideBytes.getOrElse(
-    graft.io.Knobs.memoCapMb * 1024L * 1024L)
+  private def capBytes: Long = capOverrideBytes.getOrElse(CapMb * 1024L * 1024L)
 
   /** Memoize `build` per (session, sfDir, name). `framesOf` lists the
     * persisted frames the value holds — what eviction unpersists and

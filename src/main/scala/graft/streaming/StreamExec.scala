@@ -168,16 +168,12 @@ object StreamExec {
 
   /** Number of time-range data slices the staged dir is cut into —
     * i.e. the number of DATA micro-batches each stream-exec row
-    * replays. Default 2 (the historical gate shape). The watermark
-    * only advances BETWEEN batches, so a stateful operator's peak
-    * state is bounded below by one batch's ingest: at sf10 the 2-slice
-    * staging makes st_join's peak a structural 10M rows (half-corpus
-    * per side) no matter how well eviction works. The sf10 state-bound
-    * gate raises this (SPARK_GRAFT_STREAM_SLICES=16) to show peak
-    * state scales with BATCH GRANULARITY + watermark window, not
-    * stream length — the contract a 100 TB deployment relies on, where
-    * a micro-batch is seconds of ingest, not half the corpus. */
-  private def streamSlices: Int = graft.io.Knobs.streamSlices
+    * replays. The watermark only advances BETWEEN batches, so a
+    * stateful operator's peak state is bounded below by one batch's
+    * ingest: peak state follows batch granularity plus the watermark
+    * window, not stream length (bench/sf10_stream_gate_r14.txt, a past
+    * measurement at 16 slices). */
+  private[streaming] val StreamSlices = 2
 
   /** Spec access to the shared staged dir (StagingContractSpec pins
     * the b-vs-s file naming + mtime contract of the r14 one-pass
@@ -192,31 +188,20 @@ object StreamExec {
     graft.scale.MemoPool.getOrBuild(s, sfDir, "streamStaged") {
       val ev = Tables.events(s, sfDir) // normalized TimestampType
       val (minTs, maxTs) = tsRange(s, sfDir)
-      val k = streamSlices
+      val k = StreamSlices
       val (lo, hi) = (us(minTs), us(maxTs))
       val st = new SliceStager("stream")
       // k equal event-time intervals; slice i = [cut(i), cut(i+1)),
-      // last cut at hi+1 so maxTs lands inside the final slice. Same
-      // mechanism as the historical 2-slice midpoint split (k=2 is
-      // the equivalent staging, one-microsecond boundary rounding
-      // aside — any time-ordered split is a valid staging).
+      // last cut at hi+1 so maxTs lands inside the final slice
       val cuts = (0 to k).map(i => lo + (hi + 1 - lo) * i.toLong / k)
       val tsUs = unix_micros(col("ts"))
-      if (k <= 64) {
-        // one-pass staging: the slice id as a literal when-chain over
-        // the SAME cut points the per-slice filters used (every event
-        // satisfies cuts(0) <= ts < cuts(k) by construction of the
-        // cuts, so the chain is total); bounded at 64 slices to keep
-        // the expression tree small — the state-bound gate's k=16 is
-        // well inside, and larger k falls back to the per-slice loop
-        var sliceOf: org.apache.spark.sql.Column = lit(k - 1)
-        for (i <- k - 2 to 0 by -1)
-          sliceOf = when(tsUs < cuts(i + 1), lit(i)).otherwise(sliceOf)
-        st.writeSliced(ev.withColumn("__slice", sliceOf), k)
-      } else (0 until k).foreach { i =>
-        st.writeSlice(ev.filter(
-          tsUs >= cuts(i) && tsUs < cuts(i + 1)), i)
-      }
+      // one-pass staging: the slice id as a literal when-chain over the
+      // cut points (every event satisfies cuts(0) <= ts < cuts(k) by
+      // construction of the cuts, so the chain is total)
+      var sliceOf: org.apache.spark.sql.Column = lit(k - 1)
+      for (i <- k - 2 to 0 by -1)
+        sliceOf = when(tsUs < cuts(i + 1), lit(i)).otherwise(sliceOf)
+      st.writeSliced(ev.withColumn("__slice", sliceOf), k)
       st.sentinel(ev, maxTs, k, 365)
       st.sentinel(ev, maxTs, k + 1, 730)
       st.streamDir
@@ -250,16 +235,16 @@ object StreamExec {
     * caller) because Verify plans OTHER queries concurrently on the
     * shared session — mutating its conf mid-flight would race their
     * physical planning. */
-  private def streamSession(s: SparkSession): SparkSession = {
+  private[graft] def streamSession(s: SparkSession): SparkSession = {
     val ss = s.newSession()
     // newSession starts from the static SparkConf — re-apply the
     // runtime confs the harness contract depends on, in case the
     // parent set them at runtime rather than through the builder.
     // stateStore.providerClass propagates too (VERDICT r10 item 4):
-    // at 100 TB the HDFS-backed in-memory store is not an option, so
-    // the gate re-runs every stream-exec row under RocksDB by setting
-    // the provider on the parent session (Verify does this when
-    // SPARK_GRAFT_STATE_STORE=rocksdb) — results must be
+    // at 100 TB the HDFS-backed in-memory store is not an option, so a
+    // deployment sets the RocksDB provider class on the parent session
+    // (Spark's own conf, e.g. passed as -Dspark.sql.streaming.
+    // stateStore.providerClass=...) — results must be
     // backend-invariant; BackendInvarianceSpec pins engagement.
     for (k <- Seq("spark.sql.session.timeZone",
                   "spark.sql.legacy.parquet.nanosAsLong",
@@ -284,10 +269,7 @@ object StreamExec {
     // st_late_drop batch5 440 ms, st_sessions batch4 324 ms — all on
     // 0 input rows. Results oracle-gated identical; scale-invariant
     // (one fewer full store-open/commit cycle per stream at any SF).
-    // SPARK_GRAFT_STREAM_NODATA=1 restores the Spark default for
-    // measurement.
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      graft.io.Knobs.streamNoData.toString)
+    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // Spark 4.1's checkpoint file-checksum manager writes a sidecar
     // checksum file per checkpoint file — and the local Hadoop
     // ChecksumFileSystem then writes ITS client-side CRC twin for
@@ -297,9 +279,7 @@ object StreamExec {
     // Spark-level sidecar keeps the Hadoop client-side CRC and the
     // WAL/commit/fsync durability protocol untouched — it removes
     // redundant integrity-on-read bookkeeping, not durability.
-    // SPARK_GRAFT_CKPT_CHECKSUM=1 restores the Spark default.
-    ss.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-      graft.io.Knobs.ckptChecksum.toString)
+    ss.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     ss
   }
 
@@ -406,8 +386,8 @@ object StreamExec {
     * 7): the same complete-mode hourly aggregate, but the first
     * StreamExecution is STOPPED as soon as its first micro-batch
     * commits, and a SECOND StreamExecution resumes from the same
-    * checkpoint dir (same state-store files — RocksDB under the gate's
-    * SPARK_GRAFT_STATE_STORE=rocksdb) and drains the remaining
+    * checkpoint dir (same state-store files — RocksDB when the parent
+    * session sets that provider) and drains the remaining
     * batches. The final table must equal the batch oracle — i.e. the
     * restarted query's state genuinely CONTINUES from the stopped
     * one's checkpoint instead of recounting (double-count) or

@@ -53,8 +53,12 @@ class ImdbPipelineSpec extends SparkSpec {
       resultsDir = s"$d/out",
       extraCsv = Some(s"$d/tmdb_extra.csv"),
       numTrees = 2,
+      predictor = new CountingPredictor,
       resultPath = Some(s"$d/out/preds"),
       cacheOutDir = Some(s"$d/out/genre_cache"))
+    val sc = spark.sparkContext
+    val heldBefore = sc.getPersistentRDDs.keySet.toSet
+    CountingPredictor.calls.set(0)
     val tapped = ArrayBuffer.empty[(String, DataFrame)]
     // both sets are engineered as one persisted frame: each tap reads it
     val preds = ImdbPipeline.run(spark, cfg, tap = (name, df) => {
@@ -99,6 +103,17 @@ class ImdbPipelineSpec extends SparkSpec {
     val newCache = Readers.loadGenreCache(spark, s"$d/out/genre_cache")
     assert(newCache.count() == 60)
     assert(newCache.select("tconst").distinct().count() == 60)
+
+    // one predictor call per id the train cache lacks (the odd train
+    // ids and every validation id), made by the run alone: the actions
+    // above re-read the enrichment's cached `fresh` predictions, which
+    // the caller's drain releases
+    val missing = trainIds.count(trainCacheGenre(_).isEmpty) + validationIds.size
+    assert(CountingPredictor.calls.get == missing)
+    val fresh = sc.getPersistentRDDs.keySet.toSet -- heldBefore
+    assert(fresh.nonEmpty, "the enrichment's predictions were not cached past the run")
+    graft.scale.CacheRegistry.drain()
+    assert((sc.getPersistentRDDs.keySet & fresh).isEmpty, "drain left the fresh predictions cached")
 
     // a run that fails at the K1 sink (its path is under a regular
     // file) still releases what it persisted

@@ -1,7 +1,13 @@
 package graft.imdb
 
 import graft.SparkSpec
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** Sources S1-S6 against the in-repo [[ImdbFixture]], written in the
   * reference's layout. Every expected count comes from the fixture's
@@ -14,6 +20,24 @@ class ReadersSpec extends SparkSpec {
 
   private def ids(df: org.apache.spark.sql.DataFrame, c: String = "tconst"): Seq[String] =
     df.select(c).collect().map(_.getString(0)).toSeq.sorted
+
+  /** Every log line (logger: message) emitted while `body` runs, caught
+    * by an appender on the root logger. */
+  private def logDuring(body: => Unit): Seq[String] = {
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("readers-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    app.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(app, null, null)
+    ctx.updateLoggers()
+    try body
+    finally { root.removeAppender(app.getName); ctx.updateLoggers(); app.stop() }
+    lines.asScala.toSeq
+  }
 
   test("S2: train glob loads both files, nulls from \\N sentinels and empty cells") {
     val df = Readers.loadTrain(spark, s"$dir/train-*.csv")
@@ -74,6 +98,26 @@ class ReadersSpec extends SparkSpec {
     assert(glob.count() == trainIds.size && perFile.count() == trainIds.size)
     assert(glob.exceptAll(perFile).count() == 0)
     assert(perFile.exceptAll(glob).count() == 0)
+  }
+
+  test("reading the fixture logs no metadata-dir probe and no header mismatch") {
+    val lines = logDuring {
+      Readers.loadTrain(spark, s"$dir/train-*.csv").collect()
+      Readers.loadTest(spark, s"$dir/validation_hidden.csv").collect()
+      Readers.loadGenreCache(spark, s"$dir/{train,validation}_gemma3_4b_cache.csv").collect()
+    }
+    val noise = lines.filter(l =>
+      l.contains("Assume no metadata directory") || l.contains("CSVHeaderChecker"))
+    assert(noise.isEmpty, noise.mkString("\n"))
+    // and the appender does catch a warning
+    val probe = logDuring(LogManager.getLogger(getClass).warn("appender probe"))
+    assert(probe.exists(_.endsWith("ReadersSpec: appender probe")), probe)
+  }
+
+  test("a train glob that matches nothing fails") {
+    val e = intercept[java.io.FileNotFoundException](
+      Readers.loadTrain(spark, s"$dir/no_such_*.csv"))
+    assert(e.getMessage.contains("no_such_*.csv"), e.getMessage)
   }
 
   test("S6: genre cache loads; missing path -> empty frame, same schema") {

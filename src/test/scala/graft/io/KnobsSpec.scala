@@ -24,67 +24,43 @@ class KnobsSpec extends SparkSpec {
     val k = knobs()
     val cores = Runtime.getRuntime.availableProcessors
     assert(k.cpus == cores && k.master == s"local[$cores]" && k.shufflePartitions == cores)
-    assert(k.cachedCoalesce)
-    assert(!k.rocksDbStateStore && !k.reliableCkpt && !k.streamNoData && !k.ckptChecksum)
-    assert(k.ckptDir.isEmpty)
-    assert(k.memoCapMb == 4096L && k.lshMaxBucket == 1024 && k.streamSlices == 2)
+    assert(k.sfDir == "/root/testdata/sf0.1" && k.benchOut == "/tmp/graft_bench_full.json")
     // an empty or blank value counts as unset
-    assert(knobs("SPARK_GRAFT_STREAM_SLICES" -> " ").streamSlices == 2)
+    assert(knobs("SPARK_GRAFT_CPUS" -> " ").cpus == cores)
+    assert(knobs("SPARK_GRAFT_MASTER" -> "").master == s"local[$cores]")
   }
 
-  test("a size with a unit fails instead of running the default cap") {
-    // SPARK_GRAFT_MEMO_CAP_MB=4g used to run silently with 4096 MB
-    rejects("SPARK_GRAFT_MEMO_CAP_MB", "4g")(_.memoCapMb)
-    rejects("SPARK_GRAFT_MEMO_CAP_MB", "0")(_.memoCapMb)
-    assert(knobs("SPARK_GRAFT_MEMO_CAP_MB" -> "512").memoCapMb == 512L)
-  }
-
-  test("booleans accept 1/0/true/false in every knob and nothing else") {
-    // STREAM_NODATA and CKPT_CHECKSUM used to honour only "1"
-    for (v <- Seq("1", "true", "TRUE", " True ")) {
-      assert(knobs("SPARK_GRAFT_STREAM_NODATA" -> v).streamNoData, v)
-      assert(knobs("SPARK_GRAFT_CKPT_CHECKSUM" -> v).ckptChecksum, v)
-      assert(knobs("SPARK_GRAFT_RELIABLE_CKPT" -> v).reliableCkpt, v)
+  test("parseBool accepts 1/0/true/false in any case and nothing else") {
+    for (v <- Seq("1", "true", "TRUE", " True "))
+      assert(Knobs.parseBool("spark.graft.checkpoint.reliable", v), v)
+    for (v <- Seq("0", "false", "False"))
+      assert(!Knobs.parseBool("spark.graft.checkpoint.reliable", v), v)
+    for (v <- Seq("on", "yes", "2", "")) {
+      val e = intercept[IllegalArgumentException](
+        Knobs.parseBool("spark.graft.checkpoint.reliable", v))
+      assert(e.getMessage.contains("spark.graft.checkpoint.reliable") &&
+        e.getMessage.contains(s"'$v'"), e.getMessage)
     }
-    for (v <- Seq("0", "false", "False")) {
-      assert(!knobs("SPARK_GRAFT_CACHED_COALESCE" -> v).cachedCoalesce, v)
-      assert(!knobs("SPARK_GRAFT_STREAM_NODATA" -> v).streamNoData, v)
-    }
-    rejects("SPARK_GRAFT_STREAM_NODATA", "yes")(_.streamNoData)
-    rejects("SPARK_GRAFT_STREAM_NODATA", "2")(_.streamNoData)
-    val e = intercept[IllegalArgumentException](
-      Knobs.parseBool("spark.graft.checkpoint.reliable", "on"))
-    assert(e.getMessage.contains("spark.graft.checkpoint.reliable"))
-  }
-
-  test("a state-store name outside hdfs/rocksdb fails") {
-    // SPARK_GRAFT_STATE_STORE=rocks used to keep the default provider
-    rejects("SPARK_GRAFT_STATE_STORE", "rocks")(_.rocksDbStateStore)
-    assert(knobs("SPARK_GRAFT_STATE_STORE" -> "RocksDB").rocksDbStateStore)
-    assert(!knobs("SPARK_GRAFT_STATE_STORE" -> "hdfs").rocksDbStateStore)
   }
 
   test("integers outside their range or not integers fail with the name") {
-    rejects("SPARK_GRAFT_STREAM_SLICES", "0")(_.streamSlices)
-    rejects("SPARK_GRAFT_STREAM_SLICES", "4097")(_.streamSlices)
-    rejects("SPARK_GRAFT_STREAM_SLICES", "two")(_.streamSlices)
-    rejects("SPARK_GRAFT_LSH_MAX_BUCKET", "-1")(_.lshMaxBucket)
+    rejects("SPARK_GRAFT_CPUS", "0")(_.cpus)
     rejects("SPARK_GRAFT_CPUS", "8.0")(_.cpus)
-    rejects("SPARK_GRAFT_MEMO_CAP_MB", "-5")(_.memoCapMb)
-    rejects("SPARK_GRAFT_MEMO_CAP_MB", (Long.MaxValue / (1024 * 1024) + 1).toString)(_.memoCapMb)
-    val k = knobs("SPARK_GRAFT_CPUS" -> "3", "SPARK_GRAFT_STREAM_SLICES" -> "16")
-    assert(k.master == "local[3]" && k.shufflePartitions == 3 && k.streamSlices == 16)
+    rejects("SPARK_GRAFT_CPUS", "4g")(_.cpus)
+    rejects("SPARK_GRAFT_SHUFFLE", "-5")(_.shufflePartitions)
+    rejects("SPARK_GRAFT_SHUFFLE", (Int.MaxValue.toLong + 1).toString)(_.shufflePartitions)
+    val k = knobs("SPARK_GRAFT_CPUS" -> "3")
+    assert(k.master == "local[3]" && k.shufflePartitions == 3)
+    // a malformed CPUS fails every knob derived from it
+    rejects("SPARK_GRAFT_CPUS", "x")(_.master)
     // the snapshot reads every knob, so one malformed knob fails it
-    rejects("SPARK_GRAFT_STREAM_SLICES", "x")(_.snapshot)
+    rejects("SPARK_GRAFT_SHUFFLE", "x")(_.snapshot)
   }
 
   test("snapshot names every knob that has an accessor") {
+    // SessionsSpec checks the names: every SPARK_GRAFT_ name in the
+    // sources is a snapshot key
     val snap = knobs().snapshot
-    val src = Files.readString(Paths.get("src/main/scala/graft/io/Knobs.scala"))
-    val named = "SPARK_GRAFT_[A-Z_0-9]+".r.findAllIn(src).toSet
-    assert(snap.keySet == named,
-      s"in Knobs.scala but not the snapshot: ${named -- snap.keySet}; " +
-        s"in the snapshot only: ${snap.keySet -- named}")
     val accessors = classOf[Knobs].getDeclaredMethods.toSeq
       .filter(m => Modifier.isPublic(m.getModifiers) && !Modifier.isStatic(m.getModifiers) &&
         !m.isSynthetic && m.getParameterCount == 0)
@@ -95,17 +71,20 @@ class KnobsSpec extends SparkSpec {
   }
 
   test("configJson carries master, shuffle partitions and every knob, escaped") {
-    val k = knobs("SPARK_GRAFT_CKPT_DIR" -> "/tmp/a\"b\tc")
+    val k = knobs("SPARK_GRAFT_SF_DIR" -> "/tmp/a\"b\tc")
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(k.configJson(spark))
     assert(json.get("master").asText == spark.sparkContext.master)
     assert(json.get("spark.sql.shuffle.partitions").asText ==
       spark.conf.get("spark.sql.shuffle.partitions"))
-    assert(json.get("SPARK_GRAFT_CKPT_DIR").asText == "/tmp/a\"b\tc")
+    assert(json.get("SPARK_GRAFT_SF_DIR").asText == "/tmp/a\"b\tc")
     assert(json.get("SPARK_GRAFT_BENCH_OUT").asText == "/tmp/graft_bench_full.json")
     assert(json.get("git_sha").asText.matches("unknown|[0-9a-f]{40}(-dirty)?"),
       json.get("git_sha").asText)
-    k.snapshot.keys.foreach(n => assert(json.has(n), n))
+    // the stamp is the three session fields plus exactly the five knobs
+    assert(json.fieldNames().asScala.toSet == Set("master", "spark.sql.shuffle.partitions",
+      "git_sha", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER", "SPARK_GRAFT_SHUFFLE",
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_OUT"), json)
   }
 
   test("source guard: only io/Knobs.scala reads the process environment") {

@@ -29,6 +29,8 @@ class SessionsSpec extends SparkSpec {
     val conf = spark.sessionState.conf
     assert(conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
     assert(conf.getConf(SQLConf.ADAPTIVE_MAX_SHUFFLE_HASH_JOIN_LOCAL_MAP_THRESHOLD) == 0L)
+    // cached frames coalesce to AQE's data-proportional width
+    assert(spark.conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
 
     GraftExtensions.install(spark) // a second install adds nothing
     val rules = spark.experimental.extraOptimizations
@@ -41,6 +43,18 @@ class SessionsSpec extends SparkSpec {
     assert(spark.sql("SELECT accent_fold('Déstiny') AS t").first().getString(0) == "Destiny")
   }
 
+  test("stream session clone: no no-data batches or checksum sidecars, parent's provider") {
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val parent = spark.newSession()
+    parent.conf.set(provider, rocks)
+    val clone = graft.streaming.StreamExec.streamSession(parent)
+    assert(clone.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") == "false")
+    assert(clone.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "false")
+    assert(clone.conf.get("spark.sql.shuffle.partitions") == "8")
+    assert(clone.conf.get(provider) == rocks)
+  }
+
   test("source guard: only io/Sessions.scala builds a SparkSession") {
     val call = "SparkSession" + ".builder"
     val offenders = Seq("src/main/scala", "src/test/scala").flatMap(scalaFiles)
@@ -50,7 +64,7 @@ class SessionsSpec extends SparkSpec {
       s"build sessions through graft.io.Sessions.harness, not in: ${offenders.mkString(", ")}")
   }
 
-  test("source guard: the five mains, the two tools scripts and the 14 knobs") {
+  test("source guard: the five mains, the two tools scripts and the five knobs") {
     // a new main or tools script needs a tier-1 spec (or perfbench or
     // selfcheck.py) that runs it, and a line here; bench_compare.py is
     // run by none of them and is kept as the by-hand reader of Bench's
@@ -70,7 +84,12 @@ class SessionsSpec extends SparkSpec {
       finally l.close()
     }
     assert(scripts == Set("selfcheck.py", "bench_compare.py"), scripts)
-    assert(Knobs.snapshot.size == 14, Knobs.snapshot.keys)
+    assert(Knobs.snapshot.size == 5, Knobs.snapshot.keys)
+    // a behaviour switch is a constant next to its measurement or a
+    // Spark conf, never a new env variable
+    val named = Seq("src/main/scala", "src/test/scala").flatMap(scalaFiles)
+      .flatMap(p => "SPARK_GRAFT_[A-Z_0-9]+".r.findAllIn(Files.readString(p))).toSet
+    assert(named == Knobs.snapshot.keySet, named -- Knobs.snapshot.keySet)
   }
 
   test("source guard: every top-level src/main type is named outside its declaration") {

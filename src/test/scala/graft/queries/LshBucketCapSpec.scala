@@ -36,14 +36,16 @@ class LshBucketCapSpec extends SparkSpec {
     dir
   }
 
+  /** The messages of `t` and its causes. */
+  private def msgs(t: Throwable): Seq[String] =
+    if (t == null) Seq.empty
+    else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+
   test("a bucket past the cap fails loudly, naming width and remedy") {
     val dir = plant(nCopies = 40)
     val ex = intercept[Exception] {
       DedupPack.bandedCandidates(spark, dir, maxBucket = 16).count()
     }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty
-      else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     val all = msgs(ex).mkString(" | ")
     assert(all.contains("LSH bucket width exceeds cap 16"),
       s"wrong failure: $all")
@@ -63,8 +65,10 @@ class LshBucketCapSpec extends SparkSpec {
         s"extra=${(pairs -- want).take(5)}")
   }
 
-  test("the default cap comes from the environment contract") {
-    // absent, the documented default
-    assert(new graft.io.Knobs(Map.empty).lshMaxBucket == 1024)
+  test("the default cap is 1024: one wider bucket fails") {
+    val dir = plant(nCopies = 1025)
+    val ex = intercept[Exception](DedupPack.bandedCandidates(spark, dir).count())
+    val all = msgs(ex).mkString(" | ")
+    assert(all.contains("LSH bucket width exceeds cap 1024: width=1025"), s"wrong failure: $all")
   }
 }

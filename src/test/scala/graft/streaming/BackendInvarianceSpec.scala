@@ -6,10 +6,10 @@ import graft.SparkSpec
   * (VERDICT r10 item 4): at 100 TB the state store is RocksDB, never
   * the HDFS-backed in-memory default — a gate row whose result
   * depended on the provider would be a silent cluster-vs-dev
-  * divergence. The sf1 gate re-runs all six rows under RocksDB
-  * against the DuckDB oracle (SPARK_GRAFT_STATE_STORE=rocksdb, see
-  * bench/sf1_gate_r11.txt); this spec pins the MECHANICS at fixture
-  * scale: the provider conf propagates through streamSession into the
+  * divergence. The sf1 gate re-ran all six rows under RocksDB
+  * against the DuckDB oracle (bench/sf1_gate_r11.txt); a run selects
+  * RocksDB with Spark's `spark.sql.streaming.stateStore.providerClass`
+  * conf. This spec pins the MECHANICS at fixture scale: the provider conf propagates through streamSession into the
   * cloned session, the provider really engages (rocksdb* custom
   * metrics in stateOperators — not a silent default), state row
   * counts are provider-invariant, and the results match row-for-row.

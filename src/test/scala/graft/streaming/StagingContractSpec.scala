@@ -15,11 +15,7 @@ import graft.SparkSpec
   */
 class StagingContractSpec extends SparkSpec {
 
-  // the staged slice count follows SPARK_GRAFT_STREAM_SLICES (the sf10
-  // state-bound gate exports 16) — derive the expectation from the
-  // same knob instead of hardcoding 2, so running sbt test in a shell
-  // with the gate's env exported doesn't fail spuriously (ADVICE r14)
-  private val k = graft.io.Knobs.streamSlices
+  private val k = StreamExec.StreamSlices
 
   test("staged dir: k data slices (b*) + 2 sentinels (s*), mtime-ordered") {
     val dir = StreamExec.stagedDirForSpec(spark, sf("sf0.001"))
