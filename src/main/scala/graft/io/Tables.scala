@@ -24,10 +24,16 @@ object Tables {
     * rewritten mid-session would read through the stale memo — the
     * corpus generators version directories instead of rewriting them
     * in place, so this cannot occur in any harness; a new session
-    * always re-infers. */
+    * always re-infers. A missing table fails here with a
+    * FileNotFoundException naming its path, before Spark's DataSource
+    * probes the path as a streaming-sink metadata dir (which logs a
+    * warning with a stack trace). */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val schema = graft.scale.MemoPool.getOrBuild(spark, sfDir, s"schema/$name") {
+      val p = new org.apache.hadoop.fs.Path(path)
+      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+        throw new java.io.FileNotFoundException(s"table $name: no file at $path")
       spark.read.parquet(path).schema
     }(_ => Nil)
     spark.read.schema(schema).parquet(path)

@@ -403,12 +403,9 @@ object AnalyticsPack extends QueryPack {
       // no-inflow probe job is provably empty — assert it away
       // node set = customers + suppliers: dimension-sized, so the
       // broadcast-ranks round (zero per-round exchanges) applies
-      val (ranks, handles) = graft.scale.PageRank.runTracked(edges, 5,
+      graft.scale.PageRank.run(edges, 5,
         assumeDistinct = true, symmetric = true, broadcastRanks = true,
         pinnedEo = Some(purchaseEo(s, dir)))
-      // harness releases the pins after its action (CacheRegistry doc)
-      graft.scale.CacheRegistry.track(handles)
-      ranks
         .select(col("node"), col("rank"),
           (col("node") % 2 === 1).as("is_supplier"))
         .orderBy(desc("rank"), col("node")).limit(20)
@@ -553,7 +550,7 @@ object AnalyticsPack extends QueryPack {
         .orderBy(col("comm"))
     }),
 
-    // PERSONALIZED PageRank (scale/PageRank.runPersonalizedTracked):
+    // PERSONALIZED PageRank (scale/PageRank.runPersonalized):
     // teleport mass restricted to the low-id customer nodes — "which
     // suppliers matter to THESE customers", the seed-biased relevance
     // twin of g_pagerank's global authority. Same integer-exact
@@ -576,12 +573,9 @@ object AnalyticsPack extends QueryPack {
       val seeds = pairs.select((col("c") * 2L).as("node"))
         .filter(col("node") < 50)
       // distinct pairs x 2 disjoint directions = already-distinct edges
-      val (ranks, handles) =
-        graft.scale.PageRank.runPersonalizedTracked(edges, seeds, 5,
-          assumeDistinct = true, broadcastRanks = true,
-          pinnedEo = Some(purchaseEo(s, dir)))
-      graft.scale.CacheRegistry.track(handles)
-      ranks
+      graft.scale.PageRank.runPersonalized(edges, seeds, 5,
+        assumeDistinct = true, broadcastRanks = true,
+        pinnedEo = Some(purchaseEo(s, dir)))
         .select(col("node"), col("rank"),
           (col("node") % 2 === 1).as("is_supplier"))
         .orderBy(desc("rank"), col("node")).limit(20)
@@ -777,10 +771,8 @@ object AnalyticsPack extends QueryPack {
           struct(sNode.as("src"), cNode.as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
       val source = pairs.agg(min(cNode).as("node"))
-      val (dist, handles) = graft.scale.Bfs.hopsTracked(edges, source,
-        iters = 4,
+      val dist = graft.scale.Bfs.hops(edges, source, iters = 4,
         pinnedE = Some(purchaseEo(s, dir).select(col("src"), col("dst"))))
-      graft.scale.CacheRegistry.track(handles)
       val nodes = pairs
         .select(explode(array(cNode, sNode)).as("node")).distinct()
       nodes.join(dist, Seq("node"), "left")

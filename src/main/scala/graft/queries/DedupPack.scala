@@ -120,11 +120,10 @@ object DedupPack extends QueryPack {
     // is narrow ((id, sig, chunk, cv) = 24 bytes × 16 rows/doc) and is
     // released by the harness's CacheRegistry drain after the query's
     // action.
-    val chunks = sigs.select(col(idCol), col(sigCol), posexplode(expr(
-      s"transform(sequence(0, 15), c -> (($sigCol >> (c * 4)) & 15))"))
-      .as(Seq("chunk", "cv")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.scale.CacheRegistry.track(chunks)
+    val chunks = graft.scale.CacheRegistry.pin(sigs.select(col(idCol),
+      col(sigCol), posexplode(expr(
+        s"transform(sequence(0, 15), c -> (($sigCol >> (c * 4)) & 15))"))
+        .as(Seq("chunk", "cv"))))
     chunks.as("a")
       .join(chunks.as("b"),
         col("a.chunk") === col("b.chunk") && col("a.cv") === col("b.cv") &&
@@ -356,15 +355,11 @@ object DedupPack extends QueryPack {
       // persisted: both self-join sides derive from it — without the
       // persist each side re-scans and re-hashes the planted corpus
       // whenever exchange reuse fails to canonicalize the two subtrees
-      val win = withPlanted(s, dir)
+      // per-invocation pin, released by the harness drain after the
+      // action — unlike the memoized session-lifetime caches above
+      val win = graft.scale.CacheRegistry.pin(withPlanted(s, dir)
         .select(col("doc_id"),
-          explode(graft.expr.ShingleHashes(col("text"), 12)).as("h"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // per-invocation persist: deposit with the harness ledger so
-      // Bench/Verify release it after the action — unlike the
-      // memoized session-lifetime caches above, this one would
-      // otherwise leak one corpus-sized frame per run
-      graft.scale.CacheRegistry.track(win)
+          explode(graft.expr.ShingleHashes(col("text"), 12)).as("h")))
       val a = win.select(col("h"), col("doc_id").as("ida"))
       val b = win.select(col("h"), col("doc_id").as("idb"))
       a.join(b, "h").filter(col("ida") < col("idb"))

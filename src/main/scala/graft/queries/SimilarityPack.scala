@@ -124,7 +124,7 @@ object SimilarityPack extends QueryPack {
           col("nrm").as("qn"))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("rel").desc, col("nid").asc)
-      val cand = broadcast(q).crossJoin(e)
+      val cand = graft.scale.CacheRegistry.pin(broadcast(q).crossJoin(e)
         .filter(col("qid") =!= col("vec_id"))
         .select(col("qid"), col("vec_id").as("nid"), col("v"), col("nrm"),
           (dot / (col("qn") * col("nrm"))).as("rel"))
@@ -134,17 +134,15 @@ object SimilarityPack extends QueryPack {
         // k-bounded (10 rows x 10 queries): one partition, so the 4
         // greedy rounds run single-task stages instead of paying the
         // full shuffle-partition fan-out ~16 times on 100-row frames
-        .coalesce(1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sims = cand.select(col("qid"), col("nid").as("na"),
+        .coalesce(1))
+      val sims = graft.scale.CacheRegistry.pin(cand
+        .select(col("qid"), col("nid").as("na"),
           col("v").as("va"), col("nrm").as("nna"))
         .join(cand.select(col("qid"), col("nid").as("nb"),
           col("v").as("vb"), col("nrm").as("nnb")), Seq("qid"))
         .filter(col("na") =!= col("nb"))
         .select(col("qid"), col("na"), col("nb"),
-          (dotCols("va", "vb") / (col("nna") * col("nnb"))).as("sim"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.scale.CacheRegistry.track(cand, sims)
+          (dotCols("va", "vb") / (col("nna") * col("nnb"))).as("sim")))
       val seed = cand.groupBy(col("qid"))
         .agg(max_by(struct(col("nid"), (lit(0.7) * col("rel")).as("score")),
           struct(col("rel"), -col("nid"))).as("p"))

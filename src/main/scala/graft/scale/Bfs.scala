@@ -2,7 +2,6 @@ package graft.scale
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed single-source BFS (exact hop distances, fixed round
   * budget) — the fourth graph operator next to [[ConnectedComponents]],
@@ -60,19 +59,14 @@ object Bfs {
     *                 family's memo) — skips this call's own edge pin;
     *                 lifetime is then the caller's contract
     * @return (node, dist) for every node within `iters` hops of the
-    *         source, dist in [0, iters], and the handle of the
-    *         persisted intermediates, which the caller releases after
-    *         its action (the [[PageRank.runTracked]] contract)
+    *         source, dist in [0, iters]. The intermediates stay pinned
+    *         in [[CacheRegistry]] until the caller's drain after its
+    *         action
     */
-  def hopsTracked(edges: DataFrame, source: DataFrame, iters: Int,
-                  src: String = "src", dst: String = "dst",
-                  pinnedE: Option[DataFrame] = None)
-      : (DataFrame, CacheRegistry.Handle) = {
-    val persisted = Seq.newBuilder[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      persisted += df
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
+  def hops(edges: DataFrame, source: DataFrame, iters: Int,
+           src: String = "src", dst: String = "dst",
+           pinnedE: Option[DataFrame] = None): DataFrame = {
+    import CacheRegistry.pin
     val e = pinnedE.getOrElse(pin(edges.select(
       col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))))
     // Pin each round's FRESH set only (read by the next round's
@@ -94,6 +88,6 @@ object Bfs {
       dist = dist.unionByName(fresh)
       frontier = fresh
     }
-    (dist, CacheRegistry.handle(persisted.result()))
+    dist
   }
 }

@@ -1,60 +1,61 @@
 package graft.scale
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
+
 /** The query scope of persisted state: what one query pins and must
   * release once its action has run. The session scope — state built
   * once and reused by later queries — is [[MemoPool]].
   *
-  * The iterative graph operators pin intermediates and return handles
-  * ([[PageRank.runTracked]]) for the caller to release once its action
-  * has run. Direct callers use that contract. `SparkEntry.queries`
-  * CANNOT: its signature is fixed at `(SparkSession, String) =>
-  * DataFrame`, so handles have no way to ride the return value — and
-  * round 4 showed the consequence: Bench/Verify are ONE long-lived
-  * session running 160 queries, and the graph queries' unreleased pins
-  * (BFS frontiers, oriented edge lists, the sssp pair base)
-  * accumulated until LRU pressure cleared them, evicting caches other
-  * queries were still using.
+  * An operator that pins a frame for one query calls [[pin]] and
+  * returns a plain DataFrame: the pin goes into the calling thread's
+  * ledger, and the harness releases it with [[drain]] after its action
+  * (Bench after `count()`, Verify after the parquet write, specs after
+  * collect). No release travels in a return value — round 4 showed why
+  * that cannot work for `SparkEntry.queries`, whose signature is fixed
+  * at `(SparkSession, String) => DataFrame`: Bench/Verify are ONE
+  * long-lived session running every query, and the graph queries'
+  * unreleased pins (BFS frontiers, oriented edge lists, the sssp pair
+  * base) accumulated until LRU pressure cleared them, evicting caches
+  * other queries were still using; and every wrapper that dropped a
+  * returned release leaked the same way.
   *
-  * Query builders deposit handles here; each harness drains AFTER its
-  * action (Bench after `count()`, Verify after the parquet write, specs
-  * after collect). Thread-local on purpose: Verify runs queries
-  * concurrently on a pool, and a session-global drain from one thread
-  * would unpersist frames a query on another thread is mid-computing —
-  * correct (Spark recomputes) but a silent perf cliff. Builder and
-  * action always share a thread in every harness, so thread scope is
-  * exactly query scope. Drain is a no-op for never-computed persist
-  * marks (plan-only walks like PlanShapeSpec).
+  * Thread-local on purpose: Verify runs queries concurrently on a
+  * pool, and a session-global drain from one thread would unpersist
+  * frames a query on another thread is mid-computing — correct (Spark
+  * recomputes) but a silent perf cliff. Builder and action always
+  * share a thread in every harness, so thread scope is exactly query
+  * scope. Drain is a no-op for never-computed persist marks (plan-only
+  * walks like PlanShapeSpec).
   */
 object CacheRegistry {
 
-  /** Persisted state of one query, with its one release. */
-  final class Handle(free: () => Unit) {
-    def release(): Unit = free()
+  private val local = ThreadLocal.withInitial[List[() => Unit]](() => Nil)
+
+  /** Record a release for the next same-thread [[drain]]. */
+  private def deposit(release: () => Unit): Unit =
+    local.set(release :: local.get())
+
+  /** Persist `df` at MEMORY_AND_DISK until the next same-thread
+    * [[drain]]: the one way an operator pins a frame for one query. */
+  def pin(df: DataFrame): DataFrame = {
+    val pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
+    track(pinned)
+    pinned
   }
 
-  /** A handle that unpersists `dfs`. */
-  def handle(dfs: Seq[org.apache.spark.sql.DataFrame]): Handle =
-    new Handle(() => dfs.foreach(_.unpersist(blocking = false)))
-
-  private val local = ThreadLocal.withInitial[List[Handle]](() => Nil)
-
-  /** Record a handle for release at the next same-thread [[drain]]. */
-  def track(h: Handle): Unit = local.set(h :: local.get())
-
-  /** Record bare persisted frames. */
-  def track(dfs: org.apache.spark.sql.DataFrame*): Unit = track(handle(dfs))
+  /** Record frames persisted by a callee that also serves a longer-
+    * lived owner: Enrichment's `fresh` predictions, the
+    * [[Triangles.orient]] build the session memo also keeps. */
+  def track(dfs: DataFrame*): Unit =
+    deposit(() => dfs.foreach(_.unpersist(blocking = false)))
 
   /** Record localCheckpoint'ed frames — the loop-final frames that
     * outlive the query action. Their blocks live on the RDD inside
     * the LogicalRDD leaf, which Dataset.unpersist never reaches, so
     * they release via Checkpoints.free. */
-  def trackCheckpointed(dfs: org.apache.spark.sql.DataFrame*): Unit =
-    track(new Handle(() => dfs.foreach(Checkpoints.free)))
-
-  /** Record raw persisted RDDs (physical operators persisting below
-    * the Dataset layer, e.g. plans/RunningSumExec's sorted child). */
-  def trackRdd(rdds: org.apache.spark.rdd.RDD[_]*): Unit =
-    track(new Handle(() => rdds.foreach(_.unpersist(blocking = false))))
+  def trackCheckpointed(dfs: DataFrame*): Unit =
+    deposit(() => dfs.foreach(Checkpoints.free))
 
   // ---- execution-scoped RDD release (physical-operator persists) ----
   //
@@ -81,7 +82,9 @@ object CacheRegistry {
     val sc = rdd.sparkContext
     val idStr = sc.getLocalProperty(
       org.apache.spark.sql.execution.SQLExecution.EXECUTION_ID_KEY)
-    if (idStr == null) { trackRdd(rdd); return }
+    if (idStr == null) {
+      deposit(() => rdd.unpersist(blocking = false)); return
+    }
     if (listenerInstalled.add(sc.applicationId)) {
       sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onOtherEvent(
@@ -99,11 +102,11 @@ object CacheRegistry {
   }
 
   /** Release everything tracked on THIS thread since the last drain;
-    * returns the handle count (0 = nothing pinned, the common case). */
+    * returns the release count (0 = nothing pinned, the common case). */
   def drain(): Int = {
-    val hs = local.get()
+    val rs = local.get()
     local.set(Nil)
-    hs.foreach(_.release())
-    hs.size
+    rs.foreach(_())
+    rs.size
   }
 }

@@ -55,9 +55,8 @@ object ConnectedComponents {
     // round 7: a 64-chain under the default cap) — min-label callers
     // own graphs with known-small diameters; anything else should be
     // on runAdaptive/runStars
-    val labels = minLabelLoop(sym, maxIter, warnAtCap = true)
-    sym.unpersist()
-    labels
+    try minLabelLoop(sym, maxIter, warnAtCap = true)
+    finally sym.unpersist()
   }
 
   private def symmetrized(edges: DataFrame, src: String,
@@ -125,38 +124,38 @@ object ConnectedComponents {
                   dst: String = "dst", probeRounds: Int = 8,
                   maxIter: Int = 50): DataFrame = {
     val sym = symmetrized(edges, src, dst)
-    // the probe is allowed to run out: no cap warning for it
-    val labels = minLabelLoop(sym, probeRounds, warnAtCap = false)
-    val probe = Iterate.last.get()
-    if (probe.converged) {
-      sym.unpersist()
-      labels
-    } else {
-      // label-contracted edge list: (label(u), label(v)) per edge,
-      // self-edges dropped, distinct — component-count-sized, 16-byte
-      // rows; the only full-edge joins of the whole phase
-      val contracted = sym
-        .join(labels.select(col("node").as("src"), col("component").as("c1")),
-          "src")
-        .join(labels.select(col("node").as("dst"), col("component").as("c2")),
-          "dst")
-        .select(col("c1").as("src"), col("c2").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-      // sym stays persisted until runStars' EAGER init checkpoint has
-      // materialized `contracted` — unpersisting first forced the
-      // full-edge contraction joins to recompute sym from the raw scan
-      val roots = runStars(contracted, maxIter = maxIter)
-      sym.unpersist()
-      // the star phase's record, with the probe rounds added
-      val stars = Iterate.last.get()
-      Iterate.last.set(stars.copy(rounds = probe.rounds + stars.rounds))
-      labels
-        .join(roots.select(col("node").as("component"),
-          col("component").as("root")), Seq("component"), "left")
-        .select(col("node"),
-          coalesce(col("root"), col("component")).as("component"))
-    }
+    // sym is released on every exit, a failed round's included
+    try {
+      // the probe is allowed to run out: no cap warning for it
+      val labels = minLabelLoop(sym, probeRounds, warnAtCap = false)
+      val probe = Iterate.last.get()
+      if (probe.converged) labels
+      else {
+        // label-contracted edge list: (label(u), label(v)) per edge,
+        // self-edges dropped, distinct — component-count-sized, 16-byte
+        // rows; the only full-edge joins of the whole phase
+        val contracted = sym
+          .join(labels.select(col("node").as("src"), col("component").as("c1")),
+            "src")
+          .join(labels.select(col("node").as("dst"), col("component").as("c2")),
+            "dst")
+          .select(col("c1").as("src"), col("c2").as("dst"))
+          .filter(col("src") =!= col("dst"))
+          .distinct()
+        // sym stays persisted until runStars' EAGER init checkpoint has
+        // materialized `contracted` — unpersisting first forced the
+        // full-edge contraction joins to recompute sym from the raw scan
+        val roots = runStars(contracted, maxIter = maxIter)
+        // the star phase's record, with the probe rounds added
+        val stars = Iterate.last.get()
+        Iterate.last.set(stars.copy(rounds = probe.rounds + stars.rounds))
+        labels
+          .join(roots.select(col("node").as("component"),
+            col("component").as("root")), Seq("component"), "left")
+          .select(col("node"),
+            coalesce(col("root"), col("component")).as("component"))
+      }
+    } finally sym.unpersist()
   }
 
   /** Alternating large-star/small-star contraction (Kiveris et al.

@@ -60,12 +60,9 @@ object GlobalRank {
     * 16 B of key), released by the harness CacheRegistry drain; at
     * the gated scale tiers the largest such input is sf1's
     * g_histogram (1.5M rows), far inside MEMORY_AND_DISK headroom. */
-  private def key(df: DataFrame, orderCol: Column, tieBreak: Column) = {
-    val keyed = df.withColumn("__gr_v", orderCol).withColumn("__gr_k", tieBreak)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.track(keyed)
-    keyed
-  }
+  private def key(df: DataFrame, orderCol: Column, tieBreak: Column) =
+    CacheRegistry.pin(
+      df.withColumn("__gr_v", orderCol).withColumn("__gr_k", tieBreak))
 
   /** One scan: the splitter sketch (mergeable, load-balance only) and
     * the exact row count ntile arithmetic needs. */

@@ -2,7 +2,6 @@ package graft.scale
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed Lloyd's k-means on an INTEGER lattice — the clustering
   * operator of the similarity family (corpus bucketing for curriculum
@@ -41,9 +40,8 @@ object KMeans {
     * `qv` array<long>). Returns the FINAL assignment frame
     * (vec_id, cid, dist) and the final centroids; the assignment is
     * the `iters`-th, the centroids the update it produced. The
-    * quantized input is persisted for the iteration loop and its
-    * handle deposited with [[CacheRegistry]] (harness drains after
-    * the action).
+    * quantized input is pinned in [[CacheRegistry]] for the iteration
+    * loop (harness drains after the action).
     */
   /** `finalUpdate = false` skips the LAST round's centroid-update
     * aggregation (a full posexplode+groupBy over the corpus): callers
@@ -56,9 +54,7 @@ object KMeans {
                      finalUpdate: Boolean = true)
       : (DataFrame, Array[Array[Long]]) = {
     import s.implicits._
-    val q = vecs.select(col("vec_id"), col("qv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.track(q)
+    val q = CacheRegistry.pin(vecs.select(col("vec_id"), col("qv")))
     val n = q.count()
     val step = math.max(1L, n / k)
     val seedIds = (0 until k).map(_ * step)

@@ -3,7 +3,6 @@ package graft.scale
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed PageRank over an edge list in EXACT integer arithmetic —
   * the second iterative graph operator next to [[ConnectedComponents]]
@@ -83,24 +82,17 @@ object PageRank {
     *                       instead of shuffling it
     * @param pinnedEo caller-persisted [[edgesWithOutdeg]] frame; skips
     *                 this call's own edge pin
-    * @return (node, rank) — rank in micro-units; initial rank 1e6 — and
-    *         the handle of the intermediates left persisted, which the
-    *         caller releases once the result has been acted on (a
-    *         long-lived session otherwise accumulates cached partitions
-    *         until LRU pressure clears them)
+    * @return (node, rank) — rank in micro-units; initial rank 1e6. The
+    *         intermediates stay pinned in [[CacheRegistry]] until the
+    *         caller's drain after its action
     */
-  def runTracked(edges: DataFrame, iters: Int,
-                 src: String = "src", dst: String = "dst",
-                 assumeDistinct: Boolean = false,
-                 symmetric: Boolean = false,
-                 broadcastRanks: Boolean = false,
-                 pinnedEo: Option[DataFrame] = None)
-      : (DataFrame, CacheRegistry.Handle) = {
-    val persisted = Seq.newBuilder[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      persisted += df
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
+  def run(edges: DataFrame, iters: Int,
+          src: String = "src", dst: String = "dst",
+          assumeDistinct: Boolean = false,
+          symmetric: Boolean = false,
+          broadcastRanks: Boolean = false,
+          pinnedEo: Option[DataFrame] = None): DataFrame = {
+    import CacheRegistry.pin
     // Carry outdeg on the edge via a window count over src: ONE exchange
     // of the edge list (which also becomes the cache's partitioning, so
     // no per-round re-shuffle of eo), where the groupBy+self-join
@@ -158,8 +150,8 @@ object PageRank {
     }
     // NOTE: the pinned intermediates stay persisted until the caller's
     // action has run (an unpersist here would evict before the lazy
-    // plan executes) — hence the handles in the return value.
-    (ranks, CacheRegistry.handle(persisted.result()))
+    // plan executes) — hence the CacheRegistry pins.
+    ranks
   }
 
   /** PERSONALIZED PageRank: the teleport mass lands only on `seeds`
@@ -167,7 +159,7 @@ object PageRank {
     * 1000 with base(v) = 150000·|V| div |S| for v ∈ S, else 0 (total
     * teleport mass preserved vs the uniform recurrence, every
     * operation integral — same cross-engine bit-exactness contract as
-    * [[runTracked]]). THE relevance-propagation primitive: "important
+    * [[run]]). THE relevance-propagation primitive: "important
     * near THESE nodes" (seed-biased crawl frontiers, related-entity
     * ranking) rather than global authority.
     *
@@ -179,19 +171,14 @@ object PageRank {
     * frame is ever shuffled).
     *
     * Contract: `seeds` ⊆ the graph's source-node set; graph
-    * symmetrized like [[runTracked]]'s `symmetric = true` input.
+    * symmetrized like [[run]]'s `symmetric = true` input.
     */
-  def runPersonalizedTracked(edges: DataFrame, seeds: DataFrame, iters: Int,
-                             src: String = "src", dst: String = "dst",
-                             assumeDistinct: Boolean = false,
-                             broadcastRanks: Boolean = false,
-                             pinnedEo: Option[DataFrame] = None)
-      : (DataFrame, CacheRegistry.Handle) = {
-    val persisted = Seq.newBuilder[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      persisted += df
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
+  def runPersonalized(edges: DataFrame, seeds: DataFrame, iters: Int,
+                      src: String = "src", dst: String = "dst",
+                      assumeDistinct: Boolean = false,
+                      broadcastRanks: Boolean = false,
+                      pinnedEo: Option[DataFrame] = None): DataFrame = {
+    import CacheRegistry.pin
     val eo = pinnedEo.getOrElse(
       pin(edgesWithOutdeg(edges, src, dst, assumeDistinct)))
     val nodes = pin(eo.select(col("src").as("node")).distinct())
@@ -222,6 +209,6 @@ object PageRank {
         .select(col("node"),
           (coalesce(col("base"), lit(0L)) + col("fl")).as("rank"))
     }
-    (ranks, CacheRegistry.handle(persisted.result()))
+    ranks
   }
 }

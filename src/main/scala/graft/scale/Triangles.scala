@@ -35,12 +35,11 @@ import org.apache.spark.storage.StorageLevel
   * global clustering coefficient 3·triangles / wedges — computed from
   * the degree table, never enumerated.
   *
-  * The two internal persists (edge list, oriented list) follow the
-  * [[PageRank.runTracked]] handle contract: `statsTracked` returns
-  * them for the caller to release after its action. Bench/Verify run
-  * 160 queries in ONE session — fire-and-forget persists there
-  * accumulate until LRU pressure evicts caches other queries still
-  * need (the round-4 leak class).
+  * `stats` tracks its three persists (edge list, oriented list,
+  * adjacency) in [[CacheRegistry]], which the caller drains after its
+  * action. Bench/Verify run every query in ONE session — fire-and-forget
+  * persists there accumulate until LRU pressure evicts caches other
+  * queries still need (the round-4 leak class).
   */
 object Triangles {
 
@@ -50,14 +49,11 @@ object Triangles {
     * reused by every consumer (global census, DOULION sample census,
     * per-node clustering): VERDICT r9 measured the census
     * CONSTRUCTION-bound, and each family member used to rebuild this
-    * identical state. Release via [[OrientedGraph.handles]] under the
-    * [[PageRank.runTracked]] contract, or keep session-lifetime when
-    * memoized (the AnalyticsPack pattern). */
+    * identical state. The caller owns the persisted `e`, `oriented`
+    * and `adj`: [[stats]] tracks them in [[CacheRegistry]], the
+    * AnalyticsPack memo keeps them session-lifetime. */
   final case class OrientedGraph(e: DataFrame, deg: DataFrame,
-      oriented: DataFrame, adj: DataFrame) {
-    def handles: CacheRegistry.Handle =
-      CacheRegistry.handle(Seq(e, oriented, adj))
-  }
+      oriented: DataFrame, adj: DataFrame)
 
   /** Build the [[OrientedGraph]] of an undirected graph.
     *
@@ -102,16 +98,10 @@ object Triangles {
     *         clustering) — clustering = 3·tri/wedges rounded to 6dp,
     *         0.0 for wedge-free graphs
     */
-  def stats(edges: DataFrame, a: String = "a", b: String = "b"): DataFrame =
-    statsTracked(edges, a, b)._1
-
-  /** As `stats`, plus the persisted-intermediate handles (caller
-    * releases after its action — the [[PageRank.runTracked]]
-    * contract). */
-  def statsTracked(edges: DataFrame, a: String = "a", b: String = "b")
-      : (DataFrame, CacheRegistry.Handle) = {
+  def stats(edges: DataFrame, a: String = "a", b: String = "b"): DataFrame = {
     val g = orient(edges, a, b)
-    (statsFromGraph(g), g.handles)
+    CacheRegistry.track(g.e, g.oriented, g.adj)
+    statsFromGraph(g)
   }
 
   /** Census over a prebuilt (possibly shared/memoized)

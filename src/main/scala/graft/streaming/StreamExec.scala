@@ -345,6 +345,27 @@ object StreamExec {
         progress.count(_.numInputRows > 0).toLong)))
   }
 
+  /** Runs the stream `df` to the end of its input into a memory sink,
+    * records its progress, and returns the sink's final rows as a frame
+    * of the caller's session `s`. */
+  private def drainToMemory(s: SparkSession, df: DataFrame, name: String,
+                            outputMode: String,
+                            ckptDir: String = ckpt()): DataFrame = {
+    val ss = df.sparkSession
+    val qn = name + "_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    val q = df.writeStream.format("memory").queryName(qn)
+      .outputMode(outputMode)
+      .option("checkpointLocation", ckptDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    awaitAndRecord(q)
+    val out = ss.table(qn)
+    val rows = out.collect() // bounded: every caller's sink is oracle-sized
+    val schema = out.schema
+    ss.catalog.dropTempView(qn)
+    s.createDataFrame(rows.toList.asJava, schema)
+  }
+
   /** Hourly tumbling counts computed BY A STREAM: the unified
     * hourlyTypeCounts transform under complete-mode incremental
     * aggregation across 4 micro-batches, final state snapshotted from
@@ -366,19 +387,7 @@ object StreamExec {
     // defense-in-depth against a staging change
     val agg = EventStreams.hourlyTypeCounts(
       stream.filter(col("user_id") =!= SentinelUser), watermarked = false)
-    val qn = "st_tumbling_exec_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = agg.writeStream.format("memory").queryName(qn)
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q)
-    val out = ss.table(qn)
-    val rows = out.collect() // bounded: #hours x #event_types
-    val schema = out.schema
-    ss.catalog.dropTempView(qn)
-    s.createDataFrame(rows.toList.asJava, schema)
+    drainToMemory(s, agg, "st_tumbling_exec", "complete")
       .orderBy(col("window_start"), col("event_type"))
   }
 
@@ -409,7 +418,7 @@ object StreamExec {
     val qn = "st_restart_exec_" +
       java.util.UUID.randomUUID.toString.replace("-", "")
     // leg 1: start, stop after the first committed batch
-    val q1 = agg.writeStream.format("memory").queryName(qn + "_a")
+    val q1 = agg.writeStream.format("memory").queryName(qn)
       .outputMode("complete")
       .option("checkpointLocation", ckptDir)
       .trigger(Trigger.AvailableNow())
@@ -421,26 +430,16 @@ object StreamExec {
     q1.stop()
     q1.awaitTermination()
     val leg1Batches = q1.recentProgress.count(_.batchId >= 0).toLong
+    ss.catalog.dropTempView(qn)
     // leg 2: SAME checkpoint, fresh sink — resumes from committed
     // offsets/state and drains the remaining files
-    val q2 = agg.writeStream.format("memory").queryName(qn + "_b")
-      .outputMode("complete")
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q2)
-    val leg2Batches = q2.recentProgress.count(_.batchId >= 0).toLong
+    val out = drainToMemory(s, agg, "st_restart_exec", "complete", ckptDir)
+    val leg2Batches = last.get().batchDurations.count(_._1 >= 0).toLong
     last.set(last.get().copy(restartBatches = (leg1Batches, leg2Batches)))
     require(leg2Batches >= 1,
       s"restart leg processed $leg2Batches batches — the stop landed " +
         "after full commit, so the restart equality would be vacuous")
-    val out = ss.table(qn + "_b")
-    val rows = out.collect() // bounded: #hours x #event_types
-    val schema = out.schema
-    ss.catalog.dropTempView(qn + "_a")
-    ss.catalog.dropTempView(qn + "_b")
-    s.createDataFrame(rows.toList.asJava, schema)
-      .orderBy(col("window_start"), col("event_type"))
+    out.orderBy(col("window_start"), col("event_type"))
   }
 
   /** Key-hash bucket count of the CDC upsert store. A deployment knob
@@ -737,19 +736,7 @@ object StreamExec {
       .agg(count(lit(1)).as("cnt"), sum(col("event_id")).as("id_sum"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("cnt"), col("id_sum"))
-    val qn = "st_late_drop_exec_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = agg.writeStream.format("memory").queryName(qn)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q)
-    val out = ss.table(qn)
-    val rows = out.collect() // bounded: #hours x #event_types
-    val schema = out.schema
-    ss.catalog.dropTempView(qn)
-    s.createDataFrame(rows.toList.asJava, schema)
+    drainToMemory(s, agg, "st_late_drop_exec", "append")
       .filter(col("window_start") <= lit(maxTs))
       .orderBy(col("window_start"), col("event_type"))
   }
@@ -784,19 +771,7 @@ object StreamExec {
     val pairs = EventStreams.correlatedPairs(
       stagedStream(ss, dir, glob = "b*.parquet"),
       stagedStream(ss, dir, glob = "b*.parquet"))
-    val qn = "st_join_exec_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = pairs.writeStream.format("memory").queryName(qn)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q)
-    val out = ss.table(qn)
-    val rows = out.collect() // bounded: matched pairs (oracle-sized)
-    val schema = out.schema
-    ss.catalog.dropTempView(qn)
-    s.createDataFrame(rows.toList.asJava, schema)
+    drainToMemory(s, pairs, "st_join_exec", "append")
       .filter(col("user_id") =!= SentinelUser)
       .orderBy(col("eid_a"), col("eid_b"))
   }

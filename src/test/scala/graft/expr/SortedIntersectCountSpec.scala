@@ -49,9 +49,8 @@ class SortedIntersectCountSpec extends SparkSpec {
     // K4 plus a pendant and an isolated edge: C(4,3)=4 triangles
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L), (8L, 9L)).toDF("a", "b")
-    val (stats, handles) = graft.scale.Triangles.statsTracked(edges)
-    val row = stats.collect()(0)
-    handles.release()
+    val row = graft.scale.Triangles.stats(edges).collect()(0)
+    graft.scale.CacheRegistry.drain()
     assert(row.getAs[Long]("n_triangles") == 4L)
     assert(row.getAs[Long]("n_nodes") == 7L)
     assert(row.getAs[Long]("n_edges") == 8L)

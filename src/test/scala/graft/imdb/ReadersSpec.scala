@@ -2,12 +2,7 @@ package graft.imdb
 
 import graft.SparkSpec
 import org.apache.logging.log4j.LogManager
-import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.functions._
-
-import scala.jdk.CollectionConverters._
 
 /** Sources S1-S6 against the in-repo [[ImdbFixture]], written in the
   * reference's layout. Every expected count comes from the fixture's
@@ -20,24 +15,6 @@ class ReadersSpec extends SparkSpec {
 
   private def ids(df: org.apache.spark.sql.DataFrame, c: String = "tconst"): Seq[String] =
     df.select(c).collect().map(_.getString(0)).toSeq.sorted
-
-  /** Every log line (logger: message) emitted while `body` runs, caught
-    * by an appender on the root logger. */
-  private def logDuring(body: => Unit): Seq[String] = {
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val app = new AbstractAppender("readers-spec", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        lines.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
-    }
-    app.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val root = ctx.getConfiguration.getRootLogger
-    root.addAppender(app, null, null)
-    ctx.updateLoggers()
-    try body
-    finally { root.removeAppender(app.getName); ctx.updateLoggers(); app.stop() }
-    lines.asScala.toSeq
-  }
 
   test("S2: train glob loads both files, nulls from \\N sentinels and empty cells") {
     val df = Readers.loadTrain(spark, s"$dir/train-*.csv")

@@ -178,23 +178,18 @@ class RunningSumRideSpec extends SparkSpec {
       "retained blocks after the action (VERDICT r12 item 2)") {
     // Thread-local ledger deposits CANNOT work from doExecute — under
     // AQE it runs on a materialization-pool thread (this spec caught
-    // that on the first trackRdd draft). The exec instead keys the
-    // unpersist on its execution id; SparkListenerSQLExecutionEnd is
-    // async on the listener bus, so poll briefly.
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // that on a first draft that used the ledger). The exec instead
+    // keys the unpersist on its execution id;
+    // SparkListenerSQLExecutionEnd is async on the listener bus, so
+    // poll briefly.
+    val before = persistentRddIds
     val df = (1L to 3000L).map(i => (s"P${i % 4}", i, i % 2))
       .toDF("p", "k", "x").repartition(5)
     val out = RunningSumRide.withRunningSumSorted(spark, df,
       Seq($"p"), Seq($"k"), $"x", "rs")
     assert(out.count() == 3000) // Dataset action => SQL execution scope
-    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    var leftover = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    while (leftover.nonEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(100)
-      leftover = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    }
-    assert(leftover.isEmpty,
-      s"persisted child RDD(s) $leftover survived 15 s past the " +
+    assert(awaitGone(persistentRddIds -- before),
+      s"persisted child RDD(s) ${persistentRddIds -- before} survived 15 s past the " +
         "query's SQL-execution end — the CacheRegistry release hook " +
         "did not fire")
   }

@@ -59,13 +59,20 @@ class BucketedJoinSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      intercept[Exception](LayoutPack.bucketedOrdersCustomer(spark, dir))
+      // the missing table fails by name, without Spark's metadata-dir
+      // probe warning
+      val lines = logDuring {
+        val e = intercept[Exception](LayoutPack.bucketedOrdersCustomer(spark, dir))
+        assert(e.getMessage.contains(s"$dir/customer.parquet"), e.getMessage)
+      }
       val thrownAt = System.currentTimeMillis()
       assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
         "a bucketed write was still running when the build rethrew")
       Thread.sleep(2000) // an orphaned write would submit its job by now
       assert(!starts.iterator().asScala.exists(_ > thrownAt),
         "a bucketed write started a job after the build rethrew")
+      val probes = lines.filter(_.contains("FileStreamSink"))
+      assert(probes.isEmpty, probes.mkString("\n"))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

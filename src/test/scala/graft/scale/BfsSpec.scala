@@ -10,9 +10,9 @@ class BfsSpec extends SparkSpec {
                   iters: Int): Map[Long, Int] = {
     import spark.implicits._
     val sym = edges ++ edges.map(_.swap)
-    val (dist, h) = Bfs.hopsTracked(sym.toDF("src", "dst"), Seq(src0).toDF("node"), iters)
+    val dist = Bfs.hops(sym.toDF("src", "dst"), Seq(src0).toDF("node"), iters)
     try dist.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    finally h.release()
+    finally CacheRegistry.drain()
   }
 
   /** In-memory bounded BFS reference over the symmetrized graph. */

@@ -15,19 +15,6 @@ import scala.jdk.CollectionConverters._
   * accumulated dead round frames). */
 class CheckpointsSpec extends SparkSpec {
 
-  private def persistentRddIds: Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  private def awaitGone(ids: Set[Int]): Boolean = {
-    // unpersist(blocking = false) is async — poll briefly
-    val deadline = System.nanoTime() + 10_000_000_000L
-    while (System.nanoTime() < deadline) {
-      if (ids.intersect(persistentRddIds).isEmpty) return true
-      Thread.sleep(50)
-    }
-    ids.intersect(persistentRddIds).isEmpty
-  }
-
   test("free releases a localCheckpoint's blocks; values still readable before") {
     val before = persistentRddIds
     val df = spark.range(100).toDF("id").localCheckpoint()

@@ -181,4 +181,20 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(starRounds < labelRounds,
       s"star ($starRounds) did not beat min-label ($labelRounds) on the chain")
   }
+
+  test("a round that fails releases the symmetrized edge list") {
+    // a non-numeric id fails the long cast (ANSI) when round one runs;
+    // a range, not a local relation, so planning cannot fold the cast
+    val bad = spark.range(4).select(
+      when(col("id") === 3, lit("x")).otherwise(col("id").cast("string")).as("src"),
+      (col("id") + 1).as("dst"))
+    def cached = org.apache.spark.sql.graft.CachedPlans.count(spark)
+    for ((name, op) <- Seq[(String, () => Unit)](
+        "run" -> (() => ConnectedComponents.run(bad)),
+        "runAdaptive" -> (() => ConnectedComponents.runAdaptive(bad)))) {
+      val before = cached
+      intercept[Exception](op())
+      assert(cached <= before, s"$name left ${cached - before} cached plan(s) behind")
+    }
+  }
 }

@@ -9,10 +9,10 @@ class PageRankSpec extends SparkSpec {
   private def ranks(edges: org.apache.spark.sql.DataFrame, iters: Int,
                     symmetric: Boolean = false,
                     broadcastRanks: Boolean = false): Map[Long, Long] = {
-    val (r, h) = PageRank.runTracked(edges, iters, symmetric = symmetric,
+    val r = PageRank.run(edges, iters, symmetric = symmetric,
       broadcastRanks = broadcastRanks)
     try r.collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
-    finally h.release()
+    finally CacheRegistry.drain()
   }
 
   /** Undirected helper: symmetrizes, runs k rounds, returns node->rank. */
@@ -115,13 +115,13 @@ class PageRankSpec extends SparkSpec {
     // partitioning, so pre-partitioning the cache cannot feed the
     // aggregation's distribution requirement.)
     def exchanges(iters: Int): Int = {
-      val (r, h) = PageRank.runTracked(edges, iters, symmetric = true,
+      val r = PageRank.run(edges, iters, symmetric = true,
         broadcastRanks = true)
       val n = r.queryExecution.executedPlan.toString.linesIterator
         .filter(l => l.contains("Exchange") && !l.contains("Broadcast"))
         .flatMap(l => "plan_id=(\\d+)".r.findFirstMatchIn(l).map(_.group(1)))
         .toSet.size
-      h.release()
+      CacheRegistry.drain()
       n
     }
     val e2 = exchanges(2)

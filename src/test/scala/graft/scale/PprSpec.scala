@@ -22,21 +22,21 @@ class PprSpec extends SparkSpec {
     // so the personalized recurrence must collapse to the standard one
     val all = edges.select(col("src").as("node")).distinct()
     // each run released before the next pins an equal edge frame
-    val (pers, h1) = PageRank.runPersonalizedTracked(edges, all, 5)
+    val pers = PageRank.runPersonalized(edges, all, 5)
     val a = pers.orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
-    h1.release()
-    val (unif, h2) = PageRank.runTracked(edges, 5, symmetric = true)
+    CacheRegistry.drain()
+    val unif = PageRank.run(edges, 5, symmetric = true)
     val b = unif.orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
-    h2.release()
+    CacheRegistry.drain()
     assert(a.toSeq === b.toSeq)
   }
 
   test("rank concentrates at and around the seed") {
     import spark.implicits._
     val seeds = Seq(6L).toDF("node") // the far pendant tip
-    val (pers, h) = PageRank.runPersonalizedTracked(edges, seeds, 5)
+    val pers = PageRank.runPersonalized(edges, seeds, 5)
     val ranks = pers.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    h.release()
+    CacheRegistry.drain()
     // the seed's side of the graph outranks the antipode (node 3) —
     // note the seed itself need not top the list: degree-1 seed 6
     // pours its whole outflow into 5, which also drains mass from 1

@@ -47,9 +47,9 @@ class ReliableCheckpointSpec extends SparkSpec {
       .filter(col("src") =!= col("dst")).distinct()
     def runAll(): Seq[Seq[org.apache.spark.sql.Row]] = {
       val pr = {
-        val (df, h) = PageRank.runTracked(edges, iters = 3)
+        val df = PageRank.run(edges, iters = 3)
         val rows = df.orderBy(col("node")).collect().toSeq
-        h.release(); rows
+        CacheRegistry.drain(); rows
       }
       val cc = {
         val df = ConnectedComponents.run(edges)
@@ -63,9 +63,9 @@ class ReliableCheckpointSpec extends SparkSpec {
       }
       val bfs = {
         val src1 = edges.agg(min(col("src")).as("node"))
-        val (df, h) = Bfs.hopsTracked(edges, src1, iters = 4)
+        val df = Bfs.hops(edges, src1, iters = 4)
         val rows = df.orderBy(col("node")).collect().toSeq
-        h.release(); rows
+        CacheRegistry.drain(); rows
       }
       val kc = {
         val canon = edges.select(least(col("src"), col("dst")).as("a"),
