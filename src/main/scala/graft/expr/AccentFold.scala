@@ -1,6 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -40,6 +40,12 @@ case class AccentFold(child: Expression) extends UnaryExpression {
 }
 
 object AccentFold {
+  /** The Column form Scala code calls — no SQL function registration
+    * on the session needed. */
+  def apply(c: Column): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      AccentFold(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+
   /** JVM-side fold, shared by interpreted eval and generated code. */
   def fold(s: String): String =
     java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKD)
@@ -47,35 +53,12 @@ object AccentFold {
       .replaceAll("[^\\x00-\\x7F]", "")
 }
 
-/** Registration hooks for graft's custom expressions, rules and
-  * strategies.
-  *
-  * Two paths, both idiomatic Spark:
-  *  - config: `spark.sql.extensions=graft.expr.GraftExtensions`
-  *    (SparkSessionExtensions), or
-  *  - programmatic: `GraftExtensions.install(spark)` on an existing
-  *    session (what `Sessions.harness` does).
-  * After either, `accent_fold(col)` resolves in SQL and via
-  * `functions.call_function("accent_fold", col)`.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    GraftFunctions.descriptors.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => CollapseAccentFold)
-    ext.injectOptimizerRule(_ => graft.plans.Top1WindowToMaxBy)
-    // the custom whole-operator pieces too: ONE config line delivers
-    // the complete library surface (AsOf.join and the running-sum ride
-    // also self-register via experimental.extraStrategies for sessions
-    // built without it)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.RunningSumStrategy)
-  }
-}
-
+/** Installs graft's custom expressions, optimizer rules and planner
+  * strategies on a session (what `Sessions.harness` does). After it,
+  * `accent_fold(col)` and the other functions resolve in SQL text. */
 object GraftExtensions {
-  /** Programmatic twin of the config path, safe to call again on the
-    * same session: adds each rule, strategy and SQL function at most
-    * once. The rules go in
+  /** Safe to call again on the same session: adds each rule, strategy
+    * and SQL function at most once. The rules go in
     * `experimental.extraOptimizations`, not `withExtensions`: that is
     * the batch every harness has planned with, and an extension added
     * after the shared test JVM's session exists is silently ignored. */
@@ -92,8 +75,8 @@ object GraftExtensions {
 /** Optimizer rule: accent folding is idempotent, so nested applications
   * collapse to one — the shape that arises naturally when a cleaned
   * column is cleaned again by a downstream pipeline stage. Registered
-  * via SparkSessionExtensions (config path) or
-  * `spark.experimental.extraOptimizations` (programmatic). */
+  * in `spark.experimental.extraOptimizations` by
+  * [[GraftExtensions.install]]. */
 object CollapseAccentFold
     extends org.apache.spark.sql.catalyst.rules.Rule[
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
@@ -155,8 +138,6 @@ object GraftFunctions {
     d("sign_bits_sig", classOf[SignBitsSig],
       es => SignBitsSig(es.head, intArg(es(1), "sign_bits_sig"),
         intArg(es(2), "sign_bits_sig"), longArg(es(3), "sign_bits_sig"))))
-
-  private[graft] val accentFoldDescriptor: Descriptor = descriptors.head
 
   /** Registers each function the session does not already have, so
     * a second call on the same session is a no-op (no "replaced a

@@ -1,6 +1,6 @@
 package graft.imdb
 
-import graft.expr.InitCapBinary
+import graft.expr.{AccentFold, InitCapBinary}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -19,10 +19,10 @@ object Cleaning {
     * letters, documented in SURVEY §7.4. The fold drops non-ASCII and
     * the strip keeps `[a-zA-Z0-9\s]`, so the title case only ever sees
     * ASCII, where [[graft.expr.InitCapBinary]] gives `initcap`'s bytes
-    * without its ICU initialization stall.
-    * Requires GraftFunctions.register (or GraftExtensions). */
+    * without its ICU initialization stall. Both are Column forms of
+    * graft expressions, so any session runs it, registered or not. */
   def normalizeTitle(c: Column): Column = {
-    val folded = call_function("accent_fold", c)
+    val folded = AccentFold(c)
     val stripped = regexp_replace(folded, "[^a-zA-Z0-9\\s]", "")
     val cased = InitCapBinary(trim(stripped))
     when(cased === "" || c.isNull, lit(null)).otherwise(cased)

@@ -12,13 +12,18 @@ import org.apache.spark.sql.functions._
   *   cache-miss set  = left_anti join (distributed),
   *   LLM calls       = mapPartitions with internal batching (the
   *                     side-effecting row transform runs ON EXECUTORS,
-  *                     parallel across partitions, R6 batch size kept),
+  *                     parallel across partitions, R6 batch size of
+  *                     [[BatchSize]] kept),
   *   updated cache   = union + dropDuplicates.
   * The predictor is a trait so tests (and offline runs) use the
   * deterministic stub — behavior matches the reference with a fully
   * warm cache: the anti-join finds nothing and no network happens.
   */
 object Enrichment {
+
+  /** Movies per predictor call — the reference's batch size
+    * (llm_predictor.py, R6). */
+  private val BatchSize = 20
 
   /** Whitelisted genres (llm_predictor.py:33-38). */
   val MovieGenres: Seq[String] = Seq(
@@ -60,7 +65,7 @@ object Enrichment {
     * row per distinct missing tconst. Only the [[MovieMeta]] columns of
     * `movies` are read. */
   def enrich(spark: SparkSession, movies: DataFrame, cache: DataFrame,
-             predictor: GenrePredictor, batchSize: Int = 20)
+             predictor: GenrePredictor)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
     val needed = movies
@@ -76,7 +81,7 @@ object Enrichment {
         col("numVotes").cast("double"))
       .as[MovieMeta]
     val fresh = needed
-      .mapPartitions(_.grouped(batchSize).flatMap(b => predictor.predictBatch(b)))
+      .mapPartitions(_.grouped(BatchSize).flatMap(b => predictor.predictBatch(b)))
       .toDF("tconst", "genre")
       .withColumn("genre",
         when(col("genre").isInCollection(MovieGenres), col("genre"))

@@ -10,7 +10,11 @@ import org.apache.spark.sql.DataFrame
   */
 object ImdbModel {
 
-  def classifier(numTrees: Int = 300): RandomForestClassifier =
+  /** The reference's forest size (classifier_model.py:49); RunImdb's
+    * `--num-trees` overrides it. */
+  val DefaultNumTrees = 300
+
+  def classifier(numTrees: Int): RandomForestClassifier =
     new RandomForestClassifier()
       .setFeaturesCol("scaled_features").setLabelCol("label")
       .setNumTrees(numTrees)
@@ -24,7 +28,7 @@ object ImdbModel {
       .setSeed(42)
 
   /** M5: 1-stage ml.Pipeline fit, like classifier_model.py:95-112. */
-  def train(trainDf: DataFrame, numTrees: Int = 300): PipelineModel =
+  def train(trainDf: DataFrame, numTrees: Int): PipelineModel =
     new Pipeline().setStages(Array(classifier(numTrees))).fit(trainDf)
 
   /** M6: adds rawPrediction/probability/prediction.
@@ -51,11 +55,10 @@ object ImdbModel {
     }
   }
 
-  /** M7: top-k (featureName, importance), driver-side on a tiny array
+  /** M7: top-5 (featureName, importance), driver-side on a tiny array
     * (classifier_model.py:75-93). */
-  def topImportances(model: PipelineModel, names: Seq[String],
-                     k: Int = 5): Seq[(String, Double)] = {
+  def topImportances(model: PipelineModel, names: Seq[String]): Seq[(String, Double)] = {
     val rf = model.stages.last.asInstanceOf[RandomForestClassificationModel]
-    names.zip(rf.featureImportances.toArray).sortBy(-_._2).take(k)
+    names.zip(rf.featureImportances.toArray).sortBy(-_._2).take(5)
   }
 }

@@ -1,6 +1,5 @@
 package graft.imdb
 
-import graft.expr.GraftFunctions
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,8 +31,7 @@ object ImdbPipeline {
     resultsDir: String,
     extraCsv: Option[String] = None,
     modelDir: Option[String] = None,
-    numTrees: Int = 300,
-    batchSize: Int = 20,
+    numTrees: Int = ImdbModel.DefaultNumTrees,
     legacyScaler: Boolean = false,
     predictor: Enrichment.GenrePredictor = Enrichment.StubPredictor,
     setName: String = "validation",
@@ -77,7 +75,7 @@ object ImdbPipeline {
                        extra: Option[DataFrame],
                        extraMeans: Map[String, Double]): (DataFrame, DataFrame) = {
     val (genres, fresh) =
-      Enrichment.enrich(spark, movies, cache, cfg.predictor, cfg.batchSize)
+      Enrichment.enrich(spark, movies, cache, cfg.predictor)
     val merged = Metadata.joinTop(movies,
       Metadata.topEntityPerMovie(writing, "writer"),
       Metadata.topEntityPerMovie(directing, "director"))
@@ -129,7 +127,6 @@ object ImdbPipeline {
   def run(spark: SparkSession, cfg: Config,
           onStage: (String, Double) => Unit = (_, _) => (),
           tap: (String, DataFrame) => Unit = (_, _) => ()): DataFrame = {
-    GraftFunctions.register(spark)
     // Stage marks land on the pipeline's NATURAL action boundaries
     // (fits and sinks) — no extra count()s are injected, so the
     // measured run is the production run. Lazy evaluation means each

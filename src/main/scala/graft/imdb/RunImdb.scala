@@ -57,7 +57,7 @@ object RunImdb {
       resultsDir = resultsDir,
       extraCsv = flags.get("--extra-csv"),
       modelDir = flags.get("--model-dir"),
-      numTrees = numTrees.getOrElse(300),
+      numTrees = numTrees.getOrElse(ImdbModel.DefaultNumTrees),
       legacyScaler = flags.contains("--legacy-scaler"),
       setName = setName,
       modelName = "gemma3_4b",

@@ -58,9 +58,8 @@ object Tables {
   def events(spark: SparkSession, sfDir: String): DataFrame =
     normalizeEventTs(apply(spark, sfDir, "events"))
 
-  /** The normalization itself, shared with the streaming reader
-    * (EventStreams.streamFromParquet reads the same files through
-    * readStream and must apply the identical contract). */
+  /** The normalization itself, shared with every reader of the events
+    * files (a readStream over them must apply the identical contract). */
   def normalizeEventTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}

@@ -14,11 +14,30 @@ import org.apache.spark.sql.functions._
   * (Arrow/`mapInPandas`-style) UDF would see — is real and tested. In
   * Scala the idiomatic analog of a Pandas UDF is `mapPartitions` over a
   * typed Dataset with explicit internal batching: each executor thread
-  * pulls `batchSize` rows, hands the batch to the decoder (where a real
-  * implementation would call libjpeg/ffmpeg once per batch), and emits
-  * typed rows. No driver materialization anywhere.
+  * pulls [[BatchSize]] rows, hands the batch to the decoder (where a
+  * real implementation would call libjpeg/ffmpeg once per batch), and
+  * emits typed rows. No driver materialization anywhere. The per-row
+  * transforms run as plain `mapPartitions(_.map(f))` — the same
+  * partition-local iterator, with no batch to hand over.
   */
 object Media {
+
+  /** Rows per [[MediaDecoder.decodeBatch]] call. */
+  private val BatchSize = 64
+
+  /** Frame-sampling stride of [[sampleFrames]] (the mm_frame_sample
+    * oracle steps its frame range by the same 2). */
+  private val FrameStride = 2
+
+  /** Downscale factor of [[resizeJpegCensus]]: it divides the 8-px JPEG
+    * block edge, which keeps the resized census closed-form (the
+    * mm_resize_real oracle's 4-px block weights). */
+  private val ResizeFactor = 2
+
+  /** Histogram bins of [[embedGrayHistogram]] — the one definition:
+    * the mm_embed_real oracle SQL interpolates both its `range(0, N)`
+    * bucket domain and its `g // (256/N)` bucket width from it. */
+  val GrayHistogramBins = 16
 
   /** A media row: opaque payload + typed metadata, the schema a 100 TB
     * multimodal lake table would carry per modality. */
@@ -29,7 +48,7 @@ object Media {
   case class MediaFeatures(media_id: Long, n_bytes: Int, width: Int,
                            height: Int, channels: Int)
 
-  /** Batched decoder contract — one call per `batchSize` rows, the
+  /** Batched decoder contract — one call per [[BatchSize]] rows, the
     * vectorized-UDF batch shape. Implementations must be Serializable
     * (shipped to executors). */
   trait MediaDecoder extends Serializable {
@@ -64,10 +83,10 @@ object Media {
     * batching -> typed features. Narrow (no shuffle); scales with
     * partition count. */
   def decode(spark: SparkSession, media: DataFrame,
-             decoder: MediaDecoder, batchSize: Int = 64): Dataset[MediaFeatures] = {
+             decoder: MediaDecoder): Dataset[MediaFeatures] = {
     import spark.implicits._
     media.select(col("media_id"), col("kind"), col("payload")).as[MediaRow]
-      .mapPartitions(_.grouped(batchSize).flatMap(b => decoder.decodeBatch(b)))
+      .mapPartitions(_.grouped(BatchSize).flatMap(b => decoder.decodeBatch(b)))
   }
 
   /** Resized media row: payload transformed binary -> binary. */
@@ -79,13 +98,13 @@ object Media {
     * the payload to `maxBytes` — a real implementation decodes,
     * scales, re-encodes per batch behind the same signature. */
   def resize(spark: SparkSession, media: DataFrame,
-             maxBytes: Int, batchSize: Int = 64): Dataset[ResizedRow] = {
+             maxBytes: Int): Dataset[ResizedRow] = {
     import spark.implicits._
     media.select(col("media_id"), col("kind"), col("payload")).as[MediaRow]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map { m =>
+      .mapPartitions(_.map { m =>
         ResizedRow(m.media_id, m.kind, m.payload.take(maxBytes),
           m.payload.length)
-      }))
+      })
   }
 
   /** Feature extraction: payload -> fixed-dim Float embedding. STUB:
@@ -93,28 +112,27 @@ object Media {
     * values, L1-normalized) — the schema, batch shape, and typed
     * Array[Float] output column are exactly what a real CLIP/wav2vec
     * extractor produces. */
-  def extractFeatures(spark: SparkSession, media: DataFrame,
-                      batchSize: Int = 64): DataFrame = {
+  def extractFeatures(spark: SparkSession, media: DataFrame): DataFrame = {
     import spark.implicits._
     media.select(col("media_id"), col("kind"), col("payload")).as[MediaRow]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map { m =>
+      .mapPartitions(_.map { m =>
         val hist = new Array[Float](8)
         m.payload.foreach(b => hist((b & 0xff) / 32) += 1f)
         val n = math.max(m.payload.length, 1).toFloat
         (m.media_id, hist.map(_ / n))
-      }))
+      })
       .toDF("media_id", "embedding")
   }
 
   /** Frame sampling: one row per sampled frame index — the video
     * analog of explode. Frame count is derived metadata (stub: one
-    * frame per 100 bytes, every `stride`-th frame kept). */
-  def sampleFrames(media: DataFrame, stride: Int = 2): DataFrame =
+    * frame per 100 bytes, every [[FrameStride]]-th frame kept). */
+  def sampleFrames(media: DataFrame): DataFrame =
     media
       .withColumn("n_frames",
         greatest((length(col("payload")) / 100).cast("int"), lit(1)))
       .select(col("media_id"), col("kind"),
-        explode(expr(s"sequence(0, n_frames - 1, $stride)")).as("frame_no"))
+        explode(expr(s"sequence(0, n_frames - 1, $FrameStride)")).as("frame_no"))
 
   // ------------------------------------------------------------------
   // REAL codec path (round 11): one genuine JPEG encode+decode via
@@ -154,13 +172,10 @@ object Media {
     * doc_id, REALLY encoded with ImageIO at quality 1.0. Runs in the
     * same batched executor path as every other media op — bytes are
     * produced where the rows live, never on the driver. */
-  def plantJpegs(spark: SparkSession, docs: DataFrame,
-                 batchSize: Int = 64): Dataset[MediaRow] = {
+  def plantJpegs(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
     import spark.implicits._
     docs.select(col("doc_id")).as[Long]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map { id =>
-        MediaRow(id, "image", ImageIoCodec.encodeQuilt(id))
-      }))
+      .mapPartitions(_.map(id => MediaRow(id, "image", ImageIoCodec.encodeQuilt(id))))
   }
 
   /** The REAL decode operator: payload bytes -> ImageIO JPEG decode ->
@@ -168,25 +183,21 @@ object Media {
     * narrow, no shuffle. A payload ImageIO cannot parse fails LOUDLY
     * with the media_id (a curation pipeline must count corrupt files,
     * never silently skip them). */
-  def decodeJpegCensus(spark: SparkSession, media: Dataset[MediaRow],
-                       batchSize: Int = 64): Dataset[PixelCensus] = {
+  def decodeJpegCensus(spark: SparkSession,
+                       media: Dataset[MediaRow]): Dataset[PixelCensus] = {
     import spark.implicits._
-    media.mapPartitions(_.grouped(batchSize).flatMap(_.map { m =>
-      ImageIoCodec.censusOf(m.media_id, m.payload)
-    }))
+    media.mapPartitions(_.map(m => ImageIoCodec.censusOf(m.media_id, m.payload)))
   }
 
   /** The REAL resize operator: decode -> NEAREST integer downscale ->
     * census of the resized pixels, through the same batched
     * mapPartitions plumbing — narrow, no shuffle, bytes transformed
     * where the rows live. */
-  def resizeJpegCensus(spark: SparkSession, media: Dataset[MediaRow],
-                       factor: Int = 2,
-                       batchSize: Int = 64): Dataset[PixelCensus] = {
+  def resizeJpegCensus(spark: SparkSession,
+                       media: Dataset[MediaRow]): Dataset[PixelCensus] = {
     import spark.implicits._
-    media.mapPartitions(_.grouped(batchSize).flatMap(_.map { m =>
-      ImageIoCodec.resizeCensusOf(m.media_id, m.payload, factor)
-    }))
+    media.mapPartitions(_.map(m =>
+      ImageIoCodec.resizeCensusOf(m.media_id, m.payload, ResizeFactor)))
   }
 
   /** The REAL embedding operator: ImageIO decode -> gray-intensity
@@ -194,12 +205,11 @@ object Media {
     * to the stub `extractFeatures`, real pixels. Narrow, no shuffle;
     * at 100 TB the decode cost rides the scan, and only the
     * fixed-dim vector (8 x bins bytes) flows downstream. */
-  def embedGrayHistogram(spark: SparkSession, media: Dataset[MediaRow],
-                         bins: Int = 16, batchSize: Int = 64): DataFrame = {
+  def embedGrayHistogram(spark: SparkSession, media: Dataset[MediaRow]): DataFrame = {
     import spark.implicits._
-    media.mapPartitions(_.grouped(batchSize).flatMap(_.map { m =>
-      ImageIoCodec.grayHistogramOf(m.media_id, m.payload, bins)
-    })).toDF("media_id", "embedding")
+    media.mapPartitions(_.map(m =>
+      ImageIoCodec.grayHistogramOf(m.media_id, m.payload, GrayHistogramBins)))
+      .toDF("media_id", "embedding")
   }
 
   /** `javax.imageio` JPEG codec kernel (executor-side; ImageIO readers

@@ -44,8 +44,8 @@ case class AsOfJoin(left: LogicalPlan, right: LogicalPlan,
 }
 
 /** Planner strategy: AsOfJoin logical node -> AsOfJoinExec. Register
-  * via `spark.experimental.extraStrategies` (what AsOf.join does) or
-  * GraftExtensions. */
+  * via `spark.experimental.extraStrategies` (what AsOf.join and
+  * GraftExtensions.install do). */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoin(l, r, lk, rk, lts, rts, fwd, tol) =>

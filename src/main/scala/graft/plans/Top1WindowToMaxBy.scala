@@ -41,9 +41,8 @@ import org.apache.spark.sql.types._
   * torn across tied rows. Ties on the full key pick an arbitrary row,
   * exactly like `row_number` does.
   *
-  * Registered via GraftExtensions (config path) or
-  * `spark.experimental.extraOptimizations` (`GraftExtensions.install`,
-  * so every harness session) —
+  * Registered in `spark.experimental.extraOptimizations` by
+  * `GraftExtensions.install`, so on every harness session —
   * i.e. it runs in the production oracle path, where w1's
   * window-formulated query is rewritten and still hash-matches
   * DuckDB.

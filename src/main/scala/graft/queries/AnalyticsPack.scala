@@ -77,14 +77,22 @@ object AnalyticsPack extends QueryPack {
     * the per-round join frame of the rank recurrences. g_pagerank and
     * g_ppr both built the identical frame (explode of purchasePairs +
     * one src-keyed window) and each pinned its own copy per query;
-    * one session-lifetime build now serves both (r14, same trade as
-    * purchasePairs). The parity node encoding matches the two rank
-    * queries' inline construction exactly. */
+    * one session-lifetime build now serves both, and g_sssp_hops
+    * reads its (src, dst) columns (r14, same trade as purchasePairs).
+    * The memo owns the frame, so the operators never pin a copy. */
   private def purchaseEo(s: SparkSession, dir: String): DataFrame =
     graft.scale.MemoPool.getOrBuild(s, dir, "purchaseEo") {
       val pairs = purchasePairs(s, dir)
+      // parity encoding for the shared node space: customer c -> 2c,
+      // supplier s -> 2s+1 — collision-free at EVERY scale factor
+      // (a fixed offset collides once custkeys outgrow it)
       val cNode = col("c") * 2L
       val sNode = col("sp") * 2L + 1L
+      // both directions in ONE pass over the distinct pairs: the
+      // union-of-two-projections form does not canonicalize to a
+      // reused exchange, so the scan+join+distinct pipeline ran twice.
+      // The two directions also make the graph symmetric, the rank
+      // recurrences' input contract.
       val edges = pairs.select(explode(array(
           struct(cNode.as("src"), sNode.as("dst")),
           struct(sNode.as("src"), cNode.as("dst")))).as("e"))
@@ -100,7 +108,8 @@ object AnalyticsPack extends QueryPack {
       // the unsorted layout; the one-time build exchange amortizes
       // across every round. Measured rejection recorded in
       // OPTIMIZATION_r14.md.
-      graft.scale.PageRank.edgesWithOutdeg(edges, assumeDistinct = true)
+      // distinct pairs x 2 disjoint directions = already-distinct edges
+      graft.scale.PageRank.edgesWithOutdeg(edges)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }(Seq(_))
 
@@ -384,32 +393,12 @@ object AnalyticsPack extends QueryPack {
     // across engines (a double formulation differs in the last ulp
     // with partial-agg order); the DuckDB oracle unrolls the same 5
     // rounds as CTEs. Top-20 by authority, total-ordered.
-    "g_pagerank" -> ((s, dir) => {
-      // shared memoized pair base (purchasePairs) — see the cache doc
-      val pairs = purchasePairs(s, dir)
-      // parity encoding for the shared node space: customer c -> 2c,
-      // supplier s -> 2s+1 — collision-free at EVERY scale factor
-      // (a fixed offset collides once custkeys outgrow it)
-      val cNode = col("c") * 2L
-      val sNode = col("sp") * 2L + 1L
-      // both directions in ONE pass over the distinct pairs: the
-      // union-of-two-projections form does not canonicalize to a
-      // reused exchange, so the scan+join+distinct pipeline ran twice
-      val edges = pairs.select(explode(array(
-          struct(cNode.as("src"), sNode.as("dst")),
-          struct(sNode.as("src"), cNode.as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      // the bidirectional union makes every src also a dst, so the
-      // no-inflow probe job is provably empty — assert it away
-      // node set = customers + suppliers: dimension-sized, so the
-      // broadcast-ranks round (zero per-round exchanges) applies
-      graft.scale.PageRank.run(edges, 5,
-        assumeDistinct = true, symmetric = true, broadcastRanks = true,
-        pinnedEo = Some(purchaseEo(s, dir)))
+    "g_pagerank" -> ((s, dir) =>
+      // the symmetrized purchase graph's shared memoized edge frame
+      graft.scale.PageRank.run(purchaseEo(s, dir), 5)
         .select(col("node"), col("rank"),
           (col("node") % 2 === 1).as("is_supplier"))
-        .orderBy(desc("rank"), col("node")).limit(20)
-    }),
+        .orderBy(desc("rank"), col("node")).limit(20)),
 
     // Market-basket co-occurrence — the support-counting core of
     // frequent-itemset mining (FPGrowth's first pass): part pairs
@@ -558,24 +547,12 @@ object AnalyticsPack extends QueryPack {
     // oracle replays the 5 rounds bit-identically; top-20 via
     // TakeOrderedAndProject.
     "g_ppr" -> ((s, dir) => {
-      // pairs is read TWICE (edge build + seed derivation) — served
-      // from the session-lifetime purchasePairs memo shared with
-      // g_pagerank/g_sssp_hops (r14: each of the trio re-built it)
-      val pairs = purchasePairs(s, dir)
-      val cNode = col("c") * 2L
-      val sNode = col("sp") * 2L + 1L
-      val edges = pairs.select(explode(array(
-          struct(cNode.as("src"), sNode.as("dst")),
-          struct(sNode.as("src"), cNode.as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
       // seeds: customer nodes (even parity) with custkey < 25 —
-      // deterministic, present at every SF
-      val seeds = pairs.select((col("c") * 2L).as("node"))
+      // deterministic, present at every SF; read from the
+      // session-lifetime purchasePairs memo the edge frame is built on
+      val seeds = purchasePairs(s, dir).select((col("c") * 2L).as("node"))
         .filter(col("node") < 50)
-      // distinct pairs x 2 disjoint directions = already-distinct edges
-      graft.scale.PageRank.runPersonalized(edges, seeds, 5,
-        assumeDistinct = true, broadcastRanks = true,
-        pinnedEo = Some(purchaseEo(s, dir)))
+      graft.scale.PageRank.runPersonalized(purchaseEo(s, dir), seeds, 5)
         .select(col("node"), col("rank"),
           (col("node") % 2 === 1).as("is_supplier"))
         .orderBy(desc("rank"), col("node")).limit(20)
@@ -766,13 +743,9 @@ object AnalyticsPack extends QueryPack {
       val pairs = purchasePairs(s, dir)
       val cNode = col("c") * 2L
       val sNode = col("sp") * 2L + 1L
-      val edges = pairs.select(explode(array(
-          struct(cNode.as("src"), sNode.as("dst")),
-          struct(sNode.as("src"), cNode.as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
       val source = pairs.agg(min(cNode).as("node"))
-      val dist = graft.scale.Bfs.hops(edges, source, iters = 4,
-        pinnedE = Some(purchaseEo(s, dir).select(col("src"), col("dst"))))
+      val dist = graft.scale.Bfs.hops(
+        purchaseEo(s, dir).select(col("src"), col("dst")), source, iters = 4)
       val nodes = pairs
         .select(explode(array(cNode, sNode)).as("node")).distinct()
       nodes.join(dist, Seq("node"), "left")

@@ -790,7 +790,7 @@ object DedupPack extends QueryPack {
         |surv AS (SELECT min(doc_id) AS doc_id FROM all_docs GROUP BY text),
         |$exactJaccardCtes,
         |$jaccardEdges,
-        |${OracleCc.starCcRounds()},
+        |${OracleCc.starCcRounds},
         |drops AS (SELECT node AS doc_id FROM comp WHERE node <> component),
         |kept AS (
         |  SELECT s.doc_id FROM surv s
@@ -878,7 +878,7 @@ object DedupPack extends QueryPack {
     "d_cluster" ->
       s"""WITH $exactJaccardCtes,
         |$jaccardEdges,
-        |${OracleCc.starCcRounds()},
+        |${OracleCc.starCcRounds},
         |sizes AS (
         |  SELECT component, count(*) AS cluster_size
         |  FROM comp GROUP BY component)
@@ -893,7 +893,7 @@ object DedupPack extends QueryPack {
     "d_rep_quality" ->
       s"""WITH $exactJaccardCtes,
         |$jaccardEdges,
-        |${OracleCc.starCcRounds()},
+        |${OracleCc.starCcRounds},
         |qd AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |m AS (
         |  SELECT doc_id, len(w) AS n_tokens,
@@ -930,7 +930,7 @@ object DedupPack extends QueryPack {
         |edges AS MATERIALIZED (
         |  SELECT ida AS s, idb AS d FROM p
         |  UNION SELECT idb AS s, ida AS d FROM p),
-        |${OracleCc.starCcRounds()}
+        |${OracleCc.starCcRounds}
         |SELECT n.vec_id,
         |  CAST(coalesce(comp.component, n.vec_id) AS BIGINT) AS rep_id,
         |  coalesce(comp.component, n.vec_id) = n.vec_id AS is_kept
@@ -1014,7 +1014,7 @@ object DedupPack extends QueryPack {
         |edges AS MATERIALIZED (
         |  SELECT ida AS s, idb AS d FROM p2
         |  UNION SELECT idb AS s, ida AS d FROM p2),
-        |${OracleCc.starCcRounds()}
+        |${OracleCc.starCcRounds}
         |SELECT nv.vec_id,
         |  CAST(coalesce(comp.component, nv.vec_id) AS BIGINT) AS rep_id,
         |  coalesce(comp.component, nv.vec_id) = nv.vec_id AS is_kept

@@ -252,7 +252,7 @@ object GeoPack extends QueryPack {
          |        <= ${Rc * Rc}),
          |edges AS MATERIALIZED (
          |  SELECT s, d FROM p UNION SELECT d, s FROM p),
-         |${OracleCc.starCcRounds()},
+         |${OracleCc.starCcRounds},
          |sizes AS (SELECT component, CAST(count(*) AS BIGINT)
          |            AS cluster_size
          |          FROM comp GROUP BY component)

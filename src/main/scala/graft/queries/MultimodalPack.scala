@@ -15,13 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object MultimodalPack extends QueryPack {
 
-  /** Single source of truth for mm_embed_real's histogram bin count —
-    * the Spark query passes it to `embedGrayHistogram` and the oracle
-    * SQL interpolates both the `range(0, N)` bucket domain and the
-    * `g // (256/N)` bucket width from it (ADVICE r13: the two sides
-    * used to carry independent literals). */
-  private val EmbedRealBins = 16
-
   /** Memoized + persisted planted-JPEG corpus per (session, sfDir) —
     * r14 optimization round: the three real-codec rows each re-ran the
     * full ImageIO ENCODE of one JPEG per document (plantJpegs) just to
@@ -63,7 +56,7 @@ object MultimodalPack extends QueryPack {
     // decode real JPEGs. The gated surface here is the Spark plumbing
     // (schema, batch shape, stride explode), which is real.
     "mm_frame_sample" -> ((s, dir) => {
-      Media.sampleFrames(Media.mediaTable(Tables(s, dir, "documents")), stride = 2)
+      Media.sampleFrames(Media.mediaTable(Tables(s, dir, "documents")))
         .orderBy(col("media_id"), col("frame_no"))
     }),
 
@@ -138,7 +131,7 @@ object MultimodalPack extends QueryPack {
     // rounding error, or sampling misalignment shifts weighted_r_sum.
     "mm_resize_real" -> ((s, dir) => {
       val planted = plantedJpegs(s, dir) // shared memoized corpus (r14)
-      Media.resizeJpegCensus(s, planted, factor = 2).toDF()
+      Media.resizeJpegCensus(s, planted).toDF()
         .select(col("media_id"), col("width"), col("height"),
           col("channels"), col("rgb_sum"), col("weighted_r_sum"))
         .orderBy(col("media_id"))
@@ -154,7 +147,7 @@ object MultimodalPack extends QueryPack {
     // drift, channel reorder, or bucketing error shifts a count.
     "mm_embed_real" -> ((s, dir) => {
       val planted = plantedJpegs(s, dir) // shared memoized corpus (r14)
-      Media.embedGrayHistogram(s, planted, bins = EmbedRealBins)
+      Media.embedGrayHistogram(s, planted)
         .select(col("media_id"),
           posexplode(col("embedding")).as(Seq("bucket", "cnt")))
         .orderBy(col("media_id"), col("bucket"))
@@ -277,9 +270,9 @@ object MultimodalPack extends QueryPack {
     // Gray-histogram embedding from the planted grays: bucket b holds
     // 64 pixels per quilt block whose gray (the same planted-PRNG
     // expression as mm_decode_real's oracle) integer-divides to b.
-    // Bin count and bucket width interpolate from EmbedRealBins — the
-    // SAME constant the Spark side passes — so the two can't desync
-    // silently (ADVICE r13).
+    // Bin count and bucket width interpolate from
+    // Media.GrayHistogramBins — the SAME constant the Spark side uses —
+    // so the two can't desync silently (ADVICE r13).
     "mm_embed_real" ->
       s"""WITH p AS (
         |  SELECT doc_id AS media_id,
@@ -291,9 +284,9 @@ object MultimodalPack extends QueryPack {
         |     for i in range(0, w8 * h8)] AS grays
         |  FROM p)
         |SELECT media_id, CAST(b AS INT) AS bucket,
-        |  CAST(64 * len(list_filter(grays, g -> g // ${256 / EmbedRealBins} = b)) AS BIGINT)
+        |  CAST(64 * len(list_filter(grays, g -> g // ${256 / Media.GrayHistogramBins} = b)) AS BIGINT)
         |    AS cnt
-        |FROM c, range(0, $EmbedRealBins) t(b)
+        |FROM c, range(0, ${Media.GrayHistogramBins}) t(b)
         |ORDER BY media_id, bucket""".stripMargin,
 
     // ASCII fixture: unicode(char) == byte value, so the byte

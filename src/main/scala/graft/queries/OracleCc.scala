@@ -5,7 +5,7 @@ package graft.queries
   * "Connected Components in MapReduce and Beyond" — the same public
   * algorithm family the engine side's
   * [[graft.scale.ConnectedComponents.runStars]] implements), unrolled
-  * as `k` chained MATERIALIZED CTE rounds.
+  * as [[Rounds]] chained MATERIALIZED CTE rounds.
   *
   * WHY (round 10): the dedup/geo cluster oracles used a recursive-CTE
   * transitive closure (`walk(node, r)`: every node × every reachable
@@ -14,8 +14,7 @@ package graft.queries
   * component and the closure blew past any time cap (the oracle, not
   * the engine, was the quadratic). Star contraction is O(E) per round
   * and converges in O(log n) alternations; the measured sf1 giant
-  * component stabilizes in 8 rounds, so the default k=12 carries
-  * comfortable margin. Plain min-label + pointer-jump rounds were
+  * component stabilizes in 8 rounds. Plain min-label + pointer-jump rounds were
   * tried first and measured BFS-speed on the geo graph (the label
   * chase crawls across basins of local minima) — star contraction is
   * the fix, not more rounds.
@@ -26,25 +25,28 @@ package graft.queries
   * corpus outgrowing the cap fails at the SOURCE with a named cause,
   * not via the downstream hash mismatch. Rounds past convergence
   * re-scan the already-contracted stars (the alternation's fixed
-  * point), so the default k = 16 buys ~2 tiers of component-size
-  * headroom over the measured sf1 convergence (8 rounds at the 88k
-  * giant component; rounds needed grow O(log n)) at near-zero cost.
-  * Callers gating still-larger corpora pass a larger k explicitly.
+  * point), so 16 rounds buy ~2 tiers of component-size headroom over
+  * the measured sf1 convergence (8 rounds at the 88k giant component;
+  * rounds needed grow O(log n)) at near-zero cost. Gating still-larger
+  * corpora means raising the constant.
   *
   * Contract: the caller's WITH list must already define
   * `edges(s, d)` holding BOTH directions of every edge. The fragment
-  * defines CTEs e0..e`k` (+ per-round m/l/s helpers) and ends with
+  * defines CTEs e0..e16 (+ per-round m/l/s helpers) and ends with
   * `comp(node, component)` over every edge endpoint, where
   * `component` = min node id of the component (the closure's
   * semantics exactly).
   */
 object OracleCc {
 
-  def starCcRounds(k: Int = 16): String = {
+  /** Star-contraction alternations the fragment unrolls. */
+  private val Rounds = 16
+
+  def starCcRounds: String = {
     val sb = new StringBuilder
     sb ++= "e0 AS MATERIALIZED (SELECT s, d FROM edges),\n"
     sb ++= "nodes0 AS MATERIALIZED (SELECT DISTINCT s AS node FROM edges),\n"
-    for (i <- 1 to k) {
+    for (i <- 1 to Rounds) {
       val p = s"e${i - 1}"
       // large-star: every neighbor larger than u attaches to
       // m = min(N(u) ∪ {u}); small-star: every neighbor smaller than
@@ -76,12 +78,12 @@ object OracleCc {
     // source. comp's WHERE forces the check's evaluation.
     sb ++= s"""conv AS MATERIALIZED (
       |  SELECT CASE WHEN NOT EXISTS (
-      |      SELECT s, d FROM e$k EXCEPT SELECT s, d FROM e${k - 1})
+      |      SELECT s, d FROM e$Rounds EXCEPT SELECT s, d FROM e${Rounds - 1})
       |    AND NOT EXISTS (
-      |      SELECT s, d FROM e${k - 1} EXCEPT SELECT s, d FROM e$k)
-      |  THEN 1 ELSE error('starCcRounds: CC not converged after $k alternations - raise k') END AS ok),
+      |      SELECT s, d FROM e${Rounds - 1} EXCEPT SELECT s, d FROM e$Rounds)
+      |  THEN 1 ELSE error('starCcRounds: CC not converged after $Rounds alternations - raise OracleCc.Rounds') END AS ok),
       |stars AS MATERIALIZED (
-      |  SELECT s AS node, least(s, min(d)) AS component FROM e$k GROUP BY s),
+      |  SELECT s AS node, least(s, min(d)) AS component FROM e$Rounds GROUP BY s),
       |comp AS MATERIALIZED (
       |  SELECT n.node, coalesce(st.component, n.node) AS component
       |  FROM nodes0 n LEFT JOIN stars st ON st.node = n.node

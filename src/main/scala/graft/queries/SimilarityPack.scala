@@ -238,7 +238,7 @@ object SimilarityPack extends QueryPack {
     // IVF (inverted-file) ANN — the other canonical scale path from
     // the builder brief: a tiny coarse-quantizer codebook (MLlib
     // KMeans, cosine distance, seeded) partitions the corpus into
-    // inverted lists; queries probe only their nprobe nearest lists
+    // inverted lists; queries probe only their IvfProbes nearest lists
     // and exact-re-rank inside them. Same self-verifying invariant
     // row as s_knn_lsh (raw top-k depends on the learned codebook, so
     // DuckDB can't reproduce it; the recall floor is the checkable
@@ -249,7 +249,7 @@ object SimilarityPack extends QueryPack {
     }),
 
     // Product quantization — the remaining canonical ANN variant
-    // (FAISS PQ): the corpus is ENCODED as m 4-bit codes per vector,
+    // (FAISS PQ): the corpus is ENCODED as 8 4-bit codes per vector,
     // search scans the codes (64x narrower than the vectors) with
     // per-query ADC lookup tables, and the exact cosine re-rank runs
     // only on the top candidates. Same self-verifying invariant row as
@@ -502,36 +502,40 @@ object SimilarityPack extends QueryPack {
           .as("recall_ok"))
   }
 
+  /** s_knn_pq's quantizer shape: 8 subspaces of 8 dims, 16 centroids
+    * (4-bit codes) each. With the n/8 re-rank budget it holds the row's
+    * mean-recall >= 0.5 floor at every SF. */
+  private val PqSubspaces = 8
+  private val PqCentroids = 16
+
   /** Product-quantization ANN top-10 (qid, nid, cos, rk) — FAISS PQ.
     *
-    * Train: one KMeans per subspace (m subspaces x 64/m dims), each
+    * Train: one KMeans per subspace ([[PqSubspaces]] subspaces of
+    * 64/[[PqSubspaces]] dims, [[PqCentroids]] centroids each), each
     * fit on a seeded sample of the L2-NORMALIZED subvectors (PQ over
     * unit vectors makes squared-L2 ADC order equivalent to cosine
-    * order). Codebooks are tiny BY DESIGN (m x ksub x 8 doubles) and
+    * order). Codebooks are tiny BY DESIGN (8 x 16 x 8 doubles) and
     * embed as plan-time literals, like the IVF centroids and the LSH
     * hyperplanes.
     *
-    * Serve: the corpus is encoded ONCE into m small codes per vector
+    * Serve: the corpus is encoded ONCE into 8 small codes per vector
     * (8 bytes packed vs 512 bytes of float64 — the 64x scan-width
     * reduction is the whole point at 100 TB); each query precomputes
-    * its m x ksub ADC distance table BEFORE the scan (classic ADC —
-    * per candidate the distance is m table lookups, not arithmetic on
-    * vectors), the top `rerank` candidate ids per query survive, and
+    * its 8 x 16 ADC distance table BEFORE the scan (classic ADC —
+    * per candidate the distance is 8 table lookups, not arithmetic on
+    * vectors), the top n/8 (floor 64) candidate ids per query survive, and
     * the exact cosine re-rank runs on just those true vectors — the
     * sketch-prunes/exact-verifies discipline again. */
-  private[queries] def knnPqTopK(e: DataFrame, m: Int = 8, ksub: Int = 16,
-                                 rerank: Int = -1): DataFrame = {
+  private[queries] def knnPqTopK(e: DataFrame): DataFrame = {
     // Re-rank budget: on clustered real-world embeddings a small
     // constant suffices; the UNCLUSTERED gaussian fixture is ADC's
     // adversarial case (all subspace distances look alike), so the
-    // default scales as n/8 (floor 64) to hold the recall contract at
+    // budget scales as n/8 (floor 64) to hold the recall contract at
     // every SF — still an 8x cut of exact work on top of the 64x
-    // narrower candidate scan, and the knob a deployment tunes down
-    // on real data. The count() is plan-time driver work like the
-    // KMeans fits.
-    val rr = if (rerank > 0) rerank
-             else math.max(64L, e.count() / 8).toInt
-    val sub = 64 / m
+    // narrower candidate scan. The count() is plan-time driver work
+    // like the codebook fits.
+    val rr = math.max(64L, e.count() / 8).toInt
+    val sub = 64 / PqSubspaces
     val en = e.withColumn("vn", expr("transform(v, x -> x / nrm)"))
     // Codebook training is driver-local Lloyd's over ONE bounded
     // sample — exactly FAISS's train(): PQ codebooks are fit in
@@ -548,25 +552,25 @@ object SimilarityPack extends QueryPack {
       .filter(pmod(col("vec_id"), lit(2)) === 0)
       .orderBy(col("vec_id")).limit(4096)
       .collect().map(_.getSeq[Double](1).toArray)
-    val codebooks = (0 until m).map { mi =>
+    val codebooks = (0 until PqSubspaces).map { mi =>
       val pts = sample.map(v => java.util.Arrays.copyOfRange(v, mi * sub, (mi + 1) * sub))
       val rnd = new scala.util.Random(42 + mi)
       // distinct shuffled indices: no duplicate initial centers (a
       // twin center never separates under Lloyd's), no crash on a
-      // tiny sample (cycle) — and ksub zero vectors on an empty one
+      // tiny sample (cycle) — and PqCentroids zero vectors on an empty one
       val idx = rnd.shuffle(pts.indices.toVector)
-      val centers = Array.tabulate(ksub) { c =>
+      val centers = Array.tabulate(PqCentroids) { c =>
         if (idx.isEmpty) new Array[Double](sub)
         else pts(idx(c % idx.length)).clone()
       }
       var it = 0
       while (it < 5) {
-        val sums = Array.fill(ksub)(new Array[Double](sub))
-        val cnts = new Array[Int](ksub)
+        val sums = Array.fill(PqCentroids)(new Array[Double](sub))
+        val cnts = new Array[Int](PqCentroids)
         pts.foreach { p =>
           var best = 0; var bestD = Double.MaxValue
           var c = 0
-          while (c < ksub) {
+          while (c < PqCentroids) {
             var d = 0.0; var i = 0
             while (i < sub) { val t = p(i) - centers(c)(i); d += t * t; i += 1 }
             if (d < bestD) { bestD = d; best = c }
@@ -577,7 +581,7 @@ object SimilarityPack extends QueryPack {
           cnts(best) += 1
         }
         var c = 0
-        while (c < ksub) { // empty cluster keeps its previous center
+        while (c < PqCentroids) { // empty cluster keeps its previous center
           if (cnts(c) > 0) {
             var i = 0
             while (i < sub) { centers(c)(i) = sums(c)(i) / cnts(c); i += 1 }
@@ -600,7 +604,7 @@ object SimilarityPack extends QueryPack {
          |           (a, b) -> (a - b) * (a - b)),
          |  0D, (acc, x) -> acc + x))""".stripMargin
     // encode: nearest-centroid code per subspace (ties -> first index)
-    val codes = (0 until m).foldLeft(en.select(col("vec_id"), col("vn"))) {
+    val codes = (0 until PqSubspaces).foldLeft(en.select(col("vec_id"), col("vn"))) {
       (df, mi) =>
         df.withColumn(s"d$mi", expr(subDists(mi, "vn")))
           .withColumn(s"c$mi",
@@ -611,8 +615,8 @@ object SimilarityPack extends QueryPack {
     val q = en.filter(col("vec_id") < 10)
     val qTables = q.select(
       col("vec_id").as("qid") +:
-        (0 until m).map(mi => expr(subDists(mi, "vn")).as(s"dt$mi")): _*)
-    val adc = (0 until m).map(mi => s"element_at(dt$mi, c$mi + 1)")
+        (0 until PqSubspaces).map(mi => expr(subDists(mi, "vn")).as(s"dt$mi")): _*)
+    val adc = (0 until PqSubspaces).map(mi => s"element_at(dt$mi, c$mi + 1)")
       .mkString(" + ")
     import org.apache.spark.sql.expressions.Window
     val wAdc = Window.partitionBy(col("qid"))
@@ -640,28 +644,33 @@ object SimilarityPack extends QueryPack {
         col("rk"))
   }
 
+  /** s_knn_ivf's coarse quantizer: 16 inverted lists, 6 probed per
+    * query — the probe share that holds the row's mean-recall >= 0.5
+    * floor at every SF. */
+  private val IvfLists = 16
+  private val IvfProbes = 6
+
   /** IVF ANN top-10 per query (qid, nid, cos, rk).
     *
-    * Train: MLlib KMeans (k=`lists`, cosine distance, fixed seed) fits
+    * Train: MLlib KMeans (k=[[IvfLists]], cosine distance, fixed seed) fits
     * the coarse quantizer distributedly — at 100 TB you fit it on a
     * sample, which is exactly what FAISS-style IVF training does; the
-    * codebook itself is tiny BY DESIGN (lists x dim doubles), so
+    * codebook itself is tiny BY DESIGN (16 x dim doubles), so
     * embedding the centroids as plan-time literals for the query
     * probe is the intended deployment shape, not a driver bottleneck.
     *
     * Serve: corpus assignment is one model.transform (narrow, no
-    * shuffle); each query scores the codebook, probes its `nprobe`
+    * shuffle); each query scores the codebook, probes its [[IvfProbes]]
     * closest lists, and the candidate (qid, nid) id pairs — never the
     * vectors — flow through the dedup, then vectors rejoin broadcast-
     * style for the exact cosine re-rank, same discipline as the LSH
     * path. */
-  private[queries] def knnIvfTopK(e: DataFrame,
-                                  lists: Int = 16, nprobe: Int = 6): DataFrame = {
+  private[queries] def knnIvfTopK(e: DataFrame): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val fe = e.withColumn("fv", array_to_vector(col("v")))
     val model = new KMeans()
-      .setK(lists).setSeed(42).setMaxIter(5)
+      .setK(IvfLists).setSeed(42).setMaxIter(5)
       // random init: kmeans|| runs ~2 Spark jobs per init step, and a
       // coarse quantizer doesn't need init quality — 5 Lloyd
       // iterations from a seeded random start converge equivalently
@@ -681,7 +690,7 @@ object SimilarityPack extends QueryPack {
     val assigned = model.transform(fe)
       .select(col("vec_id").as("nid"), col("list"))
     val cents = model.clusterCenters.map(_.toArray)
-    // per-query cosine to every centroid -> top-nprobe lists
+    // per-query cosine to every centroid -> top-IvfProbes lists
     val centCos: Seq[Column] = cents.toIndexedSeq.map { c =>
       val cn = math.sqrt(c.map(x => x * x).sum)
       graft.expr.DotProduct(col("v"), typedLit(c.toSeq)) / (col("nrm") * lit(cn))
@@ -695,7 +704,7 @@ object SimilarityPack extends QueryPack {
       .select(col("vec_id").as("qid"),
         posexplode(array(centCos: _*)).as(Seq("list", "ccos")))
       .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
+      .filter(col("pr") <= IvfProbes)
       .select(col("qid"), col("list"))
     val candIds = broadcast(probes)
       .join(assigned, Seq("list"))

@@ -512,84 +512,44 @@ object SqlPack extends QueryPack {
     s.sql(text)
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_q3_shipping" -> ((s, dir) =>
-      sql(s, dir, Seq("customer", "orders", "lineitem"), q3)),
-    "sql_q5_local_volume" -> ((s, dir) =>
-      sql(s, dir, Seq("customer", "orders", "lineitem", "supplier",
-        "nation", "region"), q5)),
-    "sql_q10_returns" -> ((s, dir) =>
-      sql(s, dir, Seq("customer", "orders", "lineitem", "nation"), q10)),
-    "sql_exists_big_order" -> ((s, dir) =>
-      sql(s, dir, Seq("customer", "orders"), qExists)),
-    "sql_scalar_max_qty" -> ((s, dir) =>
-      sql(s, dir, Seq("orders", "lineitem"), qScalar)),
-    "sql_q18_big_volume" -> ((s, dir) =>
-      sql(s, dir, Seq("customer", "orders", "lineitem"), q18)),
-    "sql_q12_priority" -> ((s, dir) =>
-      sql(s, dir, Seq("orders", "lineitem"), q12)),
-    "sql_q14_promo" -> ((s, dir) =>
-      sql(s, dir, Seq("lineitem", "part"), q14)),
-    "sql_q4_late_orders" -> ((s, dir) =>
-      sql(s, dir, Seq("orders", "lineitem"), q4)),
-    "sql_q6_forecast" -> ((s, dir) =>
-      sql(s, dir, Seq("lineitem"), q6)),
-    "sql_q7_volume_shipping" -> ((s, dir) =>
-      sql(s, dir, Seq("supplier", "lineitem", "orders", "customer",
-        "nation"), q7)),
-    "sql_q8_market_share" -> ((s, dir) =>
-      sql(s, dir, Seq("part", "lineitem", "supplier", "orders", "customer",
-        "nation", "region"), q8)),
-    "sql_q9_profit" -> ((s, dir) =>
-      sql(s, dir, Seq("part", "lineitem", "supplier", "orders", "nation"), q9)),
-    "sql_q13_custdist" -> ((s, dir) =>
-      sql(s, dir, Seq("customer", "orders"), q13)),
-    "sql_q15_top_supplier" -> ((s, dir) =>
-      sql(s, dir, Seq("supplier", "lineitem"), q15)),
-    "sql_q17_small_qty" -> ((s, dir) =>
-      sql(s, dir, Seq("lineitem", "part"), q17)),
-    "sql_q19_or_predicates" -> ((s, dir) =>
-      sql(s, dir, Seq("lineitem", "part"), q19)),
-    "sql_q22_dormant" -> ((s, dir) =>
-      sql(s, dir, Seq("customer", "orders"), q22)),
-    "sql_lateral_topk" -> ((s, dir) =>
-      sql(s, dir, Seq("nation", "supplier"), qLateral)),
-    "sql_q2_min_cost" -> ((s, dir) =>
-      sql(s, dir, Seq("part", "supplier", "lineitem", "nation", "region"), q2)),
-    "sql_q11_important" -> ((s, dir) =>
-      sql(s, dir, Seq("lineitem", "supplier", "nation"), q11)),
-    "sql_q16_supplier_cnt" -> ((s, dir) =>
-      sql(s, dir, Seq("lineitem", "part", "supplier"), q16)),
-    "sql_q20_promotion" -> ((s, dir) =>
-      sql(s, dir, Seq("supplier", "lineitem", "part"), q20)),
-    "sql_q21_waiting" -> ((s, dir) =>
-      sql(s, dir, Seq("supplier", "lineitem", "orders"), q21))
+  /** Every row once: (name, the tables its SQL reads, registered as
+    * temp views, and the SQL text both engines run). */
+  private val rows: Seq[(String, Seq[String], String)] = Seq(
+    ("sql_q3_shipping", Seq("customer", "orders", "lineitem"), q3),
+    ("sql_q5_local_volume",
+      Seq("customer", "orders", "lineitem", "supplier", "nation", "region"), q5),
+    ("sql_q10_returns", Seq("customer", "orders", "lineitem", "nation"), q10),
+    ("sql_exists_big_order", Seq("customer", "orders"), qExists),
+    ("sql_scalar_max_qty", Seq("orders", "lineitem"), qScalar),
+    ("sql_q18_big_volume", Seq("customer", "orders", "lineitem"), q18),
+    ("sql_q12_priority", Seq("orders", "lineitem"), q12),
+    ("sql_q14_promo", Seq("lineitem", "part"), q14),
+    ("sql_q4_late_orders", Seq("orders", "lineitem"), q4),
+    ("sql_q6_forecast", Seq("lineitem"), q6),
+    ("sql_q7_volume_shipping",
+      Seq("supplier", "lineitem", "orders", "customer", "nation"), q7),
+    ("sql_q8_market_share",
+      Seq("part", "lineitem", "supplier", "orders", "customer", "nation",
+        "region"), q8),
+    ("sql_q9_profit", Seq("part", "lineitem", "supplier", "orders", "nation"), q9),
+    ("sql_q13_custdist", Seq("customer", "orders"), q13),
+    ("sql_q15_top_supplier", Seq("supplier", "lineitem"), q15),
+    ("sql_q17_small_qty", Seq("lineitem", "part"), q17),
+    ("sql_q19_or_predicates", Seq("lineitem", "part"), q19),
+    ("sql_q22_dormant", Seq("customer", "orders"), q22),
+    ("sql_lateral_topk", Seq("nation", "supplier"), qLateral),
+    ("sql_q2_min_cost", Seq("part", "supplier", "lineitem", "nation", "region"), q2),
+    ("sql_q11_important", Seq("lineitem", "supplier", "nation"), q11),
+    ("sql_q16_supplier_cnt", Seq("lineitem", "part", "supplier"), q16),
+    ("sql_q20_promotion", Seq("supplier", "lineitem", "part"), q20),
+    ("sql_q21_waiting", Seq("supplier", "lineitem", "orders"), q21)
   )
 
-  override def oracleSql: Map[String, String] = Map(
-    "sql_q3_shipping" -> q3,
-    "sql_q5_local_volume" -> q5,
-    "sql_q10_returns" -> q10,
-    "sql_exists_big_order" -> qExists,
-    "sql_scalar_max_qty" -> qScalar,
-    "sql_q18_big_volume" -> q18,
-    "sql_q12_priority" -> q12,
-    "sql_q14_promo" -> q14,
-    "sql_q4_late_orders" -> q4,
-    "sql_q6_forecast" -> q6,
-    "sql_q7_volume_shipping" -> q7,
-    "sql_q8_market_share" -> q8,
-    "sql_q9_profit" -> q9,
-    "sql_q13_custdist" -> q13,
-    "sql_q15_top_supplier" -> q15,
-    "sql_q17_small_qty" -> q17,
-    "sql_q19_or_predicates" -> q19,
-    "sql_q22_dormant" -> q22,
-    "sql_lateral_topk" -> qLateral,
-    "sql_q2_min_cost" -> q2,
-    "sql_q11_important" -> q11,
-    "sql_q16_supplier_cnt" -> q16,
-    "sql_q20_promotion" -> q20,
-    "sql_q21_waiting" -> q21
-  )
+  override def queries: Map[String, (SparkSession, String) => DataFrame] =
+    rows.map { case (name, tables, text) =>
+      name -> ((s: SparkSession, dir: String) => sql(s, dir, tables, text))
+    }.toMap
+
+  override def oracleSql: Map[String, String] =
+    rows.map { case (name, _, text) => name -> text }.toMap
 }

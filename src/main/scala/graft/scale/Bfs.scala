@@ -46,29 +46,23 @@ object Bfs {
   /** Hop distance from `source` to every reachable node within
     * `iters` hops.
     *
-    * @param edges  directed edge list with integral `src`/`dst`
-    *               columns (symmetrize for undirected graphs);
-    *               duplicate edges are harmless (the per-round
-    *               distinct collapses them)
+    * @param e      the caller's (src: long, dst: long) edge frame
+    *               (symmetrize for undirected graphs; duplicate edges
+    *               are harmless, the per-round min-agg collapses them).
+    *               Every round re-reads it, so the caller persists it
+    *               and owns its lifetime (the purchase-graph family
+    *               shares one session memo across queries)
     * @param source one-row frame with a `node` column — kept as a
     *               frame (not a driver-side scalar) so seed derivation
     *               stays inside the lazy plan
     * @param iters  fixed number of expansion rounds
-    * @param pinnedE caller-persisted (src: long, dst: long) edge frame
-    *                 shared across queries (r14: the purchase-graph
-    *                 family's memo) — skips this call's own edge pin;
-    *                 lifetime is then the caller's contract
     * @return (node, dist) for every node within `iters` hops of the
     *         source, dist in [0, iters]. The intermediates stay pinned
     *         in [[CacheRegistry]] until the caller's drain after its
     *         action
     */
-  def hops(edges: DataFrame, source: DataFrame, iters: Int,
-           src: String = "src", dst: String = "dst",
-           pinnedE: Option[DataFrame] = None): DataFrame = {
+  def hops(e: DataFrame, source: DataFrame, iters: Int): DataFrame = {
     import CacheRegistry.pin
-    val e = pinnedE.getOrElse(pin(edges.select(
-      col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))))
     // Pin each round's FRESH set only (read by the next round's
     // expansion and every later round's min-agg); `dist` stays a lazy
     // union over the pinned pieces — round 4 additionally pinned every

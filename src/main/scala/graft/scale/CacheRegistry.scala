@@ -44,9 +44,9 @@ object CacheRegistry {
     pinned
   }
 
-  /** Record frames persisted by a callee that also serves a longer-
-    * lived owner: Enrichment's `fresh` predictions, the
-    * [[Triangles.orient]] build the session memo also keeps. */
+  /** Record frames a callee persisted for its own reasons, so the
+    * drain releases them: Enrichment's `fresh` predictions, which
+    * [[graft.imdb.ImdbPipeline.run]]'s returned frame still reads. */
   def track(dfs: DataFrame*): Unit =
     deposit(() => dfs.foreach(_.unpersist(blocking = false)))
 

@@ -67,30 +67,11 @@ object Checkpoints {
     else df.localCheckpoint()
   }
 
-  // Unpersisting a locally-checkpointed RDD logs a per-RDD WARN
-  // ("lineage has been truncated and cannot be recomputed") — a real
-  // hazard for live frames, pure noise under this object's
-  // dead-frames-only contract. Suppress it ONLY around our own
-  // unpersist call (the message is emitted synchronously inside
-  // RDD.unpersist on the calling thread) and undo the suppression
-  // after, so the warning still fires for frames anyone else
-  // unpersists by mistake — permanently silencing the logger JVM-wide
-  // hid exactly the hazard it flags (VERDICT r8 item 5). The undo
-  // distinguishes "logger had an explicit level" (restore it) from
-  // "level was inherited" (REMOVE the config we created — restoring
-  // the effective level as an explicit one would pin the logger and
-  // detach it from later root-level changes like setLogLevel).
-  // Honest limitation: log4j levels are JVM-global, so a truncated-
-  // lineage WARN from a DIFFERENT thread landing inside this
-  // microseconds-wide window is suppressed too — scoping to the
-  // message would need a custom filter; the window is one
-  // non-blocking unpersist call. `free` runs once per ROUND of an
-  // iterative operator, never per row, so the Configurator calls are
-  // off the hot path; calls are serialized so concurrent frees cannot
-  // restore a stale level.
-  private val lineageLogger = "org.apache.spark.rdd.MapPartitionsRDD"
-  private val freeLock = new Object
-
+  /** Releases a dead lineage cut: deletes a reliable checkpoint's
+    * files, or drops a local checkpoint's blocks through
+    * [[org.apache.spark.graft.DropBlocks]], which logs nothing and
+    * touches no logger: `RDD.unpersist` would log a truncated-lineage
+    * WARN per round for a frame nothing reads again. */
   def free(df: DataFrame): Unit = df.queryExecution.logical match {
     case l: org.apache.spark.sql.execution.LogicalRDD
         if l.rdd.getCheckpointFile.isDefined =>
@@ -107,34 +88,7 @@ object Checkpoints {
         System.err.println(s"[checkpoints] reliable-ckpt cleanup of $p failed: $e")
       }
     case l: org.apache.spark.sql.execution.LogicalRDD =>
-      freeLock.synchronized {
-        val ctx = org.apache.logging.log4j.LogManager.getContext(false)
-          .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
-        val ownConfig = ctx.getConfiguration.getLoggerConfig(lineageLogger)
-        val hadExplicit = ownConfig.getName == lineageLogger
-        // getExplicitLevel, not getLevel: getLevel resolves the
-        // EFFECTIVE (inherited, never-null) level, which would pin an
-        // explicit-config/inherited-level logger to an explicit level
-        // on restore and detach it from later root changes (review
-        // r10) — explicit null round-trips as null through setLevel
-        val prev = if (hadExplicit) ownConfig.getExplicitLevel else null
-        org.apache.logging.log4j.core.config.Configurator.setLevel(
-          lineageLogger, org.apache.logging.log4j.Level.ERROR)
-        try l.rdd.unpersist(blocking = false)
-        finally {
-          if (hadExplicit)
-            // restore on the EXACT pre-existing config object:
-            // LoggerConfig.setLevel(null) puts back "explicit config,
-            // inherited level" — Configurator.setLevel(name, null)
-            // does not guarantee that (ADVICE r9) — and setLevel(prev)
-            // puts back the explicit level; one path covers both
-            { ownConfig.setLevel(prev); ctx.updateLoggers() }
-          else {
-            ctx.getConfiguration.removeLogger(lineageLogger)
-            ctx.updateLoggers()
-          }
-        }
-      }
+      org.apache.spark.graft.DropBlocks(l.rdd)
     case _ => () // not a checkpoint leaf — nothing to free
   }
 }

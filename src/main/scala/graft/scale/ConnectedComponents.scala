@@ -48,9 +48,8 @@ object ConnectedComponents {
     * @return (node, component) — component = min node id reachable;
     *         every node incident to an edge appears exactly once
     */
-  def run(edges: DataFrame, src: String = "src", dst: String = "dst",
-          maxIter: Int = 50): DataFrame = {
-    val sym = symmetrized(edges, src, dst)
+  def run(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+    val sym = symmetrized(edges)
     // a diameter > maxIter graph exits with PARTIAL labels (discovered
     // round 7: a 64-chain under the default cap) — min-label callers
     // own graphs with known-small diameters; anything else should be
@@ -59,10 +58,9 @@ object ConnectedComponents {
     finally sym.unpersist()
   }
 
-  private def symmetrized(edges: DataFrame, src: String,
-                          dst: String): DataFrame = {
-    val e = edges.select(col(src).cast("long").as("src"),
-      col(dst).cast("long").as("dst"))
+  private def symmetrized(edges: DataFrame): DataFrame = {
+    val e = edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"))
     // symmetrize once; propagation then only needs one join direction
     e.union(e.select(col("dst"), col("src")))
       .distinct()
@@ -120,10 +118,9 @@ object ConnectedComponents {
     * 4-round probe made adaptive ~2x min-label wall; at 8 the probe
     * converges and adaptive == min-label exactly).
     */
-  def runAdaptive(edges: DataFrame, src: String = "src",
-                  dst: String = "dst", probeRounds: Int = 8,
+  def runAdaptive(edges: DataFrame, probeRounds: Int = 8,
                   maxIter: Int = 50): DataFrame = {
-    val sym = symmetrized(edges, src, dst)
+    val sym = symmetrized(edges)
     // sym is released on every exit, a failed round's included
     try {
       // the probe is allowed to run out: no cap warning for it
@@ -178,10 +175,9 @@ object ConnectedComponents {
     * are self-loops still appear in the output (joined back at the
     * end), matching [[run]]'s every-incident-node contract.
     */
-  def runStars(edges: DataFrame, src: String = "src", dst: String = "dst",
-               maxIter: Int = 50): DataFrame = {
-    val e0 = edges.select(col(src).cast("long").as("s"),
-      col(dst).cast("long").as("d"))
+  def runStars(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+    val e0 = edges.select(col("src").cast("long").as("s"),
+      col("dst").cast("long").as("d"))
     // EAGERLY checkpointed: the node list feeds only the FINAL output
     // join, which the caller's action evaluates long after this call —
     // left lazy it would re-derive the whole input construction (for

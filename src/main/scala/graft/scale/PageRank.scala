@@ -31,15 +31,15 @@ import org.apache.spark.sql.functions._
   *
   * Scale mechanics (mirrors ConnectedComponents): per-round state is
   * one 16-byte (node, rank) row per vertex; the edge list with
-  * pre-joined out-degrees is persisted once and re-joined each round
+  * pre-joined out-degrees ([[edgesWithOutdeg]]) is built and persisted
+  * ONCE by the caller, which owns its lifetime (the purchase-graph
+  * family memoizes it for the session), and is re-joined each round
   * (one shuffle keyed on dst, map-side combinable bigint sum).
   * Unlike the CC loop (unbounded rounds, convergence-tested), a small
   * FIXED k chains all rounds into ONE lazily-planned job — no per-round
   * materialization barrier; the persisted edge list is computed in the
-  * first round's stages and served from cache in the rest, and AQE
-  * sizes each round's join from the previous stage's runtime stats
-  * (the node-state side broadcasts here; at billion-node scale it
-  * stays a shuffled join and the edge partitioning is reused). Warm
+  * first round's stages and served from cache in the rest, and the
+  * node-state side of each round's join is broadcast (see [[run]]). Warm
   * repeats at sf0.1 run ~30% faster fused than with per-round
   * `localCheckpoint`; cold runs are scheduling-dominated either way
   * (~12-15 AQE stages for 5 rounds). Plan depth (and stage-retry
@@ -49,50 +49,17 @@ import org.apache.spark.sql.functions._
 object PageRank {
 
   /** The edge list with per-src out-degree attached — the frame every
-    * rank round re-joins. Exposed so callers sharing ONE graph across
-    * several rank queries (the purchase-graph family) can build it
-    * once, persist it themselves, and pass it via `pinnedEo` (r14
-    * optimization round); lifetime is then the CALLER's contract. */
-  def edgesWithOutdeg(edges: DataFrame, src: String = "src",
-                      dst: String = "dst",
-                      assumeDistinct: Boolean = false): DataFrame = {
-    val e0 = edges
-      .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
-    val e = if (assumeDistinct) e0 else e0.distinct()
-    e.withColumn("od", count(lit(1)).over(Window.partitionBy(col("src"))))
-  }
-
-  /** @param edges directed edge list with integral `src`/`dst` node id
-    *              columns (duplicates are collapsed); every node must
-    *              have at least one outgoing edge (symmetrize the input
-    *              for undirected graphs — that also removes dangling
-    *              nodes, which this exact-integer formulation does not
-    *              redistribute)
-    * @param iters fixed number of update rounds
-    * @param assumeDistinct skip the defensive edge dedup when the
-    *                       caller's construction already guarantees
-    *                       distinct (src, dst) pairs — saves one full
-    *                       shuffle of the edge list
-    * @param symmetric caller asserts every source also appears as a
-    *                  destination (true for any symmetrized/undirected
-    *                  graph) — skips the eager no-inflow probe, which
-    *                  is otherwise a full dst-distinct + anti-join job
-    *                  run before the rank rounds even start
-    * @param broadcastRanks broadcast the node-rank side of each round
-    *                       instead of shuffling it
-    * @param pinnedEo caller-persisted [[edgesWithOutdeg]] frame; skips
-    *                 this call's own edge pin
-    * @return (node, rank) — rank in micro-units; initial rank 1e6. The
-    *         intermediates stay pinned in [[CacheRegistry]] until the
-    *         caller's drain after its action
+    * rank round re-joins, built by the CALLER: callers sharing ONE
+    * graph across several rank queries (the purchase-graph family)
+    * build it once, persist it, and pass it to [[run]] and
+    * [[runPersonalized]]; its lifetime is the caller's contract.
+    *
+    * @param edges distinct (src: long, dst: long) edge rows — multi-edges
+    *              would carry extra weight, so the caller's construction
+    *              must guarantee distinctness (a groupBy-derived pair
+    *              list does so for free)
     */
-  def run(edges: DataFrame, iters: Int,
-          src: String = "src", dst: String = "dst",
-          assumeDistinct: Boolean = false,
-          symmetric: Boolean = false,
-          broadcastRanks: Boolean = false,
-          pinnedEo: Option[DataFrame] = None): DataFrame = {
-    import CacheRegistry.pin
+  def edgesWithOutdeg(edges: DataFrame): DataFrame =
     // Carry outdeg on the edge via a window count over src: ONE exchange
     // of the edge list (which also becomes the cache's partitioning, so
     // no per-round re-shuffle of eo), where the groupBy+self-join
@@ -101,56 +68,44 @@ object PageRank {
     // all-rows-of-a-src-in-one-task placement adds no skew hazard the
     // per-round join didn't already have — the rank join shuffles by
     // src identically.
-    //
-    // broadcastRanks (GraphFrames' broadcast aggregateMessages mode):
-    // when the NODE SET is dimension-sized (true for the purchase
-    // graph's customers+suppliers; NOT for web-scale node sets — the
-    // default stays the shuffle path), the per-round rank frame is
-    // BROADCAST instead of shuffled: the rank join becomes a
-    // broadcast hash join over the edge cache with no sort and no
-    // rank-side exchange. The per-round contribution aggregation
-    // still pays its ONE edge-keyed exchange — pre-partitioning the
-    // cache by dst cannot remove it, because an AQE-planned cached
-    // relation does not propagate its output partitioning
-    // (PageRankSpec pins the exactly-one-exchange-per-round shape).
-    // The recurrence and results are identical either way.
-    val eo = pinnedEo.getOrElse(
-      pin(edgesWithOutdeg(edges, src, dst, assumeDistinct)))
+    edges.withColumn("od", count(lit(1)).over(Window.partitionBy(col("src"))))
+
+  /** @param eo the caller's [[edgesWithOutdeg]] frame of a SYMMETRIC
+    *           graph: every source also appears as a destination
+    *           (symmetrize undirected input; that also removes dangling
+    *           nodes, which this exact-integer formulation does not
+    *           redistribute, and sources without in-edges, which would
+    *           drop out of the output)
+    * @param iters fixed number of update rounds
+    * @return (node, rank) — rank in micro-units; initial rank 1e6. The
+    *         node set stays pinned in [[CacheRegistry]] until the
+    *         caller's drain after its action
+    */
+  def run(eo: DataFrame, iters: Int): DataFrame = {
     // Node set read FROM the edge cache (partitioned by src, so the
     // distinct is exchange-free) — deriving it from the raw input
     // upstream of the cache re-ran the full scans once per action.
-    val nodes = pin(eo.select(col("src").as("node")).distinct())
-    // Nodes with out-edges but NO in-edges never receive contributions:
-    // dropping them (what a bare inner join + groupBy does) silently
-    // removes them from the output AND loses their outgoing flow from
-    // round 2 on — wrong ranks on directed graphs. The set is STATIC,
-    // so it is computed once; from round 1 onward each such node sits
-    // at the teleport floor, so a constant-rank union restores it each
-    // round at node-set (not edge-set) cost. Symmetric/undirected
-    // graphs have an empty set and skip the union entirely. (Under the
-    // documented contract dst ⊆ src, so the received-keys set is
-    // always a subset of `nodes` and the union is exactly the
-    // left-join-with-floor formulation.)
-    val noInflow =
-      if (symmetric) nodes.limit(0).withColumn("rank", lit(150000L))
-      else pin(nodes
-        .join(eo.select(col("dst").as("node")).distinct(), Seq("node"),
-          "left_anti")
-        .withColumn("rank", lit(150000L)))
-    val hasNoInflow = !symmetric && noInflow.limit(1).count() > 0
+    val nodes = CacheRegistry.pin(eo.select(col("src").as("node")).distinct())
     var ranks = nodes.withColumn("rank", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val rsrc = ranks.withColumnRenamed("node", "src")
-      val received = eo
-        .join(if (broadcastRanks) broadcast(rsrc) else rsrc, "src")
-        .select(col("dst").as("node"), expr("rank div od").as("c"))
-        .groupBy(col("node"))
-        .agg((lit(150000L) + expr("(850 * sum(c)) div 1000")).as("rank"))
-      ranks = if (hasNoInflow) received.unionByName(noInflow) else received
-    }
-    // NOTE: the pinned intermediates stay persisted until the caller's
+    // The rank side is BROADCAST (GraphFrames' broadcast
+    // aggregateMessages mode): every caller's node set is
+    // dimension-sized (the purchase graph's customers+suppliers), so
+    // the rank join is a broadcast hash join over the edge cache with
+    // no sort and no rank-side exchange. The per-round contribution
+    // aggregation still pays its ONE edge-keyed exchange —
+    // pre-partitioning the cache by dst cannot remove it, because an
+    // AQE-planned cached relation does not propagate its output
+    // partitioning (PageRankSpec pins the exactly-one-exchange-per-
+    // round shape). A web-scale node set would need a shuffled rank
+    // join instead.
+    for (_ <- 1 to iters) ranks = eo
+      .join(broadcast(ranks.withColumnRenamed("node", "src")), "src")
+      .select(col("dst").as("node"), expr("rank div od").as("c"))
+      .groupBy(col("node"))
+      .agg((lit(150000L) + expr("(850 * sum(c)) div 1000")).as("rank"))
+    // NOTE: the pinned node set stays persisted until the caller's
     // action has run (an unpersist here would evict before the lazy
-    // plan executes) — hence the CacheRegistry pins.
+    // plan executes) — hence the CacheRegistry pin.
     ranks
   }
 
@@ -166,21 +121,15 @@ object PageRank {
     * Same scale mechanics as the uniform loop. Two extra bounded
     * actions up front (|V| and |S| counts — node-sized aggregates);
     * the per-round shape gains only a BROADCAST left join against the
-    * seed-base frame (base is zero off-seed, and the symmetrized
-    * input guarantees every node a flow row, so no full-node base
-    * frame is ever shuffled).
+    * seed-base frame (base is zero off-seed, and the symmetric input
+    * guarantees every node a flow row, so no full-node base frame is
+    * ever shuffled).
     *
-    * Contract: `seeds` ⊆ the graph's source-node set; graph
-    * symmetrized like [[run]]'s `symmetric = true` input.
+    * Contract: `eo` as in [[run]]; `seeds` ⊆ the graph's source-node
+    * set.
     */
-  def runPersonalized(edges: DataFrame, seeds: DataFrame, iters: Int,
-                      src: String = "src", dst: String = "dst",
-                      assumeDistinct: Boolean = false,
-                      broadcastRanks: Boolean = false,
-                      pinnedEo: Option[DataFrame] = None): DataFrame = {
+  def runPersonalized(eo: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     import CacheRegistry.pin
-    val eo = pinnedEo.getOrElse(
-      pin(edgesWithOutdeg(edges, src, dst, assumeDistinct)))
     val nodes = pin(eo.select(col("src").as("node")).distinct())
     val sd = pin(seeds.select(col("node").cast("long").as("node")).distinct())
     val nNodes = nodes.count()
@@ -199,9 +148,7 @@ object PageRank {
     val seedBase = broadcast(sd.withColumn("base", lit(perSeed)))
     var ranks = nodes.withColumn("rank", lit(1000000L))
     for (_ <- 1 to iters) {
-      val rsrc = ranks.withColumnRenamed("node", "src")
-      ranks = eo
-        .join(if (broadcastRanks) broadcast(rsrc) else rsrc, "src")
+      ranks = eo.join(broadcast(ranks.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node"), expr("rank div od").as("c"))
         .groupBy(col("node"))
         .agg(expr("(850 * sum(c)) div 1000").as("fl"))

@@ -27,24 +27,14 @@ import org.apache.spark.sql.functions._
   */
 object SkewJoin {
 
-  /** Join types that preserve multiplicity under dim-side replication:
-    * every fact row matches at most its own salt replica, and no
-    * unmatched DIM row is ever emitted. right/full outer would emit
-    * each unmatched dim row once per replica — refuse them. */
-  private val SupportedJoinTypes = Set(
-    "inner", "cross", "left", "left_outer", "leftouter",
-    "left_semi", "leftsemi", "semi", "left_anti", "leftanti", "anti")
-
-  /** @param fact probe side (large, possibly skewed on `key`)
+  /** INNER equi-join of `fact` and `dim` on `key`.
+    *
+    * @param fact probe side (large, possibly skewed on `key`)
     * @param dim  build side (replicated `salt` times — keep it the
     *             smaller input)
     */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String, salt: Int,
-                 joinType: String = "inner"): DataFrame = {
+  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String, salt: Int): DataFrame = {
     require(salt > 0, "salt must be positive")
-    require(SupportedJoinTypes.contains(joinType.toLowerCase),
-      s"saltedJoin supports inner/left/left_semi/left_anti, got '$joinType' " +
-        "(right/full outer would duplicate unmatched dim rows per replica)")
     // deterministic spread: hash ALL fact columns, so rows sharing a
     // hot key but differing anywhere else fan out across salts — and a
     // task retry recomputes the identical salt
@@ -66,7 +56,7 @@ object SkewJoin {
     saltedFact
       .join(saltedDim.hint("merge"),
         saltedFact(key) === saltedDim(key) &&
-          saltedFact("__salt") === saltedDim("__salt"), joinType)
+          saltedFact("__salt") === saltedDim("__salt"))
       .drop(saltedDim(key)).drop("__salt")
   }
 }

@@ -35,11 +35,11 @@ import org.apache.spark.storage.StorageLevel
   * global clustering coefficient 3·triangles / wedges — computed from
   * the degree table, never enumerated.
   *
-  * `stats` tracks its three persists (edge list, oriented list,
-  * adjacency) in [[CacheRegistry]], which the caller drains after its
-  * action. Bench/Verify run every query in ONE session — fire-and-forget
-  * persists there accumulate until LRU pressure evicts caches other
-  * queries still need (the round-4 leak class).
+  * [[orient]]'s three persists (edge list, oriented list, adjacency)
+  * belong to its caller: the AnalyticsPack memo keeps them
+  * session-lifetime. Bench/Verify run every query in ONE session —
+  * fire-and-forget persists there accumulate until LRU pressure evicts
+  * caches other queries still need (the round-4 leak class).
   */
 object Triangles {
 
@@ -50,8 +50,7 @@ object Triangles {
     * per-node clustering): VERDICT r9 measured the census
     * CONSTRUCTION-bound, and each family member used to rebuild this
     * identical state. The caller owns the persisted `e`, `oriented`
-    * and `adj`: [[stats]] tracks them in [[CacheRegistry]], the
-    * AnalyticsPack memo keeps them session-lifetime. */
+    * and `adj`: the AnalyticsPack memo keeps them session-lifetime. */
   final case class OrientedGraph(e: DataFrame, deg: DataFrame,
       oriented: DataFrame, adj: DataFrame)
 
@@ -63,10 +62,9 @@ object Triangles {
     *              guarantee both (a groupBy-derived co-occurrence list
     *              does so for free)
     */
-  def orient(edges: DataFrame, a: String = "a", b: String = "b")
-      : OrientedGraph = {
+  def orient(edges: DataFrame): OrientedGraph = {
     val e = edges
-      .select(col(a).cast("long").as("a"), col(b).cast("long").as("b"))
+      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // Degree of every endpoint: ONE map-side-combinable count over the
     // exploded endpoint stream (8-byte rows).
@@ -92,20 +90,10 @@ object Triangles {
     OrientedGraph(e, deg, oriented, adj)
   }
 
-  /** Global triangle statistics of an undirected graph.
-    *
-    * @return one row: (n_nodes, n_edges, n_wedges, n_triangles,
-    *         clustering) — clustering = 3·tri/wedges rounded to 6dp,
-    *         0.0 for wedge-free graphs
-    */
-  def stats(edges: DataFrame, a: String = "a", b: String = "b"): DataFrame = {
-    val g = orient(edges, a, b)
-    CacheRegistry.track(g.e, g.oriented, g.adj)
-    statsFromGraph(g)
-  }
-
-  /** Census over a prebuilt (possibly shared/memoized)
-    * [[OrientedGraph]].
+  /** Global triangle statistics over a prebuilt (possibly
+    * shared/memoized) [[OrientedGraph]]: one row (n_nodes, n_edges,
+    * n_wedges, n_triangles, clustering) — clustering = 3·tri/wedges
+    * rounded to 6dp, 0.0 for wedge-free graphs.
     *
     * Triangle closing is by ADJACENCY INTERSECTION, not a wedge
     * join: for a triangle a ≺ b ≺ c, edge (a, b) is the unique edge

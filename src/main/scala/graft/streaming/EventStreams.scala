@@ -17,8 +17,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    window is dropped once the watermark passes its end;
   *  - dropDuplicatesWithinWatermark: dedup state is bounded by the
   *    watermark horizon, not the stream length;
-  *  - mapGroupsWithState counter: O(#users) state, the intended shape
-  *    for keyed running aggregates.
+  *  - (flat)mapGroupsWithState operators: O(#users) state, the
+  *    intended shape for keyed running aggregates.
   */
 object EventStreams {
 
@@ -62,26 +62,6 @@ object EventStreams {
     stream.withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark(Seq("event_id"))
 
-  /** Open a file-based stream over the driver-generated events parquet.
-    * Single-file fixture is fine: the file source treats the directory
-    * listing as the stream. Normalizes the TIMESTAMP(NANOS) column the
-    * same way Tables.events does. */
-  def streamFromParquet(spark: SparkSession, sfDir: String): DataFrame = {
-    // readStream needs an explicit schema; take it from ONE driver-side
-    // footer read of the same files so the stream sees whatever
-    // physical ts encoding this data generation carries, then apply
-    // the identical normalization contract as the batch loader
-    // (io/Tables.scala) — a hard-coded schema here silently breaks
-    // when the testdata is regenerated with a different encoding
-    // (round 4: TIMESTAMP(NANOS) → timestamp[us]).
-    val physical = spark.read.parquet(s"$sfDir/events.parquet").schema
-    graft.io.Tables.normalizeEventTs(
-      spark.readStream
-        .schema(physical)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sfDir))
-  }
-
   /** Stream-stream self-join: pairs of events from the same user
     * within 10 minutes (l before r). Both sides carry watermarks and
     * the join CONDITION carries only the equality key and the two
@@ -116,67 +96,6 @@ object EventStreams {
       .select(col("l.user_id").as("user_id"),
         col("l.event_id").as("eid_a"), col("r.event_id").as("eid_b"))
       .where(col("eid_a") < col("eid_b"))
-  }
-
-  /** Keyed event with only the fields the stateful counter needs. */
-  case class UserEvent(user_id: Long, event_type: String)
-  case class UserCount(user_id: Long, n_events: Long)
-
-  /** Custom keyed state via mapGroupsWithState: a running per-user
-    * event counter that survives across micro-batches (update mode).
-    * The minimal canonical shape for arbitrary stateful logic. */
-  def runningUserCounts(spark: SparkSession,
-                        stream: DataFrame): Dataset[UserCount] = {
-    import spark.implicits._
-    stream.select(col("user_id"), col("event_type")).as[UserEvent]
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (uid: Long, batch: Iterator[UserEvent], state: GroupState[Long]) =>
-          val total = state.getOption.getOrElse(0L) + batch.size
-          state.update(total)
-          UserCount(uid, total)
-      }
-  }
-
-  case class ValueEvent(user_id: Long, ts: java.sql.Timestamp,
-                        event_id: Long, value: Double)
-  case class UserEwma(user_id: Long, n: Long, ewma: Double)
-
-  /** Streaming twin of the batch `e_ewma` query: a per-user
-    * exponentially-weighted moving average (alpha = 0.25) carried
-    * across micro-batches as (count, ewma) keyed state — the classic
-    * "incrementalize a sequential fold" stateful op. Within a batch a
-    * key's rows fold in (ts, event_id) order; across batches the state
-    * resumes the fold, so as long as batch boundaries respect event
-    * order per key (in-order sources, or an upstream sorter), the
-    * result is BIT-IDENTICAL to the batch fold — alpha is dyadic and
-    * the IEEE op sequence is the same. StreamingSpec asserts exact
-    * equality against the batch twin across a two-batch split. State
-    * is O(#users) x 16 bytes, the same bound as runningUserCounts. */
-  def runningUserEwma(spark: SparkSession,
-                      stream: DataFrame): Dataset[UserEwma] = {
-    import spark.implicits._
-    stream.select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      .as[ValueEvent]
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (uid: Long, batch: Iterator[ValueEvent],
-         state: GroupState[(Long, Double)]) =>
-          // full-precision ordering: Timestamp.getTime truncates to
-          // milliseconds, which would fold sub-millisecond events in
-          // the wrong order vs the batch twin's microsecond array_sort
-          val evs = batch.toArray.sortBy { e =>
-            val i = e.ts.toInstant
-            (i.getEpochSecond, i.getNano, e.event_id)
-          }
-          var (n, acc) = state.getOption.getOrElse((0L, 0.0))
-          evs.foreach { e =>
-            acc = if (n == 0L) e.value else acc * 0.75 + e.value * 0.25
-            n += 1
-          }
-          state.update((n, acc))
-          UserEwma(uid, n, acc)
-      }
   }
 
   case class CdcEvent(user_id: Long, ts: java.sql.Timestamp,
@@ -230,7 +149,7 @@ object EventStreams {
   /** Session gap in MICROSECONDS: state carries micros, not millis —
     * `Timestamp.getTime` truncates to ms, and an ms-truncated
     * session_start would hash-mismatch the oracle's microsecond
-    * min(ts) (same lesson as runningUserEwma's ordering fix). */
+    * min(ts). */
   private val SessionGapUs = 30L * 60 * 1000 * 1000
   private val SessionGapMs = 30L * 60 * 1000
 

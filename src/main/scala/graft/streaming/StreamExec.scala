@@ -175,16 +175,11 @@ object StreamExec {
     * measurement at 16 slices). */
   private[streaming] val StreamSlices = 2
 
-  /** Spec access to the shared staged dir (StagingContractSpec pins
-    * the b-vs-s file naming + mtime contract of the r14 one-pass
-    * rewrite). */
-  private[streaming] def stagedDirForSpec(s: SparkSession, sfDir: String): Path =
-    stagedDir(s, sfDir)
-
   /** The staged stream dir (MemoPool entry) — every exec query that
     * reads it (and repeat runs in one harness) shares one staging
-    * pass. */
-  private def stagedDir(s: SparkSession, sfDir: String): Path =
+    * pass. StagingContractSpec pins its b-vs-s file naming and mtime
+    * contract. */
+  private[streaming] def stagedDir(s: SparkSession, sfDir: String): Path =
     graft.scale.MemoPool.getOrBuild(s, sfDir, "streamStaged") {
       val ev = Tables.events(s, sfDir) // normalized TimestampType
       val (minTs, maxTs) = tsRange(s, sfDir)

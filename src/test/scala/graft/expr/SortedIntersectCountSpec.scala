@@ -49,7 +49,7 @@ class SortedIntersectCountSpec extends SparkSpec {
     // K4 plus a pendant and an isolated edge: C(4,3)=4 triangles
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L), (8L, 9L)).toDF("a", "b")
-    val row = graft.scale.Triangles.stats(edges).collect()(0)
+    val row = graft.scale.TriangleStats(edges).collect()(0)
     graft.scale.CacheRegistry.drain()
     assert(row.getAs[Long]("n_triangles") == 4L)
     assert(row.getAs[Long]("n_nodes") == 7L)

@@ -17,6 +17,14 @@ class CleaningSpec extends SparkSpec {
     assert(out.toSeq == Seq(Some("Destiny"), Some("Der Mude  Tod"), None, None))
   }
 
+  test("normalizeTitle runs on a session with no graft SQL function registered") {
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    val out = Seq("Déstiny çafé!").toDF("t")
+      .select(Cleaning.normalizeTitle($"t")).as[String].collect()
+    assert(out.toSeq == Seq("Destiny Cafe"))
+  }
+
   test("property: normalizeTitle == the initcap chain, with ICU case mappings on and off") {
     import spark.implicits._
     GraftFunctions.register(spark)

@@ -57,7 +57,7 @@ class ImageIoCodecSpec extends SparkSpec {
       "distributed (round 13)") {
     val docs = Tables(spark, sf("sf0.001"), "documents")
     val out = Media
-      .resizeJpegCensus(spark, Media.plantJpegs(spark, docs), factor = 2)
+      .resizeJpegCensus(spark, Media.plantJpegs(spark, docs))
       .collect()
     assert(out.length == 500)
     out.foreach { c =>
@@ -82,7 +82,7 @@ class ImageIoCodecSpec extends SparkSpec {
       "(round 13)") {
     val docs = Tables(spark, sf("sf0.001"), "documents")
     val out = Media
-      .embedGrayHistogram(spark, Media.plantJpegs(spark, docs), bins = 16)
+      .embedGrayHistogram(spark, Media.plantJpegs(spark, docs))
       .collect()
     assert(out.length == 500)
     out.foreach { r =>

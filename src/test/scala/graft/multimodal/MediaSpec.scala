@@ -15,7 +15,7 @@ class MediaSpec extends SparkSpec {
       override def decodeBatch(b: Seq[Media.MediaRow]) =
         Media.StubDecoder.decodeBatch(b).map(_.copy(channels = b.size))
     }
-    val out = Media.decode(spark, media, BatchSizeReportingDecoder, batchSize = 64)
+    val out = Media.decode(spark, media, BatchSizeReportingDecoder)
       .collect()
     assert(out.length == 500)
     val sizes = out.map(_.channels)
@@ -62,7 +62,7 @@ class MediaSpec extends SparkSpec {
 
   test("frame sampling: stride-2 indices bounded by derived frame count") {
     val media = Media.mediaTable(Tables(spark, sf("sf0.001"), "documents"))
-    val frames = Media.sampleFrames(media, stride = 2)
+    val frames = Media.sampleFrames(media)
     val byId = frames.groupBy("media_id")
       .agg(collect_list("frame_no").as("fs"), count(lit(1)).as("n"))
       .collect()

@@ -4,41 +4,34 @@ import graft.SparkSpec
 
 class PageRankSpec extends SparkSpec {
 
-  /** Runs k rounds over `edges`, releases the pinned intermediates,
-    * returns node->rank. */
-  private def ranks(edges: org.apache.spark.sql.DataFrame, iters: Int,
-                    symmetric: Boolean = false,
-                    broadcastRanks: Boolean = false): Map[Long, Long] = {
-    val r = PageRank.run(edges, iters, symmetric = symmetric,
-      broadcastRanks = broadcastRanks)
+  /** The caller's side of the contract: the out-degree edge frame,
+    * pinned for the query like the purchase-graph memo. */
+  private def eo(edges: org.apache.spark.sql.DataFrame) =
+    CacheRegistry.pin(PageRank.edgesWithOutdeg(edges))
+
+  /** Undirected helper: symmetrizes, runs k rounds, releases the
+    * pinned frames, returns node->rank. */
+  private def pr(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    import spark.implicits._
+    val sym = (edges ++ edges.map(_.swap)).distinct.toDF("src", "dst")
+    val r = PageRank.run(eo(sym), iters)
     try r.collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
     finally CacheRegistry.drain()
   }
 
-  /** Undirected helper: symmetrizes, runs k rounds, returns node->rank. */
-  private def pr(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
-    import spark.implicits._
-    ranks((edges ++ edges.map(_.swap)).toDF("src", "dst"), iters)
-  }
-
-  /** In-memory reference of the exact integer recurrence (directed
-    * edge list; node set = sources, matching the operator contract). */
-  private def referenceDirected(edges: Seq[(Long, Long)],
-                                iters: Int): Map[Long, Long] = {
-    val es = edges.distinct
+  /** In-memory reference of the exact integer recurrence over the
+    * symmetrized edge list. */
+  private def reference(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    val es = (edges ++ edges.map(_.swap)).distinct
     val od = es.groupBy(_._1).map { case (n, e) => n -> e.size.toLong }
     var rank = od.keys.map(_ -> 1000000L).toMap
     (1 to iters).foreach { _ =>
       val acc = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
       es.foreach { case (s, d) => acc(d) += rank(s) / od(s) }
-      // every SOURCE node keeps a rank — zero in-flow = teleport floor
       rank = od.keys.map(n => n -> (150000L + (850L * acc(n)) / 1000L)).toMap
     }
     rank
   }
-
-  private def reference(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
-    referenceDirected(edges ++ edges.map(_.swap), iters)
 
   test("matches the in-memory integer recurrence on a random graph") {
     val rnd = new scala.util.Random(7)
@@ -68,44 +61,11 @@ class PageRankSpec extends SparkSpec {
     assert(got.values.sum <= got.size * 1000000L)
   }
 
-  test("duplicate edges collapse (multi-edges carry no extra weight)") {
-    val once = pr(Seq((1L, 2L), (2L, 3L)), 3)
-    val dup = pr(Seq((1L, 2L), (1L, 2L), (2L, 3L), (2L, 3L)), 3)
-    assert(once == dup)
-  }
-
-  test("symmetric=true is a pure fast path on symmetrized graphs") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(23)
-    val base = Seq.fill(40)((rnd.nextInt(15).toLong, rnd.nextInt(15).toLong))
-      .filter(e => e._1 != e._2)
-    val sym = (base ++ base.map(_.swap)).toDF("src", "dst")
-    val slow = ranks(sym, 4)
-    val fast = ranks(sym, 4, symmetric = true)
-    assert(fast == slow)
-  }
-
-  test("directed graph: a source with no in-edges keeps the teleport floor") {
-    import spark.implicits._
-    // 0 -> 1, 1 -> 2, 2 -> 1: node 0 never receives, but must stay in
-    // the output at floor rank and keep feeding node 1 every round
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 1L))
-    val got = ranks(edges.toDF("src", "dst"), 5)
-    val ref = referenceDirected(edges, 5)
-    assert(got == ref, s"directed ranks diverged: $got vs $ref")
-    assert(got(0L) == 150000L, "in-degree-0 source must sit at the floor")
-    assert(got.keySet == Set(0L, 1L, 2L))
-    // node 1 outranks node 2: it receives from both 0 and 2
-    assert(got(1L) > got(2L))
-  }
-
-  test("broadcastRanks == shuffle mode, and adds ZERO exchanges per round") {
+  test("each extra rank round adds exactly one exchange") {
     import spark.implicits._
     val edges = ((1L to 40L).map(i => (i, i % 40 + 1)) ++
       (1L to 40L).map(i => (i % 40 + 1, i))).toDF("src", "dst")
-    assert(ranks(edges, 4, symmetric = true) ==
-      ranks(edges, 4, symmetric = true, broadcastRanks = true))
-    // the structural claim: in broadcast mode each extra round adds
+    // the structural claim: with broadcast ranks each extra round adds
     // EXACTLY ONE shuffle exchange (the edge-keyed contribution agg)
     // and nothing else — the rank side rides a broadcast, never a
     // shuffle or sort. Distinct plan_ids, because the cached edge
@@ -115,8 +75,7 @@ class PageRankSpec extends SparkSpec {
     // partitioning, so pre-partitioning the cache cannot feed the
     // aggregation's distribution requirement.)
     def exchanges(iters: Int): Int = {
-      val r = PageRank.run(edges, iters, symmetric = true,
-        broadcastRanks = true)
+      val r = PageRank.run(eo(edges), iters)
       val n = r.queryExecution.executedPlan.toString.linesIterator
         .filter(l => l.contains("Exchange") && !l.contains("Broadcast"))
         .flatMap(l => "plan_id=(\\d+)".r.findFirstMatchIn(l).map(_.group(1)))

@@ -17,15 +17,18 @@ class PprSpec extends SparkSpec {
     (und ++ und.map(_.swap)).toDF("src", "dst")
   }
 
+  /** The caller-owned out-degree edge frame, pinned for one run. */
+  private def eo = CacheRegistry.pin(PageRank.edgesWithOutdeg(edges))
+
   test("seeding every node reproduces uniform PageRank exactly") {
     // base = 150000·|V| div |V| = 150000 — the uniform teleport term,
     // so the personalized recurrence must collapse to the standard one
     val all = edges.select(col("src").as("node")).distinct()
     // each run released before the next pins an equal edge frame
-    val pers = PageRank.runPersonalized(edges, all, 5)
+    val pers = PageRank.runPersonalized(eo, all, 5)
     val a = pers.orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
     CacheRegistry.drain()
-    val unif = PageRank.run(edges, 5, symmetric = true)
+    val unif = PageRank.run(eo, 5)
     val b = unif.orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
     CacheRegistry.drain()
     assert(a.toSeq === b.toSeq)
@@ -34,7 +37,7 @@ class PprSpec extends SparkSpec {
   test("rank concentrates at and around the seed") {
     import spark.implicits._
     val seeds = Seq(6L).toDF("node") // the far pendant tip
-    val pers = PageRank.runPersonalized(edges, seeds, 5)
+    val pers = PageRank.runPersonalized(eo, seeds, 5)
     val ranks = pers.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     CacheRegistry.drain()
     // the seed's side of the graph outranks the antipode (node 3) —

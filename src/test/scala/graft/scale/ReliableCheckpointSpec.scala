@@ -47,7 +47,9 @@ class ReliableCheckpointSpec extends SparkSpec {
       .filter(col("src") =!= col("dst")).distinct()
     def runAll(): Seq[Seq[org.apache.spark.sql.Row]] = {
       val pr = {
-        val df = PageRank.run(edges, iters = 3)
+        // the rank contract: a symmetric, distinct, caller-owned edge frame
+        val sym = edges.union(edges.select(col("dst"), col("src"))).distinct()
+        val df = PageRank.run(CacheRegistry.pin(PageRank.edgesWithOutdeg(sym)), iters = 3)
         val rows = df.orderBy(col("node")).collect().toSeq
         CacheRegistry.drain(); rows
       }

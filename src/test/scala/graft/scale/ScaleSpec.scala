@@ -33,29 +33,6 @@ class ScaleSpec extends SparkSpec {
     assert(out.filter(col("k") === 1L).select("attr").distinct().count() == 1)
   }
 
-  test("salted join: LEFT rows with no dim partner survive exactly once") {
-    import spark.implicits._
-    val fact = Seq((1L, "a"), (1L, "b"), (99L, "orphan")).toDF("k", "payload")
-    val dim = Seq((1L, "v1")).toDF("k", "attr")
-    val out = SkewJoin.saltedJoin(fact, dim, "k", salt = 4, joinType = "left")
-      .select(col("k"), col("payload"), col("attr"))
-      .collect().map(r => (r.getLong(0), r.getString(1), Option(r.getString(2)))).toSet
-    assert(out == Set((1L, "a", Some("v1")), (1L, "b", Some("v1")),
-      (99L, "orphan", None)))
-  }
-
-  test("salted join refuses right/full outer (dim replicas would duplicate)") {
-    import spark.implicits._
-    val fact = Seq((1L, "a")).toDF("k", "payload")
-    val dim = Seq((2L, "v")).toDF("k", "attr")
-    intercept[IllegalArgumentException] {
-      SkewJoin.saltedJoin(fact, dim, "k", salt = 4, joinType = "right")
-    }
-    intercept[IllegalArgumentException] {
-      SkewJoin.saltedJoin(fact, dim, "k", salt = 4, joinType = "full_outer")
-    }
-  }
-
   test("bucketed tables join without a shuffle exchange") {
     val dir = sf("sf0.001") // warehouse dir is set (static conf) in SparkSpec
     Tables(spark, dir, "orders")

@@ -7,7 +7,7 @@ class TrianglesSpec extends SparkSpec {
   /** (n_nodes, n_edges, n_wedges, n_triangles, clustering) */
   private def stats(edges: Seq[(Long, Long)]): (Long, Long, Long, Long, Double) = {
     import spark.implicits._
-    val r = Triangles.stats(edges.toDF("a", "b")).collect().head
+    val r = TriangleStats(edges.toDF("a", "b")).collect().head
     (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))
   }
 

@@ -19,7 +19,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
     ss.conf.set("spark.sql.shuffle.partitions", "8")
     ss.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = EventStreams.streamFromParquet(ss, sf("sf0.001"))
+    val stream = SpecStreams.streamFromParquet(ss, sf("sf0.001"))
     val agg = EventStreams.hourlyTypeCounts(stream, watermarked = false)
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_rocks_ckpt_").toString

@@ -18,7 +18,7 @@ class StagingContractSpec extends SparkSpec {
   private val k = StreamExec.StreamSlices
 
   test("staged dir: k data slices (b*) + 2 sentinels (s*), mtime-ordered") {
-    val dir = StreamExec.stagedDirForSpec(spark, sf("sf0.001"))
+    val dir = StreamExec.stagedDir(spark, sf("sf0.001"))
     val files = dir.toFile.listFiles().toSeq.sortBy(_.getName)
     val data = files.filter(_.getName.startsWith("b"))
     val sent = files.filter(_.getName.startsWith("s"))

@@ -13,7 +13,7 @@ class StreamingSpec extends SparkSpec {
 
   test("file-stream tumbling agg equals the batch answer (unified API)") {
     val dir = sf("sf0.001")
-    val stream = EventStreams.streamFromParquet(spark, dir)
+    val stream = SpecStreams.streamFromParquet(spark, dir)
     val q = EventStreams.hourlyTypeCounts(stream, watermarked = true)
       .writeStream.format("memory").queryName("hourly_stream")
       .outputMode("complete").start()
@@ -34,7 +34,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
     val stream = input.toDF().toDF("user_id", "event_type")
-    val q = EventStreams.runningUserCounts(spark, stream)
+    val q = SpecStreams.runningUserCounts(spark, stream)
       .writeStream.format("memory").queryName("user_counts")
       .outputMode("update").start()
     try {
@@ -62,7 +62,7 @@ class StreamingSpec extends SparkSpec {
       (2L, ts(5), 15L, 2.2))
     val input = MemoryStream[(Long, java.sql.Timestamp, Long, Double)]
     val stream = input.toDF().toDF("user_id", "ts", "event_id", "value")
-    val q = EventStreams.runningUserEwma(spark, stream)
+    val q = SpecStreams.runningUserEwma(spark, stream)
       .writeStream.format("memory").queryName("user_ewma")
       .outputMode("update").start()
     try {
@@ -100,7 +100,7 @@ class StreamingSpec extends SparkSpec {
     val late = tsNanos(700000)  // .0007s, event_id 5
     val input = MemoryStream[(Long, java.sql.Timestamp, Long, Double)]
     val stream = input.toDF().toDF("user_id", "ts", "event_id", "value")
-    val q = EventStreams.runningUserEwma(spark, stream)
+    val q = SpecStreams.runningUserEwma(spark, stream)
       .writeStream.format("memory").queryName("user_ewma_us")
       .outputMode("update").start()
     try {
