@@ -15,7 +15,7 @@ object StreamingPack extends QueryPack {
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "st_tumbling_hourly" -> ((s, dir) =>
-      EventStreams.hourlyTypeCounts(Tables.events(s, dir), watermarked = false)
+      EventStreams.hourlyTypeCounts(Tables.events(s, dir))
         .orderBy(col("window_start"), col("event_type"))),
 
     "st_sliding_daily" -> ((s, dir) =>
@@ -23,7 +23,7 @@ object StreamingPack extends QueryPack {
         .orderBy(col("window_start"))),
 
     "st_user_sessions" -> ((s, dir) =>
-      EventStreams.userSessions(Tables.events(s, dir), watermarked = false)
+      EventStreams.userSessions(Tables.events(s, dir))
         .orderBy(col("user_id"), col("session_start"))),
 
     // Spark's NATIVE session_window operator (the built-in that also
@@ -52,7 +52,7 @@ object StreamingPack extends QueryPack {
 
     // REAL StreamExecution rows (graft.streaming.StreamExec): the
     // Spark side runs through an actual micro-batch readStream loop —
-    // 4 file-source batches, state carried across them, watermark
+    // file-source batches, state carried across them, watermark
     // timeouts flushed by sentinel batches — and the FINAL streamed
     // state is checked against the SAME oracle SQL as the batch twins
     // above. Closes the "streaming correctness is spec-only" gap.

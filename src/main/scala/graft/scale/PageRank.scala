@@ -98,11 +98,8 @@ object PageRank {
     // partitioning (PageRankSpec pins the exactly-one-exchange-per-
     // round shape). A web-scale node set would need a shuffled rank
     // join instead.
-    for (_ <- 1 to iters) ranks = eo
-      .join(broadcast(ranks.withColumnRenamed("node", "src")), "src")
-      .select(col("dst").as("node"), expr("rank div od").as("c"))
-      .groupBy(col("node"))
-      .agg((lit(150000L) + expr("(850 * sum(c)) div 1000")).as("rank"))
+    for (_ <- 1 to iters)
+      ranks = inflow(eo, ranks).select(col("node"), (lit(150000L) + col("fl")).as("rank"))
     // NOTE: the pinned node set stays persisted until the caller's
     // action has run (an unpersist here would evict before the lazy
     // plan executes) — hence the CacheRegistry pin.
@@ -147,15 +144,19 @@ object PageRank {
     // dimension-sized seed set still works, it just broadcasts more.
     val seedBase = broadcast(sd.withColumn("base", lit(perSeed)))
     var ranks = nodes.withColumn("rank", lit(1000000L))
-    for (_ <- 1 to iters) {
-      ranks = eo.join(broadcast(ranks.withColumnRenamed("node", "src")), "src")
-        .select(col("dst").as("node"), expr("rank div od").as("c"))
-        .groupBy(col("node"))
-        .agg(expr("(850 * sum(c)) div 1000").as("fl"))
-        .join(seedBase, Seq("node"), "left")
-        .select(col("node"),
-          (coalesce(col("base"), lit(0L)) + col("fl")).as("rank"))
-    }
+    for (_ <- 1 to iters)
+      ranks = inflow(eo, ranks).join(seedBase, Seq("node"), "left")
+        .select(col("node"), (coalesce(col("base"), lit(0L)) + col("fl")).as("rank"))
     ranks
   }
+
+  /** One round's damped inflow, shared by both recurrences: (node,
+    * fl = (850 · Σ contrib) div 1000) with contrib(u) = rank(u) div
+    * outdeg(u), joining the BROADCAST (node, rank) frame onto the
+    * caller's edge cache. The caller adds its teleport term. */
+  private def inflow(eo: DataFrame, ranks: DataFrame): DataFrame =
+    eo.join(broadcast(ranks.withColumnRenamed("node", "src")), "src")
+      .select(col("dst").as("node"), expr("rank div od").as("c"))
+      .groupBy(col("node"))
+      .agg(expr("(850 * sum(c)) div 1000").as("fl"))
 }

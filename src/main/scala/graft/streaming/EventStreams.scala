@@ -22,22 +22,22 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStreams {
 
-  /** Hourly tumbling counts per event type. Batch and stream.
-    * The corpus spans a FIXED wall-clock range, so each (hour, type)
-    * bucket's row count scales with the corpus — the q1_agg doctrine
-    * applies: 2-dp event values accumulate in DECIMAL (lossless
-    * cast; exact under any partial-agg tree AND any micro-batch
-    * merge order), double only in the final projection. */
-  def hourlyTypeCounts(events: DataFrame, watermarked: Boolean): DataFrame = {
-    val src = if (watermarked) events.withWatermark("ts", "1 hour") else events
-    src
+  /** Hourly tumbling counts per event type. Batch and stream (a
+    * complete-mode stream needs no watermark; an append-mode caller
+    * sets `withWatermark` on its input first). The corpus spans a
+    * FIXED wall-clock range, so each (hour, type) bucket's row count
+    * scales with the corpus — the q1_agg doctrine applies: 2-dp event
+    * values accumulate in DECIMAL (lossless cast; exact under any
+    * partial-agg tree AND any micro-batch merge order), double only in
+    * the final projection. */
+  def hourlyTypeCounts(events: DataFrame): DataFrame =
+    events
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("cnt"),
         round(sum(col("value").cast("decimal(18,2)")).cast("double"), 2)
           .as("sum_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("cnt"), col("sum_value"))
-  }
 
   /** 2-day windows sliding by 1 day: each event lands in 2 windows. */
   def slidingDailyCounts(events: DataFrame): DataFrame =
@@ -47,14 +47,13 @@ object EventStreams {
       .select(col("w.start").as("window_start"), col("cnt"))
 
   /** Session windows per user with a 30-minute gap. Batch and stream
-    * (streaming requires the watermark for state eviction). */
-  def userSessions(events: DataFrame, watermarked: Boolean): DataFrame = {
-    val src = if (watermarked) events.withWatermark("ts", "1 hour") else events
-    src
+    * (a streaming caller sets `withWatermark` on its input first, for
+    * state eviction). */
+  def userSessions(events: DataFrame): DataFrame =
+    events
       .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("w.start").as("session_start"), col("n_events"))
-  }
 
   /** Exactly-once-per-id events under late/duplicate delivery: state
     * bounded by the watermark horizon. Streaming-only operator. */

@@ -1,31 +1,33 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
 
 import scala.jdk.CollectionConverters._
 
-import graft.io.Tables
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.io.{Tables, TempDirs}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** REAL StreamExecution harness for the gated streaming rows.
   *
   * Every other `st_*` oracle row runs the BATCH twin of a unified
   * transform; the readStream path was covered only by ScalaTest
-  * equivalence specs. The two queries here close that trust gap: the
-  * Spark side of `st_tumbling_stream_exec` / `st_sessions_stream_exec`
-  * executes through an actual micro-batch StreamExecution loop
-  * (file source → watermark → stateful op → sink), and its FINAL state
-  * is what the DuckDB oracle checks — the same oracle SQL as the batch
-  * twins (SURVEY.md §2.11 extension; reference is batch-only).
+  * equivalence specs. The seven `st_*_stream_exec` rows here close
+  * that trust gap: the Spark side of each executes through an actual
+  * micro-batch StreamExecution loop (file source → watermark →
+  * stateful op → sink), and its FINAL state is what the DuckDB oracle
+  * checks — the same oracle SQL as the batch twin where the row has
+  * one (SURVEY.md §2.11 extension; reference is batch-only). Every
+  * row starts its query through [[start]] and reads a source dir
+  * built by [[staged]].
   *
   * How a finite fixture becomes an honest multi-batch stream:
-  *  - the normalized events table is re-staged into a temp dir as two
-  *    time-range slice files (slice k's max ts < slice k+1's min ts)
-  *    plus two far-future single-row SENTINEL files (user_id = -1,
-  *    ts = max+1y/+2y) with ascending mtimes;
+  *  - the normalized events table is re-staged into a temp dir as
+  *    [[StreamSlices]] time-range slice files (slice k's max ts <
+  *    slice k+1's min ts) plus two far-future single-row SENTINEL
+  *    files (user_id = -1, ts = max+1y/+2y) with ascending mtimes;
   *  - `maxFilesPerTrigger=1` + `Trigger.AvailableNow` then yields one
   *    micro-batch per file in mtime order — state genuinely carries
   *    across batches (sessions split mid-stream resume from state);
@@ -38,11 +40,11 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * Scale note: staging rewrites only the events slice (bounded, one
   * pass) and the drains are bounded driver-side collections — the
-  * memory sink holds #windows x #types rows, foreachBatch appends
-  * closed sessions (O(#sessions), the same cardinality the gated
-  * result itself has). On a real cluster the sinks would be Kafka /
-  * Delta and the staging dir a real topic; the STATEFUL operators under
-  * test are identical.
+  * memory sinks hold #windows x #types rows, join pairs or closed
+  * sessions (the same cardinality the gated result itself has), the
+  * dedup census #types rows per batch. On a real cluster the sinks
+  * would be Kafka / Delta and the staging dir a real topic; the
+  * STATEFUL operators under test are identical.
   */
 object StreamExec {
 
@@ -62,145 +64,123 @@ object StreamExec {
   private def us(t: java.sql.Timestamp): Long =
     t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
 
-  /** ONE slice-staging mechanism for the three staged-dir builders —
-    * they used to carry three verbatim copies of writeSlice (each
-    * leaking the `Files.list` directory stream's fd until GC) plus two
-    * of the sentinel builder. Dirs come from TempDirs (deleted at JVM
-    * exit — staging debris and staged sources otherwise outlive every
-    * harness run). */
-  private final class SliceStager(prefix: String) {
-    val streamDir: Path =
-      java.nio.file.Paths.get(graft.io.TempDirs.create(s"graft_${prefix}_src_"))
-    private val stage: Path =
-      java.nio.file.Paths.get(graft.io.TempDirs.create(s"graft_${prefix}_stage_"))
-
-    /** Move one written part file into the stream dir as slice k with
-      * the fixed ascending mtime contract (file source orders by
-      * mtime, so batch order == slice order, deterministically).
-      * `name` distinguishes DATA slices (b…) from SENTINEL files
-      * (s…): consumers that have no watermark can exclude sentinels
-      * with a `b*.parquet` glob (the CDC row — its mapGroupsWithState
-      * uses NoTimeout, so sentinel batches were pure per-batch
-      * machinery cost, measured ~0.7 s each at sf0.1). */
-    private def install(part: Path, k: Int, name: String): Unit = {
-      val dst = streamDir.resolve(f"$name$k%03d.parquet")
-      Files.move(part, dst)
-      Files.setLastModifiedTime(dst,
-        FileTime.fromMillis(1600000000000L + k * 60000L))
-    }
-
-    private def onePart(tmp: Path): Option[Path] = {
-      if (!Files.isDirectory(tmp)) return None
-      val listing = Files.list(tmp)
-      val parts = try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toList
-      finally listing.close()
-      // the one-file-per-slice contract: a second part here would be
-      // silently DROPPED by the move below — fail loudly instead
-      // (writeSliced's hash repartition guarantees one writer task per
-      // slice; this guards the invariant against a future edit)
-      require(parts.size <= 1,
-        s"staging contract violated: ${parts.size} part files under $tmp")
-      parts.headOption
-    }
-
-    def writeSlice(df: DataFrame, k: Int, name: String = "b"): Unit = {
-      val tmp = stage.resolve(s"w$k")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      install(onePart(tmp)
-        .getOrElse(sys.error(s"no parquet written under $tmp")), k, name)
-    }
-
-    /** ALL data slices in ONE single-task pass (r14 optimization
-      * round, guide §1.2/§6): `df` carries an integer `__slice`
-      * column; a coalesce(1) dynamic-partition write emits one file
-      * per non-empty slice with ONE job + ONE commit, where the
-      * per-slice writeSlice loop paid a full single-threaded
-      * filter+scan pass and a separate write commit PER slice
-      * (the staging block measured ~2-3 s of the first stream row's
-      * wall; Bench's `slowest_jobs` record shows the per-job split).
-      * Intra-slice row order may differ from the sequential-filter
-      * order (the dynamic-partition writer sorts by the partition
-      * column); every stream-exec operator is
-      * order-invariant within a batch — aggregates, sorted stateful
-      * folds, full-row duplicate re-emissions — so results are
-      * unchanged (oracle-gated). A slice id with no rows still gets
-      * an explicit empty file so batch indices stay aligned. */
-    def writeSliced(df: DataFrame, nSlices: Int): Unit = {
-      val tmp = stage.resolve("sliced")
-      // Hash-repartition on __slice instead of coalesce(1) (r15,
-      // guide §2.6/§6): coalesce(1) pinned not just the write but the
-      // WHOLE upstream pipeline (events scan, slice chain, encode) to
-      // a single task — the r14 one-pass rewrite traded k sequential
-      // jobs for one single-threaded one. Partitioning by the slice id
-      // keeps the one-file-per-slice contract (each slice's rows land
-      // wholly in one writer task; onePart asserts it) while scan +
-      // encode run at cluster parallelism, for one bounded shuffle of
-      // the staged rows. Still ONE job + ONE commit. Intra-slice row
-      // order changes again — same order-invariance argument as r14,
-      // oracle-gated. Measured (rep minima, sf0.1/local[32], each row
-      // paying its own staged dir): default k — st_late_drop
-      // 3.61→3.46, st_dedup 2.40→2.29, st_cdc 6.14→6.16 (flat); at
-      // the SLICES=16 state-bound gate shape st_cdc 18.07→17.53. The
-      // delta grows with corpus size: the shuffle is bounded by the
-      // staged rows, the single-task scan+encode it replaces is
-      // corpus-sized.
-      df.repartition(col("__slice")).write.mode("overwrite")
-        .partitionBy("__slice").parquet(tmp.toString)
-      (0 until nSlices).foreach { k =>
-        onePart(tmp.resolve(s"__slice=$k")) match {
-          case Some(p) => install(p, k, "b")
-          case None => writeSlice(df.filter(lit(false)).drop("__slice"), k)
-        }
-      }
-    }
-
-    /** Far-future watermark-advancing sentinel row (filtered out of
-      * every gated result by user/window bounds; written under the
-      * `s` name so watermark-free consumers can glob it away). */
-    def sentinel(ev: DataFrame, maxTs: java.sql.Timestamp,
-                 k: Int, days: Int): Unit = writeSlice(
-      ev.limit(1)
-        .withColumn("ts", lit(maxTs) + expr(s"INTERVAL $days DAYS"))
-        .withColumn("user_id", lit(SentinelUser))
-        .withColumn("event_id", lit(-k.toLong)), k, name = "s")
-  }
-
-  /** Number of time-range data slices the staged dir is cut into —
-    * i.e. the number of DATA micro-batches each stream-exec row
-    * replays. The watermark only advances BETWEEN batches, so a
-    * stateful operator's peak state is bounded below by one batch's
-    * ingest: peak state follows batch granularity plus the watermark
-    * window, not stream length (bench/sf10_stream_gate_r14.txt, a past
-    * measurement at 16 slices). */
+  /** Number of time-range data slices the shared staged dir is cut
+    * into — i.e. the number of DATA micro-batches each stream-exec row
+    * over [[stagedDir]] replays. The watermark only advances BETWEEN
+    * batches, so a stateful operator's peak state is bounded below by
+    * one batch's ingest: peak state follows batch granularity plus the
+    * watermark window, not stream length
+    * (bench/sf10_stream_gate_r14.txt, a past measurement at 16 slices). */
   private[streaming] val StreamSlices = 2
 
-  /** The staged stream dir (MemoPool entry) — every exec query that
-    * reads it (and repeat runs in one harness) shares one staging
-    * pass. StagingContractSpec pins its b-vs-s file naming and mtime
-    * contract. */
-  private[streaming] def stagedDir(s: SparkSession, sfDir: String): Path =
-    graft.scale.MemoPool.getOrBuild(s, sfDir, "streamStaged") {
+  /** An event's `ts` in epoch microseconds, the unit of the cut points
+    * every staging tag compares it against. */
+  private val tsUs = unix_micros(col("ts"))
+
+  private def onePart(tmp: Path): Option[Path] = {
+    if (!Files.isDirectory(tmp)) return None
+    val listing = Files.list(tmp)
+    val parts = try listing.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally listing.close()
+    // the one-file-per-slice contract: a second part here would be
+    // silently DROPPED by the move into the stream dir — fail loudly
+    // instead (the hash repartition on __slice guarantees one writer
+    // task per slice; this guards the invariant against a future edit)
+    require(parts.size <= 1,
+      s"staging contract violated: ${parts.size} part files under $tmp")
+    parts.headOption
+  }
+
+  /** ONE builder for the three staged source dirs, each a MemoPool
+    * entry named `${prefix}Staged`: every exec query that reads a dir
+    * (and repeat runs in one harness) shares one staging pass. `tag`
+    * maps (events, min ts µs, max ts µs) to the rows of every data
+    * micro-batch, each carrying its batch number (0 until `nSlices`)
+    * in an integer `__slice` column; every `sentinelDays` entry then
+    * appends one far-future sentinel batch — a single row with user_id
+    * = -1 and ts = max ts + that many days, filtered out of every gated
+    * result by user or window bounds.
+    *
+    * Batch k is the file `b<k>.parquet`, a sentinel `s<k>.parquet`, so
+    * consumers that have no watermark can exclude sentinels with a
+    * `b*.parquet` glob (the CDC row — its mapGroupsWithState uses
+    * NoTimeout, so sentinel batches were pure per-batch machinery
+    * cost, measured ~0.7 s each at sf0.1). Mtimes ascend with k: the
+    * file source orders by mtime, so batch order == slice order,
+    * deterministically. StagingContractSpec pins the naming and mtime
+    * contract. Dirs come from TempDirs (deleted at JVM exit — staging
+    * debris and staged sources otherwise outlive every harness run).
+    *
+    * ALL data slices are written in ONE pass (r14, guide §1.2/§6): a
+    * dynamic-partition write on `__slice` emits one file per non-empty
+    * slice with ONE job + ONE commit, where a per-slice loop paid a
+    * full filter+scan pass and a separate write commit PER slice (the
+    * staging block measured ~2-3 s of the first stream row's wall;
+    * Bench's `slowest_jobs` record shows the per-job split). The write
+    * hash-repartitions on `__slice` instead of coalesce(1) (r15, guide
+    * §2.6/§6): coalesce(1) pinned the WHOLE upstream pipeline (events
+    * scan, slice chain, encode) to a single task, while partitioning by
+    * the slice id keeps the one-file-per-slice contract (each slice's
+    * rows land wholly in one writer task; onePart asserts it) and runs
+    * scan + encode at cluster parallelism, for one bounded shuffle of
+    * the staged rows. Measured (rep minima, sf0.1/local[32], each row
+    * paying its own staged dir): default k — st_late_drop 3.61→3.46,
+    * st_dedup 2.40→2.29, st_cdc 6.14→6.16 (flat); at the SLICES=16
+    * state-bound gate shape st_cdc 18.07→17.53. The delta grows with
+    * corpus size: the shuffle is bounded by the staged rows, the
+    * single-task scan+encode it replaces is corpus-sized. Intra-slice
+    * row order is the writer's; every stream-exec operator is
+    * order-invariant within a batch — aggregates, sorted stateful
+    * folds, full-row duplicate re-emissions — so results are unchanged
+    * (oracle-gated). A slice id with no rows still gets an explicit
+    * empty file so batch indices stay aligned. */
+  private def staged(s: SparkSession, sfDir: String, prefix: String, nSlices: Int,
+                     sentinelDays: Seq[Int])(
+      tag: (DataFrame, Long, Long) => DataFrame): Path =
+    graft.scale.MemoPool.getOrBuild(s, sfDir, s"${prefix}Staged") {
       val ev = Tables.events(s, sfDir) // normalized TimestampType
       val (minTs, maxTs) = tsRange(s, sfDir)
-      val k = StreamSlices
-      val (lo, hi) = (us(minTs), us(maxTs))
-      val st = new SliceStager("stream")
-      // k equal event-time intervals; slice i = [cut(i), cut(i+1)),
-      // last cut at hi+1 so maxTs lands inside the final slice
-      val cuts = (0 to k).map(i => lo + (hi + 1 - lo) * i.toLong / k)
-      val tsUs = unix_micros(col("ts"))
-      // one-pass staging: the slice id as a literal when-chain over the
-      // cut points (every event satisfies cuts(0) <= ts < cuts(k) by
-      // construction of the cuts, so the chain is total)
-      var sliceOf: org.apache.spark.sql.Column = lit(k - 1)
-      for (i <- k - 2 to 0 by -1)
-        sliceOf = when(tsUs < cuts(i + 1), lit(i)).otherwise(sliceOf)
-      st.writeSliced(ev.withColumn("__slice", sliceOf), k)
-      st.sentinel(ev, maxTs, k, 365)
-      st.sentinel(ev, maxTs, k + 1, 730)
-      st.streamDir
+      val tagged = tag(ev, us(minTs), us(maxTs))
+      val dir = Paths.get(TempDirs.create(s"graft_${prefix}_src_"))
+      val stage = Paths.get(TempDirs.create(s"graft_${prefix}_stage_"))
+      def install(part: Path, k: Int, name: String): Unit = {
+        val dst = dir.resolve(f"$name$k%03d.parquet")
+        Files.move(part, dst)
+        Files.setLastModifiedTime(dst, FileTime.fromMillis(1600000000000L + k * 60000L))
+      }
+      def writeOne(df: DataFrame, k: Int, name: String): Unit = {
+        val tmp = stage.resolve(s"w$k")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        install(onePart(tmp).getOrElse(sys.error(s"no parquet written under $tmp")), k, name)
+      }
+      val sliced = stage.resolve("sliced")
+      tagged.repartition(col("__slice")).write.mode("overwrite")
+        .partitionBy("__slice").parquet(sliced.toString)
+      for (k <- 0 until nSlices) onePart(sliced.resolve(s"__slice=$k")) match {
+        case Some(p) => install(p, k, "b")
+        case None => writeOne(tagged.filter(lit(false)).drop("__slice"), k, "b")
+      }
+      for ((days, i) <- sentinelDays.zipWithIndex) writeOne(ev.limit(1)
+          .withColumn("ts", lit(maxTs) + expr(s"INTERVAL $days DAYS"))
+          .withColumn("user_id", lit(SentinelUser))
+          .withColumn("event_id", lit(-(nSlices + i).toLong)), nSlices + i, "s")
+      dir
     }(_ => Nil)
+
+  /** The shared staged stream dir: [[StreamSlices]] equal event-time
+    * slices, then two sentinels a year apart. */
+  private[streaming] def stagedDir(s: SparkSession, sfDir: String): Path =
+    staged(s, sfDir, "stream", StreamSlices, Seq(365, 730)) { (ev, lo, hi) =>
+      val k = StreamSlices
+      // slice i = [cut(i), cut(i+1)), last cut at hi+1 so maxTs lands
+      // inside the final slice; the slice id is a literal when-chain
+      // over the cut points (every event satisfies cuts(0) <= ts <
+      // cuts(k) by construction of the cuts, so the chain is total)
+      val cuts = (0 to k).map(i => lo + (hi + 1 - lo) * i.toLong / k)
+      ev.withColumn("__slice", (0 until k - 1).foldRight(lit(k - 1))(
+        (i, later) => when(tsUs < cuts(i + 1), lit(i)).otherwise(later)))
+    }
 
   /** One-micro-batch-per-file stream over a staged dir, normalized by
     * the same contract as the batch loader (schema from the staged
@@ -218,7 +198,7 @@ object StreamExec {
   }
 
   private def ckpt(): String =
-    graft.io.TempDirs.create("graft_ckpt_") // state store dies with the JVM
+    TempDirs.create("graft_ckpt_") // state store dies with the JVM
 
   /** Every micro-batch pays per-partition state-store overhead (store
     * open/commit × #partitions × #batches), and the gated fixtures
@@ -316,7 +296,7 @@ object StreamExec {
   private[graft] val last: ThreadLocal[Record] =
     ThreadLocal.withInitial(() => Record(Nil, Nil, Nil, (0L, 0L)))
 
-  private def awaitAndRecord(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def awaitAndRecord(q: StreamingQuery): Unit = {
     q.awaitTermination()
     val progress = q.recentProgress.toSeq
     last.set(Record(
@@ -340,6 +320,16 @@ object StreamExec {
         progress.count(_.numInputRows > 0).toLong)))
   }
 
+  /** The one way a row starts its StreamExecution: `outputMode`, the
+    * checkpoint dir, `Trigger.AvailableNow` (drain the finite staged
+    * input, then terminate) and the row's `sink` — a memory sink with
+    * its query name, or a foreachBatch body. */
+  private def start[T](ds: Dataset[T], outputMode: String, ckptDir: String)(
+      sink: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery =
+    sink(ds.writeStream.outputMode(outputMode)
+      .option("checkpointLocation", ckptDir)
+      .trigger(Trigger.AvailableNow())).start()
+
   /** Runs the stream `df` to the end of its input into a memory sink,
     * records its progress, and returns the sink's final rows as a frame
     * of the caller's session `s`. */
@@ -348,12 +338,7 @@ object StreamExec {
                             ckptDir: String = ckpt()): DataFrame = {
     val ss = df.sparkSession
     val qn = name + "_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = df.writeStream.format("memory").queryName(qn)
-      .outputMode(outputMode)
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q)
+    awaitAndRecord(start(df, outputMode, ckptDir)(_.format("memory").queryName(qn)))
     val out = ss.table(qn)
     val rows = out.collect() // bounded: every caller's sink is oracle-sized
     val schema = out.schema
@@ -363,10 +348,10 @@ object StreamExec {
 
   /** Hourly tumbling counts computed BY A STREAM: the unified
     * hourlyTypeCounts transform under complete-mode incremental
-    * aggregation across 4 micro-batches, final state snapshotted from
-    * the memory sink. Complete mode captures the full final aggregate
-    * of the finite fixture; the production append+watermark shape is
-    * pinned by StreamingSpec. */
+    * aggregation across the [[StreamSlices]] data micro-batches, final
+    * state snapshotted from the memory sink. Complete mode captures the
+    * full final aggregate of the finite fixture; the production
+    * append+watermark shape is pinned by StreamingSpec. */
   def tumblingViaStream(s: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(s)
     // DATA slices only (b*), like the CDC row: complete mode has no
@@ -380,8 +365,7 @@ object StreamExec {
     val stream = stagedStream(ss, stagedDir(s, sfDir), glob = "b*.parquet")
     // sentinel rows can no longer arrive at all; the filter stays as
     // defense-in-depth against a staging change
-    val agg = EventStreams.hourlyTypeCounts(
-      stream.filter(col("user_id") =!= SentinelUser), watermarked = false)
+    val agg = EventStreams.hourlyTypeCounts(stream.filter(col("user_id") =!= SentinelUser))
     drainToMemory(s, agg, "st_tumbling_exec", "complete")
       .orderBy(col("window_start"), col("event_type"))
   }
@@ -407,17 +391,11 @@ object StreamExec {
   def tumblingViaStreamRestart(s: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(s)
     val stream = stagedStream(ss, stagedDir(s, sfDir))
-    val agg = EventStreams.hourlyTypeCounts(
-      stream.filter(col("user_id") =!= SentinelUser), watermarked = false)
+    val agg = EventStreams.hourlyTypeCounts(stream.filter(col("user_id") =!= SentinelUser))
     val ckptDir = ckpt() // ONE dir shared by both legs — the restart
-    val qn = "st_restart_exec_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
+    val qn = "st_restart_exec_" + java.util.UUID.randomUUID.toString.replace("-", "")
     // leg 1: start, stop after the first committed batch
-    val q1 = agg.writeStream.format("memory").queryName(qn)
-      .outputMode("complete")
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val q1 = start(agg, "complete", ckptDir)(_.format("memory").queryName(qn))
     val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
     while (q1.isActive && Option(q1.lastProgress).forall(_.batchId < 0) &&
            System.nanoTime() < deadline)
@@ -473,8 +451,7 @@ object StreamExec {
     // (the k data batches) and the result identical (oracle-gated).
     val stream = stagedStream(ss, stagedDir(s, sfDir), glob = "b*.parquet")
     val updates = EventStreams.cdcFinalState(s, stream)
-    val storeRoot = java.nio.file.Paths.get(
-      graft.io.TempDirs.create("graft_cdc_store_"))
+    val storeRoot = Paths.get(TempDirs.create("graft_cdc_store_"))
     // bucket -> parquet dir currently holding that bucket (bounded by
     // CdcStoreBuckets — a catalog pointer, not data); foreachBatch
     // runs batches strictly sequentially, so no torn updates
@@ -492,11 +469,8 @@ object StreamExec {
         sess.read.parquet(d).filter(col("__bucket").isin(bs.toSeq: _*))
       }.reduceOption(_ unionByName _)
     }
-    val q = updates.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[EventStreams.CdcRow], batchId: Long) =>
+    awaitAndRecord(start(updates, "update", ckpt())(_.foreachBatch {
+      (ds: Dataset[EventStreams.CdcRow], batchId: Long) =>
         val sess = ds.sparkSession
         // Persist the batch view for the batch's duration (r15, guide
         // §5): a foreachBatch Dataset is RE-COMPUTED per action
@@ -539,18 +513,16 @@ object StreamExec {
           val live = new java.util.HashSet(bucketDir.values())
           storeRoot.toFile.listFiles().iterator
             .filter(d => d.isDirectory && !live.contains(d.toString))
-            .foreach(d => graft.io.TempDirs.deleteRecursively(d.toPath))
+            .foreach(d => TempDirs.deleteRecursively(d.toPath))
         }
         } finally upd.unpersist(blocking = false)
         ()
-      }
-      .start()
-    awaitAndRecord(q)
+    }))
     // empty-store fallback keeps the 4-column SCHEMA (a bare
     // emptyDataFrame has no columns and the filter below would fail
     // to resolve — review r10): same shape a store read would return
     def emptyState = s.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      java.util.Collections.emptyList[Row](),
       org.apache.spark.sql.types.StructType.fromDDL(
         "user_id LONG, n_ops LONG, deleted BOOLEAN, last_value DOUBLE"))
     readStore(s, (0 until CdcStoreBuckets).toSet)
@@ -579,12 +551,8 @@ object StreamExec {
     * because injecting duplicates there would corrupt the tumbling /
     * CDC execs' inputs. MemoPool entry. */
   private[streaming] def dedupStagedDir(s: SparkSession, sfDir: String): Path =
-    graft.scale.MemoPool.getOrBuild(s, sfDir, "dedupStaged") {
-      val ev = Tables.events(s, sfDir)
-      val (minTs, maxTs) = tsRange(s, sfDir)
-      val midUs = (us(minTs) + us(maxTs)) / 2
-      val st = new SliceStager("dedup")
-      val tsUs = unix_micros(col("ts"))
+    staged(s, sfDir, "dedup", 3, Nil) { (ev, lo, hi) =>
+      val midUs = (lo + hi) / 2
       // ONE pass (r14): each row's batch memberships as an array —
       // slice-0 rows appear once in b0 (twice when inside the 10-min
       // re-emission window: the intra-batch duplicate), the last 30
@@ -599,11 +567,8 @@ object StreamExec {
         when(tsUs < midUs && tsUs >= m10, lit(0)),
         when(tsUs < midUs && tsUs >= m30, lit(1)),
         when(tsUs >= midUs, lit(2)))
-      st.writeSliced(
-        ev.select(col("*"),
-          explode(filter(memberships, c => c.isNotNull)).as("__slice")), 3)
-      st.streamDir
-    }(_ => Nil)
+      ev.select(col("*"), explode(filter(memberships, c => c.isNotNull)).as("__slice"))
+    }
 
   /** Exactly-once event delivery computed BY A STREAM: the
     * dropDuplicatesWithinWatermark operator over 3 micro-batches whose
@@ -620,13 +585,9 @@ object StreamExec {
   def dedupViaStream(s: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(s)
     val stream = stagedStream(ss, dedupStagedDir(s, sfDir))
-    val deduped = EventStreams.dedupedEvents(stream)
     val acc = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-    val q = deduped.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: DataFrame, _: Long) =>
+    awaitAndRecord(start(EventStreams.dedupedEvents(stream), "append", ckpt())(
+      _.foreachBatch { (df: DataFrame, _: Long) =>
         df.groupBy(col("event_type"))
           .agg(count(lit(1)).as("cnt"), sum(col("event_id")).as("id_sum"))
           .collect() // bounded: #event_types rows
@@ -635,9 +596,7 @@ object StreamExec {
               (a, b) => (a._1 + b._1, a._2 + b._2))
           }
         ()
-      }
-      .start()
-    awaitAndRecord(q)
+      }))
     import s.implicits._
     acc.asScala.toSeq
       .map { case (t, (c, sm)) => (t, c, sm) }
@@ -670,17 +629,13 @@ object StreamExec {
     * below batch 2's LAGGED late-filter watermark (= max(b0) − 1 h);
     * the driver events span weeks. MemoPool entry. */
   private[streaming] def lateStagedDir(s: SparkSession, sfDir: String): Path =
-    graft.scale.MemoPool.getOrBuild(s, sfDir, "lateStaged") {
-      val ev = Tables.events(s, sfDir)
-      val (minTs, maxTs) = tsRange(s, sfDir)
-      val midUs = (us(minTs) + us(maxTs)) / 2
-      require(midUs - us(minTs) > 6L * 3600 * 1000000,
+    staged(s, sfDir, "late", 3, Seq(365, 730)) { (ev, lo, hi) =>
+      val midUs = (lo + hi) / 2
+      require(midUs - lo > 6L * 3600 * 1000000,
         s"events span too narrow for late-drop staging ($sfDir)")
-      val st = new SliceStager("late")
-      val tsUs = unix_micros(col("ts"))
       val holdUs = midUs - 10L * 60 * 1000000
       val advUs = holdUs - 60L * 60 * 1000000
-      val replayCut = us(minTs) + 30L * 60 * 1000000
+      val replayCut = lo + 30L * 60 * 1000000
       // ONE pass (r14): batch memberships as (slice, event_id)
       // structs — [0, adv) is b0, [adv, hold) the advancer b1,
       // [hold, ∞) is b2 (the held-back 10 minutes and slice 1 are
@@ -699,16 +654,11 @@ object StreamExec {
         when(tsUs < replayCut,
           struct(lit(2).as("s"),
             (-col("event_id") - lit(1000000L)).as("eid"))))
-      st.writeSliced(
-        ev.select(col("*"),
-          explode(filter(memberships, c => c.isNotNull)).as("__m"))
-          .withColumn("event_id", col("__m.eid"))
-          .withColumn("__slice", col("__m.s"))
-          .drop("__m"), 3)
-      st.sentinel(ev, maxTs, 3, 365)
-      st.sentinel(ev, maxTs, 4, 730)
-      st.streamDir
-    }(_ => Nil)
+      ev.select(col("*"), explode(filter(memberships, c => c.isNotNull)).as("__m"))
+        .withColumn("event_id", col("__m.eid"))
+        .withColumn("__slice", col("__m.s"))
+        .drop("__m")
+    }
 
   /** Watermark LATE-DATA semantics computed BY A STREAM: an hourly
     * tumbling aggregate in APPEND mode (1-hour watermark) over the
@@ -775,26 +725,12 @@ object StreamExec {
     * sessionizer (append mode, EventTimeTimeout) over the staged
     * micro-batches — sessions that straddle the slice boundary resume
     * from keyed state, trailing sessions are flushed by the sentinel
-    * batches advancing the watermark, and foreachBatch drains each
-    * batch's exactly-once emissions. */
+    * batches advancing the watermark, and an append-mode memory sink
+    * keeps each batch's exactly-once emissions. */
   def sessionsViaStream(s: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(s)
-    val stream = stagedStream(ss, stagedDir(s, sfDir))
-    val sessions = EventStreams.closedUserSessions(s, stream)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val schema = sessions.toDF().schema
-    val q = sessions.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[EventStreams.ClosedSession], _: Long) =>
-        val rows = ds.toDF().collect() // bounded: closed sessions this batch
-        buf.synchronized { buf ++= rows }
-        ()
-      }
-      .start()
-    awaitAndRecord(q)
-    s.createDataFrame(buf.toList.asJava, schema)
+    val sessions = EventStreams.closedUserSessions(s, stagedStream(ss, stagedDir(s, sfDir)))
+    drainToMemory(s, sessions.toDF(), "st_sessions_exec", "append")
       .filter(col("user_id") =!= SentinelUser)
       .select(col("user_id"), col("session_start"), col("n_events"))
       .orderBy(col("user_id"), col("session_start"))

@@ -62,6 +62,14 @@ class SessionsSpec extends SparkSpec {
     assert(clone.conf.get(provider) == rocks)
   }
 
+  test("source guard: one code line starts a stream query (StreamExec.start)") {
+    // every stream-exec row starts its query through StreamExec.start,
+    // the one place that sets output mode, checkpoint dir and the
+    // AvailableNow trigger
+    val starts = codeLines.filter(_.contains(".writeStream"))
+    assert(starts.size == 1, s"start stream queries through StreamExec.start: ${starts.map(_.trim)}")
+  }
+
   test("source guard: only io/Sessions.scala builds a SparkSession") {
     val call = "SparkSession" + ".builder"
     val offenders = Seq("src/main/scala", "src/test/scala").flatMap(scalaFiles)

@@ -20,7 +20,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
     ss.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val stream = SpecStreams.streamFromParquet(ss, sf("sf0.001"))
-    val agg = EventStreams.hourlyTypeCounts(stream, watermarked = false)
+    val agg = EventStreams.hourlyTypeCounts(stream)
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_rocks_ckpt_").toString
     val q = agg.writeStream.format("memory").queryName("rocks_tumbling")
@@ -37,8 +37,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
       .orderBy(col("window_start"), col("event_type"))
       .collect().map(_.toSeq).toSeq
     ss.catalog.dropTempView("rocks_tumbling")
-    val batch = EventStreams.hourlyTypeCounts(
-        graft.io.Tables.events(spark, sf("sf0.001")), watermarked = false)
+    val batch = EventStreams.hourlyTypeCounts(graft.io.Tables.events(spark, sf("sf0.001")))
       .orderBy(col("window_start"), col("event_type"))
       .collect().map(_.toSeq).toSeq
     assert(streamed == batch,

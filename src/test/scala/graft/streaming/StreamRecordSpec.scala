@@ -38,6 +38,18 @@ class StreamRecordSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  test("sessionsViaStream == its batch twin st_user_sessions, in k data + 2 sentinel batches") {
+    val dir = sf("sf0.001")
+    val streamed = StreamExec.sessionsViaStream(spark, dir).collect().toSeq
+    val batches = StreamExec.last.get().batchDurations
+    val batch = graft.SparkEntry.queries("st_user_sessions")(spark, dir).collect().toSeq
+    assert(batch.nonEmpty)
+    assert(streamed == batch,
+      s"stream ${streamed.size} rows vs batch ${batch.size}: ${streamed.diff(batch).take(5)}")
+    assert(batches.size == StreamExec.StreamSlices + 2,
+      s"expected ${StreamExec.StreamSlices} data + 2 sentinel batches: $batches")
+  }
+
   test("stream-stream join: the ts conjuncts still yield a state watermark") {
     // The pushed-down eid_a < eid_b conjunct makes Spark's
     // StreamingJoinHelper log "Cannot evaluate expression: event_id"

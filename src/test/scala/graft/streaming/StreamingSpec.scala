@@ -14,7 +14,7 @@ class StreamingSpec extends SparkSpec {
   test("file-stream tumbling agg equals the batch answer (unified API)") {
     val dir = sf("sf0.001")
     val stream = SpecStreams.streamFromParquet(spark, dir)
-    val q = EventStreams.hourlyTypeCounts(stream, watermarked = true)
+    val q = EventStreams.hourlyTypeCounts(stream.withWatermark("ts", "1 hour"))
       .writeStream.format("memory").queryName("hourly_stream")
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
@@ -23,7 +23,7 @@ class StreamingSpec extends SparkSpec {
       .select("window_start", "event_type", "cnt", "sum_value")
       .collect().map(_.toSeq).toSet
     val batch =
-      EventStreams.hourlyTypeCounts(Tables.events(spark, dir), watermarked = false)
+      EventStreams.hourlyTypeCounts(Tables.events(spark, dir))
         .collect().map(_.toSeq).toSet
     assert(streamed == batch)
     assert(batch.nonEmpty)
@@ -182,7 +182,7 @@ class StreamingSpec extends SparkSpec {
     def ts(h: Int, min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$min%02d:00")
     val input = MemoryStream[(Long, java.sql.Timestamp, String, Double)]
     val stream = input.toDF().toDF("event_id", "ts", "event_type", "value")
-    val q = EventStreams.hourlyTypeCounts(stream, watermarked = true)
+    val q = EventStreams.hourlyTypeCounts(stream.withWatermark("ts", "1 hour"))
       .writeStream.format("memory").queryName("late_agg")
       .outputMode("append").start()
     try {
